@@ -39,16 +39,16 @@ object Bench {
     // persisted segment registration a dead prior JVM left live, so
     // this run's ANN timings measure the base view, not an orphan
     // overlay.
-    graft.operators.SimilarityOps.dropIndexSegments(sfDir)
-    graft.operators.DedupOps.dropClusterDeltas(sfDir)
+    graft.operators.SimilarityOps.Segments.drop(sfDir)
+    graft.operators.DedupOps.ClusterDeltas.drop(sfDir)
     // And re-stage any DURABLE staged index carrying a dead prior JVM's
     // appends (threshold 0.0 trips exactly when the persisted append
     // counter is non-zero; a clean index is a no-op and keeps its
     // cross-round warm-staging benefit).
     try {
-      graft.operators.DedupOps.maybeRestageTextIndexes(spark, sfDir, 0.0)
+      graft.operators.DedupOps.TextIndex.maybeRestage(spark, sfDir, 0.0)
       graft.operators.DedupOps.MediaModalities.foreach(m =>
-        graft.operators.DedupOps.maybeRestageMediaIndex(spark, sfDir, 0.0, m))
+        m.index.maybeRestage(spark, sfDir, 0.0))
       graft.operators.SimilarityOps.maybeRetrainStagedIndex(spark, sfDir, 0.0)
       ()
     } catch { case scala.util.control.NonFatal(e) =>

@@ -19,17 +19,17 @@ object Verify {
     // measurement JVM must reflect only its own round's work, or the
     // dead run's segments contaminate every ANN plan and gauge here.
     // Start from the base view; restart durability stays spec-locked.
-    graft.operators.SimilarityOps.dropIndexSegments(sfDir)
-    graft.operators.DedupOps.dropClusterDeltas(sfDir)
+    graft.operators.SimilarityOps.Segments.drop(sfDir)
+    graft.operators.DedupOps.ClusterDeltas.drop(sfDir)
     // Same hermeticity for the DURABLE staged indexes (r15): appends a
     // dead prior JVM admitted survive in the shared dirs by design — a
     // measurement JVM must serve the corpus-only base, so any index
     // carrying appends re-stages (threshold 0.0 trips exactly when the
     // persisted append counter is non-zero; a clean index is a no-op).
     try {
-      graft.operators.DedupOps.maybeRestageTextIndexes(spark, sfDir, 0.0)
+      graft.operators.DedupOps.TextIndex.maybeRestage(spark, sfDir, 0.0)
       graft.operators.DedupOps.MediaModalities.foreach(m =>
-        graft.operators.DedupOps.maybeRestageMediaIndex(spark, sfDir, 0.0, m))
+        m.index.maybeRestage(spark, sfDir, 0.0))
       graft.operators.SimilarityOps.maybeRetrainStagedIndex(spark, sfDir, 0.0)
       ()
     } catch { case scala.util.control.NonFatal(e) =>
@@ -119,7 +119,7 @@ object Verify {
     // this JVM) — recorded so the maintenance gauge is a round artifact
     // and a future append leaking into the serving path is visible.
     try graft.ObservedMetrics.recordGauge("text.index_stale_fraction",
-      graft.operators.DedupOps.textIndexStaleFraction(spark, sfDir))
+      graft.operators.DedupOps.TextIndex.staleFraction(spark, sfDir))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[verify] text stale gauge failed: ${e.getMessage}")
     }
@@ -130,7 +130,7 @@ object Verify {
     try graft.operators.DedupOps.MediaModalities.foreach { m =>
       graft.ObservedMetrics.recordGauge(
         graft.operators.DedupOps.mediaStaleGauge(m),
-        graft.operators.DedupOps.mediaIndexStaleFraction(spark, sfDir, m))
+        m.index.staleFraction(spark, sfDir))
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[verify] media stale gauge failed: ${e.getMessage}")
     }

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
+import graft.multimodal.MediaRecord
+import graft.util.ProbeIndex
 
 /** Near-duplicate detection family beyond the exact-normalized dedup in
   * [[LlmOps.docNearDedup]]: MinHash+LSH banding, SimHash fingerprints, and
@@ -241,7 +243,7 @@ object DedupOps {
     * into the observed metric `<metric>.overflow_rows` — truncation is
     * never silent. The ONE cap definition, used by every candidate
     * skeleton ([[groupMembers]]) and by the staged band-probe index
-    * build ([[stagedBandProbeIndex]]), so a cap-discipline fix can
+    * build ([[TextIndex]]), so a cap-discipline fix can
     * never half-apply. */
   private[operators] def capBuckets(df: DataFrame, keys: Seq[Column],
       order: Column, metric: String): DataFrame = {
@@ -455,10 +457,8 @@ object DedupOps {
     * fingerprint index
     * ([[graft.multimodal.MultimodalOps.stagedImageHashes]]). */
   def imageDHashDups(spark: SparkSession, sfDir: String): DataFrame =
-    excludeTombstoned(
-      imageHashPairs(
+    ImageModality.index.excludeTombstoned(spark, sfDir, imageHashPairs(
         graft.multimodal.MultimodalOps.stagedImageHashes(spark, sfDir)),
-      mediaTombstoneIds(spark, sfDir, ImageModality), "media_id",
       Seq("media_a", "media_b"))
 
   /** Audio near-duplicate pairs by acoustic energy fingerprint — the
@@ -472,12 +472,9 @@ object DedupOps {
     * fingerprints staged once per corpus snapshot
     * ([[graft.multimodal.MultimodalOps.stagedAudioHashes]]). */
   def audioHashDups(spark: SparkSession, sfDir: String): DataFrame =
-    excludeTombstoned(
-      imageHashPairs(
+    AudioModality.index.excludeTombstoned(spark, sfDir, imageHashPairs(
         graft.multimodal.MultimodalOps.stagedAudioHashes(spark, sfDir),
-        "wav_hash_block_overflow"),
-      mediaTombstoneIds(spark, sfDir, AudioModality), "media_id",
-      Seq("media_a", "media_b"))
+        "wav_hash_block_overflow"), Seq("media_a", "media_b"))
 
   /** Video near-duplicate pairs by temporal energy fingerprint — the
     * video member of the dedup family, completing the modality square
@@ -491,12 +488,9 @@ object DedupOps {
     * fingerprints staged once per corpus snapshot
     * ([[graft.multimodal.MultimodalOps.stagedVideoHashes]]). */
   def videoHashDups(spark: SparkSession, sfDir: String): DataFrame =
-    excludeTombstoned(
-      imageHashPairs(
+    VideoModality.index.excludeTombstoned(spark, sfDir, imageHashPairs(
         graft.multimodal.MultimodalOps.stagedVideoHashes(spark, sfDir),
-        "gif_hash_block_overflow"),
-      mediaTombstoneIds(spark, sfDir, VideoModality), "media_id",
-      Seq("media_a", "media_b"))
+        "gif_hash_block_overflow"), Seq("media_a", "media_b"))
 
   /** Cross-modal duplicate reconciliation — the pipeline step AFTER
     * per-modality dedup: a page duplicated with a re-encoded hero image
@@ -506,8 +500,8 @@ object DedupOps {
     * document ids through a doc↔media LINK table, merge into one
     * undirected graph; [[clusterPairs]] closes it transitively and one
     * canonical per cross-modal group is elected by the quality signal
-    * (the `keep_best` election — a partial-combinable `min_by`, never a
-    * whole-cluster sort).
+    * (the shared `keep_best` election, [[keepBestElection]] — a
+    * window `min_by` over each cluster).
     *
     * Scale shape: every edge list is dup-density-bounded (each
     * generator is bucketed + capped), the link join ships one
@@ -634,7 +628,7 @@ object DedupOps {
 
   /** The base assignment KEYED FOR PRUNED ENDPOINT LOOKUP: the
     * [[stagedBaseCrossModalGroups]] rows, partitioned by the md5-bucket
-    * of `doc_id` (`db`, [[DocBucketParts]] — the [[stagedShingleIndex]]
+    * of `doc_id` (`db`, [[DocBucketParts]] — the [[ShingleIndex]]
     * key discipline), so the touched-selection reads only the
     * partitions holding a batch's new-edge endpoints instead of
     * scanning the corpus assignment per micro-batch. A PROBE projection
@@ -737,13 +731,14 @@ object DedupOps {
         .withColumnRenamed("id", "doc_id"))
 
   /** The quality-aware canonical election over a cluster assignment —
-    * the serving half of [[crossModalKeepBest]], shared by the staged
-    * and inline group sources. Same shape as [[LlmOps.docKeepBest]]:
-    * quality joins as one double per doc, the winner is the `min_by`
-    * argmin evaluated as a window over the cluster — ONE evaluation of
-    * the members subtree (opt r20; the PlanSpec guard documents the
-    * skew trade this accepts). */
-  private def keepBestElection(docs: DataFrame, groups: DataFrame): DataFrame = {
+    * the ONE election behind `keep_best` ([[LlmOps.docKeepBest]]),
+    * `xmodal` ([[crossModalKeepBest]]) and `xm_served`: quality joins
+    * as one double per doc, the winner is the `min_by` argmin evaluated
+    * as a window over the cluster — ONE evaluation of the members
+    * subtree (opt r20; the PlanSpec guard documents the skew trade this
+    * accepts). */
+  private[graft] def keepBestElection(docs: DataFrame,
+      groups: DataFrame): DataFrame = {
     val quality = TextOps.textQualityScore(docs)
       .select(col("doc_id"), col("quality"))
     val members = groups.select(col("doc_id"), col("cluster"), col("cluster_size"))
@@ -881,11 +876,11 @@ object DedupOps {
     // takedown exclusion (r19): a retracted doc neither matches nor is
     // listed — pairs touching a tombstoned endpoint drop; no tombstones
     // (the gate's steady state) = the untouched plan
-    excludeTombstoned(
+    TextIndex.excludeTombstoned(spark, sfDir,
       verifyPairsJaccard(stagedMinhashLsh(spark, sfDir),
         stagedTextSignatures(spark, sfDir).select(col("doc_id"), col("sh")),
         "doc_a", "doc_b"),
-      textTombstoneIds(spark, sfDir), "doc_id", Seq("doc_a", "doc_b"))
+      Seq("doc_a", "doc_b"))
   }
 
   /** The SHARED exact-Jaccard verify stage: candidate pairs `(aCol, bCol,
@@ -968,21 +963,21 @@ object DedupOps {
     // a tombstoned doc is out of the ingest gate's verified dups on
     // both sides (it cannot be matched against, and a retracted
     // increment doc is not re-listed)
-    excludeTombstoned(
+    TextIndex.excludeTombstoned(spark, sfDir,
       incrementalFromSignatures(stagedTextSignatures(spark, sfDir)),
-      textTombstoneIds(spark, sfDir), "doc_id", Seq("new_doc", "base_doc"))
+      Seq("new_doc", "base_doc"))
   }
 
   // ---------------------------------------------------------------------
   // Partition-prunable probe indexes (the streaming serve's base side)
   // ---------------------------------------------------------------------
 
-  /** Partition count of [[stagedBandProbeIndex]] — a corpus-independent
+  /** Partition count of [[TextIndex]] — a corpus-independent
     * index constant (like the IVF centroid count), so the per-batch
     * distinct-partition collect is bounded by it, never by data. */
   val SigPrefixParts = 64
 
-  /** Partition count of [[stagedShingleIndex]] — same discipline. */
+  /** Partition count of [[ShingleIndex]] — same discipline. */
   val DocBucketParts = 64
 
   /** The band signature's partition key: first two hex chars → int mod
@@ -994,15 +989,27 @@ object DedupOps {
     (conv(substring(sig, 1, 2), 16, 10).cast("int") % SigPrefixParts)
       .cast("int")
 
-  private val bandIdxDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-  private val shingleIdxDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
   /** Build counter for the two probe-index artifacts — separate from
     * [[textStageBuilds]] so each artifact family's staging-exactly-once
     * property is independently assertable. */
   val probeStageBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Manifest family for the text append counters, keyed by the band
+    * index dir the appends landed in. */
+  private val TextAppendsFamily = "text_appends"
+
+  /** An admitted doc batch signed ONCE for both text probe indexes —
+    * the stateless projection the stager applies to the corpus. */
+  private def signedDocs(spark: SparkSession, docs: DataFrame): DataFrame = {
+    graft.GraftSession.registerFunctions(spark)
+    textSignaturesOf(docs).select(col("doc_id"), col("bands"), col("sh"))
+  }
+
+  private def bandsOf(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "sig")))
+
+  private def bandRows(bands: DataFrame): DataFrame =
+    bands.select(col("band"), col("sig"), col("doc_id"), sigPrefix(col("sig")).as("sp"))
 
   /** The BASE side's banded candidate index, staged once per corpus
     * snapshot and PARTITIONED BY SIGNATURE PREFIX — the text analog of
@@ -1022,170 +1029,44 @@ object DedupOps {
     * min(4B, [[SigPrefixParts]]) prefixes — strongest for the small
     * admission batches an ingest gate actually sees; a large batch
     * degrades gracefully to a full (still column-pruned, still
-    * shuffle-free) scan of the 3-scalar index. */
-  def stagedBandProbeIndex(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.StagedArtifacts.readStaged(spark, bandIdxDir(spark, sfDir))
-
-  private def bandIdxDir(spark: SparkSession, sfDir: String,
-      fresh: Boolean = false): java.nio.file.Path =
-    graft.util.StagedArtifacts.parquetDir(sfDir, bandIdxDirs,
-      "band_idx", probeStageBuilds, Seq("sp"), freshGen = fresh) {
-      val bands = stagedTextSignatures(spark, sfDir)
-        .filter(!isNewDoc)
-        .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "sig")))
-      capBuckets(bands, Seq(col("band"), col("sig")), col("doc_id"),
-          "band_probe_index")
-        .select(col("band"), col("sig"), col("doc_id"),
-          sigPrefix(col("sig")).as("sp"))
-    }
+    * shuffle-free) scan of the 3-scalar index.
+    *
+    * OWNER of the text index lifecycle: every admitted batch, re-stage
+    * and retraction also feeds [[ShingleIndex]]. Appends count DOCS on
+    * this index's dir, while the staleness denominator is the shingle
+    * index's base (one row per doc; band rows are per (doc, band) and
+    * capped). A re-stage first re-derives the signature snapshot. From
+    * the next serve on, tombstoned docs are out of the streaming
+    * gate's candidate probe ([[probeCandidates]]) and out of the batch
+    * dup keys ([[stagedLshVerifiedDups]]/[[stagedIncrementalDedup]]). */
+  val TextIndex: ProbeIndex[DataFrame] = new ProbeIndex[DataFrame](
+      "band_idx", "sp", "doc_id", TextAppendsFamily, probeStageBuilds) {
+    protected def build(spark: SparkSession, sfDir: String): DataFrame =
+      bandRows(capBuckets(bandsOf(stagedTextSignatures(spark, sfDir).filter(!isNewDoc)),
+        Seq(col("band"), col("sig")), col("doc_id"), "band_probe_index"))
+    protected def prepare(spark: SparkSession, docs: DataFrame) = signedDocs(spark, docs)
+    protected def rowsOf(sigs: DataFrame): DataFrame = bandRows(bandsOf(sigs))
+    override protected def companions = Seq(ShingleIndex)
+    override protected def baseIndex = ShingleIndex
+    protected def staleGauge = "text.index_stale_fraction"
+    override protected def tombstoneGauge = Some("text.tombstoned_docs")
+    override protected def beforeRestage(sfDir: String): Unit =
+      textSigDirs.invalidate(sfDir)
+  }
 
   /** The BASE side's shingle sets keyed for PRUNED point-fetch, staged
     * once per corpus snapshot: `(doc_id, sh)` partitioned by the
     * md5-bucket of doc_id, so the verify stage reads only the partitions
     * holding candidate base docs — the shingle fetch is O(candidates),
-    * not a corpus scan per micro-batch. */
-  def stagedShingleIndex(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.StagedArtifacts.readStaged(spark, shingleIdxDir(spark, sfDir))
-
-  private def shingleIdxDir(spark: SparkSession, sfDir: String,
-      fresh: Boolean = false): java.nio.file.Path =
-    graft.util.StagedArtifacts.parquetDir(sfDir, shingleIdxDirs,
-      "shingle_idx", probeStageBuilds, Seq("db"), freshGen = fresh) {
-      stagedTextSignatures(spark, sfDir)
-        .filter(!isNewDoc)
-        .select(col("doc_id"), col("sh"),
-          Hashing.md5Bucket(col("doc_id"), DocBucketParts).cast("int").as("db"))
-    }
-
-  /** TEST-ONLY isolation drop: retire the staged probe indexes (the
-    * durable dirs themselves — so the next access rebuilds from the
-    * corpus, the old per-JVM-temp-dir guarantee) and exactly their
-    * append counters. Counter removal is scoped per staged dir — the
-    * r14 `clearFamily` deleted every corpus's counters HOST-WIDE,
-    * silently zeroing a second serving JVM's staleness bookkeeping
-    * (ADVICE r14); dir deletion remains host-wide by design here, as
-    * the explicit test-only entry point. */
-  def dropStagedProbeIndexes(): Unit = {
-    for (sf <- bandIdxDirs.keys; d <- bandIdxDirs.peek(sf))
-      graft.util.ServingManifest.removeCounter(sf, TextAppendsFamily,
-        TextTables, d.toString)
-    bandIdxDirs.clear(); shingleIdxDirs.clear()
-    graft.util.StagedArtifacts.dropDurable("band_idx")
-    graft.util.StagedArtifacts.dropDurable("shingle_idx")
-  }
-
-  // ---------------------------------------------------------------------
-  // Incremental probe-index maintenance (append → staleness → re-stage)
-  // ---------------------------------------------------------------------
-
-  /** Manifest family for the text append/staleness bookkeeping —
-    * persisted per (corpus dir, band-index dir) in the
-    * [[graft.util.ServingManifest]] sidecar so it survives JVM restarts
-    * (r13 verdict #5); keyed by the index DIR the appends landed in, so
-    * a freshly rebuilt index correctly reads zero. */
-  private val TextAppendsFamily = "text_appends"
-  private val TextTables = Seq("documents")
-
-  /** INCREMENTAL text-index maintenance — the
-    * [[SimilarityOps.appendToStagedIvfIndex]] sibling for the dedup
-    * gate's base side: after the gate ADMITS a batch (its survivors
-    * join the corpus), fold the batch's signatures into the SERVED
-    * probe indexes so subsequent arrivals dedup against it without a
-    * rebuild. Band rows append files into only the touched `sp`
-    * partition dirs, shingle rows into the touched `db` dirs; every
-    * probe read picks the new rows up on its next pruned scan with zero
-    * changes. Scale shape: the append touches batch-sized data only —
-    * signing is an in-row projection, no shuffle, no read of the
-    * existing index. Appending declares the batch BASE regardless of
-    * its ids' increment-bucket membership (admission is the caller's
-    * statement, not an id property). Cap nuance: appended rows bypass
-    * the staging cap (they are bounded by the batch); the cap
-    * re-asserts at the next re-stage. Returns the docs appended. */
-  def appendToTextIndexes(spark: SparkSession, sfDir: String,
-      docs: DataFrame): Long = {
-    graft.GraftSession.registerFunctions(spark)
-    val bandDir = bandIdxDir(spark, sfDir)
-    val shDir = shingleIdxDir(spark, sfDir)
-    val sigs = textSignaturesOf(docs)
-      .select(col("doc_id"), col("bands"), col("sh")).persist()
-    try {
-      val n = sigs.count()
-      val bandRows = sigs.select(col("doc_id"),
-          posexplode(col("bands")).as(Seq("band", "sig")))
-        .select(col("band"), col("sig"), col("doc_id"),
-          sigPrefix(col("sig")).as("sp"))
-      graft.util.StagedArtifacts.noteAppend(bandDir, bandRows)
-      bandRows
-        .write.mode("append").partitionBy("sp").parquet(bandDir.toString)
-      val shRows = sigs.select(col("doc_id"), col("sh"),
-        Hashing.md5Bucket(col("doc_id"), DocBucketParts).cast("int").as("db"))
-      graft.util.StagedArtifacts.noteAppend(shDir, shRows)
-      shRows
-        .write.mode("append").partitionBy("db").parquet(shDir.toString)
-      graft.util.ServingManifest.addCounter(sfDir, TextAppendsFamily,
-        TextTables, bandDir.toString, n)
-      n
-    } finally { sigs.unpersist(); () }
-  }
-
-  /** Resolve a staged index dir WITHOUT building: the in-JVM memo, else
-    * the durable root (a restarted JVM's surviving index). None ⇒ never
-    * staged anywhere ⇒ serves nothing. */
-  private def resolvedIdxDir(memo: graft.util.StampedMemo[java.nio.file.Path],
-      sfDir: String, name: String): Option[java.nio.file.Path] =
-    memo.peek(sfDir)
-      .orElse(graft.util.StagedArtifacts.resolveExisting(sfDir, memo, name))
-
-  /** Staleness gauge: the fraction of the served shingle index that
-    * entered via append — signed under the same stateless projection
-    * the stager uses, but never capped and never seen by a full
-    * staging. A serving tier re-stages when this crosses its budget.
-    * PURE ARITHMETIC over manifest values (r14 verdict #4): append
-    * counter / (base rows recorded at staging + appends) — a
-    * monitoring read never scans the index. Resolve, never build:
-    * un-staged indexes serve nothing and are 0% stale by definition
-    * (Verify records this gauge unconditionally every round); a
-    * restarted JVM resolves the durable dir, so the gauge survives a
-    * restart with the appends it counts. */
-  def textIndexStaleFraction(spark: SparkSession, sfDir: String): Double =
-    (resolvedIdxDir(bandIdxDirs, sfDir, "band_idx"),
-      resolvedIdxDir(shingleIdxDirs, sfDir, "shingle_idx")) match {
-      case (Some(bd), Some(sd)) =>
-        val appended = graft.util.ServingManifest
-          .getCounter(sfDir, TextAppendsFamily, TextTables, bd.toString)
-        if (appended == 0) 0.0
-        else appended.toDouble /
-          (graft.util.StagedArtifacts.stagedBaseRows(sfDir, shingleIdxDirs, sd)
-            + appended).toDouble
-      case _ => 0.0
-    }
-
-  /** Staleness-triggered RE-STAGE — the
-    * [[SimilarityOps.maybeRetrainStagedIndex]] sibling: when the
-    * appended fraction crosses `threshold`, drop every staged text
-    * artifact for THIS corpus dir (signatures + both probe indexes) and
-    * rebuild eagerly from the current corpus snapshot. COMPACTION
-    * CONTRACT as the ANN stack's: the rebuild reads ONLY the corpus
-    * dir — rows that entered via [[appendToTextIndexes]] but were never
-    * landed in the corpus are DROPPED from the served indexes (the
-    * ingestion tier must commit admitted batches to corpus storage
-    * before the threshold trips). Returns whether a re-stage ran. */
-  def maybeRestageTextIndexes(spark: SparkSession, sfDir: String,
-      threshold: Double): Boolean = {
-    val stale = textIndexStaleFraction(spark, sfDir)
-    graft.ObservedMetrics.recordGauge("text.index_stale_fraction", stale)
-    if (stale <= threshold) false
-    else {
-      // re-derive the signature snapshot, then rebuild both probe
-      // indexes into a FRESH GENERATION (per-dir: re-staging THIS
-      // corpus must not un-stage other corpora): the new dirs' append
-      // counters correctly read zero, the old generations sweep, and
-      // their counters self-heal out of the manifest on next read
-      textSigDirs.invalidate(sfDir)
-      bandIdxDir(spark, sfDir, fresh = true)    // rebuild eagerly:
-      shingleIdxDir(spark, sfDir, fresh = true) // serving never races
-      true                                      // a half-built artifact
-    }
+    * not a corpus scan per micro-batch. Fed through [[TextIndex]]. */
+  private[graft] val ShingleIndex: ProbeIndex[DataFrame] = new ProbeIndex[DataFrame](
+      "shingle_idx", "db", "doc_id", TextAppendsFamily, probeStageBuilds) {
+    protected def build(spark: SparkSession, sfDir: String): DataFrame =
+      rowsOf(stagedTextSignatures(spark, sfDir).filter(!isNewDoc))
+    protected def prepare(spark: SparkSession, docs: DataFrame) = signedDocs(spark, docs)
+    protected def rowsOf(sigs: DataFrame): DataFrame = sigs.select(col("doc_id"),
+      col("sh"), Hashing.md5Bucket(col("doc_id"), DocBucketParts).cast("int").as("db"))
+    protected def staleGauge = "text.shingle_index_stale_fraction"
   }
 
   // ---------------------------------------------------------------------
@@ -1195,174 +1076,11 @@ object DedupOps {
   // bands/shingles (and a retracted asset's fingerprint) must stop
   // serving as dedup MATCH TARGETS, and the batch dup keys must stop
   // LISTING the retracted content, at increment cadence rather than at
-  // the next corpus re-stage.
+  // the next corpus re-stage. The writer, the marker read and the
+  // exclusion are [[ProbeIndex]] verbs; every key that lists
+  // doc ids as duplicate members (and LlmOps's `doc_nd`) wraps its
+  // serve in `TextIndex.excludeTombstoned`.
   // ---------------------------------------------------------------------
-
-  /** The tombstone partition value — a real partition value no probe
-    * ever computes ([[sigPrefix]]/[[mediaBlockPrefix]]/`db` buckets are
-    * all in [0, parts)), so the tombstone files live INSIDE the probe-
-    * index roots yet a pruned probe scan never lists them, exactly the
-    * ANN overlay's `cell = -1` discipline. The partition value itself
-    * is the deletion flag: no `deleted` column, so the hot probe reads
-    * never pay a mergeSchema. */
-  private[graft] val TombstonePart = -1
-
-  /** One tombstone row per id, schema-aligned with the index dir it
-    * lands in: payload columns are typed NULLs (no reader dereferences
-    * them — every read either prunes the tombstone partition away or
-    * projects `idCol` alone), the partition column is
-    * [[TombstonePart]]. */
-  private def tombstoneRowsFor(spark: SparkSession, dir: java.nio.file.Path,
-      ids: DataFrame, idCol: String, partCol: String): DataFrame = {
-    // served from the per-dir schema cache — the bare read re-ran
-    // footer inference per tombstone append (opt r20)
-    val schema = graft.util.StagedArtifacts.readStaged(spark, dir).schema
-    ids.select(schema.fields.toSeq.map { f =>
-      if (f.name == idCol) col(idCol).cast(f.dataType).as(idCol)
-      else if (f.name == partCol)
-        lit(TombstonePart).cast(f.dataType).as(partCol)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-  }
-
-  /** RETRACTION (takedown / right-to-be-forgotten) for the TEXT dedup
-    * probe indexes — one tombstone file set per call, appended into the
-    * `sp = -1` / `db = -1` partitions of the band and shingle index
-    * roots. From the next serve on, the retracted docs are out of the
-    * streaming gate's candidate probe ([[probeCandidates]] anti-joins
-    * the pruned index scan against the tombstone ids) and out of the
-    * batch dup keys ([[stagedLshVerifiedDups]]/[[stagedIncrementalDedup]]
-    * drop pairs touching a tombstoned endpoint). Terminal at increment
-    * cadence: the corpus re-stage ([[maybeRestageTextIndexes]] fresh
-    * generation) absorbs the tombstones — durable deletion is the
-    * corpus rewrite's job, the index's job is the serving gap between
-    * (the [[graft.operators.SimilarityOps.tombstoneSegmentRows]]
-    * contract). Cost: O(retracted ids) — one bounded write per index,
-    * no read of the live index, no shuffle. */
-  def tombstoneTextDocs(spark: SparkSession, sfDir: String,
-      ids: DataFrame): Unit = {
-    val bandDir = bandIdxDir(spark, sfDir)
-    val shDir = shingleIdxDir(spark, sfDir)
-    val obs = org.apache.spark.sql.Observation()
-    val bandTs = tombstoneRowsFor(spark, bandDir, ids, "doc_id", "sp")
-    graft.util.StagedArtifacts.noteAppend(bandDir, bandTs)
-    bandTs
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("append").partitionBy("sp").parquet(bandDir.toString)
-    val shTs = tombstoneRowsFor(spark, shDir, ids, "doc_id", "db")
-    graft.util.StagedArtifacts.noteAppend(shDir, shTs)
-    shTs
-      .write.mode("append").partitionBy("db").parquet(shDir.toString)
-    graft.ObservedMetrics.recordGauge("text.tombstoned_docs",
-      obs.get("n").asInstanceOf[Long].toDouble)
-  }
-
-  /** Retire the text tombstone partitions — the takedown keys' cleanup
-    * (the `ann_del` drop-registration discipline): deletes the
-    * `sp = -1` / `db = -1` dirs so the steady-state serve carries no
-    * leftover test/run state. Resolve, never build; no-op when no
-    * tombstones exist. */
-  def dropTextTombstones(spark: SparkSession, sfDir: String): Unit =
-    Seq(resolvedIdxDir(bandIdxDirs, sfDir, "band_idx").map(_.resolve(s"sp=$TombstonePart")),
-        resolvedIdxDir(shingleIdxDirs, sfDir, "shingle_idx").map(_.resolve(s"db=$TombstonePart")))
-      .flatten.filter(java.nio.file.Files.isDirectory(_))
-      .foreach(graft.util.TempDirs.deleteNow)
-
-  /** The tombstone partition of `dir` as a readable path, if it holds
-    * data files — the existence probe every exclusion site starts from:
-    * one local listing of the marker dir alone, never of the index
-    * tree. The returned path is read DIRECTLY (not via the root +
-    * partition filter): a root read pays partition DISCOVERY — a LIST
-    * of the whole index tree — on every serve call just to prune back
-    * to this one dir, a per-call metadata cost ∝ index files at 100 TB;
-    * the direct read lists only the marker files (bounded by retraction
-    * volume). */
-  private def tombstonePartDir(dir: java.nio.file.Path,
-      partCol: String): Option[java.nio.file.Path] =
-    Some(dir.resolve(s"$partCol=$TombstonePart"))
-      .filter(d => graft.util.EpochDirs.dataFilesIn(d).nonEmpty)
-
-  /** The doc ids currently tombstoned in the band probe index — a
-    * direct read of the `sp = -1` marker files alone (bounded by
-    * retraction volume, never corpus-proportional), broadcast by every
-    * exclusion site. None when no tombstone partition exists — the
-    * overwhelmingly common path, costing one local listing probe
-    * and ZERO plan change (the [[graft.operators.SimilarityOps
-    * .servedIndex]] columns-guard discipline). Resolve, never build: an
-    * un-staged index holds no tombstones. */
-  private[graft] def textTombstoneIds(spark: SparkSession,
-      sfDir: String): Option[DataFrame] =
-    resolvedIdxDir(bandIdxDirs, sfDir, "band_idx")
-      .flatMap(tombstonePartDir(_, "sp"))
-      // only the id column is read — declaring it skips the per-serve
-      // footer-inference job (opt r20)
-      .map(d => spark.read.schema(
-        org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT"))
-        .parquet(d.toString).select("doc_id").distinct())
-
-  /** Drop rows whose id in any of `cols` is tombstoned — the exclusion
-    * every takedown-aware serve rides: one bounded BROADCAST left-anti
-    * join per column when tombstones exist, the untouched frame when
-    * none do. Deliberately applied at the OUTPUT (pair/row) level, not
-    * by filtering docs out of the signature frame before bucketing: a
-    * pre-bucketing filter would shift the capped bucket RANKING
-    * (`row_number` over fewer members), so the surviving pairs could
-    * differ from "the no-tombstone chain minus retracted pairs" — the
-    * post-filter keeps the serve bit-identical to that subtraction (the
-    * oracle's formulation) at any bucket size, at a cost bounded by dup
-    * density × deleted fraction. */
-  private def excludeTombstoned(df: DataFrame, tomb: Option[DataFrame],
-      idCol: String, cols: Seq[String]): DataFrame =
-    tomb match {
-      case None => df
-      case Some(t) =>
-        cols.foldLeft(df)((d, c) => d.join(
-          broadcast(t.select(col(idCol).as(c))), Seq(c), "left_anti"))
-    }
-
-  /** [[excludeTombstoned]] with the text tombstone feed resolved from
-    * `sfDir` — the form the remaining text dup-listing keys (and
-    * [[graft.operators.LlmOps]]'s `doc_nd`) wrap their serves in, so
-    * EVERY key that lists doc ids as duplicate members stops listing a
-    * retracted doc, not just the LSH family. */
-  private[graft] def excludeTombstonedDocs(spark: SparkSession,
-      sfDir: String, df: DataFrame, cols: Seq[String]): DataFrame =
-    excludeTombstoned(df, textTombstoneIds(spark, sfDir), "doc_id", cols)
-
-  /** RETRACTION for a MEDIA modality's fingerprint probe index — the
-    * [[tombstoneTextDocs]] sibling: tombstone rows land in the
-    * `mp = -1` partition of the modality's band index; the streaming
-    * probe ([[incrementalMediaDedupBatch]]) and the batch dup keys
-    * ([[imageDHashDups]]/[[audioHashDups]]/[[videoHashDups]]) exclude
-    * the retracted assets from the next serve on; the re-stage
-    * ([[maybeRestageMediaIndex]]) absorbs. */
-  def tombstoneMediaAssets(spark: SparkSession, sfDir: String,
-      ids: DataFrame, m: MediaModality = ImageModality): Unit = {
-    val dir = mediaBandIdxDir(spark, sfDir, m)
-    val ts = tombstoneRowsFor(spark, dir, ids, "media_id", "mp")
-    graft.util.StagedArtifacts.noteAppend(dir, ts)
-    ts.write.mode("append").partitionBy("mp").parquet(dir.toString)
-  }
-
-  /** [[dropTextTombstones]] for a media modality. */
-  def dropMediaTombstones(spark: SparkSession, sfDir: String,
-      m: MediaModality = ImageModality): Unit =
-    resolvedIdxDir(mediaBandIdxDirs(m.name), sfDir, mediaIdxName(m))
-      .map(_.resolve(s"mp=$TombstonePart"))
-      .filter(java.nio.file.Files.isDirectory(_))
-      .foreach(graft.util.TempDirs.deleteNow)
-
-  /** [[textTombstoneIds]] for a media modality — the same direct
-    * marker-dir read. */
-  private[graft] def mediaTombstoneIds(spark: SparkSession, sfDir: String,
-      m: MediaModality = ImageModality): Option[DataFrame] =
-    resolvedIdxDir(mediaBandIdxDirs(m.name), sfDir, mediaIdxName(m))
-      .flatMap(tombstonePartDir(_, "mp"))
-      // only the id column is read — declaring it skips the per-serve
-      // footer-inference job (opt r20)
-      .map(d => spark.read.schema(
-        org.apache.spark.sql.types.StructType.fromDDL("media_id BIGINT"))
-        .parquet(d.toString).select("media_id").distinct())
 
   /** Deterministic takedown slice for the `lsh_del` contract key —
     * every doc_id ≡ [[DocDeleteRem]] (mod [[DocDeleteMod]]):
@@ -1376,7 +1094,7 @@ object DedupOps {
     * takedown contract key (`lsh_del`), completing the deletion story
     * across the index families (vectors: `ann_del`; clusters:
     * [[tombstoneClusterDocs]]; text: here; media:
-    * [[tombstoneMediaAssets]], spec-locked): ingest one tombstone file
+    * `MediaModality.index.tombstone`, spec-locked): ingest one tombstone file
     * set for the deterministic [[DocDeleteMod]]-slice and run the
     * incremental-dedup serve THROUGH it — [[stagedIncrementalDedup]]
     * reads the tombstone ids from the band index's `sp = -1` partition
@@ -1388,20 +1106,15 @@ object DedupOps {
     val ids = Fixtures.documents(spark, sfDir)
       .filter(pmod(col("doc_id"), lit(DocDeleteMod)) === lit(DocDeleteRem))
       .select("doc_id")
-    tombstoneTextDocs(spark, sfDir, ids)
+    TextIndex.tombstone(spark, sfDir, ids)
     try {
-      val out = stagedIncrementalDedup(spark, sfDir)
-      val dir = java.nio.file.Files.createTempDirectory("graft_lsh_del_out_")
-      graft.util.TempDirs.track(dir)
-      out.write.mode("overwrite").parquet(dir.toString)
-      // declared schema (the frame just written) — skips the read-back's
-      // footer-inference job (opt r20)
-      spark.read.schema(out.schema).parquet(dir.toString)
-    } finally dropTextTombstones(spark, sfDir)
+      graft.util.TempDirs.materialize(stagedIncrementalDedup(spark, sfDir),
+        "graft_lsh_del_out_")
+    } finally TextIndex.dropTombstones(spark, sfDir)
   }
 
   /** Assert the bucket-cap premise the streaming dedup's oracle relies
-    * on (ADVICE r13): [[stagedBandProbeIndex]] caps each (band, sig)
+    * on (ADVICE r13): [[TextIndex]] caps each (band, sig)
     * bucket's BASE members alone at staging, while the shared
     * `incr_dedup` oracle (and [[docIncrementalDedup]]) ranks new+base
     * interleaved — identical exactly when NO bucket overflows. `Verify`
@@ -1413,14 +1126,20 @@ object DedupOps {
     * column — scalars, no tokenize. */
   def assertTextProbeCapPremise(spark: SparkSession, sfDir: String): Unit = {
     graft.GraftSession.registerFunctions(spark)
-    val mx = stagedTextSignatures(spark, sfDir)
-      .select(posexplode(col("bands")).as(Seq("band", "sig")))
-      .groupBy("band", "sig").agg(count(lit(1)).as("n"))
+    requireCapPremise("stream_lsh", "band", stagedTextSignatures(spark, sfDir)
+      .select(posexplode(col("bands")).as(Seq("band", "sig"))), "band", "sig")
+  }
+
+  /** Fail unless every `keys` bucket of `rows` fits [[MaxBucketMembers]]
+    * — one aggregation, one collected scalar. */
+  private def requireCapPremise(what: String, index: String, rows: DataFrame,
+      keys: String*): Unit = {
+    val mx = rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
       .agg(coalesce(max(col("n")), lit(0L))).collect()(0).getLong(0)
     require(mx <= MaxBucketMembers,
-      s"stream_lsh cap premise: a (band, sig) bucket holds $mx members > " +
-        s"MaxBucketMembers=$MaxBucketMembers — the staged band index's " +
-        "base-only cap no longer matches the oracle's interleaved ranking")
+      s"$what cap premise: a (${keys.mkString(", ")}) bucket holds $mx " +
+        s"members > MaxBucketMembers=$MaxBucketMembers — the staged $index " +
+        "index's base-only cap no longer matches the oracle's interleaved ranking")
   }
 
   /** Verified cross dups of ONE arriving increment batch against the
@@ -1428,11 +1147,11 @@ object DedupOps {
     * dedup ([[graft.streaming.StreamOps.streamTextDedup]]). The batch's
     * docs are signed in-batch ([[textSignaturesOf]] — a stateless
     * projection), then BOTH serving reads prune partitions:
-    * candidates come from [[stagedBandProbeIndex]] scanned only at the
+    * candidates come from [[TextIndex]] scanned only at the
     * increment's signature prefixes (distinct-`sp` collect, bounded by
     * [[SigPrefixParts]] — the staged-ANN probed-cells discipline), and
     * the verify stage's base shingle sets come from
-    * [[stagedShingleIndex]] scanned only at the candidate docs' buckets.
+    * [[ShingleIndex]] scanned only at the candidate docs' buckets.
     * Per-batch cost is O(increment + matched buckets + candidates) —
     * no corpus-wide scan, shuffle, or re-tokenize anywhere in the batch
     * body. The increment's exploded bands broadcast (a micro-batch is
@@ -1443,7 +1162,7 @@ object DedupOps {
     * micro-batch-split independent. Unioned over any split of the full
     * increment this equals [[docIncrementalDedup]] over the whole
     * corpus when bucket caps don't bind (spec-locked on the fixture;
-    * see [[stagedBandProbeIndex]] for the overflow nuance). */
+    * see [[TextIndex]] for the overflow nuance). */
   /** Phase 1 of [[incrementalDedupBatch]]: the signature-prefix-PRUNED
     * band-probe join producing one batch's candidate pairs. Factored so
     * the plan guard asserts its `sp` pruning on this plan directly —
@@ -1468,9 +1187,8 @@ object DedupOps {
     // as a match target — the anti-join rides the already-pruned,
     // already-bounded probe scan; zero plan change when no tombstone
     // partition exists
-    excludeTombstoned(
-        stagedBandProbeIndex(spark, sfDir).filter(col("sp").isin(sps: _*)),
-        textTombstoneIds(spark, sfDir), "doc_id", Seq("doc_id"))
+    TextIndex.excludeTombstoned(spark, sfDir,
+        TextIndex.read(spark, sfDir).filter(col("sp").isin(sps: _*)), Seq("doc_id"))
       .join(broadcast(incBands), Seq("band", "sig"))
       .groupBy(col("new_doc"), col("doc_id").as("base_doc"))
       .agg(count(lit(1)).as("n_bands"))
@@ -1569,7 +1287,7 @@ object DedupOps {
     val cand = spark.read.schema(candFrame.schema).parquet(candDir.toString)
     val withNewSh = cand.join(
       inc.select(col("doc_id").as("new_doc"), col("sh").as("nsh")), "new_doc")
-    val baseSh = stagedShingleIndex(spark, sfDir)
+    val baseSh = ShingleIndex.read(spark, sfDir)
       .filter(col("db").isin(dbs: _*))
       .select(col("doc_id").as("base_doc"), col("sh").as("bsh"))
     withNewSh.join(baseSh, "base_doc")
@@ -1607,7 +1325,7 @@ object DedupOps {
   // discipline applied to the dedup gate's media side)
   // ---------------------------------------------------------------------
 
-  /** Partition count of [[stagedMediaBandIndex]] — an index constant
+  /** Partition count of the modality's [[MediaModality.index]] — an index constant
     * like [[SigPrefixParts]], so the per-batch distinct-partition
     * collect is bounded by it, never by data. */
   val MediaBandParts = 64
@@ -1624,19 +1342,25 @@ object DedupOps {
   private def mediaBlockPrefix(blk: Column, blkVal: Column): Column =
     Hashing.md5Bucket(blk * 128 + blkVal, MediaBandParts).cast("int")
 
+  /** Build counter for the media probe-index artifacts — the
+    * [[probeStageBuilds]] sibling (shared across modalities: each
+    * build increments once). */
+  val mediaProbeStageBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** A media modality's dedup surfaces: its staged corpus fingerprint
     * artifact, its in-batch fingerprinter (the SAME real codec both
     * ways, so increment and base rows are comparable by construction),
-    * and the fixture's doc→asset synthesizer (production swaps this for
-    * its landing-dir reader). Every modality shares the banding
-    * geometry (8 × 7-bit blocks over a 56-bit fingerprint), so ONE
-    * index/probe/append/re-stage implementation serves all three — the
-    * lifecycle functions below take a modality and default to image. */
+    * the fixture's doc→asset synthesizer (production swaps this for
+    * its landing-dir reader), and its fingerprint probe [[index]].
+    * Every modality shares the banding geometry (8 × 7-bit blocks over
+    * a 56-bit fingerprint), so one index definition serves all three. */
   final case class MediaModality(
       name: String,
       stagedHashes: (SparkSession, String) => DataFrame,
-      fingerprint: org.apache.spark.sql.Dataset[graft.multimodal.MediaRecord] => DataFrame,
-      table: DataFrame => org.apache.spark.sql.Dataset[graft.multimodal.MediaRecord])
+      fingerprint: Dataset[MediaRecord] => DataFrame,
+      table: DataFrame => Dataset[MediaRecord]) {
+    @transient lazy val index: ProbeIndex[Dataset[MediaRecord]] = mediaIndexOf(this)
+  }
 
   val ImageModality: MediaModality = MediaModality("img",
     graft.multimodal.MultimodalOps.stagedImageHashes,
@@ -1654,15 +1378,6 @@ object DedupOps {
   val MediaModalities: Seq[MediaModality] =
     Seq(ImageModality, AudioModality, VideoModality)
 
-  private val mediaBandIdxDirs: Map[String, graft.util.StampedMemo[java.nio.file.Path]] =
-    MediaModalities.map(m =>
-      m.name -> new graft.util.StampedMemo[java.nio.file.Path]("documents")).toMap
-
-  /** Build counter for the media probe-index artifacts — the
-    * [[probeStageBuilds]] sibling (shared across modalities: each
-    * build increments once). */
-  val mediaProbeStageBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Increment membership for MEDIA rows: an asset is NEW iff its
     * GENERATING doc is ([[isNewDoc]] through the arithmetic inverse of
     * the asset-id scheme,
@@ -1673,13 +1388,17 @@ object DedupOps {
   private[graft] def isNewMedia: Column =
     isNewId(graft.multimodal.MultimodalOps.mediaSrcDoc(col("media_id")))
 
-  /** The BASE side's banded fingerprint index, staged once per corpus
-    * snapshot and PARTITIONED BY BLOCK-BUCKET HASH — the media analog of
-    * [[stagedBandProbeIndex]]: an arriving batch's fingerprint blocks
-    * name the only `mp` partitions worth scanning, so the per-batch
-    * candidate probe reads O(matched buckets), not the corpus. Unlike
-    * text, ONE index serves both stages: the hamming verify needs only
-    * the two fingerprints, and `dhash` rides in the row — no second
+  private def mediaRows(blocks: DataFrame): DataFrame =
+    blocks.select(col("blk"), col("blk_val"), col("media_id"), col("dhash"),
+      mediaBlockPrefix(col("blk"), col("blk_val")).as("mp"))
+
+  /** The BASE side's banded fingerprint index of modality `m`, staged
+    * once per corpus snapshot and PARTITIONED BY BLOCK-BUCKET HASH — the
+    * media analog of [[TextIndex]]: an arriving batch's fingerprint
+    * blocks name the only `mp` partitions worth scanning, so the
+    * per-batch candidate probe reads O(matched buckets), not the corpus.
+    * Unlike text, ONE index serves both stages: the hamming verify needs
+    * only the two fingerprints, and `dhash` rides in the row — no second
     * point-fetch index. Rows: `(blk, blk_val, media_id, dhash)` for
     * base (non-increment) assets, each bucket capped at
     * [[MaxBucketMembers]] at staging (overflow observed — the
@@ -1689,26 +1408,26 @@ object DedupOps {
     * values are data, so a batch of B assets probes
     * min(8B, [[MediaBandParts]]) buckets — strongest for small admission
     * batches; a huge batch degrades to a full (column-pruned,
-    * shuffle-free) scan of the 4-scalar index. */
-  def stagedMediaBandIndex(spark: SparkSession, sfDir: String,
-      m: MediaModality = ImageModality): DataFrame =
-    graft.util.StagedArtifacts.readStaged(spark,
-      mediaBandIdxDir(spark, sfDir, m))
-
-  private def mediaIdxName(m: MediaModality): String = s"media_idx_${m.name}"
-
-  private def mediaBandIdxDir(spark: SparkSession, sfDir: String,
-      m: MediaModality, fresh: Boolean = false): java.nio.file.Path =
-    graft.util.StagedArtifacts.parquetDir(sfDir, mediaBandIdxDirs(m.name),
-      mediaIdxName(m), mediaProbeStageBuilds, Seq("mp"), freshGen = fresh,
-      // base size = distinct ASSETS (the staleness gauge's denominator
-      // unit — appends count assets), not banded block rows
-      baseCount = _.select("media_id").distinct().count()) {
-      val blocks = mediaBlocksOf(m.stagedHashes(spark, sfDir).filter(!isNewMedia))
-      capBuckets(blocks, Seq(col("blk"), col("blk_val")), col("media_id"),
-          mediaOverflowMetric(m))
-        .select(col("blk"), col("blk_val"), col("media_id"), col("dhash"),
-          mediaBlockPrefix(col("blk"), col("blk_val")).as("mp"))
+    * shuffle-free) scan of the 4-scalar index.
+    *
+    * An admitted batch decodes ONLY the batch through the real codec
+    * (decode-failed payloads drop per-row, exactly as at staging);
+    * appends count ASSETS, against a base measured in distinct assets.
+    * A re-append of an existing id double-counts one asset — a gauge
+    * skew under the admission contract, never a correctness issue. */
+  private def mediaIndexOf(m: MediaModality) =
+    new ProbeIndex[Dataset[MediaRecord]](s"media_idx_${m.name}", "mp",
+        "media_id", "media_appends", mediaProbeStageBuilds) {
+      protected def build(spark: SparkSession, sfDir: String): DataFrame =
+        mediaRows(capBuckets(
+          mediaBlocksOf(m.stagedHashes(spark, sfDir).filter(!isNewMedia)),
+          Seq(col("blk"), col("blk_val")), col("media_id"), mediaOverflowMetric(m)))
+      protected def prepare(spark: SparkSession, batch: Dataset[MediaRecord]) =
+        m.fingerprint(batch)
+      protected def rowsOf(fp: DataFrame): DataFrame = mediaRows(mediaBlocksOf(fp))
+      override protected def baseCount(staged: DataFrame): Long =
+        staged.select("media_id").distinct().count()
+      protected def staleGauge: String = mediaStaleGauge(m)
     }
 
   /** Image keeps the unsuffixed metric/gauge names (round-artifact
@@ -1722,122 +1441,13 @@ object DedupOps {
     if (m.name == "img") "media.index_stale_fraction"
     else s"media.index_stale_fraction_${m.name}"
 
-  /** TEST-ONLY isolation drop for the media probe indexes — the
-    * [[dropStagedProbeIndexes]] semantics (delete the durable dirs so
-    * the next access rebuilds; counters scoped per staged dir). */
-  def dropStagedMediaProbeIndex(): Unit = {
-    for (memo <- mediaBandIdxDirs.values; sf <- memo.keys; d <- memo.peek(sf))
-      graft.util.ServingManifest.removeCounter(sf, MediaAppendsFamily,
-        MediaTables, d.toString)
-    mediaBandIdxDirs.values.foreach(_.clear())
-    MediaModalities.foreach(m =>
-      graft.util.StagedArtifacts.dropDurable(mediaIdxName(m)))
-  }
-
-  /** Manifest family for the media append/staleness bookkeeping — the
-    * [[TextAppendsFamily]] sibling, same persistence rationale
-    * (counters key by index dir, and index dirs are per-modality, so
-    * one family serves all three). */
-  private val MediaAppendsFamily = "media_appends"
-
-  /** The fixture tables the media indexes stamp over. Today the media
-    * corpus DERIVES from `documents` (each row synthesizes its assets),
-    * so this aliases [[TextTables]] — named separately so the
-    * corpus-stamp intent stays explicit when media gets its own fixture
-    * table (r14 verdict #4, cosmetic). */
-  private val MediaTables = TextTables
-
-  /** INCREMENTAL media-index maintenance — [[appendToTextIndexes]] for
-    * the dedup gate's media side: after the gate ADMITS a batch of
-    * assets, decode ONLY the batch through the real codec and fold its
-    * banded fingerprint rows into the SERVED probe index — no re-decode
-    * of the corpus, no rebuild, append files into only the touched `mp`
-    * partition dirs. Appending declares the batch BASE regardless of
-    * its ids' increment-bucket membership (admission is the caller's
-    * statement). Appended rows bypass the staging cap (bounded by the
-    * batch); the cap re-asserts at the next re-stage. Returns the
-    * assets appended (decode-failed payloads drop per-row, exactly as
-    * at staging). */
-  def appendToMediaIndex(spark: SparkSession, sfDir: String,
-      batch: org.apache.spark.sql.Dataset[graft.multimodal.MediaRecord],
-      m: MediaModality = ImageModality): Long = {
-    val dir = mediaBandIdxDir(spark, sfDir, m)
-    val fp = m.fingerprint(batch).persist()
-    try {
-      val n = fp.count()
-      val blockRows = mediaBlocksOf(fp)
-        .select(col("blk"), col("blk_val"), col("media_id"), col("dhash"),
-          mediaBlockPrefix(col("blk"), col("blk_val")).as("mp"))
-      graft.util.StagedArtifacts.noteAppend(dir, blockRows)
-      blockRows
-        .write.mode("append").partitionBy("mp").parquet(dir.toString)
-      graft.util.ServingManifest.addCounter(sfDir, MediaAppendsFamily,
-        MediaTables, dir.toString, n)
-      n
-    } finally { fp.unpersist(); () }
-  }
-
-  /** Staleness gauge: the fraction of assets in the served media index
-    * that entered via append — the [[textIndexStaleFraction]] sibling:
-    * pure arithmetic (appended assets / (staged base assets + appended)),
-    * resolve-never-build, restart-surviving through the durable dir.
-    * Assumes appended ids are NEW assets (the admission contract: a
-    * re-append of an existing id would double-count one asset in the
-    * denominator — a gauge skew, never a correctness issue). */
-  def mediaIndexStaleFraction(spark: SparkSession, sfDir: String,
-      m: MediaModality = ImageModality): Double =
-    resolvedIdxDir(mediaBandIdxDirs(m.name), sfDir, mediaIdxName(m)) match {
-      case None => 0.0
-      case Some(dir) =>
-        val appended = graft.util.ServingManifest
-          .getCounter(sfDir, MediaAppendsFamily, MediaTables, dir.toString)
-        if (appended == 0) 0.0
-        else appended.toDouble /
-          (graft.util.StagedArtifacts.stagedBaseRows(sfDir,
-            mediaBandIdxDirs(m.name), dir) + appended).toDouble
-    }
-
-  /** Staleness-triggered RE-STAGE — [[maybeRestageTextIndexes]] for the
-    * media index, same COMPACTION CONTRACT: the rebuild reads only the
-    * corpus snapshot (through the staged fingerprint artifact), so
-    * appended assets never landed in the corpus DROP. Returns whether a
-    * re-stage ran. */
-  def maybeRestageMediaIndex(spark: SparkSession, sfDir: String,
-      threshold: Double, m: MediaModality = ImageModality): Boolean = {
-    val stale = mediaIndexStaleFraction(spark, sfDir, m)
-    graft.ObservedMetrics.recordGauge(mediaStaleGauge(m), stale)
-    if (stale <= threshold) false
-    else {
-      // fresh generation: the rebuild's append counter reads zero, the
-      // old dir sweeps, its counter self-heals on next manifest read
-      mediaBandIdxDir(spark, sfDir, m, fresh = true) // eager: serving
-      true                                  // never races a half-build
-    }
-  }
-
-  /** Drop the in-JVM staged-index memos WITHOUT touching the durable
-    * dirs or the manifest — test-only: simulates a JVM restart, so the
-    * restart-durability spec can assert the durable root + persisted
-    * counters alone restore the appended serving state (the
-    * `forgetSegmentRegistrations` sibling). */
-  private[graft] def forgetStagedIndexMemos(): Unit = {
-    bandIdxDirs.clear(); shingleIdxDirs.clear()
-    mediaBandIdxDirs.values.foreach(_.clear())
-  }
-
   /** The cap premise for the media stream key's oracle —
-    * [[assertTextProbeCapPremise]] for [[stagedMediaBandIndex]]:
+    * [[assertTextProbeCapPremise]] for the modality's [[MediaModality.index]]:
     * `Verify` calls this before dumping `stream_img`. */
   def assertMediaProbeCapPremise(spark: SparkSession, sfDir: String,
-      m: MediaModality = ImageModality): Unit = {
-    val mx = mediaBlocksOf(m.stagedHashes(spark, sfDir))
-      .groupBy("blk", "blk_val").agg(count(lit(1)).as("n"))
-      .agg(coalesce(max(col("n")), lit(0L))).collect()(0).getLong(0)
-    require(mx <= MaxBucketMembers,
-      s"media (${m.name}) cap premise: a (blk, blk_val) bucket holds $mx " +
-        s"members > MaxBucketMembers=$MaxBucketMembers — the staged media " +
-        "index's base-only cap no longer matches the oracle's interleaved ranking")
-  }
+      m: MediaModality = ImageModality): Unit =
+    requireCapPremise(s"media (${m.name})", "media",
+      mediaBlocksOf(m.stagedHashes(spark, sfDir)), "blk", "blk_val")
 
   /** Verified cross near-dups of ONE arriving media batch against the
     * frozen base — the per-micro-batch body of the STREAMING media
@@ -1848,7 +1458,7 @@ object DedupOps {
     * decodes the corpus ([[graft.multimodal.MultimodalOps.imageDHash]]),
     * CHECKPOINTED to scalars so the decode runs once per batch (its two
     * consumers: the distinct-`mp` collect and the served join); then
-    * the candidate probe scans [[stagedMediaBandIndex]] at only the
+    * the candidate probe scans the modality's [[MediaModality.index]] at only the
     * batch's block-bucket partitions (bounded collect ≤
     * [[MediaBandParts]]) and the full 56-bit hamming verify runs on the
     * joined fingerprints in-row. Per-batch cost O(batch + matched
@@ -1861,7 +1471,7 @@ object DedupOps {
     * the cross-pair slice of [[imageDHashDups]] when bucket caps don't
     * bind (spec-locked; see [[assertMediaProbeCapPremise]]). */
   def incrementalMediaDedupBatch(spark: SparkSession, sfDir: String,
-      batch: org.apache.spark.sql.Dataset[graft.multimodal.MediaRecord],
+      batch: Dataset[MediaRecord],
       m: MediaModality = ImageModality): DataFrame = {
     // one checkpoint dir per (corpus, modality, JVM), overwritten per
     // batch — the incrementalDedupBatch leak-bound discipline
@@ -1898,9 +1508,8 @@ object DedupOps {
     // takedown exclusion (r19): the probeCandidates stance — a
     // tombstoned base asset stops matching; zero plan change when no
     // tombstone partition exists
-    excludeTombstoned(
-        stagedMediaBandIndex(spark, sfDir, m).filter(col("mp").isin(mps: _*)),
-        mediaTombstoneIds(spark, sfDir, m), "media_id", Seq("media_id"))
+    m.index.excludeTombstoned(spark, sfDir,
+        m.index.read(spark, sfDir).filter(col("mp").isin(mps: _*)), Seq("media_id"))
       .join(broadcast(incBlocks), Seq("blk", "blk_val"))
       .select(col("new_media"), col("media_id").as("base_media"),
         expr("bit_count(nh ^ dhash)").as("hamming"))
@@ -2544,8 +2153,13 @@ object DedupOps {
   // [[maybeRestageCrossModal]] the compaction trigger.
   // ---------------------------------------------------------------------
 
-  private val XmDeltaFamily = "xm_deltas"
-  private val XmTables = TextTables
+  /** The serving registration of this corpus's cluster-delta overlay
+    * (manifest family `xm_deltas`: `deltaRoot`, `deltaRows`, plus the
+    * `baseRows` measured at registration) — the registration of record
+    * lives ONLY in the manifest, no JVM-local fast path, so a restarted
+    * JVM resolves the same overlay and gauge. */
+  val ClusterDeltas = new graft.util.OverlayRegistration("xm_deltas",
+    Seq("documents"), "deltaRoot", "deltaRows", extraKeys = Seq("baseRows"))
 
   /** Publish a delta-overlay root as the serving registration of record
     * for this corpus's cross-modal assignment — the
@@ -2555,18 +2169,10 @@ object DedupOps {
     * arithmetic afterwards. The root dir is CREATED here if absent —
     * registration typically precedes the first epoch write, and a
     * not-yet-existing dir would otherwise be swept as dead by the very
-    * first self-healing read (review r16). LOCAL-FILESYSTEM
-    * PRECONDITION: `deltaRoot` (like every registration in the
-    * [[graft.util.ServingManifest]] sidecar, which lives in the host
-    * temp tree) must be a local dir — the existence self-heal and the
-    * overlay read's epoch listing are `java.nio`/`java.io` calls; an
-    * object-store overlay would swap the registry, not this API. */
+    * first self-healing read (review r16). */
   def registerClusterDeltas(spark: SparkSession, sfDir: String,
       deltaRoot: String): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(deltaRoot))
-    // a fresh registration wrote a manifest entry without the "epochs"
-    // gauge — drop the skip cache so the next maintenance turn re-seeds it
-    epochGaugeCache.remove(deltaRoot)
     // the base count is a property of the staged ARTIFACT, not of the
     // registration: memo it per staged generation dir (a re-stage lands
     // in a fresh temp dir, so a fresh generation re-counts) instead of
@@ -2578,9 +2184,8 @@ object DedupOps {
         xmBaseRowCounts.computeIfAbsent(dir, _ => base.count()).longValue
       case None => base.count()
     }
-    graft.util.ServingManifest.put(sfDir, XmDeltaFamily, XmTables,
-      Map("deltaRoot" -> deltaRoot, "baseRows" -> baseRows.toString,
-        "deltaRows" -> "0"))
+    ClusterDeltas.register(sfDir, deltaRoot, 0L,
+      Map("baseRows" -> baseRows.toString))
   }
 
   /** Row count per staged base-assignment generation dir (see
@@ -2588,21 +2193,6 @@ object DedupOps {
     * generation this JVM ever resolves. */
   private val xmBaseRowCounts =
     new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, java.lang.Long]()
-
-  /** Bump the registered overlay's delta-row counter after an epoch
-    * write — conditional on `deltaRoot` still being the registration of
-    * record AND `epochId` exceeding the registration's high-water mark,
-    * in ONE manifest lock ([[graft.util.ServingManifest
-    * .addCounterIfNewEpoch]]): an epoch landing after the registration
-    * was retired (or swapped by another JVM) must not resurrect or skew
-    * the new registration's gauge, and a REPLAYED epoch (idempotent
-    * sink overwrite) must not double-count its rows. No-ops (false)
-    * when unregistered or replayed. */
-  def noteClusterDeltaAppend(sfDir: String, deltaRoot: String,
-      rows: Long, epochId: Long): Boolean =
-    graft.util.ServingManifest.addCounterIfNewEpoch(sfDir, XmDeltaFamily,
-      XmTables, "deltaRoot", deltaRoot, "deltaRows", rows,
-      "lastEpoch", epochId)
 
   /** RETRACTION (takedown / right-to-be-forgotten) at increment cadence
     * — the cluster layer's tombstone writer, the
@@ -2633,27 +2223,9 @@ object DedupOps {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$deltaRoot/epoch=$epochId")
     val n = obs.get("n").asInstanceOf[Long]
-    noteClusterDeltaAppend(sfDir, deltaRoot, n, epochId)
+    ClusterDeltas.noteAppend(sfDir, deltaRoot, n, epochId)
     ()
   }
-
-  /** The overlay root currently registered for `sfDir`, provided its
-    * dir still exists (a dead JVM's retired temp root drops the stale
-    * registration — the `registeredSegmentRoot` self-healing). The heal
-    * is a CONDITIONAL removal ([[graft.util.ServingManifest.removeIf]]):
-    * an unconditional remove after an unlocked get would delete a fresh
-    * registration another JVM installed between the two — the exact
-    * two-lock race removeIf exists for (review r16). */
-  def registeredClusterDeltaRoot(sfDir: String): Option[String] =
-    graft.util.ServingManifest.get(sfDir, XmDeltaFamily, XmTables)
-      .get("deltaRoot") match {
-      case Some(r) if java.nio.file.Files
-          .isDirectory(java.nio.file.Paths.get(r)) => Some(r)
-      case Some(r) =>
-        retireClusterDeltas(sfDir, r)
-        None
-      case None => None
-    }
 
   /** The cross-modal assignment every consumer should read between
     * snapshot re-stages: the staged BASE closure ∪ the registered delta
@@ -2662,7 +2234,7 @@ object DedupOps {
     * `servedIndex` contract). */
   def servedCrossModalGroups(spark: SparkSession, sfDir: String): DataFrame = {
     val base = stagedBaseCrossModalGroups(spark, sfDir)
-    registeredClusterDeltaRoot(sfDir) match {
+    ClusterDeltas.resolve(sfDir) match {
       case None => base
       case Some(root) => servedClusterAssignment(spark, base, root)
     }
@@ -2670,73 +2242,43 @@ object DedupOps {
 
   /** Staleness gauge for the cluster layer: the fraction of the served
     * assignment's rows that entered via delta epochs — pure manifest
-    * arithmetic (deltaRows / (baseRows + deltaRows)), resolve-never-
-    * build, 0.0 under pure serving. A doc re-touched in two epochs
-    * counts twice in the numerator — a monotone staleness PROXY's
-    * acceptable skew (the [[mediaIndexStaleFraction]] admission-contract
-    * caveat), never a correctness input. */
-  def xmMergedFraction(spark: SparkSession, sfDir: String): Double = {
-    // ONE manifest read: existence-check and counters must come from the
-    // SAME registration snapshot, or a concurrent retire-and-re-register
-    // mixes one registration's liveness with another's counters
-    val m = graft.util.ServingManifest.get(sfDir, XmDeltaFamily, XmTables)
-    m.get("deltaRoot") match {
-      case Some(r) if java.nio.file.Files
-          .isDirectory(java.nio.file.Paths.get(r)) =>
-        val d = m.get("deltaRows").map(_.toLong).getOrElse(0L)
-        if (d == 0) 0.0
-        else d.toDouble /
-          (m.get("baseRows").map(_.toLong).getOrElse(0L) + d).toDouble
-      case _ => 0.0
+    * arithmetic (deltaRows / (baseRows + deltaRows)) over ONE
+    * registration snapshot, resolve-never-build, 0.0 under pure
+    * serving. A doc re-touched in two epochs counts twice in the
+    * numerator — a monotone staleness PROXY's acceptable skew, never a
+    * correctness input. */
+  def xmMergedFraction(spark: SparkSession, sfDir: String): Double =
+    ClusterDeltas.snapshot(sfDir).fold(0.0) { m =>
+      def n(k: String) = m.get(k).map(_.toLong).getOrElse(0L)
+      ProbeIndex.staleShare(n("deltaRows"), n("baseRows"))
     }
-  }
 
   /** Staleness-triggered RE-STAGE for the cluster layer — the shared
-    * COMPACTION CONTRACT ([[maybeRestageMediaIndex]] /
-    * [[maybeRestageTextIndexes]]): when the merged-in fraction exceeds
-    * `threshold`, rebuild the base closure from the CORPUS SNAPSHOT
-    * alone (in production the snapshot has absorbed the admitted
-    * increments, so the full closure covers them) and retire the delta
-    * registration — un-compacted deltas DROP, exactly as appended index
-    * rows drop at an index re-stage. Returns whether a re-stage ran. */
+    * COMPACTION CONTRACT (the probe indexes'
+    * [[ProbeIndex.maybeRestage]]): when the merged-in
+    * fraction exceeds `threshold`, rebuild the base closure from the
+    * CORPUS SNAPSHOT alone (in production the snapshot has absorbed the
+    * admitted increments, so the full closure covers them) and retire
+    * the delta registration — un-compacted deltas DROP, exactly as
+    * appended index rows drop at an index re-stage. Returns whether a
+    * re-stage ran. */
   def maybeRestageCrossModal(spark: SparkSession, sfDir: String,
       threshold: Double): Boolean = {
     val stale = xmMergedFraction(spark, sfDir)
     graft.ObservedMetrics.recordGauge("xm.merged_fraction", stale)
     if (stale <= threshold) false
     else {
-      val root = registeredClusterDeltaRoot(sfDir)
+      val root = ClusterDeltas.resolve(sfDir)
       xmodalBaseDirs.invalidate(sfDir)
       xmDocIdxDirs.invalidate(sfDir)
       xmClusterIdxDirs.invalidate(sfDir)
       stagedBaseCrossModalGroups(spark, sfDir) // eager: serving never
       xmDocIdxDir(spark, sfDir)                // races a half-build —
       xmClusterIdxDir(spark, sfDir)            // base + both probe
-      root.foreach { r =>                      // keyings rebuild here
-        graft.util.ServingManifest.removeIf(sfDir, XmDeltaFamily, XmTables,
-          "deltaRoot", r,
-          alsoRemove = Seq("deltaRows", "baseRows", "lastEpoch", "epochs"))
-      }
+      root.foreach(ClusterDeltas.retire(sfDir, _)) // keyings rebuild
       true
     }
   }
-
-  /** Retire the registration for exactly `deltaRoot` — compare-and-
-    * delete under one manifest lock with the measurement keys riding in
-    * the same write (the by-root `dropIndexSegments` discipline): a key
-    * that published its own overlay drops exactly that, never a
-    * registration another serve path installed after it. */
-  def retireClusterDeltas(sfDir: String, deltaRoot: String): Boolean =
-    graft.util.ServingManifest.removeIf(sfDir, XmDeltaFamily, XmTables,
-      "deltaRoot", deltaRoot,
-      alsoRemove = Seq("deltaRows", "baseRows", "lastEpoch", "epochs"))
-
-  /** Retire any cluster-delta registration for `sfDir` — hermeticity
-    * drop for Bench/Verify startup and test isolation (the
-    * `dropIndexSegments` sibling). */
-  def dropClusterDeltas(sfDir: String): Unit =
-    graft.util.ServingManifest.remove(sfDir, XmDeltaFamily)
-
   /** Epoch-count trigger at which [[maybeCompactClusterDeltas]] folds —
     * past K epochs, every serve and every per-batch overlay read pays
     * O(Σ delta rows) across K+ dirs where one collapsed delta would be
@@ -2790,15 +2332,7 @@ object DedupOps {
     * file fold still applies. Returns whether a fold ran. */
   def maybeCompactClusterDeltas(spark: SparkSession, sfDir: String,
       deltaRoot: String, maxEpochs: Int = XmCompactEpochs): Boolean = {
-    val epochs = graft.util.EpochDirs.list(deltaRoot)
-    graft.ObservedMetrics.recordGauge("xm.delta_epochs", epochs.size.toDouble)
-    // manifest epoch gauge only when the count CHANGED (r17 verdict #3):
-    // the un-triggered per-micro-batch turn must not serialize an
-    // OS-file-locked read-modify-write into the stream
-    val prevGauge = epochGaugeCache.put(deltaRoot, epochs.size)
-    if (prevGauge == null || prevGauge.intValue != epochs.size)
-      graft.util.ServingManifest.setIf(sfDir, XmDeltaFamily, XmTables,
-        "deltaRoot", deltaRoot, Map("epochs" -> epochs.size.toString))
+    val epochs = ClusterDeltas.epochs(sfDir, deltaRoot, "xm.delta_epochs")
     if (epochs.size <= maxEpochs || epochs.size < 3) false
     else {
       graft.util.EpochDirs.sweepScratch(deltaRoot)
@@ -2826,20 +2360,11 @@ object DedupOps {
       // counter's append semantics resume on top via addCounterIfNewEpoch
       val total = rawClusterDeltas(spark, deltaRoot, None)
         .map(_.count()).getOrElse(0L)
-      epochGaugeCache.put(deltaRoot, 2)
-      graft.util.ServingManifest.setIf(sfDir, XmDeltaFamily, XmTables,
-        "deltaRoot", deltaRoot,
-        Map("deltaRows" -> total.toString, "epochs" -> "2"))
+      ClusterDeltas.remeasure(sfDir, deltaRoot, total, epochs = 2)
       graft.ObservedMetrics.bumpGauge("xm.delta_folds")
       true
     }
   }
-
-  /** Last epoch count written to the manifest per delta root — the
-    * steady-state skip for the per-micro-batch gauge write (r17 verdict
-    * #3; the [[graft.operators.SimilarityOps]] sibling). */
-  private val epochGaugeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   /** The BATCH overlay-serve leg of the cluster layer — `ann_seg`'s
     * register → serve-through-the-overlay → retire shape for cluster
@@ -2878,11 +2403,11 @@ object DedupOps {
       val obs = org.apache.spark.sql.Observation()
       delta.observe(obs, count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$root/epoch=0")
-      noteClusterDeltaAppend(sfDir, root.toString,
+      ClusterDeltas.noteAppend(sfDir, root.toString,
         obs.get("n").asInstanceOf[Long], epochId = 0L)
       crossModalKeepBestOver(spark, sfDir,
         servedCrossModalGroups(spark, sfDir))
-    } finally { retireClusterDeltas(sfDir, root.toString); () }
+    } finally { ClusterDeltas.retire(sfDir, root.toString); () }
   }
 
   /** Benchmark decontamination — the train/test-leakage detector every
@@ -2996,12 +2521,12 @@ object DedupOps {
     // family, not just the LSH chain (doc_simhash is a per-doc
     // projection, not a dup listing — projections are the corpus
     // rewrite's takedown domain)
-    "minhash" -> ((s, d) => excludeTombstonedDocs(s, d,
+    "minhash" -> ((s, d) => TextIndex.excludeTombstoned(s, d,
       stagedMinhashLsh(s, d), Seq("doc_a", "doc_b"))),
-    "substr_dups" -> ((s, d) => excludeTombstonedDocs(s, d,
+    "substr_dups" -> ((s, d) => TextIndex.excludeTombstoned(s, d,
       docSubstrDups(Fixtures.documents(s, d)), Seq("doc_a", "doc_b"))),
     "doc_simhash" -> ((s, d) => docSimhash(Fixtures.documents(s, d))),
-    "sim_pairs" -> ((s, d) => excludeTombstonedDocs(s, d,
+    "sim_pairs" -> ((s, d) => TextIndex.excludeTombstoned(s, d,
       docSimhashPairs(Fixtures.documents(s, d)), Seq("doc_a", "doc_b"))),
     // round 11: perceptual image-hash near-dups over the textured media
     // corpus ("img_dups" short for the bench line budget)
@@ -3018,7 +2543,7 @@ object DedupOps {
     // round 16: the cluster overlay's BATCH serve — register deltas,
     // fold the edge topic as one epoch, serve base ∪ deltas, elect
     "xm_served" -> ((s, d) => xmServedContract(s, d)),
-    "ngram_jac" -> ((s, d) => excludeTombstonedDocs(s, d,
+    "ngram_jac" -> ((s, d) => TextIndex.excludeTombstoned(s, d,
       stagedNgramJaccard(s, d), Seq("doc_a", "doc_b"))),
     "lsh_dups" -> ((s, d) => stagedLshVerifiedDups(s, d)),
     "dup_groups" -> ((s, d) => stagedDupGroups(s, d)),

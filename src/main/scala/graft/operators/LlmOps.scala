@@ -255,39 +255,23 @@ object LlmOps {
     * ad-mangled mirror, the kept one should be chosen by the quality
     * signal the pipeline already computes, not by crawl order.
     *
-    * Scale shape: quality is computed corpus-wide as a pure per-row
-    * projection and joined to the cluster assignment on doc_id — the
-    * join ships ONE double per document, never text (joining raw docs to
-    * clusters and scoring after would shuffle the corpus's text bytes).
-    * The cluster side is duplicate-density-unbounded, so no broadcast
-    * hint (the verified-dups discipline; AQE may still elect one at
-    * runtime). The election itself is a partial-combinable `min_by`
-    * AGGREGATE — each cluster's winner reduces map-side — and the
-    * winner flags back through a cluster-keyed JOIN, which AQE can
-    * skew-split; the obvious rank-1 window would sort each cluster in
-    * ONE task, un-splittable for the mega-cluster (identical
-    * boilerplate) case. Pass a staged `dupGroups` artifact in
+    * The election is [[DedupOps.keepBestElection]], shared with the
+    * cross-modal keys: quality is a pure per-row projection joined to
+    * the cluster assignment on doc_id — ONE double per document, never
+    * text — and the winner is a `min_by` evaluated as a WINDOW over the
+    * cluster, so the members subtree (docs scan + quality kernel +
+    * groups join) runs once. The trade it accepts: each cluster sorts
+    * in one task, which a mega-cluster (identical boilerplate) cannot
+    * split, where an aggregate-then-rejoin would reduce map-side but
+    * evaluate the members subtree twice (PlanSpec locks the
+    * single-scan shape). Pass a staged `dupGroups` artifact in
     * production (the [[docFilterPipeline]] parameter precedent);
     * omitted, clusters derive from `docs` cold.
     */
   def docKeepBest(docs: DataFrame,
-      dupGroups: Option[DataFrame] = None): DataFrame = {
-    val groups = dupGroups.getOrElse(DedupOps.docDupGroups(docs))
-      .select(col("doc_id"), col("cluster"), col("cluster_size"))
-    val quality = TextOps.textQualityScore(docs)
-      .select(col("doc_id"), col("quality"))
-    val members = groups.join(quality, Seq("doc_id"))
-    // single-scan election — the same window-fold as
-    // [[DedupOps.keepBestElection]] (opt r20): the aggregate-then-rejoin
-    // shape evaluated the members subtree (docs scan + quality kernel +
-    // groups join) twice; the window runs it once for identical winners.
-    members
-      .withColumn("keep_id",
-        min_by(col("doc_id"), struct(negate(col("quality")), col("doc_id")))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy("cluster")))
-      .select(col("doc_id"), col("cluster"), col("cluster_size"), col("quality"),
-        (col("doc_id") === col("keep_id")).cast("int").as("keep"))
-  }
+      dupGroups: Option[DataFrame] = None): DataFrame =
+    DedupOps.keepBestElection(docs,
+      dupGroups.getOrElse(DedupOps.docDupGroups(docs)))
 
   // ---------------------------------------------------------------------
   // Driver-contract wiring
@@ -306,7 +290,7 @@ object LlmOps {
     // in n_dups — excluded from the INPUT (exact here: no bucket caps,
     // so pre-filter equals the no-tombstone result minus the doc)
     "doc_nd" ->
-      ((s, d) => docNearDedup(DedupOps.excludeTombstonedDocs(s, d,
+      ((s, d) => docNearDedup(DedupOps.TextIndex.excludeTombstoned(s, d,
         Fixtures.documents(s, d), Seq("doc_id")))),
     "emb_topk" ->
       ((s, d) => embeddingTopKCosine(Fixtures.embeddings(s, d), QUERY_VEC, TOP_K_VECS)),

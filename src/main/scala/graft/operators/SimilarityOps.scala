@@ -434,7 +434,7 @@ object SimilarityOps {
     * observability for tests (the `lloydRuns` sibling). */
   val ivfIndexBuilds = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** TEST-ONLY isolation drop (the `dropStagedProbeIndexes` semantics:
+  /** TEST-ONLY isolation drop (the `ProbeIndex.drop` semantics:
     * the durable dirs delete, so the next access rebuilds). */
   def dropStagedIvfIndex(): Unit = {
     ivfIndexDirs.clear()
@@ -566,14 +566,9 @@ object SimilarityOps {
       .parquet(s"$root/epoch=0")
     registerIndexSegments(spark, sfDir, root.toString)
     try {
-      val out = embeddingBatchTopK(spark, sfDir, QUERY_BATCH, IVF_K)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_del_out_")
-      graft.util.TempDirs.track(dir)
-      out.write.mode("overwrite").parquet(dir.toString)
-      // declared schema (the frame just written) — skips the read-back's
-      // footer-inference job (opt r20)
-      spark.read.schema(out.schema).parquet(dir.toString)
-    } finally dropIndexSegments(sfDir, root.toString)
+      graft.util.TempDirs.materialize(
+        embeddingBatchTopK(spark, sfDir, QUERY_BATCH, IVF_K), "graft_ann_del_out_")
+    } finally { Segments.retire(sfDir, root.toString); () }
   }
 
   /** Manifest family for the append/staleness counters — persisted per
@@ -630,19 +625,13 @@ object SimilarityOps {
     // that never staged the index must not pay Lloyd + PQ + the index
     // write just to report. Un-staged base with live segments = 100%
     // stale (everything served would come from segments).
-    val segRows = registeredSegmentRows(sfDir)
-    ivfIndexDirs.peek(sfDir)
-      .orElse(graft.util.StagedArtifacts.resolveExisting(
-        sfDir, ivfIndexDirs, "ivf_idx")) match {
+    val segRows = Segments.snapshot(sfDir).flatMap(_.get("segRows")).fold(0L)(_.toLong)
+    graft.util.StagedArtifacts.resolveExisting(sfDir, ivfIndexDirs, "ivf_idx") match {
       case None => if (segRows > 0) 1.0 else 0.0
       case Some(dir) =>
-        val appended = graft.util.ServingManifest
-          .getCounter(sfDir, AnnAppendsFamily, AnnTables, dir.toString)
-        val stale = segRows + appended
-        if (stale == 0) 0.0
-        else stale.toDouble /
-          (graft.util.StagedArtifacts.stagedBaseRows(sfDir, ivfIndexDirs, dir)
-            + appended + segRows).toDouble
+        graft.util.ProbeIndex.staleShare(segRows + graft.util.ServingManifest
+            .getCounter(sfDir, AnnAppendsFamily, AnnTables, dir.toString),
+          graft.util.StagedArtifacts.stagedBaseRows(sfDir, ivfIndexDirs, dir))
     }
   }
 
@@ -651,13 +640,14 @@ object SimilarityOps {
     * segments. One root per corpus (a root holds every epoch's
     * cell-partitioned segment dir); re-registration replaces, so a
     * restarted ingestion stream swaps its whole segment set atomically.
-    * This map is only the fast path: the registration of record lives
-    * in the [[graft.util.ServingManifest]] sidecar, so a restarted JVM
-    * serves the same base ∪ segments view (r13 verdict #5). */
-  private val liveSegmentRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val SegmentsFamily = "ann_segments"
+    * The registration of record lives in the manifest (family
+    * `ann_segments`: `segRoot`, `segRows`), so a restarted JVM serves
+    * the same base ∪ segments view (r13 verdict #5); the in-JVM fast
+    * path keeps the hot serve reads off the manifest lock. A root-keyed
+    * retirement drops exactly the registration it names, never one
+    * some other serve path installed after it (ADVICE r13). */
+  val Segments = new graft.util.OverlayRegistration("ann_segments", AnnTables,
+    "segRoot", "segRows", fastPath = true)
 
   /** Publish an ingestion stream's segment root into the serve path:
     * every subsequent index read ([[embeddingIvfTopKIndexed]],
@@ -666,7 +656,9 @@ object SimilarityOps {
     * and, through the persisted manifest, in any JVM serving the same
     * corpus after a restart. [[maybeRetrainStagedIndex]] retires the
     * registration when compaction folds the corpus snapshot back into
-    * the base. */
+    * the base. Post-registration epochs bump the row count through
+    * `Segments.noteAppend`, so the staleness gauge tracks a stream that
+    * registers early and keeps appending (ADVICE r15). */
   def registerIndexSegments(spark: SparkSession, sfDir: String,
       segRoot: String): Unit = {
     // a re-registration of the SAME root (checkpointed stream restart)
@@ -674,100 +666,19 @@ object SimilarityOps {
     // registration count below sees the full row set (r17 verdict #3)
     recoverInterruptedSegmentFold(spark, sfDir, segRoot)
     foldRecoveryChecked.add(segRoot)
-    // a fresh registration writes a manifest entry without the "epochs"
-    // gauge — drop the skip cache so the next maintenance turn re-seeds it
-    epochGaugeCache.remove(segRoot)
-    liveSegmentRoots.put(sfDir, segRoot)
     // segment rows counted ONCE at registration (footer metadata) and
     // persisted next to the root, so the staleness gauge is arithmetic
-    // — a monitoring read never scans the segments. The count needs no
-    // payload columns, so a minimal declared schema (vec_id + the two
-    // partition keys) skips the footer-inference job a bare read pays
-    // per registration (opt r20); row count is schema-independent.
-    val n = spark.read.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "vec_id BIGINT, cell BIGINT, epoch BIGINT"))
-      .parquet(segRoot).count()
-    graft.util.ServingManifest.put(sfDir, SegmentsFamily, AnnTables,
-      Map("segRoot" -> segRoot, "segRows" -> n.toString))
+    // — a monitoring read never scans the segments
+    Segments.register(sfDir, segRoot, segmentRows(spark, segRoot))
   }
 
-  /** Bump a REGISTERED segment root's row count after a post-
-    * registration epoch append — conditional on `segRoot` still being
-    * the registration of record AND `epochId` being newer than the
-    * registration's high-water mark, in ONE manifest lock
-    * ([[graft.util.ServingManifest.addCounterIfNewEpoch]]). Without the
-    * bump, a continuous ingestion stream that registers its root early
-    * and keeps appending epochs grows the overlay while
-    * [[ivfIndexStaleFraction]] sits frozen at the registration-time
-    * count (ADVICE r15); without the epoch guard, a replayed epoch's
-    * idempotent sink overwrite would double-count its rows. No-ops
-    * (false) before registration, after retirement, or on replay, so
-    * callers can emit it unconditionally per epoch. */
-  def noteSegmentAppend(sfDir: String, segRoot: String, rows: Long,
-      epochId: Long): Boolean =
-    graft.util.ServingManifest.addCounterIfNewEpoch(sfDir, SegmentsFamily,
-      AnnTables, "segRoot", segRoot, "segRows", rows, "lastEpoch", epochId)
-
-  /** The registered segment root's row count, from the manifest — 0
-    * with no live registration. */
-  private def registeredSegmentRows(sfDir: String): Long =
-    registeredSegmentRoot(sfDir) match {
-      case None => 0L
-      case Some(_) => graft.util.ServingManifest
-        .get(sfDir, SegmentsFamily, AnnTables)
-        .get("segRows").map(_.toLong).getOrElse(0L)
-    }
-
-  /** The segment root currently serving for `sfDir`, if any: the
-    * in-memory registration, else the manifest's — provided its files
-    * still exist (a dead JVM's retired temp dir is ignored and the
-    * stale manifest entry dropped: self-healing). A manifest hit
-    * re-warms the in-memory fast path. */
-  private[graft] def registeredSegmentRoot(sfDir: String): Option[String] =
-    Option(liveSegmentRoots.get(sfDir)).orElse {
-      val fromManifest = graft.util.ServingManifest
-        .get(sfDir, SegmentsFamily, AnnTables).get("segRoot")
-      fromManifest match {
-        case Some(r) if java.nio.file.Files.isDirectory(java.nio.file.Paths.get(r)) =>
-          liveSegmentRoots.put(sfDir, r)
-          Some(r)
-        case Some(_) =>
-          graft.util.ServingManifest.remove(sfDir, SegmentsFamily)
-          None
-        case None => None
-      }
-    }
-
-  def dropIndexSegments(sfDir: String): Unit = {
-    liveSegmentRoots.remove(sfDir)
-    graft.util.ServingManifest.remove(sfDir, SegmentsFamily)
-  }
-
-  /** Retire ONLY the registration for `segRoot` — a key that published
-    * its own segments drops exactly those, never a registration some
-    * other serve path installed after it (ADVICE r13). The persisted
-    * side is a compare-and-delete under ONE manifest lock
-    * ([[graft.util.ServingManifest.removeIf]]): the r14 get-then-remove
-    * took two locks, so a registration installed by a second JVM
-    * between them was wrongly deleted (r14 verdict #1). */
-  def dropIndexSegments(sfDir: String, segRoot: String): Unit = {
-    liveSegmentRoots.remove(sfDir, segRoot)
-    // segRows rides in the SAME conditional write: a second removal
-    // step under its own lock could delete a registration another JVM
-    // installed between the two (the race class removeIf exists for)
-    graft.util.ServingManifest.removeIf(sfDir, SegmentsFamily, AnnTables,
-      "segRoot", segRoot,
-      alsoRemove = Seq("segRows", "lastEpoch", "epochs"))
-    ()
-  }
-
-  /** Drop the in-memory segment fast path WITHOUT touching the
-    * persisted manifest — test-only: simulates a JVM restart so the
-    * restart-durability spec can assert the manifest alone restores
-    * serving. */
-  private[graft] def forgetSegmentRegistrations(): Unit =
-    liveSegmentRoots.clear()
+  /** Physical row count of a segment root. The count needs no payload
+    * columns, so a minimal declared schema (vec_id + the two partition
+    * keys) skips the footer-inference job a bare read pays (opt r20);
+    * row count is schema-independent. */
+  private def segmentRows(spark: SparkSession, segRoot: String): Long =
+    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
+      "vec_id BIGINT, cell BIGINT, epoch BIGINT")).parquet(segRoot).count()
 
   /** Epoch-count trigger at which [[maybeCompactIndexSegments]] folds
     * (the [[graft.operators.DedupOps.XmCompactEpochs]] sibling). */
@@ -820,17 +731,7 @@ object SimilarityOps {
     // registerIndexSegments or its own first maintenance turn
     if (foldRecoveryChecked.add(segRoot))
       recoverInterruptedSegmentFold(spark, sfDir, segRoot)
-    val epochs = graft.util.EpochDirs.list(segRoot)
-    graft.ObservedMetrics.recordGauge("ann.segment_epochs", epochs.size.toDouble)
-    // manifest epoch gauge only when the count CHANGED (r17 verdict
-    // #3): the un-triggered maintenance turn of every micro-batch must
-    // not serialize an OS-file-locked read-modify-write into the
-    // stream — the in-memory last-written cache makes the steady state
-    // lock-free (one write per count change, one after JVM restart)
-    val prevGauge = epochGaugeCache.put(segRoot, epochs.size)
-    if (prevGauge == null || prevGauge.intValue != epochs.size)
-      graft.util.ServingManifest.setIf(sfDir, SegmentsFamily, AnnTables,
-        "segRoot", segRoot, Map("epochs" -> epochs.size.toString))
+    val epochs = Segments.epochs(sfDir, segRoot, "ann.segment_epochs")
     if (epochs.size <= maxEpochs || epochs.size < 3) false
     else try {
       // any .compact_* here is pre-journal garbage (a journaled scratch
@@ -878,8 +779,7 @@ object SimilarityOps {
       // (ADVICE r18): the unjournaled fold logs and bumps a gauge, so a
       // crash-loses-rows window that somehow became reachable shows up
       // in the operator log instead of only in a comment.
-      val journaled = graft.util.ServingManifest.setIf(sfDir, SegmentsFamily,
-        AnnTables, "segRoot", segRoot,
+      val journaled = Segments.setIf(sfDir, segRoot,
         Map(FoldScratchKey -> scratch.getFileName.toString,
           FoldDropKey -> toDrop.mkString(","),
           FoldMaxKey -> foldMax.toString))
@@ -942,7 +842,7 @@ object SimilarityOps {
     * fold uses. Returns whether a journaled fold was completed. */
   private[graft] def recoverInterruptedSegmentFold(spark: SparkSession,
       sfDir: String, segRoot: String): Boolean = {
-    val m = graft.util.ServingManifest.get(sfDir, SegmentsFamily, AnnTables)
+    val m = Segments.entries(sfDir)
     if (!m.get("segRoot").contains(segRoot)) false
     else (m.get(FoldScratchKey), m.get(FoldDropKey), m.get(FoldMaxKey)) match {
       case (Some(scr), Some(dropList), Some(fm)) =>
@@ -972,28 +872,11 @@ object SimilarityOps {
     * amortized across `AnnCompactEpochs` micro-batches. */
   private def finishSegmentFold(spark: SparkSession, sfDir: String,
       segRoot: String): Unit = {
-    // minimal declared schema: the recount reads no payload columns
-    // (the registerIndexSegments discipline, opt r20)
-    val total = spark.read.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "vec_id BIGINT, cell BIGINT, epoch BIGINT"))
-      .parquet(segRoot).count()
-    val nEpochs = graft.util.EpochDirs.list(segRoot).size
-    epochGaugeCache.put(segRoot, nEpochs)
-    graft.util.ServingManifest.setAndClearIf(sfDir, SegmentsFamily, AnnTables,
-      "segRoot", segRoot,
-      Map("segRows" -> total.toString, "epochs" -> nEpochs.toString),
-      Seq(FoldScratchKey, FoldDropKey, FoldMaxKey))
+    Segments.remeasure(sfDir, segRoot, segmentRows(spark, segRoot),
+      graft.util.EpochDirs.list(segRoot).size,
+      clear = Seq(FoldScratchKey, FoldDropKey, FoldMaxKey))
     ()
   }
-
-  /** Last epoch count written to the manifest per segment root — the
-    * steady-state skip for the per-micro-batch gauge write (r17 verdict
-    * #3). Int boxing via the map's Integer values; `put` returns null
-    * on first sight, which != any count, forcing the one post-restart
-    * write. */
-  private val epochGaugeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   /** The index every serve path reads: the staged base ∪ the registered
     * live segments — the LSM read view that makes freshly ingested
@@ -1021,7 +904,7 @@ object SimilarityOps {
   private[graft] def servedIndex(spark: SparkSession, sfDir: String): DataFrame = {
     val base = graft.util.StagedArtifacts.readStaged(spark,
       java.nio.file.Paths.get(stagedIvfIndexDir(spark, sfDir)))
-    registeredSegmentRoot(sfDir) match {
+    Segments.resolve(sfDir) match {
       case None => base
       case Some(root) =>
         // mergeSchema: a root whose early epochs predate the `deleted`
@@ -2639,7 +2522,7 @@ object SimilarityOps {
       // un-stage every other corpus's artifacts
       centroidCache.invalidate(sfDir)
       pqCodebookCache.invalidate(sfDir)
-      dropIndexSegments(sfDir)        // compaction absorbs the overlay
+      Segments.drop(sfDir)            // compaction absorbs the overlay
       // fresh generation: the rebuild's append counter reads zero, the
       // old dir sweeps, its counter self-heals on next manifest read
       ivfIndexDir(spark, sfDir, fresh = true) // eager: serving never

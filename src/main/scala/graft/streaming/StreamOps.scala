@@ -596,8 +596,8 @@ object StreamOps {
     // absent): the signature index and the two partition-prunable probe
     // indexes every micro-batch serves from
     graft.operators.DedupOps.stagedTextSignatures(spark, sfDir)
-    graft.operators.DedupOps.stagedBandProbeIndex(spark, sfDir)
-    graft.operators.DedupOps.stagedShingleIndex(spark, sfDir)
+    graft.operators.DedupOps.TextIndex.dir(spark, sfDir)
+    graft.operators.DedupOps.ShingleIndex.dir(spark, sfDir)
     val root = java.nio.file.Files.createTempDirectory("graft_stream_lsh_")
     graft.util.TempDirs.track(root)
     val data = root.resolve("dups").toString
@@ -742,7 +742,7 @@ object StreamOps {
       // edge topic (see streamTextDedup's publishEdgesTo)
       publishEdgesTo: Option[String] = None): DataFrame = {
     // freeze the base artifact BEFORE the stream starts (build-if-absent)
-    graft.operators.DedupOps.stagedMediaBandIndex(spark, sfDir, modality)
+    modality.index.dir(spark, sfDir)
     // the publish leg's doc↔media link, frozen with the other base
     // artifacts — joining through the live projection would re-scan the
     // documents table in every micro-batch (review r16)
@@ -960,7 +960,7 @@ object StreamOps {
               val obs = org.apache.spark.sql.Observation()
               delta.observe(obs, count(lit(1)).as("n"))
                 .write.mode("overwrite").parquet(s"$data/epoch=$epochId")
-              DedupOps.noteClusterDeltaAppend(sfDir, data,
+              DedupOps.ClusterDeltas.noteAppend(sfDir, data,
                 obs.get("n").asInstanceOf[Long], epochId)
               // maintenance turn: epoch gauge + minor compaction once
               // the overlay passes the cadence — keeps every later
@@ -979,7 +979,7 @@ object StreamOps {
       DedupOps.crossModalKeepBestOver(spark, sfDir,
         DedupOps.servedClusterAssignment(spark, base, data))
     } finally {
-      DedupOps.retireClusterDeltas(sfDir, data)
+      DedupOps.ClusterDeltas.retire(sfDir, data)
       ()
     }
   }
@@ -1143,7 +1143,7 @@ object StreamOps {
             // where registration follows the drain — but a production
             // topology registers early and appends forever, and the
             // staleness gauge must track that overlay growth)
-            graft.operators.SimilarityOps.noteSegmentAppend(sfDir, data, n, epochId)
+            graft.operators.SimilarityOps.Segments.noteAppend(sfDir, data, n, epochId)
             // maintenance turn: epoch gauge + minor compaction past the
             // cadence (one cell-consolidated segment instead of a
             // small-file tree per micro-batch)
@@ -1196,19 +1196,13 @@ object StreamOps {
     // retire by ROOT, not blanket: this key must drop exactly the
     // registration its own ingestion published, never one some other
     // serve path installed meanwhile (ADVICE r13)
-    val root = SimilarityOps.registeredSegmentRoot(sfDir)
+    val root = SimilarityOps.Segments.resolve(sfDir)
     try {
-      val out = SimilarityOps.embeddingBatchTopK(spark, sfDir,
-        SimilarityOps.QUERY_BATCH, SimilarityOps.IVF_K)
       // materialize THROUGH the overlay, then serve the driver from
       // the sink (the epoch-sink discipline of the other stream keys)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_seg_")
-      graft.util.TempDirs.track(dir)
-      out.write.mode("overwrite").parquet(dir.toString)
-      // declared schema (the frame just written) — skips the read-back's
-      // footer-inference job (opt r20)
-      spark.read.schema(out.schema).parquet(dir.toString)
-    } finally root.foreach(SimilarityOps.dropIndexSegments(sfDir, _))
+      graft.util.TempDirs.materialize(SimilarityOps.embeddingBatchTopK(spark,
+        sfDir, SimilarityOps.QUERY_BATCH, SimilarityOps.IVF_K), "graft_ann_seg_")
+    } finally root.foreach(SimilarityOps.Segments.retire(sfDir, _))
   }
 
   // ---------------------------------------------------------------------
@@ -1239,8 +1233,8 @@ object StreamOps {
     // self-contained measurement.
     "stream_idx" -> ((s, d) => {
       val out = streamIndexAppend(s, d)
-      graft.operators.SimilarityOps.registeredSegmentRoot(d)
-        .foreach(graft.operators.SimilarityOps.dropIndexSegments(d, _))
+      graft.operators.SimilarityOps.Segments.resolve(d)
+        .foreach(graft.operators.SimilarityOps.Segments.retire(d, _))
       out
     }),
     // ANN through the base ∪ live-segments overlay (round 13)

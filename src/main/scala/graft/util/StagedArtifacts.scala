@@ -69,18 +69,22 @@ object StagedArtifacts {
 
   /** Cache-soundness hook for the IN-PLACE append sites (r19 ADVICE):
     * [[readStaged]]'s per-dir cache is sound only while appends never
-    * add a column — a writer appending a wider frame (say a future
-    * `deleted` flag on a new partition) would otherwise have that
-    * column silently dropped from every subsequent cached read. Called
-    * with the frame ABOUT to append: a frame whose columns all exist in
-    * the cached schema keeps the cache (today's tombstone/index appends
-    * — they project to the index's own schema); any new column DROPS
-    * the entry so the next read re-infers and sees it. No-op when the
-    * dir has no cached entry yet. */
+    * add or retype a column — a writer appending a wider frame (say a
+    * future `deleted` flag on a new partition) or a retyped one (an id
+    * widened to another type) would otherwise have that column silently
+    * dropped or read at the stale type by every subsequent cached read.
+    * Called with the frame ABOUT to append: a frame whose (name, type)
+    * pairs all exist in the cached schema keeps the cache (today's
+    * tombstone/index appends — they project to the index's own schema);
+    * any new or retyped column DROPS the entry so the next read
+    * re-infers and sees it. Types compare by their rendered form, which
+    * ignores nullability (a parquet read-back marks every element
+    * nullable). No-op when the dir has no cached entry yet. */
   def noteAppend(dir: Path, df: DataFrame): Unit =
     Option(schemaCache.get(dir.toString)).foreach { s =>
-      val cached = s.fieldNames.toSet
-      if (!df.schema.fieldNames.forall(cached.contains))
+      def cols(t: org.apache.spark.sql.types.StructType) =
+        t.fields.map(f => f.name -> f.dataType.catalogString)
+      if (!cols(df.schema).forall(cols(s).toSet.contains))
         { schemaCache.remove(dir.toString); () }
     }
 
@@ -211,12 +215,12 @@ object StagedArtifacts {
   }
 
   /** The CURRENT durable dir for (corpus, artifact) if one is staged —
-    * pure filesystem resolution, NEVER a build: gauges use this so a
-    * restarted JVM's monitoring reads see the surviving index (and its
-    * appends) without paying a staging build. */
+    * the in-JVM memo, else pure filesystem resolution, NEVER a build:
+    * gauges use this so a restarted JVM's monitoring reads see the
+    * surviving index (and its appends) without paying a staging build. */
   def resolveExisting(sfDir: String, memo: StampedMemo[Path],
       name: String): Option[Path] =
-    withDirLock { resolveUnlocked(keyOf(sfDir, memo, name)) }
+    memo.peek(sfDir).orElse(withDirLock { resolveUnlocked(keyOf(sfDir, memo, name)) })
 
   /** Build-or-resolve the durable staged dir for (corpus, artifact).
     * `freshGen = true` is the RE-STAGE path: skip resolution, rebuild

@@ -30,6 +30,17 @@ object TempDirs {
   /** Register a temp root for recursive deletion at JVM exit. */
   def track(p: Path): Path = { dirs.add(p); p }
 
+  /** Write `df` to a fresh tracked temp dir and read it back — the
+    * materialize-then-retire step of the keys that serve through
+    * registered state. The declared schema (the frame just written)
+    * skips the read-back's footer-inference job (opt r20). */
+  def materialize(df: org.apache.spark.sql.DataFrame,
+      prefix: String): org.apache.spark.sql.DataFrame = {
+    val dir = track(Files.createTempDirectory(prefix))
+    df.write.mode("overwrite").parquet(dir.toString)
+    df.sparkSession.read.schema(df.schema).parquet(dir.toString)
+  }
+
   /** Test-only: the hook's deletion pass on one untracked tree. */
   private[graft] def deleteNow(p: Path): Unit = deleteRecursively(p)
 

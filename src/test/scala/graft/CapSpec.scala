@@ -264,7 +264,7 @@ class CapSpec extends SparkTestBase {
       SCTest.Parameters.default.withMinSuccessfulTests(Soak.n(2, 6)), prop)
     assert(res.passed, res.status.toString)
     DedupOps.dropStagedTextArtifacts()
-    DedupOps.dropStagedProbeIndexes()
+    DedupOps.TextIndex.drop()
   }
 
   test("incremental cluster merge equals the from-scratch closure over arbitrary increments") {

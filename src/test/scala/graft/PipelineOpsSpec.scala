@@ -777,41 +777,41 @@ class PipelineOpsSpec extends SparkTestBase {
   test("text probe indexes: append -> serve -> staleness -> re-stage lifecycle") {
     import spark.implicits._
     DedupOps.dropStagedTextArtifacts()
-    DedupOps.dropStagedProbeIndexes()
+    DedupOps.TextIndex.drop()
     // an increment batch with a vocabulary the fixture never uses: the
     // frozen base has nothing similar, so its dedup result is empty
     val increment = Seq((900001L, "zork mumble quux flibber gromp zork mumble"))
       .toDF("doc_id", "text")
     assert(DedupOps.incrementalDedupBatch(spark, sfDir, increment).count() === 0)
-    assert(DedupOps.textIndexStaleFraction(spark, sfDir) === 0.0)
+    assert(DedupOps.TextIndex.staleFraction(spark, sfDir) === 0.0)
     // ADMIT a doc with that text into the served base (append, no
     // rebuild): the same increment now dedups against it
     val admitted = Seq((900000L, "zork mumble quux flibber gromp zork mumble"))
       .toDF("doc_id", "text")
-    assert(DedupOps.appendToTextIndexes(spark, sfDir, admitted) === 1L)
+    assert(DedupOps.TextIndex.append(spark, sfDir, admitted) === 1L)
     val found = DedupOps.incrementalDedupBatch(spark, sfDir, increment)
       .select("new_doc", "base_doc", "jaccard").collect()
     assert(found.length === 1)
     assert(found(0).getLong(0) === 900001L && found(0).getLong(1) === 900000L)
     assert(found(0).getDouble(2) === 1.0)
-    val stale = DedupOps.textIndexStaleFraction(spark, sfDir)
+    val stale = DedupOps.TextIndex.staleFraction(spark, sfDir)
     assert(stale > 0.0 && stale < 0.05, s"one appended doc of ~500: $stale")
     // below the budget: no re-stage, the appended doc keeps serving
-    assert(!DedupOps.maybeRestageTextIndexes(spark, sfDir, threshold = 0.5))
+    assert(!DedupOps.TextIndex.maybeRestage(spark, sfDir, threshold = 0.5))
     assert(DedupOps.incrementalDedupBatch(spark, sfDir, increment).count() === 1)
     // over the budget: re-stage from the corpus snapshot — the appended
     // doc was never landed in the corpus, so it DROPS (the compaction
     // contract) and staleness resets
     val p0 = DedupOps.probeStageBuilds.get()
-    assert(DedupOps.maybeRestageTextIndexes(spark, sfDir, threshold = 0.0))
+    assert(DedupOps.TextIndex.maybeRestage(spark, sfDir, threshold = 0.0))
     assert(DedupOps.probeStageBuilds.get() === p0 + 2, "eager rebuild of both indexes")
     assert(DedupOps.incrementalDedupBatch(spark, sfDir, increment).count() === 0)
-    assert(DedupOps.textIndexStaleFraction(spark, sfDir) === 0.0)
+    assert(DedupOps.TextIndex.staleFraction(spark, sfDir) === 0.0)
   }
 
   test("media probe index: append -> serve -> staleness -> re-stage lifecycle, all modalities") {
     import spark.implicits._
-    DedupOps.dropStagedMediaProbeIndex()
+    DedupOps.MediaModalities.foreach(_.index.drop())
     // two synthetic assets in one texture GROUP (id div 8): near-dup
     // payloads by fixture design, in a group no corpus asset occupies
     val synth: Map[String, Long => Array[Byte]] = Map(
@@ -826,25 +826,25 @@ class PipelineOpsSpec extends SparkTestBase {
         .incrementalMediaDedupBatch(spark, sfDir, increment, m)
         .filter(col("base_media") === 900000L).count()
       assert(hits() === 0L, s"${m.name}: nothing admitted yet")
-      assert(DedupOps.mediaIndexStaleFraction(spark, sfDir, m) === 0.0)
+      assert(m.index.staleFraction(spark, sfDir) === 0.0)
       // ADMIT the sibling asset into the served base (append, no
       // rebuild — decode runs only on the admitted batch): the
       // increment now dedups against it through the same pruned probe
-      assert(DedupOps.appendToMediaIndex(spark, sfDir, mediaOf(900000L), m) === 1L)
+      assert(m.index.append(spark, sfDir, mediaOf(900000L)) === 1L)
       assert(hits() === 1L, s"${m.name}: appended asset must serve without a re-stage")
-      val stale = DedupOps.mediaIndexStaleFraction(spark, sfDir, m)
+      val stale = m.index.staleFraction(spark, sfDir)
       assert(stale > 0.0 && stale < 0.05, s"${m.name}: one appended of ~500: $stale")
       // below the budget: no re-stage, the appended asset keeps serving
-      assert(!DedupOps.maybeRestageMediaIndex(spark, sfDir, 0.5, m))
+      assert(!m.index.maybeRestage(spark, sfDir, 0.5))
       assert(hits() === 1L)
       // over the budget: re-stage from the corpus snapshot — the
       // appended asset was never landed in the corpus, so it DROPS (the
       // compaction contract) and staleness resets
       val b0 = DedupOps.mediaProbeStageBuilds.get()
-      assert(DedupOps.maybeRestageMediaIndex(spark, sfDir, 0.0, m))
+      assert(m.index.maybeRestage(spark, sfDir, 0.0))
       assert(DedupOps.mediaProbeStageBuilds.get() === b0 + 1, s"${m.name}: eager rebuild")
       assert(hits() === 0L)
-      assert(DedupOps.mediaIndexStaleFraction(spark, sfDir, m) === 0.0)
+      assert(m.index.staleFraction(spark, sfDir) === 0.0)
     }
   }
 
@@ -855,29 +855,29 @@ class PipelineOpsSpec extends SparkTestBase {
     // and died with the JVM. The staged roots are now durable: a fresh
     // session with cleared memos must RESOLVE the same dir (no rebuild),
     // still serving the appended asset, with the staleness gauge intact.
-    DedupOps.dropStagedMediaProbeIndex()
+    DedupOps.MediaModalities.foreach(_.index.drop())
     def mediaOf(id: Long) = Seq(id).toDS().map(i => MediaRecord(
       i, "img", MultimodalOps.synthTexturePng(i), Map.empty[String, String]))
     def hits(s: org.apache.spark.sql.SparkSession): Long = DedupOps
       .incrementalMediaDedupBatch(s, sfDir, mediaOf(920001L))
       .filter(col("base_media") === 920000L).count()
     assert(hits(spark) === 0L)
-    assert(DedupOps.appendToMediaIndex(spark, sfDir, mediaOf(920000L)) === 1L)
+    assert(DedupOps.ImageModality.index.append(spark, sfDir, mediaOf(920000L)) === 1L)
     assert(hits(spark) === 1L)
-    val staleBefore = DedupOps.mediaIndexStaleFraction(spark, sfDir)
+    val staleBefore = DedupOps.ImageModality.index.staleFraction(spark, sfDir)
     assert(staleBefore > 0.0)
     // SIMULATED RESTART: fresh SparkSession + cleared staged memos
-    DedupOps.forgetStagedIndexMemos()
+    (DedupOps.TextIndex +: DedupOps.MediaModalities.map(_.index)).foreach(_.forget())
     val s2 = spark.newSession()
     val b0 = DedupOps.mediaProbeStageBuilds.get()
     assert(hits(s2) === 1L,
       "appended asset must still dedup-gate after a restart")
     assert(DedupOps.mediaProbeStageBuilds.get() === b0,
       "restart must RESOLVE the durable dir, never rebuild")
-    assert(DedupOps.mediaIndexStaleFraction(s2, sfDir) === staleBefore,
+    assert(DedupOps.ImageModality.index.staleFraction(s2, sfDir) === staleBefore,
       "staleness gauge must persist across the restart")
     // compaction restores the corpus-only base (and leaves the suite clean)
-    assert(DedupOps.maybeRestageMediaIndex(s2, sfDir, 0.0))
+    assert(DedupOps.ImageModality.index.maybeRestage(s2, sfDir, 0.0))
     assert(hits(s2) === 0L)
   }
 
@@ -886,25 +886,25 @@ class PipelineOpsSpec extends SparkTestBase {
     // the O(1) gauges (append counter / staged base size) must agree
     // with the values a full index scan would count — locked at fixture
     // scale so the arithmetic can never drift from the artifact
-    DedupOps.dropStagedProbeIndexes()
-    DedupOps.dropStagedMediaProbeIndex()
+    DedupOps.TextIndex.drop()
+    DedupOps.MediaModalities.foreach(_.index.drop())
     val doc = Seq((930000L, "glorp weeble snarf glorp weeble snarf glorp"))
       .toDF("doc_id", "text")
-    assert(DedupOps.appendToTextIndexes(spark, sfDir, doc) === 1L)
+    assert(DedupOps.TextIndex.append(spark, sfDir, doc) === 1L)
     val textCounted =
-      1.0 / DedupOps.stagedShingleIndex(spark, sfDir).count().toDouble
-    assert(DedupOps.textIndexStaleFraction(spark, sfDir) === textCounted)
+      1.0 / DedupOps.ShingleIndex.read(spark, sfDir).count().toDouble
+    assert(DedupOps.TextIndex.staleFraction(spark, sfDir) === textCounted)
     def mediaOf(id: Long) = Seq(id).toDS().map(i => MediaRecord(
       i, "img", MultimodalOps.synthTexturePng(i), Map.empty[String, String]))
-    assert(DedupOps.appendToMediaIndex(spark, sfDir, mediaOf(930001L)) === 1L)
-    val mediaCounted = 1.0 / DedupOps.stagedMediaBandIndex(spark, sfDir)
+    assert(DedupOps.ImageModality.index.append(spark, sfDir, mediaOf(930001L)) === 1L)
+    val mediaCounted = 1.0 / DedupOps.ImageModality.index.read(spark, sfDir)
       .select("media_id").distinct().count().toDouble
-    assert(DedupOps.mediaIndexStaleFraction(spark, sfDir) === mediaCounted)
+    assert(DedupOps.ImageModality.index.staleFraction(spark, sfDir) === mediaCounted)
     // leave the suite's staged indexes clean
-    assert(DedupOps.maybeRestageTextIndexes(spark, sfDir, 0.0))
-    assert(DedupOps.maybeRestageMediaIndex(spark, sfDir, 0.0))
-    assert(DedupOps.textIndexStaleFraction(spark, sfDir) === 0.0)
-    assert(DedupOps.mediaIndexStaleFraction(spark, sfDir) === 0.0)
+    assert(DedupOps.TextIndex.maybeRestage(spark, sfDir, 0.0))
+    assert(DedupOps.ImageModality.index.maybeRestage(spark, sfDir, 0.0))
+    assert(DedupOps.TextIndex.staleFraction(spark, sfDir) === 0.0)
+    assert(DedupOps.ImageModality.index.staleFraction(spark, sfDir) === 0.0)
   }
 
   test("ingestion gate end-to-end: dedup -> admit -> append -> the re-arrival is caught") {
@@ -914,8 +914,8 @@ class PipelineOpsSpec extends SparkTestBase {
     // into the served text + media indexes (append, no rebuild), and a
     // near-duplicate re-arrival is caught by BOTH gates against the
     // freshly admitted base
-    DedupOps.dropStagedProbeIndexes()
-    DedupOps.dropStagedMediaProbeIndex()
+    DedupOps.TextIndex.drop()
+    DedupOps.MediaModalities.foreach(_.index.drop())
     def doc(id: Long) =
       Seq((id, "prandle quex vibber snork prandle quex vibber"))
         .toDF("doc_id", "text")
@@ -927,8 +927,8 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(DedupOps.incrementalMediaDedupBatch(spark, sfDir, media(910000L))
       .filter(col("base_media") === 910000L).count() === 0)
     // ADMIT the survivors
-    assert(DedupOps.appendToTextIndexes(spark, sfDir, doc(910000L)) === 1L)
-    assert(DedupOps.appendToMediaIndex(spark, sfDir, media(910000L)) === 1L)
+    assert(DedupOps.TextIndex.append(spark, sfDir, doc(910000L)) === 1L)
+    assert(DedupOps.ImageModality.index.append(spark, sfDir, media(910000L)) === 1L)
     // a near-duplicate re-arrival (same text; sibling asset in the
     // group) is caught by BOTH gates, against the admitted base rows
     val textHits = DedupOps.incrementalDedupBatch(spark, sfDir, doc(910001L))
@@ -939,8 +939,8 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(DedupOps.incrementalMediaDedupBatch(spark, sfDir, media(910001L))
       .filter(col("base_media") === 910000L).count() === 1L)
     // leave the suite's staged indexes clean for later tests
-    DedupOps.dropStagedProbeIndexes()
-    DedupOps.dropStagedMediaProbeIndex()
+    DedupOps.TextIndex.drop()
+    DedupOps.MediaModalities.foreach(_.index.drop())
   }
 
   test("takedown: text probe tombstones exclude at increment cadence, terminal until re-stage") {
@@ -950,33 +950,33 @@ class PipelineOpsSpec extends SparkTestBase {
     // targets from the next serve on, the tombstone wins over any
     // append order (terminal), and the corpus re-stage absorbs it.
     import spark.implicits._
-    DedupOps.dropStagedProbeIndexes()
+    DedupOps.TextIndex.drop()
     def doc(id: Long) =
       Seq((id, "yurble fintock grazzle yurble fintock grazzle wem"))
         .toDF("doc_id", "text")
     def hits(): Seq[Long] = DedupOps
       .incrementalDedupBatch(spark, sfDir, doc(960001L))
       .select("base_doc").collect().map(_.getLong(0)).toSeq
-    assert(DedupOps.appendToTextIndexes(spark, sfDir, doc(960000L)) === 1L)
+    assert(DedupOps.TextIndex.append(spark, sfDir, doc(960000L)) === 1L)
     assert(hits() === Seq(960000L))
     // RETRACT: the admitted doc leaves the probe's match targets
-    DedupOps.tombstoneTextDocs(spark, sfDir, Seq(960000L).toDF("doc_id"))
+    DedupOps.TextIndex.tombstone(spark, sfDir, Seq(960000L).toDF("doc_id"))
     assert(hits() === Seq.empty, "a tombstoned base doc must stop matching")
     // terminal at increment cadence: a LATER re-append of the same id
     // does not resurrect it (the ann_del dominance rule — re-admission
     // is the re-stage's job)
-    assert(DedupOps.appendToTextIndexes(spark, sfDir, doc(960000L)) === 1L)
+    assert(DedupOps.TextIndex.append(spark, sfDir, doc(960000L)) === 1L)
     assert(hits() === Seq.empty, "tombstone must win regardless of append order")
     // re-stage absorbs: the rebuild reads only the corpus, so the
     // tombstones AND the never-landed appends both drop
-    assert(DedupOps.maybeRestageTextIndexes(spark, sfDir, threshold = 0.0))
-    assert(DedupOps.textTombstoneIds(spark, sfDir).isEmpty,
+    assert(DedupOps.TextIndex.maybeRestage(spark, sfDir, threshold = 0.0))
+    assert(DedupOps.TextIndex.tombstoneIds(spark, sfDir).isEmpty,
       "the re-stage must absorb the tombstone partition")
     assert(hits() === Seq.empty)
     // the id is NOT poisoned: a fresh post-re-stage admission serves
-    assert(DedupOps.appendToTextIndexes(spark, sfDir, doc(960000L)) === 1L)
+    assert(DedupOps.TextIndex.append(spark, sfDir, doc(960000L)) === 1L)
     assert(hits() === Seq(960000L))
-    DedupOps.dropStagedProbeIndexes()
+    DedupOps.TextIndex.drop()
   }
 
   test("takedown: the batch dup keys stop listing tombstoned docs (the lsh_del contract)") {
@@ -998,7 +998,7 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(del === incr.filterNot(p => touches(p._1, p._2)))
     // and the key left no serving state behind: tombstones retired,
     // the plain serve restored
-    assert(DedupOps.textTombstoneIds(spark, sfDir).isEmpty)
+    assert(DedupOps.TextIndex.tombstoneIds(spark, sfDir).isEmpty)
     assert(DedupOps.stagedIncrementalDedup(spark, sfDir).count() === incr.size)
     // lsh_dups drops BOTH endpoints while tombstones are live
     val dups = DedupOps.stagedLshVerifiedDups(spark, sfDir).collect()
@@ -1006,7 +1006,7 @@ class PipelineOpsSpec extends SparkTestBase {
     val ids = graft.model.Fixtures.documents(spark, sfDir)
       .filter(pmod(col("doc_id"), lit(DedupOps.DocDeleteMod))
         === lit(DedupOps.DocDeleteRem)).select("doc_id")
-    DedupOps.tombstoneTextDocs(spark, sfDir, ids)
+    DedupOps.TextIndex.tombstone(spark, sfDir, ids)
     try {
       val dupsDel = DedupOps.stagedLshVerifiedDups(spark, sfDir).collect()
         .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
@@ -1026,42 +1026,42 @@ class PipelineOpsSpec extends SparkTestBase {
         == DedupOps.DocDeleteRem))
       assert(nd.map(_.getAs[Long]("n_dups")).sum ===
         Fixtures.documents(spark, sfDir).count() - slice)
-    } finally DedupOps.dropTextTombstones(spark, sfDir)
+    } finally DedupOps.TextIndex.dropTombstones(spark, sfDir)
     assert(DedupOps.stagedLshVerifiedDups(spark, sfDir).count() === dups.size)
   }
 
   test("takedown: media probe tombstones — the asset stops matching and being listed") {
-    // the tombstoneTextDocs sibling over the shared media band index
+    // the TextIndex.tombstone sibling over the shared media band index
     // (one implementation serves all three modalities; locked on img)
     import spark.implicits._
-    DedupOps.dropStagedMediaProbeIndex()
+    DedupOps.MediaModalities.foreach(_.index.drop())
     def media(id: Long) = Seq(id).toDS().map(i => MediaRecord(
       i, "img", MultimodalOps.synthTexturePng(i), Map.empty[String, String]))
     def hits(): Long = DedupOps
       .incrementalMediaDedupBatch(spark, sfDir, media(970001L))
       .filter(col("base_media") === 970000L).count()
-    assert(DedupOps.appendToMediaIndex(spark, sfDir, media(970000L)) === 1L)
+    assert(DedupOps.ImageModality.index.append(spark, sfDir, media(970000L)) === 1L)
     assert(hits() === 1L)
-    DedupOps.tombstoneMediaAssets(spark, sfDir, Seq(970000L).toDF("media_id"))
+    DedupOps.ImageModality.index.tombstone(spark, sfDir, Seq(970000L).toDF("media_id"))
     assert(hits() === 0L, "a tombstoned base asset must stop matching")
     // terminal until re-stage
-    assert(DedupOps.appendToMediaIndex(spark, sfDir, media(970000L)) === 1L)
+    assert(DedupOps.ImageModality.index.append(spark, sfDir, media(970000L)) === 1L)
     assert(hits() === 0L, "tombstone must win regardless of append order")
     // the batch key stops LISTING a tombstoned corpus asset
     val before = DedupOps.imageDHashDups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
     val victim = before.head._1
-    DedupOps.tombstoneMediaAssets(spark, sfDir, Seq(victim).toDF("media_id"))
+    DedupOps.ImageModality.index.tombstone(spark, sfDir, Seq(victim).toDF("media_id"))
     assert(DedupOps.imageDHashDups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
       === before.filterNot(p => p._1 == victim || p._2 == victim))
     // re-stage absorbs the tombstones; the never-landed appends drop
-    assert(DedupOps.maybeRestageMediaIndex(spark, sfDir, 0.0))
-    assert(DedupOps.mediaTombstoneIds(spark, sfDir).isEmpty,
+    assert(DedupOps.ImageModality.index.maybeRestage(spark, sfDir, 0.0))
+    assert(DedupOps.ImageModality.index.tombstoneIds(spark, sfDir).isEmpty,
       "the re-stage must absorb the tombstone partition")
     assert(DedupOps.imageDHashDups(spark, sfDir).collect().length === before.size)
     assert(hits() === 0L)
-    DedupOps.dropStagedMediaProbeIndex()
+    DedupOps.MediaModalities.foreach(_.index.drop())
   }
 
   test("probe-index cap premises hold on the fixture (the stream-key oracle gates)") {
@@ -1790,10 +1790,10 @@ class PipelineOpsSpec extends SparkTestBase {
       val p = served.queryExecution.executedPlan.toString
       assert(p.contains("PartitionFilters: [cell#"), p)
       // retiring the registration restores the base-only read
-      SimilarityOps.dropIndexSegments(sf)
+      SimilarityOps.Segments.drop(sf)
       assert(!topIds(SimilarityOps.embeddingBatchTopK(spark, sf, Seq(3L), 5))
         .map(_._1).contains(999L))
-    } finally SimilarityOps.dropIndexSegments(sf)
+    } finally SimilarityOps.Segments.drop(sf)
   }
 
   test("segment registration survives a restart: the persisted manifest restores serving") {
@@ -1825,7 +1825,7 @@ class PipelineOpsSpec extends SparkTestBase {
       // The staged artifacts rebuild (deterministically, from the same
       // corpus) into fresh dirs; the segment must STILL serve, resolved
       // purely through the persisted manifest.
-      SimilarityOps.forgetSegmentRegistrations()
+      SimilarityOps.Segments.forget()
       SimilarityOps.dropStagedCentroids()
       SimilarityOps.dropStagedPqCodebook()
       SimilarityOps.dropStagedIvfIndex()
@@ -1838,8 +1838,8 @@ class PipelineOpsSpec extends SparkTestBase {
       // counts the segment rows (base rebuilt without appends)
       assert(SimilarityOps.ivfIndexStaleFraction(s2, sf) === staleBefore)
       // and a root-keyed drop of a DIFFERENT root must not retire it
-      SimilarityOps.dropIndexSegments(sf, "/nonexistent/other/root")
-      assert(SimilarityOps.registeredSegmentRoot(sf) === Some(segRoot.toString))
+      SimilarityOps.Segments.retire(sf, "/nonexistent/other/root")
+      assert(SimilarityOps.Segments.resolve(sf) === Some(segRoot.toString))
       // POST-REGISTRATION overlay growth moves the gauge (ADVICE r15):
       // a continuous ingestion stream registers early and keeps
       // appending epochs — each epoch bumps the registered row count
@@ -1851,15 +1851,15 @@ class PipelineOpsSpec extends SparkTestBase {
           SimilarityOps.stagedPqCodebook(s2, sf))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$segRoot/epoch=1")
-      assert(SimilarityOps.noteSegmentAppend(sf, segRoot.toString, 2L, epochId = 1L))
+      assert(SimilarityOps.Segments.noteAppend(sf, segRoot.toString, 2L, epochId = 1L))
       // replayed epoch: idempotent overwrite must not double-count
-      assert(!SimilarityOps.noteSegmentAppend(sf, segRoot.toString, 2L, epochId = 1L))
+      assert(!SimilarityOps.Segments.noteAppend(sf, segRoot.toString, 2L, epochId = 1L))
       assert(SimilarityOps.ivfIndexStaleFraction(s2, sf) > staleBefore,
         "post-registration segment appends must move the staleness gauge")
       // a note against a root that is NOT the registration of record
       // must not apply (the conditional no-op)
-      assert(!SimilarityOps.noteSegmentAppend(sf, "/nonexistent/other/root", 7L, epochId = 2L))
-    } finally SimilarityOps.dropIndexSegments(sf)
+      assert(!SimilarityOps.Segments.noteAppend(sf, "/nonexistent/other/root", 7L, epochId = 2L))
+    } finally SimilarityOps.Segments.drop(sf)
   }
 
   test("int8 refine: re-ranking from stored q8 codes holds recall at the float gauge") {
@@ -2551,5 +2551,28 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(r.getAs[Float]("gray_mean") ===
         ((((id * 37) % 256) + ((id * 59) % 256) + ((id * 83) % 256)) / 3.0 / 255.0).toFloat)
     }
+  }
+
+  test("an append that retypes a column drops the staged dir's cached schema") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_note_append_")
+    graft.util.TempDirs.track(dir)
+    Seq((1, "a"), (2, "b")).toDF("doc_id", "v")
+      .write.mode("overwrite").parquet(dir.toString)
+    val first = graft.util.StagedArtifacts.readStaged(spark, dir)
+    assert(first.schema("doc_id").dataType === org.apache.spark.sql.types.IntegerType)
+    // the same column names, the id column retyped
+    val retyped = Seq((3L, "c")).toDF("doc_id", "v")
+    graft.util.StagedArtifacts.noteAppend(dir, retyped)
+    // drop the original files so re-inference sees only the appended type
+    graft.util.EpochDirs.dataFilesIn(dir).foreach(java.nio.file.Files.delete)
+    retyped.write.mode("append").parquet(dir.toString)
+    assert(graft.util.StagedArtifacts.readStaged(spark, dir).schema("doc_id")
+      .dataType === org.apache.spark.sql.types.LongType)
+    // an append matching the cached (name, type) pairs keeps the cache
+    graft.util.StagedArtifacts.noteAppend(dir, Seq((4L, "d")).toDF("doc_id", "v"))
+    Seq((5, "e")).toDF("doc_id", "v").write.mode("overwrite").parquet(dir.toString)
+    assert(graft.util.StagedArtifacts.readStaged(spark, dir).schema("doc_id")
+      .dataType === org.apache.spark.sql.types.LongType, "cache kept")
   }
 }

@@ -9,6 +9,20 @@ import org.apache.spark.sql.functions.{col, posexplode}
   */
 class PlanSpec extends SparkTestBase {
 
+  // Spark abbreviates a scan's rendered `Location` to this many
+  // characters (default 100); under a longer temp dir path the
+  // staged-index markers these guards look for (`_band_idx_s…`) fall
+  // past the cut. Raised for this suite only, restored after it.
+  private val MetaLen = "spark.sql.maxMetadataStringLength"
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set(MetaLen, "1000")
+  }
+
+  override def afterAll(): Unit =
+    try spark.conf.unset(MetaLen) finally super.afterAll()
+
   private def plan(key: String): String =
     SparkEntry.queries(key)(spark, sfDir).queryExecution.executedPlan.toString
 
@@ -346,7 +360,7 @@ class PlanSpec extends SparkTestBase {
     // so the plan is taken from the serve frame directly, overlay
     // registered exactly as annDeleteServe registers it.
     import graft.operators.SimilarityOps
-    SimilarityOps.dropIndexSegments(sfDir)
+    SimilarityOps.Segments.drop(sfDir)
     graft.GraftSession.registerFunctions(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_plan_ann_del_")
     graft.util.TempDirs.track(root)
@@ -366,7 +380,7 @@ class PlanSpec extends SparkTestBase {
       assert(p.contains("PartitionFilters: [cell#"), p)
       assert(!p.contains("SortMergeJoin"), p)
       assert("(?s)BroadcastHashJoin.*?LeftAnti".r.findAllIn(p).size >= 2, p)
-    } finally SimilarityOps.dropIndexSegments(sfDir)
+    } finally SimilarityOps.Segments.drop(sfDir)
   }
 
   test("lsh_del serve broadcasts the tombstone exclusion on both pair sides") {
@@ -384,7 +398,7 @@ class PlanSpec extends SparkTestBase {
         org.apache.spark.sql.functions.lit(DedupOps.DocDeleteMod))
         === org.apache.spark.sql.functions.lit(DedupOps.DocDeleteRem))
       .select("doc_id")
-    DedupOps.tombstoneTextDocs(spark, sfDir, ids)
+    DedupOps.TextIndex.tombstone(spark, sfDir, ids)
     try {
       val p = DedupOps.stagedIncrementalDedup(spark, sfDir)
         .queryExecution.executedPlan.toString
@@ -402,7 +416,7 @@ class PlanSpec extends SparkTestBase {
       assert(tombScans.forall(l =>
         l.contains("InMemoryFileIndex(1 paths)") &&
           l.contains("PartitionFilters: []")), tombScans.mkString("\n"))
-    } finally DedupOps.dropTextTombstones(spark, sfDir)
+    } finally DedupOps.TextIndex.dropTombstones(spark, sfDir)
   }
 
   test("lm_ppl scoring is a pure projection: the returned plan has no exchange") {

@@ -166,4 +166,37 @@ class ServingManifestSpec extends AnyFunSuite {
       Map(nowhere.toString -> "registered-before-creation",
         "segRoot" -> nowhere.toString))
   }
+
+  test("segment self-heal retires only the observed dead root, never a live re-registration") {
+    // the heal is a read (dead root A observed) followed by a removal;
+    // another JVM may install registration B in between. An
+    // unconditional family removal would delete B with its counters
+    val segs = graft.operators.SimilarityOps.Segments
+    val sf = freshCorpus()
+    def root(): String = {
+      val d = java.nio.file.Files.createTempDirectory("graft_heal_root_")
+      graft.util.TempDirs.track(d)
+      d.toString
+    }
+    val a = root()
+    val b = root()
+    try {
+      segs.register(sf, a, 5L)
+      val observed = segs.entries(sf).get("segRoot")
+      assert(observed === Some(a))
+      java.nio.file.Files.delete(java.nio.file.Paths.get(a))
+      segs.register(sf, b, 7L)
+      assert(segs.noteAppend(sf, b, 3L, epochId = 0L))
+      segs.forget()
+      assert(segs.healed(sf, observed) === None)
+      assert(segs.resolve(sf) === Some(b))
+      assert(segs.entries(sf) ===
+        Map("segRoot" -> b, "segRows" -> "10", "lastEpoch" -> "0"))
+      // and a dead root that IS the registration of record heals out
+      java.nio.file.Files.delete(java.nio.file.Paths.get(b))
+      segs.forget()
+      assert(segs.resolve(sf) === None)
+      assert(segs.entries(sf).isEmpty)
+    } finally segs.drop(sf)
+  }
 }

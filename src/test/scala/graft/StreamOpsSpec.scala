@@ -85,7 +85,7 @@ class StreamOpsSpec extends SparkTestBase {
         .indexRows(graft.model.Fixtures.embeddings(spark, sfDir), cents, cb)
         .select(col("vec_id"), col("cell"), col("pq_code"))
       assertSameRows(stream, batch)
-    } finally graft.operators.SimilarityOps.dropIndexSegments(sfDir)
+    } finally graft.operators.SimilarityOps.Segments.drop(sfDir)
   }
 
   test("stream_idx publishes segments to serving: overlay is row-identical under re-ingestion") {
@@ -105,7 +105,7 @@ class StreamOpsSpec extends SparkTestBase {
       // re-ingested ⇒ exactly half the served rows are overlay)
       assert(graft.operators.SimilarityOps
         .ivfIndexStaleFraction(spark, sfDir) === 0.5)
-    } finally graft.operators.SimilarityOps.dropIndexSegments(sfDir)
+    } finally graft.operators.SimilarityOps.Segments.drop(sfDir)
   }
 
   test("stream_tumbling equals the batch window aggregation") {
@@ -342,7 +342,7 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("cluster overlay lifecycle: register, append, gauge, re-stage compaction") {
     import graft.operators.DedupOps
-    DedupOps.dropClusterDeltas(sfDir)
+    DedupOps.ClusterDeltas.drop(sfDir)
     // stage EXPLICITLY before any gauge read (resolve-never-build)
     val base = DedupOps.stagedBaseCrossModalGroups(spark, sfDir)
     val root = java.nio.file.Files.createTempDirectory("graft_xm_overlay_")
@@ -354,9 +354,9 @@ class StreamOpsSpec extends SparkTestBase {
       val edges = DedupOps.stagedIncrementCrossEdges(spark, sfDir)
       val delta = DedupOps.mergeClusterIncrementDelta(base, edges)
       delta.write.mode("overwrite").parquet(s"$root/epoch=0")
-      assert(DedupOps.noteClusterDeltaAppend(sfDir, root.toString, delta.count(), epochId = 0L))
+      assert(DedupOps.ClusterDeltas.noteAppend(sfDir, root.toString, delta.count(), epochId = 0L))
       // a REPLAY of the same epoch must not double-count (idempotent sink)
-      assert(!DedupOps.noteClusterDeltaAppend(sfDir, root.toString, delta.count(), epochId = 0L))
+      assert(!DedupOps.ClusterDeltas.noteAppend(sfDir, root.toString, delta.count(), epochId = 0L))
       val frac = DedupOps.xmMergedFraction(spark, sfDir)
       assert(frac > 0.0 && frac < 1.0, s"merged fraction $frac")
       // the SERVED view is the overlay read = the full merge
@@ -364,26 +364,26 @@ class StreamOpsSpec extends SparkTestBase {
         DedupOps.mergeClusterIncrement(base, edges))
       // under the threshold: no re-stage, registration stays
       assert(!DedupOps.maybeRestageCrossModal(spark, sfDir, threshold = frac))
-      assert(DedupOps.registeredClusterDeltaRoot(sfDir) === Some(root.toString))
+      assert(DedupOps.ClusterDeltas.resolve(sfDir) === Some(root.toString))
       // over the threshold: compaction — base rebuilds from the corpus
       // alone, the registration retires, un-compacted deltas drop
       assert(DedupOps.maybeRestageCrossModal(spark, sfDir, threshold = 0.0))
-      assert(DedupOps.registeredClusterDeltaRoot(sfDir) === None)
+      assert(DedupOps.ClusterDeltas.resolve(sfDir) === None)
       assert(DedupOps.xmMergedFraction(spark, sfDir) === 0.0)
       assertSameRows(DedupOps.servedCrossModalGroups(spark, sfDir),
         DedupOps.stagedBaseCrossModalGroups(spark, sfDir))
       // an epoch landing after retirement must not resurrect the gauge
-      assert(!DedupOps.noteClusterDeltaAppend(sfDir, root.toString, 5L, epochId = 1L))
+      assert(!DedupOps.ClusterDeltas.noteAppend(sfDir, root.toString, 5L, epochId = 1L))
       // self-healing: a registration whose root dir DIED (a dead JVM's
       // swept temp root) drops on read — registration creates the dir,
       // so simulate death by deleting it
       val dying = s"$root/dies_later"
       DedupOps.registerClusterDeltas(spark, sfDir, dying)
-      assert(DedupOps.registeredClusterDeltaRoot(sfDir) === Some(dying))
+      assert(DedupOps.ClusterDeltas.resolve(sfDir) === Some(dying))
       java.nio.file.Files.delete(java.nio.file.Paths.get(dying))
-      assert(DedupOps.registeredClusterDeltaRoot(sfDir) === None)
+      assert(DedupOps.ClusterDeltas.resolve(sfDir) === None)
       assert(DedupOps.xmMergedFraction(spark, sfDir) === 0.0)
-    } finally DedupOps.dropClusterDeltas(sfDir)
+    } finally DedupOps.ClusterDeltas.drop(sfDir)
   }
 
   test("cluster overlay registration survives a restart: manifest alone restores serve + gauge") {
@@ -392,7 +392,7 @@ class StreamOpsSpec extends SparkTestBase {
     // corpus must resolve the same overlay view and the same gauge (the
     // segment-registration restart discipline, r14)
     import graft.operators.DedupOps
-    DedupOps.dropClusterDeltas(sfDir)
+    DedupOps.ClusterDeltas.drop(sfDir)
     val base = DedupOps.stagedBaseCrossModalGroups(spark, sfDir)
     val root = java.nio.file.Files.createTempDirectory("graft_xm_restart_")
     graft.util.TempDirs.track(root)
@@ -401,7 +401,7 @@ class StreamOpsSpec extends SparkTestBase {
       val edges = DedupOps.stagedIncrementCrossEdges(spark, sfDir)
       val delta = DedupOps.mergeClusterIncrementDelta(base, edges)
       delta.write.mode("overwrite").parquet(s"$root/epoch=0")
-      assert(DedupOps.noteClusterDeltaAppend(sfDir, root.toString,
+      assert(DedupOps.ClusterDeltas.noteAppend(sfDir, root.toString,
         delta.count(), epochId = 0L))
       val fracBefore = DedupOps.xmMergedFraction(spark, sfDir)
       assert(fracBefore > 0.0)
@@ -413,7 +413,7 @@ class StreamOpsSpec extends SparkTestBase {
         "merged-fraction gauge must persist across the restart")
       assert(canon(DedupOps.servedCrossModalGroups(s2, sfDir)) === servedBefore,
         "the restarted session must serve the same overlay view")
-    } finally DedupOps.dropClusterDeltas(sfDir)
+    } finally DedupOps.ClusterDeltas.drop(sfDir)
   }
 
   test("live topology: the four gates publish one edge topic, the merge consumes it") {
@@ -456,7 +456,7 @@ class StreamOpsSpec extends SparkTestBase {
   }
 
   test("stream_img serves every micro-batch from the FROZEN staged media index") {
-    graft.operators.DedupOps.dropStagedMediaProbeIndex()
+    graft.operators.DedupOps.MediaModalities.foreach(_.index.drop())
     val m0 = graft.operators.DedupOps.mediaProbeStageBuilds.get()
     StreamOps.streamMediaDedup(spark, sfDir)
     assert(graft.operators.DedupOps.mediaProbeStageBuilds.get() === m0 + 1)
@@ -469,7 +469,7 @@ class StreamOpsSpec extends SparkTestBase {
     // the per-batch body must not rebuild the signature index: one
     // staged build serves every micro-batch (and every later text key)
     graft.operators.DedupOps.dropStagedTextArtifacts()
-    graft.operators.DedupOps.dropStagedProbeIndexes()
+    graft.operators.DedupOps.TextIndex.drop()
     val b0 = graft.operators.DedupOps.textStageBuilds.get()
     val p0 = graft.operators.DedupOps.probeStageBuilds.get()
     StreamOps.streamTextDedup(spark, sfDir)
@@ -488,7 +488,7 @@ class StreamOpsSpec extends SparkTestBase {
     // served view; the delta-row counter tightens (never grows), the
     // epoch gauge drops to 2, and appends after the fold still land
     import graft.operators.DedupOps
-    DedupOps.dropClusterDeltas(sfDir)
+    DedupOps.ClusterDeltas.drop(sfDir)
     val base = DedupOps.stagedBaseCrossModalGroups(spark, sfDir)
     val edges = DedupOps.stagedIncrementCrossEdges(spark, sfDir)
     val root = java.nio.file.Files.createTempDirectory("graft_xm_compact_")
@@ -508,7 +508,7 @@ class StreamOpsSpec extends SparkTestBase {
         val served = DedupOps.servedClusterAssignment(spark, base, root.toString)
         val delta = DedupOps.mergeClusterIncrementDelta(served, b)
         delta.write.mode("overwrite").parquet(s"$root/epoch=$e")
-        assert(DedupOps.noteClusterDeltaAppend(sfDir, root.toString,
+        assert(DedupOps.ClusterDeltas.noteAppend(sfDir, root.toString,
           delta.count(), epochId = e))
       }
       assert(graft.util.EpochDirs.list(root.toString) === Seq(0L, 1L, 2L, 3L))
@@ -541,7 +541,7 @@ class StreamOpsSpec extends SparkTestBase {
       val served2 = DedupOps.servedClusterAssignment(spark, base, root.toString)
       val extra = DedupOps.mergeClusterIncrementDelta(served2, edges)
       extra.write.mode("overwrite").parquet(s"$root/epoch=4")
-      assert(DedupOps.noteClusterDeltaAppend(sfDir, root.toString,
+      assert(DedupOps.ClusterDeltas.noteAppend(sfDir, root.toString,
         extra.count(), epochId = 4L))
       assertSameRows(
         DedupOps.servedClusterAssignment(spark, base, root.toString),
@@ -549,7 +549,7 @@ class StreamOpsSpec extends SparkTestBase {
       // full re-stage re-arms to zero (the compaction contract)
       assert(DedupOps.maybeRestageCrossModal(spark, sfDir, threshold = 0.0))
       assert(DedupOps.xmMergedFraction(spark, sfDir) === 0.0)
-    } finally DedupOps.dropClusterDeltas(sfDir)
+    } finally DedupOps.ClusterDeltas.drop(sfDir)
   }
 
   test("ANN segment compaction folds epochs, preserves the served view, re-arms the gauge") {
@@ -557,7 +557,7 @@ class StreamOpsSpec extends SparkTestBase {
     // → retrain, asserting the staleness gauge at every step and the
     // served index row-equal across the fold
     import graft.operators.SimilarityOps
-    SimilarityOps.dropIndexSegments(sfDir)
+    SimilarityOps.Segments.drop(sfDir)
     graft.GraftSession.registerFunctions(spark)
     val emb = Fixtures.embeddings(spark, sfDir)
     val cents = SimilarityOps.stagedCentroidIndex(spark, sfDir)
@@ -579,7 +579,7 @@ class StreamOpsSpec extends SparkTestBase {
         SimilarityOps.indexRows(s, cents, cb)
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$segRoot/epoch=$e")
-        assert(SimilarityOps.noteSegmentAppend(sfDir, segRoot.toString,
+        assert(SimilarityOps.Segments.noteAppend(sfDir, segRoot.toString,
           s.count(), epochId = e))
       }
       val staleBefore = SimilarityOps.ivfIndexStaleFraction(spark, sfDir)
@@ -601,15 +601,15 @@ class StreamOpsSpec extends SparkTestBase {
       // the retrain absorbs the overlay and re-arms the gauge to zero
       assert(SimilarityOps.maybeRetrainStagedIndex(spark, sfDir, 0.0))
       assert(SimilarityOps.ivfIndexStaleFraction(spark, sfDir) === 0.0)
-      assert(SimilarityOps.registeredSegmentRoot(sfDir) === None)
-    } finally SimilarityOps.dropIndexSegments(sfDir)
+      assert(SimilarityOps.Segments.resolve(sfDir) === None)
+    } finally SimilarityOps.Segments.drop(sfDir)
   }
 
   test("ANN tombstone: a deleted vector leaves the served top-k, survives folds, clears at retrain") {
     // r17 verdict #2 (next): takedown at INCREMENT cadence — before
     // this, a deleted vector kept serving until the corpus re-stage.
     import graft.operators.SimilarityOps
-    SimilarityOps.dropIndexSegments(sfDir)
+    SimilarityOps.Segments.drop(sfDir)
     graft.GraftSession.registerFunctions(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_ann_tomb_")
     graft.util.TempDirs.track(root)
@@ -661,12 +661,12 @@ class StreamOpsSpec extends SparkTestBase {
       val after = SimilarityOps.embeddingBatchTopK(spark, sfDir, Seq(0L), 5)
         .orderBy("rnk").collect()
       assert(after(0).getAs[Long]("vec_id") === victim)
-    } finally SimilarityOps.dropIndexSegments(sfDir)
+    } finally SimilarityOps.Segments.drop(sfDir)
   }
 
   test("cluster tombstone: a retracted doc leaves its group; the group's other members keep serving") {
     import graft.operators.DedupOps
-    DedupOps.dropClusterDeltas(sfDir)
+    DedupOps.ClusterDeltas.drop(sfDir)
     val base = DedupOps.stagedBaseCrossModalGroups(spark, sfDir)
     val root = java.nio.file.Files.createTempDirectory("graft_xm_tomb_")
     graft.util.TempDirs.track(root)
@@ -707,7 +707,7 @@ class StreamOpsSpec extends SparkTestBase {
         === beforeFold, "the fold must not change the served view")
       assert(DedupOps.servedClusterAssignment(spark, base, root.toString)
         .filter(col("doc_id") === target).count() === 0)
-    } finally DedupOps.dropClusterDeltas(sfDir)
+    } finally DedupOps.ClusterDeltas.drop(sfDir)
   }
 
   test("ANN segment fold journal: a crash in the swap window is completed by the next writer entry") {
@@ -719,7 +719,7 @@ class StreamOpsSpec extends SparkTestBase {
     // at BOTH stages a killed writer can leave and asserts the next
     // maintenance-turn / registration entry serves the full row set.
     import graft.operators.SimilarityOps
-    SimilarityOps.dropIndexSegments(sfDir)
+    SimilarityOps.Segments.drop(sfDir)
     graft.GraftSession.registerFunctions(spark)
     val emb = Fixtures.embeddings(spark, sfDir)
     val cents = SimilarityOps.stagedCentroidIndex(spark, sfDir)
@@ -788,7 +788,7 @@ class StreamOpsSpec extends SparkTestBase {
         .contains("foldScratch"))
     } finally {
       SimilarityOps.foldCrashpoint = _ => ()
-      SimilarityOps.dropIndexSegments(sfDir)
+      SimilarityOps.Segments.drop(sfDir)
     }
   }
 
