@@ -35,25 +35,9 @@ object Bench {
     // dependent keys fail per-key in the timed pass below.
     graft.model.Fixtures.canary(spark, sfDir, "bench")
 
-    // Measurement hermeticity (the Verify discipline): retire any
-    // persisted segment registration a dead prior JVM left live, so
-    // this run's ANN timings measure the base view, not an orphan
-    // overlay.
-    graft.operators.SimilarityOps.Segments.drop(sfDir)
-    graft.operators.DedupOps.ClusterDeltas.drop(sfDir)
-    // And re-stage any DURABLE staged index carrying a dead prior JVM's
-    // appends (threshold 0.0 trips exactly when the persisted append
-    // counter is non-zero; a clean index is a no-op and keeps its
-    // cross-round warm-staging benefit).
-    try {
-      graft.operators.DedupOps.TextIndex.maybeRestage(spark, sfDir, 0.0)
-      graft.operators.DedupOps.MediaModalities.foreach(m =>
-        m.index.maybeRestage(spark, sfDir, 0.0))
-      graft.operators.SimilarityOps.maybeRetrainStagedIndex(spark, sfDir, 0.0)
-      ()
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] staged-index hermetic reset failed: ${e.getMessage}")
-    }
+    // Measurement hermeticity: retire orphan overlays and re-stage
+    // durable indexes carrying a dead prior JVM's appends.
+    GraftSession.hermeticReset(spark, sfDir, "bench")
 
     // Contention canary (r10 verdict #1: two rounds recorded phantom
     // regressions because the driver ran the bench behind verify/test

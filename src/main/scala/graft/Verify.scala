@@ -13,28 +13,9 @@ object Verify {
     // Per-table fixture canary first: a broken loader names its table in
     // the artifact instead of zeroing the round (r8 postmortem).
     graft.model.Fixtures.canary(spark, sfDir, "verify")
-    // Measurement hermeticity: a prior JVM killed between publishing a
-    // segment root and retiring it leaves a live persisted registration
-    // (durability working as designed for a SERVING tier) — but a
-    // measurement JVM must reflect only its own round's work, or the
-    // dead run's segments contaminate every ANN plan and gauge here.
-    // Start from the base view; restart durability stays spec-locked.
-    graft.operators.SimilarityOps.Segments.drop(sfDir)
-    graft.operators.DedupOps.ClusterDeltas.drop(sfDir)
-    // Same hermeticity for the DURABLE staged indexes (r15): appends a
-    // dead prior JVM admitted survive in the shared dirs by design — a
-    // measurement JVM must serve the corpus-only base, so any index
-    // carrying appends re-stages (threshold 0.0 trips exactly when the
-    // persisted append counter is non-zero; a clean index is a no-op).
-    try {
-      graft.operators.DedupOps.TextIndex.maybeRestage(spark, sfDir, 0.0)
-      graft.operators.DedupOps.MediaModalities.foreach(m =>
-        m.index.maybeRestage(spark, sfDir, 0.0))
-      graft.operators.SimilarityOps.maybeRetrainStagedIndex(spark, sfDir, 0.0)
-      ()
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] staged-index hermetic reset failed: ${e.getMessage}")
-    }
+    // Measurement hermeticity: retire orphan overlays and re-stage
+    // durable indexes carrying a dead prior JVM's appends.
+    GraftSession.hermeticReset(spark, sfDir, "verify")
     // The stream-STATE keys carry batch-equivalent oracles that are exact
     // ONLY while the staged input is a single file (one AvailableNow
     // micro-batch). A broken premise (or a loader failure inside the

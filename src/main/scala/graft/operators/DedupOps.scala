@@ -989,6 +989,24 @@ object DedupOps {
     (conv(substring(sig, 1, 2), 16, 10).cast("int") % SigPrefixParts)
       .cast("int")
 
+  /** A signed batch's per-row probe prefixes: [[sigPrefix]] of each band. */
+  private[graft] def bandPrefixes: Column = transform(col("bands"), b => sigPrefix(b))
+
+  /** A bounded partition-key set as ONE observed LONG: each row folds its
+    * keys (ints in [0, parts), parts ≤ 64) into a 64-bit mask and the
+    * observation ORs the masks, so the driver payload is 8 bytes at any
+    * batch size — a `collect_set` of per-row key arrays would be
+    * O(batch × keys). [[maskKeys]] expands the set bits on the driver. */
+  private[graft] def keyMask(keys: Column, parts: Int): Column = {
+    require(parts <= 64, s"keyMask: $parts partition keys do not fit a 64-bit mask")
+    coalesce(bit_or(aggregate(keys, lit(0L),
+      (m, p) => m.bitwiseOR(call_function("shiftleft", lit(1L), p)))), lit(0L))
+  }
+
+  /** The partition keys whose bits are set in a [[keyMask]] value. */
+  private[graft] def maskKeys(mask: Long): Seq[Int] =
+    (0 until 64).filter(b => ((mask >>> b) & 1L) != 0L)
+
   /** Build counter for the two probe-index artifacts — separate from
     * [[textStageBuilds]] so each artifact family's staging-exactly-once
     * property is independently assertable. */
@@ -1179,7 +1197,7 @@ object DedupOps {
 
   /** [[probeCandidates]] with the probed prefix set supplied by the
     * caller — the streaming batch body rides it on the signature
-    * checkpoint write as an observed collect_set (opt r20), so no
+    * checkpoint write as an observed [[keyMask]] (opt r20), so no
     * separate collect job runs. */
   private[graft] def probeCandidatesAt(spark: SparkSession, sfDir: String,
       incBands: DataFrame, sps: Seq[Int]): DataFrame =
@@ -1240,17 +1258,17 @@ object DedupOps {
     // broadcast side, and the final verify's new-shingle side. One
     // parquet checkpoint computes them once; the probe's bounded
     // prefix set (≤ SigPrefixParts) rides the write as an observed
-    // collect_set instead of a separate job. Same rotation-root
-    // discipline as the candidate checkpoint below (its own key).
+    // 64-bit mask ([[keyMask]]) instead of a separate job. Same
+    // rotation-root discipline as the candidate checkpoint below (its
+    // own key).
     val sigDir = nextCandDir(s"sig:$sfDir", "graft_lsh_sig_")
     val sigFrame = textSignaturesOf(spreadBatch(increment))
       .select(col("doc_id"), col("bands"), col("sh"))
     val spObs = org.apache.spark.sql.Observation()
     sigFrame
-      .observe(spObs,
-        collect_set(transform(col("bands"), b => sigPrefix(b))).as("sps"))
+      .observe(spObs, keyMask(bandPrefixes, SigPrefixParts).as("sps"))
       .write.mode("overwrite").parquet(sigDir.toString)
-    val sps = spObs.get("sps").asInstanceOf[Seq[Seq[Int]]].flatten.distinct
+    val sps = maskKeys(spObs.get("sps").asInstanceOf[Long])
     val inc = spark.read.schema(sigFrame.schema).parquet(sigDir.toString)
     val incBands = inc
       .select(col("doc_id").as("new_doc"),
@@ -1341,6 +1359,14 @@ object DedupOps {
     * mod 64 — and waste the block dimension; the md5 mixes both.) */
   private def mediaBlockPrefix(blk: Column, blkVal: Column): Column =
     Hashing.md5Bucket(blk * 128 + blkVal, MediaBandParts).cast("int")
+
+  /** A fingerprinted batch's per-row probe keys: the [[mediaBlockPrefix]]
+    * of each of its 8 blocks — the [[mediaBlocksOf]] arithmetic folded
+    * per row, blk_val(b) = shiftright(dhash, b*7) & 127. */
+  private[graft] def blockPrefixes: Column =
+    transform(sequence(lit(0), lit(ImgHashBlocks - 1)), b =>
+      mediaBlockPrefix(b,
+        call_function("shiftright", col("dhash"), b * 7).bitwiseAND(lit(127L))))
 
   /** Build counter for the media probe-index artifacts — the
     * [[probeStageBuilds]] sibling (shared across modalities: each
@@ -1484,21 +1510,14 @@ object DedupOps {
       batch.sparkSession.sparkContext.defaultParallelism))
     // the probe's bounded partition-key set (≤ MediaBandParts, an index
     // constant) rides the fingerprint checkpoint write as an observed
-    // collect_set of each asset's 8 block-prefixes — the separate
-    // post-write distinct job this replaces re-read the checkpoint
-    // (opt r20). Same arithmetic as [[mediaBlocksOf]]+[[
-    // mediaBlockPrefix]], folded per row: blk_val(b) =
-    // shiftright(dhash, b*7) & 127.
+    // 64-bit mask of each asset's 8 block-prefixes ([[keyMask]]) — the
+    // separate post-write distinct job this replaces re-read the
+    // checkpoint (opt r20)
     val obs = org.apache.spark.sql.Observation()
     fpFrame
-      .observe(obs, collect_set(
-        transform(sequence(lit(0), lit(ImgHashBlocks - 1)), b =>
-          mediaBlockPrefix(b,
-            call_function("shiftright", col("dhash"), b * 7)
-              .bitwiseAND(lit(127L)))))
-        .as("mps"))
+      .observe(obs, keyMask(blockPrefixes, MediaBandParts).as("mps"))
       .write.mode("overwrite").parquet(fpDir.toString)
-    val mps = obs.get("mps").asInstanceOf[Seq[Seq[Int]]].flatten.distinct
+    val mps = maskKeys(obs.get("mps").asInstanceOf[Long])
     // declared schema (the frame just written): a bare read re-ran
     // footer inference — one job per micro-batch (opt r20)
     val fp = spark.read.schema(fpFrame.schema).parquet(fpDir.toString)

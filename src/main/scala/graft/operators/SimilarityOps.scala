@@ -937,71 +937,91 @@ object SimilarityOps {
     }
   }
 
-  /** IVF top-k served FROM the staged cell-partitioned index: probe the
-    * query's [[NumProbe]] best cells (an O(C) driver job against the
-    * staged centroids), then exact-rescore only those cells' members —
-    * read with partition pruning, so the scan's input is the probed
-    * partitions' files, nothing else. Row-identical to
-    * [[embeddingIvfTopK]] over the same centroid index (asserted in
-    * tests): same assignment tie-break, same cosine expression, same
-    * (cosine desc, vec_id) ranking. */
-  def embeddingIvfTopKIndexed(spark: SparkSession, sfDir: String,
-      queryId: Long, k: Int, numProbe: Int = DerivedProbe): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
-    val np = resolveNumProbe(spark, sfDir, numProbe)
-    import spark.implicits._
-    val centroids = stagedCentroidIndex(spark, sfDir)
-    val centDf = centroids.toDF("cent_id", "ce")
-    val qdf = Fixtures.embeddings(spark, sfDir)
-      .filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
-    val probeCells = centDf.crossJoin(broadcast(qdf))
+  // ---------------------------------------------------------------------
+  // Index-served ANN: three query shapes (single query, driver-staged id
+  // list, distributed id frame) × three scorers (exact cosine, residual
+  // PQ ADC, ADC shortlist + exact re-rank), built from one probe step
+  // per shape, one ADC column and one ranker per shape — the filter →
+  // refine shape of distributed top-k (REPOSE).
+  // ---------------------------------------------------------------------
+
+  /** The query's `np` best cells by engine cosine against the centroid
+    * index (ties → lowest cent_id): an O(C) driver job over the SAME
+    * cosine expression the assignment uses, so no third numerics
+    * implementation exists. Shared by the staged serves and the
+    * on-the-fly [[ivfPqTopK]]. `qdf` is the 1-row `qe` query frame. */
+  private def probeCellsOf(cents: Seq[(Long, Seq[Double])], qdf: DataFrame,
+      np: Int): Seq[Long] = {
+    import qdf.sparkSession.implicits._
+    cents.toDF("cent_id", "ce").crossJoin(broadcast(qdf))
       .select(col("cent_id"), cosine(col("ce"), col("qe")).as("ccos"))
       .orderBy(col("ccos").desc, col("cent_id")).limit(np)
       .collect().map(_.getLong(0)).toSeq
-    servedIndex(spark, sfDir)
-      .filter(col("cell").isin(probeCells: _*))
-      .filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(qdf))
-      .select(col("vec_id"), cosine(col("embedding"), col("qe")).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
   }
 
-  /** IVF+PQ served FROM the staged index: probe cells, then ADC-rank the
-    * probed partitions' PRECOMPUTED codes — the scan reads only
-    * `(vec_id, pq_code)` (column pruning drops the embedding array;
-    * asserted in PlanSpec), which is the 64×-smaller read a production
-    * IVFPQ index exists for. Row-identical to the per-query
-    * [[ivfPqTopK]] over the same staged artifacts (asserted in tests):
-    * same probe, same codes, same ADC lookup. */
-  def ivfPqTopKIndexed(spark: SparkSession, sfDir: String,
-      queryId: Long, k: Int, numProbe: Int = DerivedProbe): DataFrame = {
+  /** One probed query: the candidate `members` (index rows of the probed
+    * cells, the query itself excluded), the 1-row `qe` query frame every
+    * scorer cross-joins as a broadcast, and the centroid index the ADC
+    * residuals are taken against. */
+  private case class QueryProbe(members: DataFrame, qe: DataFrame,
+      cents: Seq[(Long, Seq[Double])])
+
+  /** Single-query probe step over the staged cell-partitioned index:
+    * probe the query's best cells ([[probeCellsOf]]), then read only
+    * those cells' members — the cell filter is a partition filter on the
+    * staged index (and pushes through the segment overlay's union into
+    * both scans), so the scan's input is the probed partitions' files,
+    * nothing else. Every single-query serve is this step plus a bounded
+    * TakeOrdered behind a 1-row query broadcast: zero corpus exchanges.
+    * Row-identical to the assignment-per-query forms
+    * ([[embeddingIvfTopK]], [[ivfPqTopK]]) over the same centroid index
+    * (asserted in tests): same assignment tie-break, same probe, same
+    * scoring expressions, same ranking with vec_id as the tie-break. */
+  private def probeQuery(spark: SparkSession, sfDir: String, queryId: Long,
+      numProbe: Int): QueryProbe = {
     graft.GraftSession.registerFunctions(spark)
     val np = resolveNumProbe(spark, sfDir, numProbe)
-    import spark.implicits._
-    val codebook = stagedPqCodebook(spark, sfDir)
     val cents = stagedCentroidIndex(spark, sfDir)
-    val centDf = cents.toDF("cent_id", "ce")
-    val qdf = Fixtures.embeddings(spark, sfDir)
+    val qe = Fixtures.embeddings(spark, sfDir)
       .filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
-    val probeCells = centDf.crossJoin(broadcast(qdf))
-      .select(col("cent_id"), cosine(col("ce"), col("qe")).as("ccos"))
-      .orderBy(col("ccos").desc, col("cent_id")).limit(np)
-      .collect().map(_.getLong(0)).toSeq
-    servedIndex(spark, sfDir)
-      .filter(col("cell").isin(probeCells: _*))
+    val members = servedIndex(spark, sfDir)
+      .filter(col("cell").isin(probeCellsOf(cents, qe, np): _*))
       .filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(qdf))
-      .select(col("vec_id"),
-        // stored codes are residuals: the ADC table is built per probed
-        // cell from the QUERY's residual against that cell's centroid
-        // (partition-column `cell` reads back INT — cast for the lookup)
-        call_function("pq_adc",
-          residualOf(col("qe"), ceForCell(cents, col("cell").cast("long"))),
-          col("pq_code"), cbLit(codebook)).as("adist"))
+    QueryProbe(members, qe, cents)
+  }
+
+  /** Residual ADC distance of a member's PQ `code` (default: the stored
+    * `pq_code`): stored codes quantize `x − centroid(cell)`, so the
+    * lookup table is built per member cell from the QUERY's residual
+    * against that cell's centroid — the FAISS IVFPQ construction, in the
+    * native [[graft.functions.PqAdc]] kernel over the literal codebook.
+    * The staged index's partition column `cell` reads back INT — cast
+    * for the centroid lookup. */
+  private def adcDist(cents: Seq[(Long, Seq[Double])], codebook: Seq[Array[Double]],
+      code: Column = col("pq_code")): Column =
+    call_function("pq_adc",
+      residualOf(col("qe"), ceForCell(cents, col("cell").cast("long"))),
+      code, cbLit(codebook))
+
+  /** ADC top-k of one probed query, `(vec_id, adist)` ranked by (adist
+    * asc, vec_id). Over the staged index the scan reads only `(vec_id,
+    * pq_code, cell)` — column pruning drops the embedding array
+    * (asserted in PlanSpec), the 64×-smaller read an IVFPQ index exists
+    * for. Also stage 1 of the single-query refined serve. */
+  private def adcTopK(p: QueryProbe, codebook: Seq[Array[Double]], k: Int): DataFrame =
+    p.members.crossJoin(broadcast(p.qe))
+      .select(col("vec_id"), adcDist(p.cents, codebook).as("adist"))
       .orderBy(col("adist"), col("vec_id"))
       .limit(k)
-  }
+
+  /** Cosine top-k of one query's candidate rows, `(vec_id, cosine)`
+    * ranked by (cosine desc, vec_id). */
+  private def cosineTopK(members: DataFrame, qe: DataFrame, score: Column,
+      k: Int): DataFrame =
+    members.crossJoin(broadcast(qe))
+      .select(col("vec_id"), score.as("cosine"))
+      .orderBy(col("cosine").desc, col("vec_id"))
+      .limit(k)
 
   /** Exact-rescore shortlist size, as a multiple of k (FAISS
     * `IndexRefineFlat`'s `k_factor`): the refined path ADC-ranks the
@@ -1031,259 +1051,120 @@ object SimilarityOps {
       cosine(transform(col("q8"), v => v.cast("double")), col("qe"))
     else cosine(col("embedding"), col("qe"))
 
+  /** IVF top-k served FROM the staged index: exact cosine over the
+    * probed cells' members, `(vec_id, cosine)`. Row-identical to
+    * [[embeddingIvfTopK]] over the same centroid index (asserted). */
+  def embeddingIvfTopKIndexed(spark: SparkSession, sfDir: String,
+      queryId: Long, k: Int, numProbe: Int = DerivedProbe): DataFrame = {
+    val p = probeQuery(spark, sfDir, queryId, numProbe)
+    cosineTopK(p.members, p.qe, cosine(col("embedding"), col("qe")), k)
+  }
+
+  /** IVF+PQ served FROM the staged index: ADC over the probed cells'
+    * PRECOMPUTED codes, `(vec_id, adist)`. Row-identical to the
+    * per-query [[ivfPqTopK]] over the same staged artifacts (asserted). */
+  def ivfPqTopKIndexed(spark: SparkSession, sfDir: String,
+      queryId: Long, k: Int, numProbe: Int = DerivedProbe): DataFrame =
+    adcTopK(probeQuery(spark, sfDir, queryId, numProbe),
+      stagedPqCodebook(spark, sfDir), k)
+
   /** IVF+PQ with exact re-ranking — the production two-stage read
-    * (FAISS refine / ScaNN reorder): stage 1 ADC-ranks the probed
-    * cells' PRECOMPUTED codes exactly as [[ivfPqTopKIndexed]] (the scan
-    * reads `(vec_id, pq_code)` only); stage 2 takes the `refine × k`
-    * shortlist (a bounded TakeOrdered), joins it back against the SAME
-    * probed partitions to fetch just those rows' full vectors, and
-    * emits the true-cosine top-k. Closes the quantization gap at a cost
-    * that stays constant in corpus size: measured recall@10 at the
-    * fixture geometry ≈ the IVF-flat ceiling (the ADC misrankings PQ's
-    * 4-bit budget causes all sit inside the shortlist), while the full
-    * vectors read per query stay `refine × k` regardless of scale. The
-    * output schema is [[embeddingIvfTopKIndexed]]'s `(vec_id, cosine)`
-    * — a drop-in higher-recall serve of the same contract. */
+    * (FAISS refine / ScaNN reorder): stage 1 is [[ivfPqTopKIndexed]]'s
+    * ADC top-k at `refine × k` (a bounded TakeOrdered over codes only);
+    * stage 2 joins that shortlist back against the SAME probed
+    * partitions to fetch just those rows' refine source and emits the
+    * true-cosine top-k. Closes the quantization gap at a cost that stays
+    * constant in corpus size: measured recall@10 at the fixture geometry
+    * ≈ the IVF-flat ceiling (the ADC misrankings PQ's 4-bit budget
+    * causes all sit inside the shortlist), while the full vectors read
+    * per query stay `refine × k` regardless of scale. The output schema
+    * is [[embeddingIvfTopKIndexed]]'s `(vec_id, cosine)` — a drop-in
+    * higher-recall serve of the same contract. */
   def ivfPqTopKRefinedIndexed(spark: SparkSession, sfDir: String,
       queryId: Long, k: Int, numProbe: Int = DerivedProbe,
       refine: Int = RefineFactor,
       refineInt8: Boolean = RefineFromInt8): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
-    val np = resolveNumProbe(spark, sfDir, numProbe)
-    import spark.implicits._
-    val codebook = stagedPqCodebook(spark, sfDir)
-    val cents = stagedCentroidIndex(spark, sfDir)
-    val centDf = cents.toDF("cent_id", "ce")
-    val qdf = Fixtures.embeddings(spark, sfDir)
-      .filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
-    val probeCells = centDf.crossJoin(broadcast(qdf))
-      .select(col("cent_id"), cosine(col("ce"), col("qe")).as("ccos"))
-      .orderBy(col("ccos").desc, col("cent_id")).limit(np)
-      .collect().map(_.getLong(0)).toSeq
-    val index = servedIndex(spark, sfDir)
-      .filter(col("cell").isin(probeCells: _*))
-      .filter(col("vec_id") =!= queryId)
-    val shortlist = index
-      .crossJoin(broadcast(qdf))
-      .select(col("vec_id"),
-        call_function("pq_adc",
-          residualOf(col("qe"), ceForCell(cents, col("cell").cast("long"))),
-          col("pq_code"), cbLit(codebook)).as("adist"))
-      .orderBy(col("adist"), col("vec_id"))
-      .limit(refine * k)
+    val p = probeQuery(spark, sfDir, queryId, numProbe)
+    val shortlist = adcTopK(p, stagedPqCodebook(spark, sfDir), refine * k)
       .select("vec_id")
-    index
-      .join(broadcast(shortlist), "vec_id")
-      .crossJoin(broadcast(qdf))
-      .select(col("vec_id"), rerankCosine(refineInt8).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
+    cosineTopK(p.members.join(broadcast(shortlist), "vec_id"), p.qe,
+      rerankCosine(refineInt8), k)
   }
 
-  /** BATCHED ANN serving from the staged index — the offline shape that
-    * actually amortizes a vector index (near-dup versus an index,
-    * retrieval-pair mining): ONE pruned scan answers a whole bounded
-    * query batch. Probe staging is a |Q|×C engine-cosine job collected
-    * to a driver artifact (bounded: a serving batch times the centroid
-    * count — the single-query precedent, widened), so the serving plan
-    * is: partition-pruned index scan → broadcast hash join against the
-    * (qid, qe, cell) probe set → in-row cosine → per-query top-k as a
-    * rank window (map-side pre-pruned by WindowGroupLimit; |Q| bounded,
-    * so the per-qid keying never collapses parallelism the way a
-    * corpus-cardinality window would). Per query, rows are identical to
-    * [[embeddingIvfTopK]] (asserted in tests). */
-  def embeddingBatchTopK(spark: SparkSession, sfDir: String,
-      queryIds: Seq[Long], k: Int, numProbe: Int = DerivedProbe): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
-    val np = resolveNumProbe(spark, sfDir, numProbe)
-    require(queryIds.nonEmpty, "embeddingBatchTopK needs a non-empty query batch")
-    val (probes, cells) = stagedBatchProbes(spark, sfDir, queryIds, np)
-    val byRank = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    servedIndex(spark, sfDir)
-      .filter(col("cell").isin(cells: _*))
-      .join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        cosine(col("embedding"), col("qe")).as("cosine"))
-      .withColumn("rnk", row_number().over(byRank).cast("int"))
-      .filter(col("rnk") <= k)
+  /** The probe set of a query BATCH: `(qid, qe, cell)` rows, one per
+    * probed cell of each query; the distinct probed `cells` that drive
+    * partition pruning on the staged index scan (bounded by the centroid
+    * count — the one collect both shapes share); the `(qid, qe)` query
+    * vectors the refine stage re-joins; and the join strategy `hint`
+    * every join against batch-sized data goes through. */
+  private case class BatchProbes(probes: DataFrame, cells: Seq[Long],
+      queries: DataFrame, hint: DataFrame => DataFrame,
+      cents: Seq[(Long, Seq[Double])])
+
+  /** Probe rows of a `(qid, qe)` query batch: each query's `np` best cells
+    * as a rank window over the |Q|×C engine-cosine cross product against
+    * the broadcast centroid index (same cosine and tie-break as
+    * [[probeCellsOf]]). */
+  private def probeRows(queries: DataFrame, cents: Seq[(Long, Seq[Double])],
+      np: Int): DataFrame = {
+    import queries.sparkSession.implicits._
+    val byQ = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cent_id"))
+    queries.crossJoin(broadcast(cents.toDF("cent_id", "ce")))
+      .select(col("qid"), col("qe"), col("cent_id"),
+        cosine(col("ce"), col("qe")).as("ccos"))
+      .withColumn("rn", row_number().over(byQ))
+      .filter(col("rn") <= np)
+      .select(col("qid"), col("qe"), col("cent_id").as("cell"))
   }
 
-  /** The staged (qid, qe, cell) probe set for a bounded query batch —
-    * the |Q|×C engine-cosine job collected to a driver artifact that
-    * every batched serve shares (flat cosine, ADC, refined). A repeated
-    * id must not rank twice (duplicate probe rows would put the same
-    * candidate at two ranks), so ids distinct here; ids absent from the
-    * corpus have no vector to probe with and drop out. */
+  /** Driver-staged probes for a BOUNDED id list — the serving batch
+    * that actually amortizes a vector index (near-dup versus an index,
+    * retrieval-pair mining): the probe rows are collected to a driver
+    * artifact (bounded: a serving batch times the centroid count, see
+    * [[MaxDriverProbeIds]]) and every join against them broadcasts. This
+    * saves the frame form's second embeddings scan on small batches. A
+    * repeated id must not rank twice (duplicate probe rows would put the
+    * same candidate at two ranks), so ids distinct here; ids absent from
+    * the corpus have no vector to probe with and drop out. */
   private def stagedBatchProbes(spark: SparkSession, sfDir: String,
-      queryIds: Seq[Long], np: Int): (DataFrame, Seq[Long]) = {
+      queryIds: Seq[Long], numProbe: Int): BatchProbes = {
+    graft.GraftSession.registerFunctions(spark)
+    val np = resolveNumProbe(spark, sfDir, numProbe)
     import spark.implicits._
-    val ids = queryIds.distinct
-    val centDf = stagedCentroidIndex(spark, sfDir).toDF("cent_id", "ce")
+    val cents = stagedCentroidIndex(spark, sfDir)
     val queries = Fixtures.embeddings(spark, sfDir)
-      .filter(col("vec_id").isin(ids: _*))
+      .filter(col("vec_id").isin(queryIds.distinct: _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val byQ = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cent_id"))
-    val probeRows = queries.crossJoin(broadcast(centDf))
-      .select(col("qid"), col("qe"), col("cent_id"),
-        cosine(col("ce"), col("qe")).as("ccos"))
-      .withColumn("rn", row_number().over(byQ))
-      .filter(col("rn") <= np)
-      .select(col("qid"), col("qe"), col("cent_id").as("cell"))
-      .collect()
-    val probes = probeRows.toSeq
+    val rows = probeRows(queries, cents, np).collect()
+    val probes = rows.toSeq
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getLong(2)))
       .toDF("qid", "qe", "cell")
-    (probes, probeRows.map(_.getLong(2)).distinct.toSeq)
+    BatchProbes(probes, rows.map(_.getLong(2)).distinct.toSeq,
+      probes.select("qid", "qe").distinct(), broadcast(_), cents)
   }
 
-  /** BATCHED IVF+PQ (ADC) serving from the staged index — the
-    * compressed-read sibling of [[embeddingBatchTopK]], completing the
-    * batch family (flat / ADC / refined): one partition-pruned scan of
-    * `(vec_id, pq_code, cell)` ADC-ranks the whole query batch, per-row
-    * lookup tables built from each probe's residual against its cell's
-    * centroid. Per query, rows are identical to [[ivfPqTopKIndexed]]
-    * (asserted in tests): same probe staging, same codes, same
-    * (adist asc, vec_id) ranking. The nprobe-sweep recall gauges ride
-    * this — O(gauges) jobs instead of O(gauges × queries). */
-  def ivfPqBatchTopK(spark: SparkSession, sfDir: String,
-      queryIds: Seq[Long], k: Int, numProbe: Int = DerivedProbe): DataFrame = {
+  /** Distributed probes for an UNBOUNDED id frame: ids dedup by
+    * `distinct`, query vectors by inner join (ids absent from the corpus
+    * drop out, as in the staged form), probe rows by the same rank
+    * window — nothing batch-sized ever crosses the driver; the one
+    * collect is the distinct probed-cell list. Join strategy is left to
+    * AQE: a small probe set still broadcasts at runtime; an oversized one
+    * shuffles instead of OOM-ing the driver — exactly the degradation a
+    * serving tier wants. */
+  private def frameBatchProbes(spark: SparkSession, sfDir: String,
+      queryIds: DataFrame, numProbe: Int): BatchProbes = {
     graft.GraftSession.registerFunctions(spark)
     val np = resolveNumProbe(spark, sfDir, numProbe)
-    require(queryIds.nonEmpty, "ivfPqBatchTopK needs a non-empty query batch")
-    val codebook = stagedPqCodebook(spark, sfDir)
     val cents = stagedCentroidIndex(spark, sfDir)
-    val (probes, cells) = stagedBatchProbes(spark, sfDir, queryIds, np)
-    val byRank = Window.partitionBy("qid").orderBy(col("adist"), col("vec_id"))
-    servedIndex(spark, sfDir)
-      .filter(col("cell").isin(cells: _*))
-      .join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        call_function("pq_adc",
-          residualOf(col("qe"), ceForCell(cents, col("cell").cast("long"))),
-          col("pq_code"), cbLit(codebook)).as("adist"))
-      .withColumn("rnk", row_number().over(byRank).cast("int"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** [[embeddingBatchTopK]] through the COMPRESSED two-stage read — the
-    * batch form of [[ivfPqTopKRefinedIndexed]]: stage 1 ADC-ranks the
-    * probed cells' precomputed codes per query (the scan reads
-    * `(vec_id, pq_code, cell)` — the 64×-smaller read) and keeps each
-    * query's `refine × k` shortlist via a rank window; stage 2 joins
-    * the bounded shortlist back against the same probed partitions for
-    * just those rows' full vectors and emits the true-cosine top-k.
-    * Per query, rows are identical to [[ivfPqTopKRefinedIndexed]]
-    * (asserted in tests); the output schema is
-    * [[embeddingBatchTopK]]'s `(qid, vec_id, cosine, rnk)`. At 10^10
-    * vectors this is the serving shape that makes a large batch cheap:
-    * the full-vector read per query stays `refine × k` regardless of
-    * corpus or batch size, and everything else rides the compressed
-    * codes. */
-  def embeddingBatchTopKRefined(spark: SparkSession, sfDir: String,
-      queryIds: Seq[Long], k: Int, numProbe: Int = DerivedProbe,
-      refine: Int = RefineFactor,
-      refineInt8: Boolean = RefineFromInt8): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
-    val np = resolveNumProbe(spark, sfDir, numProbe)
-    require(queryIds.nonEmpty, "embeddingBatchTopKRefined needs a non-empty query batch")
-    import spark.implicits._
-    val codebook = stagedPqCodebook(spark, sfDir)
-    val cents = stagedCentroidIndex(spark, sfDir)
-    val ids = queryIds.distinct
-    val centDf = cents.toDF("cent_id", "ce")
-    val queries = Fixtures.embeddings(spark, sfDir)
-      .filter(col("vec_id").isin(ids: _*))
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val byQ = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cent_id"))
-    val probeRows = queries.crossJoin(broadcast(centDf))
-      .select(col("qid"), col("qe"), col("cent_id"),
-        cosine(col("ce"), col("qe")).as("ccos"))
-      .withColumn("rn", row_number().over(byQ))
-      .filter(col("rn") <= np)
-      .select(col("qid"), col("qe"), col("cent_id").as("cell"))
-      .collect()
-    val probes = probeRows.toSeq
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getLong(2)))
-      .toDF("qid", "qe", "cell")
-    val cells = probeRows.map(_.getLong(2)).distinct.toSeq
-    val index = servedIndex(spark, sfDir)
-      .filter(col("cell").isin(cells: _*))
-    val byAdc = Window.partitionBy("qid").orderBy(col("adist"), col("vec_id"))
-    val shortlist = index
-      .join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        call_function("pq_adc",
-          residualOf(col("qe"), ceForCell(cents, col("cell").cast("long"))),
-          col("pq_code"), cbLit(codebook)).as("adist"))
-      .withColumn("srn", row_number().over(byAdc))
-      .filter(col("srn") <= refine * k)
-      .select(col("qid"), col("vec_id"))
-    val byRank = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    index
-      .join(broadcast(shortlist), "vec_id")
-      .join(broadcast(probes.select("qid", "qe").distinct()), "qid")
-      .select(col("qid"), col("vec_id"),
-        rerankCosine(refineInt8).as("cosine"))
-      .withColumn("rnk", row_number().over(byRank).cast("int"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** [[embeddingBatchTopKRefined]] for UNBOUNDED query batches — the
-    * refined twin of [[embeddingBatchTopKFrame]]: ids, query vectors,
-    * probe rows, the per-query ADC shortlist, and the exact re-rank all
-    * stay DataFrames end-to-end (join strategy left to AQE), so nothing
-    * batch-sized ever crosses the driver; the one collect is the
-    * distinct probed-cell list (bounded by the centroid count) that
-    * drives partition pruning. Row-identical per query to
-    * [[ivfPqTopKRefinedIndexed]] (asserted in tests). */
-  def embeddingBatchTopKRefinedFrame(spark: SparkSession, sfDir: String,
-      queryIds: DataFrame, k: Int, numProbe: Int = DerivedProbe,
-      refine: Int = RefineFactor,
-      refineInt8: Boolean = RefineFromInt8): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
-    val np = resolveNumProbe(spark, sfDir, numProbe)
-    import spark.implicits._
-    val codebook = stagedPqCodebook(spark, sfDir)
-    val cents = stagedCentroidIndex(spark, sfDir)
-    val centDf = cents.toDF("cent_id", "ce")
     val ids = queryIds
       .select(col(queryIds.columns.head).cast("long").as("qid")).distinct()
     val queries = Fixtures.embeddings(spark, sfDir)
       .join(ids, col("vec_id") === col("qid"))
       .select(col("qid"), col("embedding").as("qe"))
-    val byQ = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cent_id"))
-    val probes = queries.crossJoin(broadcast(centDf))
-      .select(col("qid"), col("qe"), col("cent_id"),
-        cosine(col("ce"), col("qe")).as("ccos"))
-      .withColumn("rn", row_number().over(byQ))
-      .filter(col("rn") <= np)
-      .select(col("qid"), col("qe"), col("cent_id").as("cell"))
+    val probes = probeRows(queries, cents, np)
     val cells = probes.select("cell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val index = servedIndex(spark, sfDir)
-      .filter(col("cell").isin(cells: _*))
-    val byAdc = Window.partitionBy("qid").orderBy(col("adist"), col("vec_id"))
-    val shortlist = index
-      .join(probes, "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        call_function("pq_adc",
-          residualOf(col("qe"), ceForCell(cents, col("cell").cast("long"))),
-          col("pq_code"), cbLit(codebook)).as("adist"))
-      .withColumn("srn", row_number().over(byAdc))
-      .filter(col("srn") <= refine * k)
-      .select(col("qid"), col("vec_id"))
-    val byRank = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    index
-      .join(shortlist, "vec_id")
-      .join(queries, "qid")
-      .select(col("qid"), col("vec_id"),
-        rerankCosine(refineInt8).as("cosine"))
-      .withColumn("rnk", row_number().over(byRank).cast("int"))
-      .filter(col("rnk") <= k)
+    BatchProbes(probes, cells, queries, identity, cents)
   }
 
   /** Per-micro-batch admission bound for driver-staged ANN probe lists
@@ -1298,48 +1179,112 @@ object SimilarityOps {
     * path — observability for the admission-cap tests. */
   val annJoinServes = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** [[embeddingBatchTopK]] for UNBOUNDED query batches: the ids stay a
-    * DataFrame end-to-end — dedup by `distinct`, query vectors by inner
-    * join (ids absent from the corpus drop out, as in the collect form),
-    * probe rows per query by the same rank window — so nothing
-    * batch-sized ever crosses the driver. The one collect left is the
-    * DISTINCT PROBED CELLS list (bounded by the centroid count, an
-    * index-sized constant) that drives partition pruning on the staged
-    * index scan. Join strategy is left to AQE: a small probe set still
-    * broadcasts at runtime; an oversized one shuffles instead of
-    * OOM-ing the driver — exactly the degradation a serving tier wants.
-    * Row-identical to [[embeddingBatchTopK]] on the same ids (asserted
-    * in tests). */
+  /** The staged index read with partition pruning to the batch's probed
+    * cells. */
+  private def probedIndex(spark: SparkSession, sfDir: String, p: BatchProbes): DataFrame =
+    servedIndex(spark, sfDir).filter(col("cell").isin(p.cells: _*))
+
+  /** `(qid, member)` candidate rows: probed index rows joined to their
+    * query's probe rows, the query itself excluded. */
+  private def batchCandidates(index: DataFrame, p: BatchProbes): DataFrame =
+    index.join(p.hint(p.probes), "cell").filter(col("vec_id") =!= col("qid"))
+
+  /** Per-query top-k as a `row_number` window over qid, kept as int
+    * `rnk` ≤ k. Map-side pre-pruned by WindowGroupLimit; |Q| bounded per
+    * serve, so the per-qid keying never collapses parallelism the way a
+    * corpus-cardinality window would. */
+  private def rankPerQuery(scored: DataFrame, k: Int, order: Column*): DataFrame =
+    scored
+      .withColumn("rnk",
+        row_number().over(Window.partitionBy("qid").orderBy(order: _*)).cast("int"))
+      .filter(col("rnk") <= k)
+
+  /** Exact-cosine batch serve, `(qid, vec_id, cosine, rnk)`: ONE
+    * partition-pruned index scan joined to the probe set, in-row cosine,
+    * per-query rank window. */
+  private def flatBatch(spark: SparkSession, sfDir: String, p: BatchProbes,
+      k: Int): DataFrame =
+    rankPerQuery(batchCandidates(probedIndex(spark, sfDir, p), p)
+      .select(col("qid"), col("vec_id"),
+        cosine(col("embedding"), col("qe")).as("cosine")),
+      k, col("cosine").desc, col("vec_id"))
+
+  /** ADC batch serve, `(qid, vec_id, adist, rnk)`: the scan reads
+    * `(vec_id, pq_code, cell)` only, per-row lookup tables built from
+    * each probe's residual against its cell's centroid. */
+  private def adcBatch(index: DataFrame, p: BatchProbes,
+      codebook: Seq[Array[Double]], k: Int): DataFrame =
+    rankPerQuery(batchCandidates(index, p)
+      .select(col("qid"), col("vec_id"), adcDist(p.cents, codebook).as("adist")),
+      k, col("adist"), col("vec_id"))
+
+  /** Refined batch serve, `(qid, vec_id, cosine, rnk)`: stage 1 is
+    * [[adcBatch]]'s per-query `refine × k` shortlist; stage 2 joins the
+    * bounded shortlist back against the same probed partitions for just
+    * those rows' refine source and ranks the re-scored cosines. At 10^10
+    * vectors the full-vector read per query stays `refine × k`
+    * regardless of corpus or batch size; everything else rides the
+    * compressed codes. */
+  private def refinedBatch(spark: SparkSession, sfDir: String, p: BatchProbes,
+      k: Int, refine: Int, refineInt8: Boolean): DataFrame = {
+    val index = probedIndex(spark, sfDir, p)
+    val shortlist = adcBatch(index, p, stagedPqCodebook(spark, sfDir), refine * k)
+      .select(col("qid"), col("vec_id"))
+    rankPerQuery(index
+      .join(p.hint(shortlist), "vec_id")
+      .join(p.hint(p.queries), "qid")
+      .select(col("qid"), col("vec_id"), rerankCosine(refineInt8).as("cosine")),
+      k, col("cosine").desc, col("vec_id"))
+  }
+
+  /** BATCHED ANN serving from the staged index for a bounded id list:
+    * per query, rows are identical to [[embeddingIvfTopK]] (asserted). */
+  def embeddingBatchTopK(spark: SparkSession, sfDir: String,
+      queryIds: Seq[Long], k: Int, numProbe: Int = DerivedProbe): DataFrame = {
+    require(queryIds.nonEmpty, "embeddingBatchTopK needs a non-empty query batch")
+    flatBatch(spark, sfDir, stagedBatchProbes(spark, sfDir, queryIds, numProbe), k)
+  }
+
+  /** BATCHED IVF+PQ (ADC) serving from the staged index: per query,
+    * rows are identical to [[ivfPqTopKIndexed]] (asserted). The
+    * nprobe-sweep recall gauges ride this — O(gauges) jobs instead of
+    * O(gauges × queries). */
+  def ivfPqBatchTopK(spark: SparkSession, sfDir: String,
+      queryIds: Seq[Long], k: Int, numProbe: Int = DerivedProbe): DataFrame = {
+    require(queryIds.nonEmpty, "ivfPqBatchTopK needs a non-empty query batch")
+    val p = stagedBatchProbes(spark, sfDir, queryIds, numProbe)
+    adcBatch(probedIndex(spark, sfDir, p), p, stagedPqCodebook(spark, sfDir), k)
+  }
+
+  /** [[embeddingBatchTopK]] through the compressed two-stage read: per
+    * query, rows are identical to [[ivfPqTopKRefinedIndexed]]
+    * (asserted); the output schema is [[embeddingBatchTopK]]'s. */
+  def embeddingBatchTopKRefined(spark: SparkSession, sfDir: String,
+      queryIds: Seq[Long], k: Int, numProbe: Int = DerivedProbe,
+      refine: Int = RefineFactor,
+      refineInt8: Boolean = RefineFromInt8): DataFrame = {
+    require(queryIds.nonEmpty, "embeddingBatchTopKRefined needs a non-empty query batch")
+    refinedBatch(spark, sfDir, stagedBatchProbes(spark, sfDir, queryIds, numProbe),
+      k, refine, refineInt8)
+  }
+
+  /** [[embeddingBatchTopKRefined]] for UNBOUNDED query batches (first
+    * column of `queryIds`, cast to long): row-identical per query to
+    * [[ivfPqTopKRefinedIndexed]] (asserted). */
+  def embeddingBatchTopKRefinedFrame(spark: SparkSession, sfDir: String,
+      queryIds: DataFrame, k: Int, numProbe: Int = DerivedProbe,
+      refine: Int = RefineFactor,
+      refineInt8: Boolean = RefineFromInt8): DataFrame =
+    refinedBatch(spark, sfDir, frameBatchProbes(spark, sfDir, queryIds, numProbe),
+      k, refine, refineInt8)
+
+  /** [[embeddingBatchTopK]] for UNBOUNDED query batches (first column of
+    * `queryIds`, cast to long): row-identical to [[embeddingBatchTopK]]
+    * on the same ids (asserted). Counted in [[annJoinServes]]. */
   def embeddingBatchTopKFrame(spark: SparkSession, sfDir: String,
       queryIds: DataFrame, k: Int, numProbe: Int = DerivedProbe): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
-    val np = resolveNumProbe(spark, sfDir, numProbe)
     annJoinServes.incrementAndGet()
-    import spark.implicits._
-    val centDf = stagedCentroidIndex(spark, sfDir).toDF("cent_id", "ce")
-    val ids = queryIds
-      .select(col(queryIds.columns.head).cast("long").as("qid")).distinct()
-    val queries = Fixtures.embeddings(spark, sfDir)
-      .join(ids, col("vec_id") === col("qid"))
-      .select(col("qid"), col("embedding").as("qe"))
-    val byQ = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cent_id"))
-    val probes = queries.crossJoin(broadcast(centDf))
-      .select(col("qid"), col("qe"), col("cent_id"),
-        cosine(col("ce"), col("qe")).as("ccos"))
-      .withColumn("rn", row_number().over(byQ))
-      .filter(col("rn") <= np)
-      .select(col("qid"), col("qe"), col("cent_id").as("cell"))
-    val cells = probes.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val byRank = Window.partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    servedIndex(spark, sfDir)
-      .filter(col("cell").isin(cells: _*))
-      .join(probes, "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        cosine(col("embedding"), col("qe")).as("cosine"))
-      .withColumn("rnk", row_number().over(byRank).cast("int"))
-      .filter(col("rnk") <= k)
+    flatBatch(spark, sfDir, frameBatchProbes(spark, sfDir, queryIds, numProbe), k)
   }
 
   def embeddingIvfTopK(emb: DataFrame, queryId: Long, k: Int,
@@ -1705,19 +1650,13 @@ object SimilarityOps {
     graft.GraftSession.registerFunctions(emb.sparkSession)
     val query = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"))
-    val rf = residualFrame(emb, centroids)
-    rf.select(col("vec_id"), col("cell"),
+    val members = residualFrame(emb, centroids)
+      .select(col("vec_id"), col("cell"),
         call_function("pq_enc", col("embedding"), cbLit(codebook)).as("k"))
       .select(col("vec_id"), col("cell"),
         col("k.code").as("pq_code"))
       .filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(query))
-      .select(col("vec_id"),
-        call_function("pq_adc",
-          residualOf(col("qe"), ceForCell(centroids, col("cell"))),
-          col("pq_code"), cbLit(codebook)).as("adist"))
-      .orderBy(col("adist"), col("vec_id"))
-      .limit(k)
+    adcTopK(QueryProbe(members, query, centroids), codebook, k)
   }
 
   /** Higher-order reference form of [[pqEncode]] — the numerics spec the
@@ -1763,8 +1702,6 @@ object SimilarityOps {
       .limit(k)
   }
 
-  /** Higher-order reference form of [[pqTopK]] for the equivalence
-    * tests. */
   /** The composed IVF+PQ query path — what a production ANN index
     * actually executes per query (the FAISS `IVFPQ` shape): coarse-probe
     * the query's [[NumProbe]] best cells, then rank ONLY those cells'
@@ -1787,32 +1724,21 @@ object SimilarityOps {
       numProbe: Int = NumProbe): DataFrame = {
     graft.GraftSession.registerFunctions(emb.sparkSession)
     require(centroids.nonEmpty, "ivfPqTopK needs a non-empty centroid index")
-    import emb.sparkSession.implicits._
-    val centDf = centroids.toDF("cent_id", "ce")
-    val qdf = emb.filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
-    val probeCells = centDf.crossJoin(broadcast(qdf))
-      .select(col("cent_id"), cosine(col("ce"), col("qe")).as("ccos"))
-      .orderBy(col("ccos").desc, col("cent_id")).limit(numProbe)
-      .collect().map(_.getLong(0)).toSeq
-    val query = emb.filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
-    emb.filter(col("vec_id") =!= queryId)
+    val qe = emb.filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
+    val members = emb.filter(col("vec_id") =!= queryId)
       .withColumn("cell", cellAssignExpr(centroids))
-      .filter(col("cell").isin(probeCells: _*))
-      .crossJoin(broadcast(query))
-      .select(col("vec_id"),
-        // RESIDUAL ADC (round 11): both sides quantize against the
-        // member's cell centroid — in-row encode of the member residual,
-        // per-cell residual of the broadcast query
-        call_function("pq_adc",
-          residualOf(col("qe"), ceForCell(centroids, col("cell"))),
-          call_function("pq_enc",
-            residualOf(col("embedding"), ceForCell(centroids, col("cell"))),
-            cbLit(codebook)).getField("code"),
-          cbLit(codebook)).as("adist"))
-      .orderBy(col("adist"), col("vec_id"))
-      .limit(k)
+      .filter(col("cell").isin(probeCellsOf(centroids, qe, numProbe): _*))
+      // RESIDUAL ADC (round 11): both sides quantize against the
+      // member's cell centroid — in-row encode of the member residual,
+      // per-cell residual of the broadcast query
+      .withColumn("pq_code", call_function("pq_enc",
+        residualOf(col("embedding"), ceForCell(centroids, col("cell"))),
+        cbLit(codebook)).getField("code"))
+    adcTopK(QueryProbe(members, qe, centroids), codebook, k)
   }
 
+  /** Higher-order reference form of [[pqTopK]] for the equivalence
+    * tests. */
   private[graft] def pqTopKRef(emb: DataFrame, codebook: Seq[Array[Double]],
       queryId: Long, k: Int): DataFrame = {
     val query = emb.filter(col("vec_id") === queryId)

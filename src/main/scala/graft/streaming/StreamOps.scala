@@ -933,10 +933,12 @@ object StreamOps {
             // bucket set (≤ DocBucketParts, an index constant) as an
             // observed collect_set over both endpoint columns — the
             // separate distinct-collect job inside the merge body is
-            // skipped (opt r20)
+            // skipped (opt r20). Endpoints cast to long first, as the
+            // merge's canonMergeEdges does: a DOUBLE/DECIMAL topic would
+            // otherwise hash "5.0", not "5", and prune the wrong buckets
             val gateObs = org.apache.spark.sql.Observation()
             val db = (c: String) => graft.operators.Hashing
-              .md5Bucket(col(c), DedupOps.DocBucketParts).cast("int")
+              .md5Bucket(col(c).cast("long"), DedupOps.DocBucketParts).cast("int")
             val gated = batch.observe(gateObs,
               count(lit(1)).as("n"),
               collect_set(db("doc_a")).as("dba"),

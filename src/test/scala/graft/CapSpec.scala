@@ -444,4 +444,29 @@ class CapSpec extends SparkTestBase {
     assert(operators.DedupOps.explodeSpread(
       spark.range(Long.MaxValue / 16).toDF("doc_id")) === (1 << 17))
   }
+
+  test("gate ride-alongs observe one LONG mask whose bits are the probed prefix set") {
+    // the gates' observed prefix set must be O(1) on the driver at any
+    // batch size (a collect_set of per-row arrays is O(batch × bands)),
+    // and must expand to exactly the set those arrays flatten to
+    val sigs = DedupOps.textSignaturesOf(graft.model.Fixtures.documents(spark, sfDir))
+    val rng = new scala.util.Random(7)
+    val fps = (Seq(0L, -1L, Long.MaxValue, Long.MinValue) ++
+      Seq.fill(200)(rng.nextLong())).toDF("dhash")
+    val cases = Seq(
+      (sigs, DedupOps.bandPrefixes, DedupOps.SigPrefixParts),
+      (fps, DedupOps.blockPrefixes, DedupOps.MediaBandParts))
+    for ((frame, keys, parts) <- cases; batch <- Seq(frame, frame.limit(0))) {
+      val obs = org.apache.spark.sql.Observation()
+      batch.observe(obs, DedupOps.keyMask(keys, parts).as("mask"),
+          collect_set(keys).as("arrays"))
+        .write.format("noop").mode("overwrite").save()
+      val observed = obs.get
+      assert(observed("mask").isInstanceOf[Long],
+        s"the mask must observe as a single LONG: ${observed("mask")}")
+      val old = observed("arrays").asInstanceOf[Seq[Seq[Int]]].flatten.distinct
+      assert(DedupOps.maskKeys(observed("mask").asInstanceOf[Long]).toSet === old.toSet)
+      assert(old.nonEmpty === (batch eq frame), "the full batch probes, the empty one not")
+    }
+  }
 }

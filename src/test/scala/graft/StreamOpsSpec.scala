@@ -440,6 +440,32 @@ class StreamOpsSpec extends SparkTestBase {
     assertSameRows(live, staged)
   }
 
+  test("stream_xm: a DOUBLE-typed edge topic merges exactly like the LONG-typed one") {
+    // the merge casts endpoints to long before bucketing; the gate's
+    // observed bucket hint must too, or a DOUBLE id hashes as "5.0" and
+    // the per-batch selection prunes the wrong doc-bucket partitions.
+    // A few edges into base clusters: with few endpoints a mis-hashed
+    // hint misses the base docs' buckets rather than covering them all.
+    import graft.operators.DedupOps
+    val clustered = DedupOps.stagedBaseCrossModalGroups(spark, sfDir)
+      .filter(col("doc_id") =!= col("cluster")).select("doc_id")
+    val edges = DedupOps.stagedIncrementCrossEdges(spark, sfDir)
+      .join(clustered,
+        col("doc_a") === col("doc_id") || col("doc_b") === col("doc_id"), "left_semi")
+      .orderBy("doc_a", "doc_b").limit(3)
+    assert(edges.count() === 3, "fixture must have edges into base clusters")
+    val topic = java.nio.file.Files.createTempDirectory("graft_xm_typed_topic_")
+    graft.util.TempDirs.track(topic)
+    def topicOf(t: String): String = {
+      val dir = topic.resolve(t).toString
+      edges.select(col("doc_a").cast(t), col("doc_b").cast(t)).write.parquet(dir)
+      dir
+    }
+    val asLong = StreamOps.streamCrossModalMerge(spark, sfDir, topicOf("long"))
+    assert(asLong.count() > 0, "fixture must produce cross-modal clusters")
+    assertSameRows(StreamOps.streamCrossModalMerge(spark, sfDir, topicOf("double")), asLong)
+  }
+
   test("stream_dc equals the batch decontamination and serves a frozen probe index") {
     import graft.operators.DedupOps
     val streamed = StreamOps.streamDecontaminate(spark, sfDir)
@@ -894,5 +920,55 @@ class StreamOpsSpec extends SparkTestBase {
         s"(folds $foldsBefore -> $foldsAfter)")
     val oneShot = StreamOps.streamCrossModalMerge(spark, sfDir, dir)
     assertSameRows(soaked, oneShot)
+  }
+
+  test("no stream key pairs append output with a watermarked aggregate or an outer stream-stream join") {
+    // GraftSession turns off no-data micro-batches. That is safe only
+    // while no stream holds rows back for a later watermark advance in
+    // append mode — a watermarked aggregate's finals or an outer
+    // stream-stream join's unmatched rows — since only a no-data batch
+    // would release them. Walk every stream key's analysed plan.
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, EventTimeWatermark, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
+    def violations(mode: OutputMode, plan: LogicalPlan): Seq[String] =
+      if (mode != OutputMode.Append) Nil
+      else plan.collect {
+        case a: Aggregate if a.isStreaming && a.exists(_.isInstanceOf[EventTimeWatermark]) =>
+          "append-mode watermarked aggregate"
+        case j: Join if j.left.isStreaming && j.right.isStreaming && j.joinType != Inner =>
+          s"append-mode ${j.joinType} stream-stream join"
+      }
+    // the detector itself flags the shape it guards against
+    val windowed = StreamOps.eventsStream(spark, sfDir)
+      .withWatermark("ts", "1 hour").groupBy(window(col("ts"), "1 hour")).count()
+    assert(violations(OutputMode.Append, windowed.queryExecution.analyzed).nonEmpty)
+    assert(violations(OutputMode.Complete, windowed.queryExecution.analyzed).isEmpty)
+    @volatile var key = ""
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new StreamingQueryListener {
+      // query-started events reach session listeners synchronously,
+      // before start() returns, so the query is still registered here
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        spark.streams.get(e.id) match {
+          case w: StreamingQueryWrapper =>
+            val q = w.streamingQuery
+            seen.add(key -> violations(q.outputMode, q.analyzedPlan))
+          case other => seen.add(key -> Seq(s"unrecognised query handle: $other"))
+        }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try StreamOps.queries.toSeq.sortBy(_._1).foreach { case (k, run) => key = k; run(spark, sfDir) }
+    finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    val byKey = seen.asScala.toSeq.groupBy(_._1)
+    for (k <- StreamOps.queries.keys) {
+      assert(byKey.contains(k), s"stream key $k started no streaming query")
+      val bad = byKey(k).flatMap(_._2)
+      assert(bad.isEmpty, s"stream key $k: ${bad.mkString("; ")}")
+    }
   }
 }
