@@ -6,8 +6,11 @@ import org.apache.spark.sql.SparkSession
   * timestamps, ns-as-long parquet reads (the r1-r7 events fixture was
   * timestamp[ns]; the loader adapts either way — `Fixtures
   * .normalizeEventTs`), a per-JVM temp warehouse (bucketed tables must
-  * not land in the working directory), right-sized shuffle parallelism.
-  * One builder so a new main cannot forget an invariant.
+  * not land in the working directory), right-sized shuffle parallelism,
+  * and the fork-free local filesystem ([[graft.util.LocalFs]]: without
+  * `libhadoop`, Hadoop's stock `file:` FS starts a `chmod` or `readlink`
+  * process per checkpoint-log, state-store and parquet file). One
+  * builder so a new main cannot forget an invariant.
   */
 object GraftSession {
 
@@ -25,6 +28,9 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
+      // `file:` through graft.util.LocalFs: no chmod/readlink child
+      // process per checkpoint-log, state-store or parquet file write
+      .config(graft.util.LocalFs.conf)
       // Partition discovery of every staged artifact here lists a
       // BOUNDED dir count — the partition keys are index constants
       // (SigPrefixParts/DocBucketParts/MediaBandParts/XmClusterParts

@@ -1591,15 +1591,17 @@ object DedupOps {
   /** Edge-count cap for [[clusterPairs]]' driver-local closure: below
     * it the component fold runs as an in-heap union-find and the result
     * ships back as one local relation; above it the distributed RDD
-    * fixpoint runs unchanged. Driver footprint at the cap (r19 ADVICE
-    * correction): the 2^20 collected rows are BOXED (Long, Long) tuples
-    * plus a boxed HashMap over up to ~2M vertices — realistically
-    * 100-300 MB transient, comfortably inside the 8g driver but NOT the
-    * ~32 MB a primitive layout would cost; raise the cap only together
-    * with a primitive-array union-find. A merge increment's touched subgraph is dup-density
-    * bounded and sits far under this at any corpus size; the cap exists
-    * for the corpus-cadence closures (staging a 100 TB snapshot), which
-    * route distributed. */
+    * fixpoint runs unchanged. Driver footprint at the cap: the union-find
+    * itself is primitive — a sort buffer of 2^21 longs (16 MB) that
+    * becomes the distinct-id array, plus `Int` parent and size arrays
+    * over up to ~2M vertices (8 MB each) — but the 2^20 collected edges
+    * are (Long, Long) tuple objects (~32 MB) and the output rows are
+    * boxed 4-tuples, one per vertex (up to ~200 MB transient). That is
+    * comfortably inside the 8g driver; raising the cap would first need
+    * a row-free hand-off of the labels. A merge increment's touched
+    * subgraph is dup-density bounded and sits far under this at any
+    * corpus size; the cap exists for the corpus-cadence closures
+    * (staging a 100 TB snapshot), which route distributed. */
   private[graft] val MaxDriverCcEdges: Long = 1L << 20
 
   /** Driver-local connected components over a collected edge list —
@@ -1610,39 +1612,41 @@ object DedupOps {
     * properties, which drive both paths). */
   private def localClusterPairs(spark: SparkSession,
       edges: Array[(Long, Long)]): DataFrame = {
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
+    // vertices = the sorted distinct endpoints; a vertex is its index
+    val buf = new Array[Long](edges.length * 2)
+    var i = 0
+    edges.foreach { case (a, b) => buf(i) = a; buf(i + 1) = b; i += 2 }
+    java.util.Arrays.sort(buf)
+    var n = 0
+    i = 0
+    while (i < buf.length) {
+      if (n == 0 || buf(i) != buf(n - 1)) { buf(n) = buf(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(buf, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
       var r = x
-      var p = parent.get(r)
-      while (p != r) { // path halving
-        val gp = parent.get(p)
-        parent.put(r, gp)
-        r = gp
-        p = parent.get(r)
+      while (parent(r) != r) { // path halving
+        parent(r) = parent(parent(r))
+        r = parent(r)
       }
       r
     }
-    def add(x: Long): Unit =
-      if (!parent.containsKey(x)) parent.put(x, x)
+    def vertex(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
     edges.foreach { case (a, b) =>
-      add(a); add(b)
-      val (ra, rb) = (find(a), find(b))
-      // union by min root: the root IS the running component min, so no
-      // second min pass is needed
-      if (ra < rb) parent.put(rb, ra)
-      else if (rb < ra) parent.put(ra, rb)
+      val (ra, rb) = (find(vertex(a)), find(vertex(b)))
+      // union by min root: indices follow id order, so the root IS the
+      // running component min id and no second min pass is needed
+      if (ra < rb) parent(rb) = ra
+      else if (rb < ra) parent(ra) = rb
     }
-    val ids = parent.keySet().toArray(Array.empty[java.lang.Long])
-    val sizes = new java.util.HashMap[Long, Long]()
-    ids.foreach { id =>
-      val r = find(id.longValue)
-      sizes.merge(r, 1L, (a, b) => a + b)
+    val sizes = new Array[Int](n)
+    (0 until n).foreach(v => sizes(find(v)) += 1)
+    val rows = (0 until n).map { v =>
+      val r = find(v)
+      (ids(v), ids(r), if (v == r) 1 else 0, sizes(r).toLong)
     }
-    val rows = ids.map { boxed =>
-      val id = boxed.longValue
-      val label = find(id)
-      (id, label, if (id == label) 1 else 0, sizes.get(label))
-    }.toSeq
     spark.createDataFrame(rows)
       .toDF("id", "cluster", "is_canonical", "cluster_size")
   }
@@ -1682,8 +1686,8 @@ object DedupOps {
     // (~0.2 s/round measured at sf0.1, 7-9 rounds per run). Same
     // bounded-driver-artifact discipline as the stream-ANN probe hop
     // ([[SimilarityOps.MaxDriverProbeIds]]): ≤ MaxDriverCcEdges rows
-    // collect (boxed — see the cap's scaladoc for the honest driver
-    // footprint at the limit), anything
+    // collect (see the cap's scaladoc for the driver footprint at the
+    // limit), anything
     // larger — a corpus-scale closure at staging cadence — routes
     // through the RDD fixpoint unchanged. Identical output by
     // construction: component min-id labels are partitioning- and
