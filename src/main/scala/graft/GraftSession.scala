@@ -42,10 +42,10 @@ object GraftSession {
       // A driver-side listing of ≤ a few hundred dirs is O(dirs)
       // syscalls at any corpus size; artifacts with genuinely huge
       // partition counts (an object-store lake) still go distributed
-      // past the threshold, which stays env-tunable for such
-      // deployments (opt r19; guide §6 file-listing).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_PART_DISCOVERY_THRESHOLD", "512"))
+      // past the threshold, which a deployment retunes with
+      // `spark.conf.set` (a runtime SQL conf; opt r19; guide §6
+      // file-listing).
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
       // Every streaming query here is a DRAIN-AND-STOP AvailableNow run
       // (the bench/verify contract; production analog: the periodic-
       // drain ingestion pattern AvailableNow exists for). After the last
@@ -60,10 +60,9 @@ object GraftSession {
       // and data batches run back-to-back under AvailableNow so no
       // no-data batch can interleave mid-stream. Measured ~0.5-0.7 s per
       // stateful drain at sf0.1 (opt r20). A continuous deployment that
-      // wants prompt timeout firing between sparse data batches
-      // re-enables via the env override.
-      .config("spark.sql.streaming.noDataMicroBatches.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_NODATA_BATCHES", "false"))
+      // wants prompt timeout firing between sparse data batches sets the
+      // conf back to true with `spark.conf.set` (a runtime SQL conf).
+      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
 
   /** Register every custom SQL function of the engine in a session's
     * registry (idempotent). Operators that need one call this with THEIR

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
@@ -9,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
+import graft.util.StampedMemo
 
 /** Producer-side helpers for the graft message log. Routing is declarative
   * (`repartition(n, col("user_id"))` = `partition_key` hash routing,
@@ -28,11 +28,14 @@ object MsgLog {
 
   val NumLedgers = 4
 
-  private val staged = new ConcurrentHashMap[String, String]()
+  // Every staged topic below is (size, mtime)-stamped on events.parquet,
+  // like every other staged artifact: an events fixture rewritten in
+  // place re-stages instead of serving the stale topic.
+  private val staged = new StampedMemo[String]("events")
 
   /** Stage the events fixture as a message-log topic once per sf dir. */
   def stagedEventsLog(spark: SparkSession, sfDir: String): String =
-    staged.computeIfAbsent(sfDir, _ => {
+    staged.get(sfDir)({
       val dir = Files.createTempDirectory("graft_msglog_")
       graft.util.TempDirs.track(dir)
       writeEvents(Fixtures.events(spark, sfDir), dir.toString, NumLedgers)
@@ -181,7 +184,7 @@ object MsgLog {
     rows.toDF("ledger_file", "committed_entries", "available_entries", "backlog")
   }
 
-  private val stagedNs = new ConcurrentHashMap[String, String]()
+  private val stagedNs = new StampedMemo[String]("events")
 
   /** Stage the events fixture as a 2-topic NAMESPACE once per sf dir:
     * even user_ids → `topic-even`, odd → `topic-odd` (a producer-side
@@ -189,7 +192,7 @@ object MsgLog {
     * table).
     */
   def stagedNamespace(spark: SparkSession, sfDir: String): String =
-    stagedNs.computeIfAbsent(sfDir, _ => {
+    stagedNs.get(sfDir)({
       val dir = Files.createTempDirectory("graft_msglog_ns_")
       graft.util.TempDirs.track(dir)
       val ev = Fixtures.events(spark, sfDir)
@@ -265,7 +268,7 @@ object MsgLog {
       .toDF()
   }
 
-  private val stagedEnv = new ConcurrentHashMap[String, String]()
+  private val stagedEnv = new StampedMemo[String]("events")
 
   /** Envelope columns derived DETERMINISTICALLY from the events fixture,
     * so a DuckDB oracle can recompute every one of them from the original
@@ -296,7 +299,7 @@ object MsgLog {
     * routing, `src/PulsarApi.proto:98-99`).
     */
   def stagedEnvelopeLog(spark: SparkSession, sfDir: String): String =
-    stagedEnv.computeIfAbsent(sfDir, _ => {
+    stagedEnv.get(sfDir)({
       val dir = Files.createTempDirectory("graft_msglog_env_")
       graft.util.TempDirs.track(dir)
       withEnvelope(Fixtures.events(spark, sfDir))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.DataInputStream
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
@@ -771,17 +771,10 @@ object MsgLogNacks {
 
   /** Journal files in name order (names embed a writer-side sequence, so
     * name order is append order for a single nacking consumer). */
-  def journalFiles(topicDir: String): Seq[Path] = {
-    val d = journalDir(topicDir)
-    if (!Files.isDirectory(d)) Seq.empty
-    else {
-      val stream = Files.list(d)
-      try stream.iterator().asScala.toSeq
-        .filter(_.getFileName.toString.endsWith(".tsv"))
-        .sortBy(_.getFileName.toString)
-      finally stream.close()
-    }
-  }
+  def journalFiles(topicDir: String): Seq[Path] =
+    MsgLogShared.journalFiles(journalDir(topicDir), JournalPrefix)
+
+  private val JournalPrefix = "nack"
 
   def isNackKey(key: String): Boolean =
     key.substring(key.indexOf('/') + 1).startsWith(KeyPrefix)
@@ -882,17 +875,7 @@ object MsgLogNacks {
       prior((name, entry)) = gen
       s"$gen\t$entry\t$name"
     }
-    val dir = journalDir(topicDir)
-    Files.createDirectories(dir)
-    val seq = journalFiles(topicDir).size
-    val name = f"nack-$seq%06d-${java.util.UUID.randomUUID().toString.take(8)}.tsv"
-    val target = dir.resolve(name)
-    val tmp = dir.resolve(s".$name.tmp")
-    Files.write(tmp, lines.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    target
+    MsgLogShared.appendJournal(journalDir(topicDir), JournalPrefix, lines)
   }
 }
 

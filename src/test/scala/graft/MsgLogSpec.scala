@@ -2657,6 +2657,30 @@ class MsgLogSpec extends SparkTestBase {
     }
   }
 
+  test("staged msglog topics re-stage when events.parquet is rewritten in place") {
+    val corpus = tmpPath("glog_stamp_corpus_")
+    val events = corpus.resolve("events.parquet")
+    Files.copy(Paths.get(sfDir, "events.parquet"), events)
+    val sf = corpus.toString
+    def topicRows(): Seq[Long] = Seq(
+      spark.read.format("graft-msglog").load(MsgLog.stagedEventsLog(spark, sf)),
+      spark.read.format("graft-msglog").option("topics", "*")
+        .load(MsgLog.stagedNamespace(spark, sf)),
+      spark.read.format("graft-msglog").load(MsgLog.stagedEnvelopeLog(spark, sf))
+    ).map(_.count())
+    val full = Fixtures.events(spark, sfDir).count()
+    assert(topicRows() === Seq(full, full, full))
+    // an unchanged fixture serves the staged topic, no re-stage
+    val before = MsgLog.stagedEventsLog(spark, sf)
+    assert(MsgLog.stagedEventsLog(spark, sf) === before)
+    // rewrite in place with fewer rows, from the untouched source fixture
+    Fixtures.table(spark, sfDir, "events").limit(50).coalesce(1)
+      .write.mode("overwrite").parquet(events.toString)
+    assert(topicRows() === Seq(50L, 50L, 50L),
+      "every staged topic must follow the rewritten events fixture")
+    assert(MsgLog.stagedEventsLog(spark, sf) !== before)
+  }
+
   test("retry options: parse, wire through the writer, reject nonsense") {
     import spark.implicits._
     import graft.sources.MsgLogRetry

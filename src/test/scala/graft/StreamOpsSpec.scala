@@ -76,6 +76,15 @@ class StreamOpsSpec extends SparkTestBase {
     assertSameRows(stream, batch)
   }
 
+  test("a stream that admits no rows reads back empty on the declared sink schema") {
+    // no vec_id is <= -1: the one micro-batch is empty, the gate skips
+    // every write, and the sink read takes its empty branch
+    val stream = StreamOps.streamAnnTopK(spark, sfDir, maxQueryId = -1L)
+    assert(stream.schema === org.apache.spark.sql.types.StructType.fromDDL(
+      "qid BIGINT, vec_id BIGINT, cosine DOUBLE, rnk INT"))
+    assert(stream.count() === 0L)
+  }
+
   test("stream_idx equals the batch index projection over the whole corpus") {
     try {
       val stream = StreamOps.streamIndexAppend(spark, sfDir)
