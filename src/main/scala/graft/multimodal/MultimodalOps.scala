@@ -396,22 +396,28 @@ object MultimodalOps {
 
   def dropStagedMediaTable(): Unit = mediaTableDirs.clear()
 
+  /** `table(documents)` staged once per corpus SNAPSHOT into a tracked
+    * temp dir named `prefix…` — the body of the five media stagers. The
+    * read-back infers its schema from the files (not through
+    * [[graft.util.StagedArtifacts.readStaged]]), as the decode plans
+    * always have. */
+  private def stagedMedia(spark: SparkSession, sfDir: String,
+      memo: graft.util.StampedMemo[java.nio.file.Path], prefix: String,
+      builds: java.util.concurrent.atomic.AtomicLong)
+      (table: DataFrame => Dataset[MediaRecord]): Dataset[MediaRecord] = {
+    import spark.implicits._
+    val dir = graft.util.StagedArtifacts.tempDir(sfDir, memo, prefix, builds)(
+      table(Fixtures.documents(spark, sfDir)).toDF())
+    spark.read.parquet(dir.toString).as[MediaRecord]
+  }
+
   /** [[realMediaTable]] staged to parquet once per corpus SNAPSHOT
     * ((size, mtime)-stamped on the documents table) — the
     * [[stagedImageTable]] discipline: served/benched passes measure
     * DECODE throughput over stored payloads, not container synthesis. */
-  def stagedMediaTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    val dir = mediaTableDirs.get(sfDir)({
-      mediaTableBuilds.incrementAndGet()
-      val d = java.nio.file.Files.createTempDirectory("graft_media_mixed_")
-      graft.util.TempDirs.track(d)
-      realMediaTable(Fixtures.documents(spark, sfDir))
-        .write.mode("overwrite").parquet(d.toString)
-      d
-    })
-    spark.read.parquet(dir.toString).as[MediaRecord]
-  }
+  def stagedMediaTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
+    stagedMedia(spark, sfDir, mediaTableDirs, "graft_media_mixed_",
+      mediaTableBuilds)(realMediaTable)
 
   /** Contract query: per-kind stats over features decoded by the REAL
     * codec for every kind — image rasters through `javax.imageio`, WAV
@@ -580,18 +586,9 @@ object MultimodalOps {
     * synthesis. Binary payloads + props land in one parquet table (the
     * landing-zone shape of a media crawl); repeated reads scan it like
     * any other fixture. */
-  def stagedImageTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    val dir = imageTableDirs.get(sfDir)({
-      imageTableBuilds.incrementAndGet()
-      val d = java.nio.file.Files.createTempDirectory("graft_media_images_")
-      graft.util.TempDirs.track(d)
-      imageTable(Fixtures.documents(spark, sfDir))
-        .write.mode("overwrite").parquet(d.toString)
-      d
-    })
-    spark.read.parquet(dir.toString).as[MediaRecord]
-  }
+  def stagedImageTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
+    stagedMedia(spark, sfDir, imageTableDirs, "graft_media_images_",
+      imageTableBuilds)(imageTable)
 
   /** Deterministic TEXTURED grayscale PNG synthesis (round 11, the
     * perceptual-hash corpus): a 32×32 integer pseudo-texture whose
@@ -760,18 +757,9 @@ object MultimodalOps {
   /** [[textureTable]] staged to parquet once per corpus SNAPSHOT — the
     * [[stagedImageTable]] discipline: served passes measure decode +
     * hash over stored payloads, not synthesis. */
-  def stagedTextureTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    val dir = textureTableDirs.get(sfDir)({
-      textureTableBuilds.incrementAndGet()
-      val d = java.nio.file.Files.createTempDirectory("graft_media_textures_")
-      graft.util.TempDirs.track(d)
-      textureTable(graft.model.Fixtures.documents(spark, sfDir))
-        .write.mode("overwrite").parquet(d.toString)
-      d
-    })
-    spark.read.parquet(dir.toString).as[MediaRecord]
-  }
+  def stagedTextureTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
+    stagedMedia(spark, sfDir, textureTableDirs, "graft_media_textures_",
+      textureTableBuilds)(textureTable)
 
   /** Deterministic TEXTURED WAV synthesis (the audio twin of
     * [[synthTexturePng]]): 456 PCM16 mono samples at 8 kHz whose
@@ -841,18 +829,9 @@ object MultimodalOps {
 
   /** [[audioTable]] staged to parquet once per corpus SNAPSHOT (the
     * [[stagedTextureTable]] discipline). */
-  def stagedAudioTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    val dir = audioTableDirs.get(sfDir)({
-      audioTableBuilds.incrementAndGet()
-      val d = java.nio.file.Files.createTempDirectory("graft_media_audio_")
-      graft.util.TempDirs.track(d)
-      audioTable(graft.model.Fixtures.documents(spark, sfDir))
-        .write.mode("overwrite").parquet(d.toString)
-      d
-    })
-    spark.read.parquet(dir.toString).as[MediaRecord]
-  }
+  def stagedAudioTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
+    stagedMedia(spark, sfDir, audioTableDirs, "graft_media_audio_",
+      audioTableBuilds)(audioTable)
 
   /** Deterministic TEXTURED animated-GIF synthesis (the video member of
     * the [[synthTexturePng]]/[[synthTextureWav]] family): 57 frames of
@@ -941,18 +920,9 @@ object MultimodalOps {
 
   /** [[videoTable]] staged to parquet once per corpus SNAPSHOT (the
     * [[stagedTextureTable]] discipline). */
-  def stagedVideoTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    val dir = videoTableDirs.get(sfDir)({
-      videoTableBuilds.incrementAndGet()
-      val d = java.nio.file.Files.createTempDirectory("graft_media_video_")
-      graft.util.TempDirs.track(d)
-      videoTable(graft.model.Fixtures.documents(spark, sfDir))
-        .write.mode("overwrite").parquet(d.toString)
-      d
-    })
-    spark.read.parquet(dir.toString).as[MediaRecord]
-  }
+  def stagedVideoTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
+    stagedMedia(spark, sfDir, videoTableDirs, "graft_media_video_",
+      videoTableBuilds)(videoTable)
 
   // ---------------------------------------------------------------------
   // Fingerprint INDEX staging — decode once per corpus snapshot

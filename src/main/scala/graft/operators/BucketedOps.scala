@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
+import graft.util.CorpusStamp
 
 /** Bucketing: the pre-shuffle that makes repeated equi-joins and
   * aggregations on the same key free. Both sides of the join below are
@@ -24,10 +25,14 @@ object BucketedOps {
     * every call (a cache keyed by sf dir would hand out names that no
     * longer exist after a session restart, and would never repair a
     * partial staging where only one of the two tables was written).
+    * The names carry the events fixture's [[CorpusStamp]], so an
+    * `events.parquet` rewritten in place stages fresh tables; the
+    * old-stamp tables stay in the session warehouse until it drops.
     */
   def stagedTables(spark: SparkSession, sfDir: String): (String, String) =
     synchronized {
-      val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
+      val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_") + "_s" +
+        java.lang.Long.toHexString(CorpusStamp.of(sfDir, Seq("events")))
       val fact = s"graft_ev_bucketed$tag"
       val dim = s"graft_user_totals$tag"
       if (!(spark.catalog.tableExists(fact) && spark.catalog.tableExists(dim))) {

@@ -2374,7 +2374,7 @@ object DedupOps {
       val target = java.nio.file.Paths.get(deltaRoot, s"epoch=$foldMax")
       val shadowed = graft.util.EpochDirs.dataFilesIn(target)
       graft.util.EpochDirs.dataFilesIn(scratch).foreach(f =>
-        java.nio.file.Files.move(f, target.resolve(f.getFileName)))
+        graft.util.Durable.rename(f, target.resolve(f.getFileName)))
       shadowed.foreach(f => java.nio.file.Files.deleteIfExists(f))
       epochs.dropRight(2).foreach(e =>
         graft.util.EpochDirs.drop(deltaRoot, e))

@@ -42,22 +42,18 @@ object TextOps {
 
   /** Stopword-hit ratio against one profile, via the fused native
     * [[graft.functions.CountIn]] membership count (one codegen'd loop +
-    * hashed profile set). The composable form below is the numerics
-    * reference — `filter` (ArrayFilter) is CodegenFallback, and at 5
-    * profiles the interpreted lambda per token per profile was the whole
-    * query's cost (BENCH_r07: text_lang_id 2.6 s of a 34 s suite).
+    * hashed profile set). The composable form
+    * `size(filter(w, array_contains))` is the numerics reference, which
+    * PipelineOpsSpec's count_in equivalence case checks it against.
+    * That form is slow: `filter` (ArrayFilter) is CodegenFallback, and
+    * at 5 profiles the interpreted lambda per token per profile was the
+    * whole query's cost (BENCH_r07: text_lang_id 2.6 s of a 34 s suite).
     * (Historical: the lambda uses `array_contains`, not `isin` — In(6)
     * expanded to six codegen'd comparisons per element and the codegen
     * COMPILE dominated at small scale, BENCH_r02 7.6 s for 500 rows.)
     */
   private def profileScore(words: Seq[String]): Column =
     call_function("count_in", col("w"), typedlit(words)) /
-      size(col("w")).cast("double")
-
-  /** The composable reference [[graft.functions.CountIn]] must match
-    * count-for-count (equivalence asserted in tests). */
-  private[graft] def profileScoreHof(words: Seq[String]): Column =
-    size(filter(col("w"), x => array_contains(typedlit(words), x))) /
       size(col("w")).cast("double")
 
   /** `withTokens` plus one `s_<lang>` score column per profile — the
@@ -759,8 +755,6 @@ object TextOps {
   }
 
   private val lm2Cache = new graft.util.StampedMemo[Lm2Model]("documents")
-
-  def dropStagedLm2Model(): Unit = lm2Cache.clear()
 
   /** The corpus bigram LM as a staged per-sfDir artifact — the
     * [[stagedLmModel]] memo discipline at the bigram level: fit once

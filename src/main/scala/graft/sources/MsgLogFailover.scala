@@ -1,10 +1,12 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.Durable
 
 /** FAILOVER subscription over a msglog topic (reference
   * `CommandSubscribe.SubType.Failover`,
@@ -84,12 +86,9 @@ object MsgLogFailover {
     releaseOnActiveChange(topicDir, subscription) {
       MsgLogShared.appendJournal(dir, "reg", Seq(s"$Join\t$priority\t$consumer"))
       if (leaseMs > 0) {
-        // tmp + atomic rename, like every other file this source
-        // writes: a crash mid-write must not leave a truncated lease
-        val tmp = dir.resolve(s".lease-$consumer.tmp")
-        Files.write(tmp, leaseMs.toString.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, leasePath(dir, consumer),
-          StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+        // a crash mid-write must not leave a truncated lease
+        Durable.write(leasePath(dir, consumer),
+          leaseMs.toString.getBytes(StandardCharsets.UTF_8))
       } else Files.deleteIfExists(leasePath(dir, consumer))
     }
     activeRaw(dir).contains(consumer)

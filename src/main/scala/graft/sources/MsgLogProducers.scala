@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
 
 /** Producer creation/handshake over a msglog topic (reference

@@ -1,11 +1,13 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.Durable
 
 /** SHARED subscription over a msglog topic (reference `CommandSubscribe.
   * SubType.Shared`, `/root/reference/src/PulsarApi.proto:298-306`):
@@ -94,11 +96,8 @@ object MsgLogShared {
     val seq = journalFiles(dir, prefix).size
     val name = f"$prefix-$seq%06d-${java.util.UUID.randomUUID().toString.take(8)}.tsv"
     val target = dir.resolve(name)
-    val tmp = dir.resolve(s".$name.tmp")
-    Files.write(tmp, lines.mkString("", "\n", "\n")
+    Durable.write(target, lines.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
     target
   }
 

@@ -1,12 +1,14 @@
 package graft.sources
 
 import java.io.{BufferedOutputStream, DataOutputStream}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.util.Durable
 
 /** Produce path of the graft message log as a DataSource V2 writer — the
   * reference's send pipeline (§3.1: serialize → sequence → frame → await
@@ -243,11 +245,8 @@ object MsgLogSchemaRegistry {
 
   private def writeRegistry(dir: String, ddl: String): Unit = {
     Files.createDirectories(Paths.get(dir))
-    val target = file(dir)
-    val tmp = target.resolveSibling("." + FileName + ".tmp")
-    Files.write(tmp, (ddl + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    Durable.write(file(dir),
+      (ddl + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** True iff every field of `narrow` exists in `wide` at the same
@@ -307,11 +306,8 @@ object MsgLogSeqFrontier {
   def write(ledger: Path, maxima: Map[String, Long]): Unit = {
     val body = maxima.toSeq.sortBy(_._1)
       .map { case (p, s) => s"$s\t$p" }.mkString("", "\n", "\n")
-    val target = sidecarPath(ledger)
-    val tmp = target.resolveSibling("." + target.getFileName.toString + ".tmp")
-    Files.write(tmp, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    Durable.write(sidecarPath(ledger),
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   def read(sidecar: Path): Map[String, Long] =
@@ -409,13 +405,9 @@ object MsgLogTxn {
     Paths.get(dir, s"txn-$txnId.commit")
 
   /** EndTxn(COMMIT): atomically publish every ledger of `txnId`. */
-  def commit(dir: String, txnId: String, ledgerNames: Seq[String]): Unit = {
-    val tmp = Paths.get(dir, s".txn-$txnId.commit.tmp")
-    Files.write(tmp, ledgerNames.sorted.mkString("\n")
+  def commit(dir: String, txnId: String, ledgerNames: Seq[String]): Unit =
+    Durable.write(markerPath(dir, txnId), ledgerNames.sorted.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, markerPath(dir, txnId), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
 
   /** EndTxn(ABORT): delete every staged ledger (and sidecar) of `txnId`.
     * Only legal while no commit marker exists — a committed transaction
@@ -763,9 +755,7 @@ class MsgLogDataWriter(dir: String, schema: StructType, stem: String, taskId: Lo
     MsgLogRetry.retry(retrySend) {
       // idempotent within the loop: a re-attempt after the move landed
       // but the sidecar failed must not re-move the now-absent tmp
-      if (Files.exists(tmp))
-        Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.ATOMIC_MOVE)
+      if (Files.exists(tmp)) Durable.rename(tmp, dest)
       // sequence sidecar AFTER the ledger: a crash between the renames
       // leaves a sidecar-less ledger, which the frontier walk handles
       if (seqMaxima.nonEmpty) MsgLogSeqFrontier.write(dest, seqMaxima.toMap)

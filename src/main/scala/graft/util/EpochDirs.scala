@@ -30,10 +30,8 @@ object EpochDirs {
 
   /** Publish `tmp` as `root/epoch=<epoch>` — one local directory
     * rename. The target must not exist (callers drop it first). */
-  def publish(tmp: Path, root: String, epoch: Long): Unit = {
-    Files.move(tmp, Paths.get(root, s"epoch=$epoch"))
-    ()
-  }
+  def publish(tmp: Path, root: String, epoch: Long): Unit =
+    Durable.rename(tmp, Paths.get(root, s"epoch=$epoch"))
 
   /** Remove any `.compact_*` scratch a dead compactor left under
     * `root` — invisible to readers the whole time, so the sweep is pure
@@ -113,9 +111,9 @@ object EpochDirs {
       out.write.parquet(scratch.toString)
       val toFold = epochs.dropRight(1)
       toFold.foreach { e =>
-        Files.move(Paths.get(root, s"epoch=$e"), Paths.get(root, s".folded_$e"))
+        Durable.rename(Paths.get(root, s"epoch=$e"), Paths.get(root, s".folded_$e"))
       }
-      Files.move(scratch, Paths.get(root, s"epoch=$foldMax"))
+      Durable.rename(scratch, Paths.get(root, s"epoch=$foldMax"))
       toFold.foreach(e => TempDirs.deleteNow(Paths.get(root, s".folded_$e")))
       graft.ObservedMetrics.bumpGauge("sink.epoch_folds")
       true
@@ -159,7 +157,7 @@ object EpochDirs {
         // (ADVICE r18): delete it, with a warning for the operator log.
         dotted.foreach { d =>
           val target = Paths.get(root, "epoch=" + d.getName.stripPrefix(".folded_"))
-          if (!Files.exists(target)) { Files.move(d.toPath, target); () }
+          if (!Files.exists(target)) Durable.rename(d.toPath, target)
           else {
             System.err.println(s"[sinkfold] ${d.getName}: target $target " +
               "already re-written by a replayed epoch — dropping the " +
@@ -178,14 +176,6 @@ object EpochDirs {
 
   /** Drop `root/epoch=<epoch>` recursively, best-effort per file (the
     * [[TempDirs]] deletion stance). */
-  def drop(root: String, epoch: Long): Unit = {
-    val d = Paths.get(root, s"epoch=$epoch")
-    if (Files.exists(d)) {
-      val walk = Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p =>
-          try { Files.deleteIfExists(p); () } catch { case _: Exception => () })
-      finally walk.close()
-    }
-  }
+  def drop(root: String, epoch: Long): Unit =
+    TempDirs.deleteNow(Paths.get(root, s"epoch=$epoch"))
 }

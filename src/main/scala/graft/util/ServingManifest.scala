@@ -1,6 +1,7 @@
 package graft.util
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
 
 /** Durable serving-registry sidecar — the persisted form of the
   * JVM-local registries that round 13 flagged as restart-blind
@@ -12,9 +13,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * One small `key=value` properties file per (corpus dir, family) under
   * a deterministic sidecar root — the corpus dir itself is read-only,
   * so the sidecar lives beside the staged artifacts in the system temp
-  * tree, keyed by an MD5 of the corpus path. Writes go through a temp
-  * file + ATOMIC_MOVE (the `MsgLogProducers` journal discipline): a
-  * reader never observes a torn manifest. Every entry map carries the
+  * tree, keyed by an MD5 of the corpus path. Writes go through
+  * [[Durable.write]] (temp sibling + atomic rename): a reader never
+  * observes a torn manifest. Every entry map carries the
   * corpus [[CorpusStamp]] it was written under; a loader drops entries
   * from a REWRITTEN corpus (stamp mismatch) the same way the staged
   * memos re-derive. Readers additionally ignore registrations whose
@@ -35,41 +36,18 @@ object ServingManifest {
     family.startsWith("staged_base") ||
       Set("ann_appends", "text_appends", "media_appends").contains(family)
 
-  /** JVM-wide lock serializing in-process access (and keeping the OS
-    * file lock below from self-overlapping — the JVM throws on a
-    * re-lock from the same process). */
-  private val lock = new Object
-
-  /** CROSS-PROCESS read-modify-write safety: every public operation
-    * holds an exclusive OS file lock on the sidecar root for its whole
-    * read/modify/write, so two serving JVMs on one host can both
+  /** The sidecar root. CROSS-PROCESS read-modify-write safety: every
+    * public operation holds this root's [[Durable.withDirLock]] for its
+    * whole read/modify/write, so two serving JVMs on one host can both
     * append/register without losing updates (without this, both read
     * counter=N under their own in-process locks and both write N+1).
     * Operations are rare (registration, append bookkeeping) and tiny,
     * so one coarse lock is simpler than per-file striping and obviously
     * correct. */
-  private def withFileLock[T](body: => T): T = lock.synchronized {
-    val ch = java.nio.channels.FileChannel.open(rootDir.resolve(".lock"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE)
-    try {
-      val l = ch.lock()
-      try body finally { l.release() }
-    } finally ch.close()
-  }
+  private def rootDir: Path = Durable.sidecarRoot("graft_serving")
 
-  private def rootDir: Path = {
-    val d = Paths.get(System.getProperty("java.io.tmpdir"), "graft_serving")
-    Files.createDirectories(d)
-    d
-  }
-
-  private def fileFor(sfDir: String, family: String): Path = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8"))
-    val hex = md.map(b => f"$b%02x").mkString
-    rootDir.resolve(s"${hex}_$family.props")
-  }
+  private def fileFor(sfDir: String, family: String): Path =
+    rootDir.resolve(s"${Durable.md5Hex(sfDir)}_$family.props")
 
   /** Keys and values are percent-encoded on write ('%', '=', newlines):
     * counter keys are filesystem paths, and a path containing '=' (a
@@ -90,11 +68,7 @@ object ServingManifest {
     val stamped = entries + (StampKey -> CorpusStamp.of(sfDir, tables).toString)
     val body = stamped.toSeq.sorted
       .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("", "\n", "\n")
-    val tmp = Files.createTempFile(rootDir, f.getFileName.toString, ".tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
+    Durable.write(f, body.getBytes(StandardCharsets.UTF_8))
   }
 
   private def getUnlocked(sfDir: String, family: String,
@@ -142,16 +116,16 @@ object ServingManifest {
     * the named fixture tables — atomic rename, never a torn file. */
   def put(sfDir: String, family: String, tables: Seq[String],
       entries: Map[String, String]): Unit =
-    withFileLock { putUnlocked(sfDir, family, tables, entries) }
+    Durable.withDirLock(rootDir) { putUnlocked(sfDir, family, tables, entries) }
 
   /** The (sfDir, family) entries, or empty when absent or written under
     * a DIFFERENT corpus stamp (the corpus was rewritten in place — the
     * registration describes artifacts of a corpus that no longer
     * exists). */
   def get(sfDir: String, family: String, tables: Seq[String]): Map[String, String] =
-    withFileLock { getUnlocked(sfDir, family, tables) }
+    Durable.withDirLock(rootDir) { getUnlocked(sfDir, family, tables) }
 
-  def remove(sfDir: String, family: String): Unit = withFileLock {
+  def remove(sfDir: String, family: String): Unit = Durable.withDirLock(rootDir) {
     Files.deleteIfExists(fileFor(sfDir, family))
     ()
   }
@@ -166,7 +140,7 @@ object ServingManifest {
     * write or the race just moves one key over. */
   def removeIf(sfDir: String, family: String, tables: Seq[String],
       key: String, expected: String,
-      alsoRemove: Seq[String] = Nil): Boolean = withFileLock {
+      alsoRemove: Seq[String] = Nil): Boolean = Durable.withDirLock(rootDir) {
     val cur = getUnlocked(sfDir, family, tables)
     if (!cur.get(key).contains(expected)) false
     else {
@@ -181,9 +155,8 @@ object ServingManifest {
     * entries when a rebuilt artifact lands on a previously-used dir
     * name before any stamped read could sweep the dead key. */
   private[graft] def removeKeyAllFamilies(sfDir: String, key: String): Unit =
-    withFileLock {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(sfDir.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    Durable.withDirLock(rootDir) {
+      val md = Durable.md5Hex(sfDir)
       val encKey = enc(key) + "="
       val s = Files.list(rootDir)
       try {
@@ -193,14 +166,9 @@ object ServingManifest {
           if (f.getFileName.toString.startsWith(s"${md}_") &&
               f.getFileName.toString.endsWith(".props")) {
             val lines = Files.readString(f).linesIterator.toSeq
-            if (lines.exists(_.startsWith(encKey))) {
-              val tmp = Files.createTempFile(rootDir, f.getFileName.toString, ".tmp")
-              Files.writeString(tmp,
-                lines.filterNot(_.startsWith(encKey))
-                  .mkString("", "\n", "\n"))
-              Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-                StandardCopyOption.REPLACE_EXISTING)
-            }
+            if (lines.exists(_.startsWith(encKey)))
+              Durable.write(f, lines.filterNot(_.startsWith(encKey))
+                .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
           }
         }
       } finally s.close()
@@ -212,7 +180,7 @@ object ServingManifest {
     * artifact dir they count into: a rebuilt artifact gets a fresh dir,
     * so its counter correctly restarts at zero. */
   def addCounter(sfDir: String, family: String, tables: Seq[String],
-      key: String, delta: Long): Long = withFileLock {
+      key: String, delta: Long): Long = Durable.withDirLock(rootDir) {
     val cur = getUnlocked(sfDir, family, tables)
     val next = cur.getOrElse(key, "0").toLong + delta
     putUnlocked(sfDir, family, tables, cur + (key -> next.toString))
@@ -228,7 +196,7 @@ object ServingManifest {
     * registration was retired. Returns whether the bump applied. */
   def addCounterIf(sfDir: String, family: String, tables: Seq[String],
       condKey: String, expected: String,
-      key: String, delta: Long): Boolean = withFileLock {
+      key: String, delta: Long): Boolean = Durable.withDirLock(rootDir) {
     val cur = getUnlocked(sfDir, family, tables)
     if (!cur.get(condKey).contains(expected)) false
     else {
@@ -251,7 +219,7 @@ object ServingManifest {
   def addCounterIfNewEpoch(sfDir: String, family: String, tables: Seq[String],
       condKey: String, expected: String,
       key: String, delta: Long,
-      epochKey: String, epochId: Long): Boolean = withFileLock {
+      epochKey: String, epochId: Long): Boolean = Durable.withDirLock(rootDir) {
     val cur = getUnlocked(sfDir, family, tables)
     val seen = cur.get(epochKey).map(_.toLong).getOrElse(-1L)
     if (!cur.get(condKey).contains(expected) || epochId <= seen) false
@@ -269,7 +237,7 @@ object ServingManifest {
     * accumulate across a delete-and-rebuild landing on the same dir
     * name. */
   def set(sfDir: String, family: String, tables: Seq[String],
-      key: String, value: String): Unit = withFileLock {
+      key: String, value: String): Unit = Durable.withDirLock(rootDir) {
     putUnlocked(sfDir, family, tables,
       getUnlocked(sfDir, family, tables) + (key -> value))
   }
@@ -284,7 +252,7 @@ object ServingManifest {
     * another JVM swapped in meanwhile (the [[removeIf]] race class). */
   def setIf(sfDir: String, family: String, tables: Seq[String],
       condKey: String, expected: String,
-      updates: Map[String, String]): Boolean = withFileLock {
+      updates: Map[String, String]): Boolean = Durable.withDirLock(rootDir) {
     val cur = getUnlocked(sfDir, family, tables)
     if (!cur.get(condKey).contains(expected)) false
     else {
@@ -309,7 +277,7 @@ object ServingManifest {
   def setAndClearIf(sfDir: String, family: String, tables: Seq[String],
       condKey: String, expected: String,
       updates: Map[String, String], removeKeys: Seq[String]): Boolean =
-    withFileLock {
+    Durable.withDirLock(rootDir) {
       val cur = getUnlocked(sfDir, family, tables)
       if (!cur.get(condKey).contains(expected)) false
       else {
@@ -324,7 +292,7 @@ object ServingManifest {
     get(sfDir, family, tables).get(key).map(_.toLong).getOrElse(0L)
 
   def removeCounter(sfDir: String, family: String, tables: Seq[String],
-      key: String): Unit = withFileLock {
+      key: String): Unit = Durable.withDirLock(rootDir) {
     val cur = getUnlocked(sfDir, family, tables)
     if (cur.contains(key)) putUnlocked(sfDir, family, tables, cur - key)
   }

@@ -1,6 +1,6 @@
 package graft.util
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -23,12 +23,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    host) RESOLVES the same dir — with its appends — instead of
   *    rebuilding; an in-place corpus rewrite changes the stamp and
   *    re-derives exactly as the memos do. Builds land in a temp dir and
-  *    publish by ATOMIC rename under an OS file lock (the
-  *    [[ServingManifest]] discipline): a reader never observes a
-  *    half-built artifact, and two JVMs building concurrently converge
-  *    on one winner. A re-stage ([[parquetDir]] with `freshGen`) bumps
-  *    the GENERATION: the rebuild gets a new dir (so its append counter
-  *    correctly restarts at zero) and prior generations sweep.
+  *    publish by [[Durable.rename]] under [[Durable.withDirLock]]: a
+  *    reader never observes a half-built artifact, and two JVMs
+  *    building concurrently converge on one winner. A re-stage
+  *    ([[parquetDir]] with `freshGen`) bumps the GENERATION: the rebuild
+  *    gets a new dir (so its append counter correctly restarts at zero)
+  *    and prior generations sweep.
   *
   * At staging the artifact's BASE ROW COUNT is recorded in the manifest
   * next to the append counters ([[stagedBaseRows]]), so staleness
@@ -128,34 +128,14 @@ object StagedArtifacts {
   private def baseRowsFamily(memo: StampedMemo[Path]): String =
     "staged_base_" + memo.tableNames.mkString("_")
 
-  /** JVM-wide lock serializing in-process access (and keeping the OS
-    * file lock from self-overlapping). Lock sections are SHORT —
-    * resolution and the publish rename only; builds run outside. */
-  private val lock = new Object
-
-  private def withDirLock[T](body: => T): T = lock.synchronized {
-    val ch = java.nio.channels.FileChannel.open(rootDir.resolve(".lock"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE)
-    try {
-      val l = ch.lock()
-      try body finally { l.release() }
-    } finally ch.close()
-  }
-
-  private def rootDir: Path = {
-    val d = Paths.get(System.getProperty("java.io.tmpdir"), "graft_staged")
-    Files.createDirectories(d)
-    d
-  }
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  /** The durable root. Sections under its [[Durable.withDirLock]] are
+    * SHORT — resolution and the publish rename only; builds run
+    * outside. */
+  private def rootDir: Path = Durable.sidecarRoot("graft_staged")
 
   /** Stamp rendered unsigned so the dir name never carries a '-'. */
   private def keyOf(sfDir: String, memo: StampedMemo[Path], name: String): String =
-    s"${md5Hex(sfDir)}_${name}_s${java.lang.Long.toHexString(memo.stamp(sfDir))}"
+    s"${Durable.md5Hex(sfDir)}_${name}_s${java.lang.Long.toHexString(memo.stamp(sfDir))}"
 
   private def listRootUnlocked(): Seq[Path] = {
     val s = Files.list(rootDir)
@@ -198,7 +178,7 @@ object StagedArtifacts {
     * abandoned `.build_` temps older than a day (a crashed build — an
     * age bound so a LIVE concurrent JVM's in-flight build is never
     * yanked). */
-  private lazy val initSweep: Unit = withDirLock {
+  private lazy val initSweep: Unit = Durable.withDirLock(rootDir) {
     val dayAgo = System.currentTimeMillis() - 24L * 3600 * 1000
     listRootUnlocked().foreach { p =>
       val n = p.getFileName.toString
@@ -220,7 +200,8 @@ object StagedArtifacts {
     * surviving index (and its appends) without paying a staging build. */
   def resolveExisting(sfDir: String, memo: StampedMemo[Path],
       name: String): Option[Path] =
-    memo.peek(sfDir).orElse(withDirLock { resolveUnlocked(keyOf(sfDir, memo, name)) })
+    memo.peek(sfDir).orElse(
+      Durable.withDirLock(rootDir) { resolveUnlocked(keyOf(sfDir, memo, name)) })
 
   /** Build-or-resolve the durable staged dir for (corpus, artifact).
     * `freshGen = true` is the RE-STAGE path: skip resolution, rebuild
@@ -240,7 +221,7 @@ object StagedArtifacts {
     memo.get(sfDir)({
       val key = keyOf(sfDir, memo, name)
       val existing =
-        if (freshGen) None else withDirLock { resolveUnlocked(key) }
+        if (freshGen) None else Durable.withDirLock(rootDir) { resolveUnlocked(key) }
       existing.getOrElse {
         builds.incrementAndGet()
         val df = build
@@ -257,7 +238,7 @@ object StagedArtifacts {
         // generation dir always carries it regardless of the session's
         // committer configuration
         Files.writeString(tmp.resolve(".published"), "")
-        withDirLock {
+        Durable.withDirLock(rootDir) {
           val winner = if (freshGen) None else resolveUnlocked(key)
           winner match {
             case Some(p) =>
@@ -268,7 +249,7 @@ object StagedArtifacts {
             case None =>
               val gen = gensUnlocked(key).headOption.map(_._1).getOrElse(-1) + 1
               val target = rootDir.resolve(s"${key}_g$gen")
-              Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+              Durable.rename(tmp, target)
               // a delete-and-rebuild can land on the SAME generation
               // name — every dir-keyed manifest entry (append counters
               // in any family, the old base count) must reset with the
@@ -283,7 +264,7 @@ object StagedArtifacts {
               // (artifacts of a rewritten corpus). A long-lived frame
               // planned over a swept dir fails loud on next evaluation
               // rather than serving a retired artifact.
-              val prefix = s"${md5Hex(sfDir)}_${name}_s"
+              val prefix = s"${Durable.md5Hex(sfDir)}_${name}_s"
               listRootUnlocked().foreach { p =>
                 if (p != target && p.getFileName.toString.startsWith(prefix))
                   TempDirs.deleteNow(p)
@@ -305,7 +286,7 @@ object StagedArtifacts {
     * artifact `name`, host-wide. The explicit counterpart of the old
     * per-JVM temp-dir semantics (a drop used to guarantee the next
     * access rebuilds) — never called from a serving path. */
-  private[graft] def dropDurable(name: String): Unit = withDirLock {
+  private[graft] def dropDurable(name: String): Unit = Durable.withDirLock(rootDir) {
     val re = ("^[0-9a-f]{32}_" +
       java.util.regex.Pattern.quote(name) + "_s[0-9a-f]+_g\\d+$").r
     listRootUnlocked().foreach { p =>

@@ -25,7 +25,7 @@ object TempDirs {
   // Hadoop runs hooks in DECREASING priority; Spark registers its own at
   // 25..50 (temp-dir and context teardown) — 1 sequences this pass last.
   org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-    () => dirs.forEach(deleteRecursively(_)), 1)
+    () => dirs.forEach(deleteNow(_)), 1)
 
   /** Register a temp root for recursive deletion at JVM exit. */
   def track(p: Path): Path = { dirs.add(p); p }
@@ -41,10 +41,9 @@ object TempDirs {
     df.sparkSession.read.schema(df.schema).parquet(dir.toString)
   }
 
-  /** Test-only: the hook's deletion pass on one untracked tree. */
-  private[graft] def deleteNow(p: Path): Unit = deleteRecursively(p)
-
-  private def deleteRecursively(root: Path): Unit =
+  /** The hook's deletion pass, run now on one tree: deepest-first,
+    * best-effort per file, silent on a missing root. */
+  private[graft] def deleteNow(root: Path): Unit =
     try {
       if (Files.exists(root)) {
         val walk = Files.walk(root)

@@ -31,4 +31,18 @@ class BucketedOpsSpec extends SparkTestBase {
       .agg(count(lit(1)).as("n"), round(sum(col("user_total")), 2).as("sum_user_totals"))
     assertSameRows(result, plain)
   }
+
+  test("bucketed tables re-stage when events.parquet is rewritten in place") {
+    val corpus = graft.util.TempDirs.track(
+      java.nio.file.Files.createTempDirectory("bucketed_stamp_corpus_"))
+    val events = corpus.resolve("events.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "events.parquet"), events)
+    val sf = corpus.toString
+    def factRows(): Long = spark.table(BucketedOps.stagedTables(spark, sf)._1).count()
+    assert(factRows() === Fixtures.events(spark, sfDir).count())
+    // rewrite in place with fewer rows, from the untouched source fixture
+    Fixtures.table(spark, sfDir, "events").limit(50).coalesce(1)
+      .write.mode("overwrite").parquet(events.toString)
+    assert(factRows() === 50L, "the bucketed fact table must follow the rewritten fixture")
+  }
 }

@@ -14,6 +14,9 @@ Normalised before comparing:
   - lambda-variable counters of the Column API: `x_16`, `y_3`, `z_9`
   - temp-dir suffixes: the random digits `Files.createTempDirectory`
     appends (`graft_stream_ann_3117383821616325377`) and UUIDs
+  - JVM lambda instances in typed-Dataset operator arguments
+    (`$$Lambda$3483/0x00007ff2ed115180@786d8b3b`): class counter, hidden
+    class address and identity hash all change from one JVM to the next
 """
 import difflib
 import re
@@ -25,6 +28,7 @@ RULES = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
     (re.compile(r"(?<=_)\d{8,}\b"), "N"),
+    (re.compile(r"\$\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$$Lambda$N"),
     (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"),
      "UUID"),
 ]
