@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
+import graft.util.Staged
 
 /** Opaque media payload riding the pipeline: bytes + typed metadata.
   * Mirrors the reference's payload model (opaque `Vec<u8>` + properties,
@@ -387,27 +388,19 @@ object MultimodalOps {
       })
   }
 
-  private val mediaTableDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
+  /** The five staged media tables: `table(documents)` once per corpus
+    * SNAPSHOT, each counting its own synthesis builds. */
+  private[graft] val MediaTable = new Staged("graft_media_mixed_")
+  private[graft] val ImageTable = new Staged("graft_media_images_")
+  private[graft] val TextureTable = new Staged("graft_media_textures_")
+  private[graft] val AudioTable = new Staged("graft_media_audio_")
+  private[graft] val VideoTable = new Staged("graft_media_video_")
 
-  /** How many times the mixed-media table actually SYNTHESIZED —
-    * staging observability for tests. */
-  val mediaTableBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def dropStagedMediaTable(): Unit = mediaTableDirs.clear()
-
-  /** `table(documents)` staged once per corpus SNAPSHOT into a tracked
-    * temp dir named `prefix…` — the body of the five media stagers. The
-    * read-back infers its schema from the files (not through
-    * [[graft.util.StagedArtifacts.readStaged]]), as the decode plans
-    * always have. */
-  private def stagedMedia(spark: SparkSession, sfDir: String,
-      memo: graft.util.StampedMemo[java.nio.file.Path], prefix: String,
-      builds: java.util.concurrent.atomic.AtomicLong)
-      (table: DataFrame => Dataset[MediaRecord]): Dataset[MediaRecord] = {
+  /** A staged media table read back with its schema inferred from the
+    * files (not through [[graft.util.StagedArtifacts.readStaged]]), as
+    * the decode plans always have. */
+  private def mediaAt(spark: SparkSession, dir: java.nio.file.Path): Dataset[MediaRecord] = {
     import spark.implicits._
-    val dir = graft.util.StagedArtifacts.tempDir(sfDir, memo, prefix, builds)(
-      table(Fixtures.documents(spark, sfDir)).toDF())
     spark.read.parquet(dir.toString).as[MediaRecord]
   }
 
@@ -416,8 +409,7 @@ object MultimodalOps {
     * [[stagedImageTable]] discipline: served/benched passes measure
     * DECODE throughput over stored payloads, not container synthesis. */
   def stagedMediaTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
-    stagedMedia(spark, sfDir, mediaTableDirs, "graft_media_mixed_",
-      mediaTableBuilds)(realMediaTable)
+    mediaAt(spark, MediaTable.dir(sfDir)(realMediaTable(Fixtures.documents(spark, sfDir)).toDF()))
 
   /** Contract query: per-kind stats over features decoded by the REAL
     * codec for every kind — image rasters through `javax.imageio`, WAV
@@ -570,15 +562,6 @@ object MultimodalOps {
       })
   }
 
-  private val imageTableDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
-  /** How many times the image table actually SYNTHESIZED — staging
-    * observability for tests. */
-  val imageTableBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def dropStagedImageTable(): Unit = imageTableDirs.clear()
-
   /** The synthesized PNG corpus staged to parquet once per corpus
     * SNAPSHOT ((size, mtime)-stamped on the documents table) — a real
     * pipeline decodes images that already EXIST in storage, so the
@@ -587,8 +570,7 @@ object MultimodalOps {
     * landing-zone shape of a media crawl); repeated reads scan it like
     * any other fixture. */
   def stagedImageTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
-    stagedMedia(spark, sfDir, imageTableDirs, "graft_media_images_",
-      imageTableBuilds)(imageTable)
+    mediaAt(spark, ImageTable.dir(sfDir)(imageTable(Fixtures.documents(spark, sfDir)).toDF()))
 
   /** Deterministic TEXTURED grayscale PNG synthesis (round 11, the
     * perceptual-hash corpus): a 32×32 integer pseudo-texture whose
@@ -745,21 +727,11 @@ object MultimodalOps {
       })
   }
 
-  private val textureTableDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
-  /** How many times the texture table actually SYNTHESIZED — staging
-    * observability for tests. */
-  val textureTableBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def dropStagedTextureTable(): Unit = textureTableDirs.clear()
-
   /** [[textureTable]] staged to parquet once per corpus SNAPSHOT — the
     * [[stagedImageTable]] discipline: served passes measure decode +
     * hash over stored payloads, not synthesis. */
   def stagedTextureTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
-    stagedMedia(spark, sfDir, textureTableDirs, "graft_media_textures_",
-      textureTableBuilds)(textureTable)
+    mediaAt(spark, TextureTable.dir(sfDir)(textureTable(Fixtures.documents(spark, sfDir)).toDF()))
 
   /** Deterministic TEXTURED WAV synthesis (the audio twin of
     * [[synthTexturePng]]): 456 PCM16 mono samples at 8 kHz whose
@@ -818,20 +790,10 @@ object MultimodalOps {
       })
   }
 
-  private val audioTableDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
-  /** How many times the audio table actually SYNTHESIZED — staging
-    * observability for tests. */
-  val audioTableBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def dropStagedAudioTable(): Unit = audioTableDirs.clear()
-
   /** [[audioTable]] staged to parquet once per corpus SNAPSHOT (the
     * [[stagedTextureTable]] discipline). */
   def stagedAudioTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
-    stagedMedia(spark, sfDir, audioTableDirs, "graft_media_audio_",
-      audioTableBuilds)(audioTable)
+    mediaAt(spark, AudioTable.dir(sfDir)(audioTable(Fixtures.documents(spark, sfDir)).toDF()))
 
   /** Deterministic TEXTURED animated-GIF synthesis (the video member of
     * the [[synthTexturePng]]/[[synthTextureWav]] family): 57 frames of
@@ -909,47 +871,26 @@ object MultimodalOps {
       })
   }
 
-  private val videoTableDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
-  /** How many times the video table actually SYNTHESIZED — staging
-    * observability for tests. */
-  val videoTableBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def dropStagedVideoTable(): Unit = videoTableDirs.clear()
-
   /** [[videoTable]] staged to parquet once per corpus SNAPSHOT (the
     * [[stagedTextureTable]] discipline). */
   def stagedVideoTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
-    stagedMedia(spark, sfDir, videoTableDirs, "graft_media_video_",
-      videoTableBuilds)(videoTable)
+    mediaAt(spark, VideoTable.dir(sfDir)(videoTable(Fixtures.documents(spark, sfDir)).toDF()))
 
   // ---------------------------------------------------------------------
   // Fingerprint INDEX staging — decode once per corpus snapshot
   // ---------------------------------------------------------------------
 
-  private val imgHashDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-  private val wavHashDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-  private val gifHashDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
   /** How many times a fingerprint table actually EXTRACTED — staging
-    * observability for tests (the `*TableBuilds` sibling). */
+    * observability for tests (the `TextureTable.builds` sibling). */
   val mediaHashBuilds = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def dropStagedMediaHashes(): Unit = {
-    imgHashDirs.clear(); wavHashDirs.clear(); gifHashDirs.clear()
-    mediaLinkDirs.clear()
-  }
+  private[graft] val ImageHashes = new Staged("graft_media_fp_", builds = mediaHashBuilds)
+  private[graft] val AudioHashes = new Staged("graft_media_fp_", builds = mediaHashBuilds)
+  private[graft] val VideoHashes = new Staged("graft_media_fp_", builds = mediaHashBuilds)
 
-  private val mediaLinkDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
-  /** How many times the staged link actually BUILT — its own counter so
-    * the fingerprint-staging pin tests stay exact. */
-  val mediaLinkBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+  /** The staged link keeps its own counter so the fingerprint-staging
+    * pin tests stay exact. */
+  private[graft] val MediaLink = new Staged("graft_media_link_")
 
   /** The doc↔media LINK staged to parquet once per corpus snapshot —
     * the frozen artifact the ingestion gates' edge-publish leg joins
@@ -958,15 +899,7 @@ object MultimodalOps {
     * of a continuous stream (review r16) — the freeze-before-the-stream
     * discipline applies to the link exactly as to the probe indexes. */
   def stagedMediaLink(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.StagedArtifacts.parquet(spark, sfDir, mediaLinkDirs,
-      "graft_media_link_", mediaLinkBuilds)(
-      mediaLink(graft.model.Fixtures.documents(spark, sfDir)))
-
-  private def stagedHashes(spark: SparkSession, sfDir: String,
-      memo: graft.util.StampedMemo[java.nio.file.Path],
-      fp: => DataFrame): DataFrame =
-    graft.util.StagedArtifacts.parquet(spark, sfDir, memo,
-      "graft_media_fp_", mediaHashBuilds)(fp)
+    MediaLink.read(spark, sfDir)(mediaLink(graft.model.Fixtures.documents(spark, sfDir)))
 
   /** The per-modality 56-bit fingerprints staged to parquet once per
     * corpus SNAPSHOT — the media analog of the staged IVF index: codec
@@ -977,16 +910,13 @@ object MultimodalOps {
     * snapshot (stamped like every staged artifact — an in-place rewrite
     * re-extracts), not once per query. */
   def stagedImageHashes(spark: SparkSession, sfDir: String): DataFrame =
-    stagedHashes(spark, sfDir, imgHashDirs,
-      imageDHash(stagedTextureTable(spark, sfDir)))
+    ImageHashes.read(spark, sfDir)(imageDHash(stagedTextureTable(spark, sfDir)))
 
   def stagedAudioHashes(spark: SparkSession, sfDir: String): DataFrame =
-    stagedHashes(spark, sfDir, wavHashDirs,
-      audioEnergyHash(stagedAudioTable(spark, sfDir)))
+    AudioHashes.read(spark, sfDir)(audioEnergyHash(stagedAudioTable(spark, sfDir)))
 
   def stagedVideoHashes(spark: SparkSession, sfDir: String): DataFrame =
-    stagedHashes(spark, sfDir, gifHashDirs,
-      videoTemporalHash(stagedVideoTable(spark, sfDir)))
+    VideoHashes.read(spark, sfDir)(videoTemporalHash(stagedVideoTable(spark, sfDir)))
 
   /** Temporal energy fingerprint of each video payload through the REAL
     * codec — [[audioEnergyHash]]'s sign-of-energy-delta shape lifted

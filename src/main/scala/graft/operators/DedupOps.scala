@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
 import graft.multimodal.MediaRecord
-import graft.util.ProbeIndex
+import graft.util.{ProbeIndex, Staged}
 
 /** Near-duplicate detection family beyond the exact-normalized dedup in
   * [[LlmOps.docNearDedup]]: MinHash+LSH banding, SimHash fingerprints, and
@@ -70,32 +70,27 @@ object DedupOps {
   // Staged text-signature artifacts (once per corpus snapshot)
   // ---------------------------------------------------------------------
 
-  private val textSigDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-  private val dupGroupDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-  private val contamDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-  private val xmodalGroupDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-  private val xmodalBaseDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
   /** How many times a staged text artifact actually BUILT — staging
     * observability for tests (the `mediaHashBuilds` sibling). */
   val textStageBuilds = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def dropStagedTextArtifacts(): Unit = {
-    textSigDirs.clear(); dupGroupDirs.clear(); contamDirs.clear()
-    xmodalGroupDirs.clear(); xmodalBaseDirs.clear(); incrEdgeDirs.clear()
-    xmDocIdxDirs.clear(); xmClusterIdxDirs.clear(); probeGramDirs.clear()
-  }
+  private[graft] val TextSignatures = new Staged("graft_text_idx_", builds = textStageBuilds)
+  private[graft] val DupGroups = new Staged("graft_text_idx_", builds = textStageBuilds)
+  private[graft] val Contamination = new Staged("graft_text_idx_", builds = textStageBuilds)
+  private[graft] val CrossModalGroups = new Staged("graft_text_idx_", builds = textStageBuilds)
+  private[graft] val BaseCrossModalGroups =
+    new Staged("graft_text_idx_", builds = textStageBuilds)
+  private[graft] val XmDocIdx =
+    new Staged("graft_text_idx_", partitionCols = Seq("db"), builds = textStageBuilds)
+  private[graft] val XmClusterIdx =
+    new Staged("graft_text_idx_", partitionCols = Seq("cb"), builds = textStageBuilds)
+  private[graft] val IncrementCrossEdges = new Staged("graft_xm_edges_", builds = textStageBuilds)
+  private[graft] val ProbeGrams = new Staged("graft_text_idx_", builds = textStageBuilds)
 
-  private def stagedParquet(spark: SparkSession, sfDir: String,
-      memo: graft.util.StampedMemo[java.nio.file.Path],
-      build: => DataFrame): DataFrame =
-    graft.util.StagedArtifacts.parquet(spark, sfDir, memo,
-      "graft_text_idx_", textStageBuilds)(build)
+  /** Every staged text artifact: the values [[textStageBuilds]] counts. */
+  private[graft] val TextArtifacts: Seq[Staged] = Seq(TextSignatures, DupGroups,
+    Contamination, CrossModalGroups, BaseCrossModalGroups, XmDocIdx, XmClusterIdx,
+    IncrementCrossEdges, ProbeGrams)
 
   /** The per-document text signature index staged to parquet once per
     * corpus SNAPSHOT — the text analog of the staged media fingerprints
@@ -113,8 +108,7 @@ object DedupOps {
     * verifies the exact string-set Jaccard. Stamped like every staged
     * artifact: an in-place corpus rewrite re-derives. */
   def stagedTextSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    stagedParquet(spark, sfDir, textSigDirs,
-      textSignaturesOf(Fixtures.documents(spark, sfDir)))
+    TextSignatures.read(spark, sfDir)(textSignaturesOf(Fixtures.documents(spark, sfDir)))
 
   /** The per-doc signature projection over ANY documents frame — the
     * build body of [[stagedTextSignatures]] and the in-batch signature
@@ -139,7 +133,7 @@ object DedupOps {
     * itself, quality-aware canonical election, the filter pipeline)
     * reads `(doc_id, cluster, is_canonical, cluster_size)` scalars. */
   def stagedDupGroups(spark: SparkSession, sfDir: String): DataFrame =
-    stagedParquet(spark, sfDir, dupGroupDirs,
+    DupGroups.read(spark, sfDir)(
       clusterPairs(stagedLshVerifiedDups(spark, sfDir)
           .select(col("doc_a"), col("doc_b")))
         .withColumnRenamed("id", "doc_id"))
@@ -149,8 +143,7 @@ object DedupOps {
     * membership changes when the corpus or the benchmark suite does,
     * never per query. */
   def stagedContamination(spark: SparkSession, sfDir: String): DataFrame =
-    stagedParquet(spark, sfDir, contamDirs,
-      docDecontaminate(Fixtures.documents(spark, sfDir)))
+    Contamination.read(spark, sfDir)(docDecontaminate(Fixtures.documents(spark, sfDir)))
 
   /** Enumerate unordered member pairs of a sorted array column, mapping
     * each (earlier, later) pair through `pair` —
@@ -527,7 +520,7 @@ object DedupOps {
     * composite keys read their upstream stages staged — exactly how an
     * ingestion pipeline runs these stages on their own cadence. */
   def stagedCrossModalGroups(spark: SparkSession, sfDir: String): DataFrame =
-    stagedParquet(spark, sfDir, xmodalGroupDirs, {
+    CrossModalGroups.read(spark, sfDir) {
       val docs = Fixtures.documents(spark, sfDir)
       crossModalGroupsOf(
         stagedLshVerifiedDups(spark, sfDir).select(col("doc_a"), col("doc_b")),
@@ -540,7 +533,7 @@ object DedupOps {
         // drop at this join) — production passes any (media_id, doc_id)
         // table through the same join shape
         graft.multimodal.MultimodalOps.mediaLink(docs))
-    })
+    }
 
   /** The merged cross-modal clustering over an ARBITRARY doc↔media link
     * — the build body of [[stagedCrossModalGroups]], factored so
@@ -601,7 +594,7 @@ object DedupOps {
     * the LINKED doc ids, after the link join — base-ness is a document
     * property, whatever the media link shape. */
   def stagedBaseCrossModalGroups(spark: SparkSession, sfDir: String): DataFrame =
-    stagedParquet(spark, sfDir, xmodalBaseDirs, {
+    BaseCrossModalGroups.read(spark, sfDir) {
       val docs = Fixtures.documents(spark, sfDir)
       val edges = crossModalEdgesOf(
         stagedLshVerifiedDups(spark, sfDir).select(col("doc_a"), col("doc_b")),
@@ -613,18 +606,13 @@ object DedupOps {
       clusterPairs(
           edges.filter(!isNewId(col("doc_a")) && !isNewId(col("doc_b"))))
         .withColumnRenamed("id", "doc_id")
-    })
+    }
 
   /** Partition count of the cluster-keyed probe projection
     * ([[xmClusterIdxDir]]) — an index constant like [[DocBucketParts]],
     * so the per-batch distinct-partition collect is bounded by it,
     * never by data. */
   val XmClusterParts = 64
-
-  private val xmDocIdxDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-  private val xmClusterIdxDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
 
   /** The base assignment KEYED FOR PRUNED ENDPOINT LOOKUP: the
     * [[stagedBaseCrossModalGroups]] rows, partitioned by the md5-bucket
@@ -642,8 +630,7 @@ object DedupOps {
     * so each partition dir holds one file, not one per task. */
   private[graft] def xmDocIdxDir(spark: SparkSession,
       sfDir: String): java.nio.file.Path =
-    graft.util.StagedArtifacts.tempDir(sfDir, xmDocIdxDirs,
-      "graft_text_idx_", textStageBuilds, partitionCols = Seq("db")) {
+    XmDocIdx.dir(sfDir) {
       stagedBaseCrossModalGroups(spark, sfDir)
         .withColumn("db",
           Hashing.md5Bucket(col("doc_id"), DocBucketParts).cast("int"))
@@ -660,8 +647,7 @@ object DedupOps {
     * derived artifact. */
   private[graft] def xmClusterIdxDir(spark: SparkSession,
       sfDir: String): java.nio.file.Path =
-    graft.util.StagedArtifacts.tempDir(sfDir, xmClusterIdxDirs,
-      "graft_text_idx_", textStageBuilds, partitionCols = Seq("cb")) {
+    XmClusterIdx.dir(sfDir) {
       stagedBaseCrossModalGroups(spark, sfDir)
         .withColumn("cb",
           Hashing.md5Bucket(col("cluster"), XmClusterParts).cast("int"))
@@ -675,9 +661,6 @@ object DedupOps {
   def crossModalKeepBestOver(spark: SparkSession, sfDir: String,
       groups: DataFrame): DataFrame =
     keepBestElection(Fixtures.documents(spark, sfDir), groups)
-
-  private val incrEdgeDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
 
   /** The increment's verified CROSS EDGES, linked to doc ids and staged
     * once per corpus snapshot — the EDGE TOPIC the streaming
@@ -701,8 +684,7 @@ object DedupOps {
 
   private[graft] def stagedIncrementCrossEdgesDir(spark: SparkSession,
       sfDir: String): java.nio.file.Path =
-    graft.util.StagedArtifacts.tempDir(sfDir, incrEdgeDirs,
-      "graft_xm_edges_", textStageBuilds) {
+    IncrementCrossEdges.dir(sfDir) {
       def crossOf(pairs: DataFrame): DataFrame = {
         def newSide(c: String) = isNewId(
           graft.multimodal.MultimodalOps.mediaSrcDoc(col(c)))
@@ -1069,7 +1051,7 @@ object DedupOps {
     protected def staleGauge = "text.index_stale_fraction"
     override protected def tombstoneGauge = Some("text.tombstoned_docs")
     override protected def beforeRestage(sfDir: String): Unit =
-      textSigDirs.invalidate(sfDir)
+      TextSignatures.invalidate(sfDir)
   }
 
   /** The BASE side's shingle sets keyed for PRUNED point-fetch, staged
@@ -2202,7 +2184,7 @@ object DedupOps {
     // spending one Spark job per register call (opt r19 — every
     // xm_served/stream_xm invocation registers)
     val base = stagedBaseCrossModalGroups(spark, sfDir)
-    val baseRows = xmodalBaseDirs.peek(sfDir) match {
+    val baseRows = BaseCrossModalGroups.peek(sfDir) match {
       case Some(dir) =>
         xmBaseRowCounts.computeIfAbsent(dir, _ => base.count()).longValue
       case None => base.count()
@@ -2292,9 +2274,7 @@ object DedupOps {
     if (stale <= threshold) false
     else {
       val root = ClusterDeltas.resolve(sfDir)
-      xmodalBaseDirs.invalidate(sfDir)
-      xmDocIdxDirs.invalidate(sfDir)
-      xmClusterIdxDirs.invalidate(sfDir)
+      Seq(BaseCrossModalGroups, XmDocIdx, XmClusterIdx).foreach(_.invalidate(sfDir))
       stagedBaseCrossModalGroups(spark, sfDir) // eager: serving never
       xmDocIdxDir(spark, sfDir)                // races a half-build —
       xmClusterIdxDir(spark, sfDir)            // base + both probe
@@ -2479,9 +2459,6 @@ object DedupOps {
         call_function("gram_md5s", col("text"), lit(DecontaminateGramLen)))).as("g"))
   }
 
-  private val probeGramDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("documents")
-
   /** The decontamination PROBE INDEX staged once per benchmark snapshot:
     * the distinct contamination-gram set of the probe (benchmark) slice.
     * Benchmarks are small by nature (thousands of documents against a
@@ -2490,7 +2467,7 @@ object DedupOps {
     * per arriving batch. Stamped like every staged artifact: a benchmark
     * rewrite re-derives. */
   def stagedProbeGrams(spark: SparkSession, sfDir: String): DataFrame =
-    stagedParquet(spark, sfDir, probeGramDirs,
+    ProbeGrams.read(spark, sfDir)(
       contamGrams(Fixtures.documents(spark, sfDir)
           .filter(pmod(col("doc_id"), lit(DecontaminateProbeMod)) === 0))
         .select("g").distinct())
@@ -2680,8 +2657,34 @@ object DedupOps {
         SELECT $SecondaryBase + doc_id // 2, doc_id FROM documents WHERE doc_id % 8 = 0"""
   }
 
-  /** The `img_dups` oracle, factored out so [[crossModalOracle]] can
-    * embed it as a subquery: every pixel of the textured corpus
+  /** The banded pair chain every media dup oracle shares, over a
+    * modality's fingerprint CTEs ending in `fp(doc_id, dhash)`: `blocks`
+    * cuts each 56-bit fingerprint into 8 × 7-bit blocks, `ranked` ranks
+    * each bucket for the cap, and `pairs` holds the capped, deduped
+    * candidate pairs with their hamming distance. */
+  private def mediaPairCtes(fpCtes: String): String =
+    s"""$fpCtes,
+          blocks AS (SELECT doc_id, dhash, b.blk,
+                            (dhash >> (b.blk * 7)) & 127 AS blk_val
+                     FROM fp, range(0, $ImgHashBlocks) b(blk)),
+          ranked AS (SELECT *, row_number() OVER (PARTITION BY blk, blk_val
+                                                  ORDER BY doc_id) AS rk
+                     FROM blocks),
+          pairs AS (SELECT DISTINCT a.doc_id AS media_a, b.doc_id AS media_b,
+                           CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
+                    FROM ranked a JOIN ranked b
+                      ON a.blk = b.blk AND a.blk_val = b.blk_val
+                      AND a.doc_id < b.doc_id
+                      AND ${duckCap("a.rk")} AND ${duckCap("b.rk")})"""
+
+  /** A modality's `*_dups` oracle — the verified pairs of its banded
+    * chain; [[crossModalOracle]] embeds it as a subquery. */
+  private def mediaDupsOracle(fpCtes: String): String =
+    s"""WITH ${mediaPairCtes(fpCtes)}
+          SELECT media_a, media_b, hamming FROM pairs
+          WHERE hamming <= $ImgMaxHamming"""
+
+  /** The `img_dups` fingerprint chain: every pixel of the textured corpus
     * re-derives arithmetically (integer ops mod 256; PNG is lossless —
     * the synthTexturePng contract), so the pooled dHash, the banding,
     * the cap, and the hamming verify all mirror the operator exactly.
@@ -2692,7 +2695,7 @@ object DedupOps {
     * `doc_id` column is bound to the MEDIA id (the [[duckMediaIds]]
     * universe); the generating doc rides along only where increment
     * flags need it. */
-  private def imgRankedCtes: String =
+  private def imgFpCtes: String =
     s"""base AS (
             SELECT mid AS doc_id, mid // 8 AS g, (mid % 8) * 4 AS spike
             FROM ($duckMediaIds)),
@@ -2712,24 +2715,7 @@ object DedupOps {
                                           ELSE 0 END), 0) AS dhash
                  FROM cells l JOIN cells r
                    ON r.doc_id = l.doc_id AND r.cy = l.cy AND r.cx = l.cx + 1
-                 GROUP BY l.doc_id),
-          blocks AS (SELECT doc_id, dhash, b.blk,
-                            (dhash >> (b.blk * 7)) & 127 AS blk_val
-                     FROM fp, range(0, $ImgHashBlocks) b(blk)),
-          ranked AS (SELECT *, row_number() OVER (PARTITION BY blk, blk_val
-                                                  ORDER BY doc_id) AS rk
-                     FROM blocks)"""
-
-  private def imgDupsOracle: String =
-    s"""WITH $imgRankedCtes,
-          pairs AS (SELECT DISTINCT a.doc_id AS media_a, b.doc_id AS media_b,
-                           CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
-                    FROM ranked a JOIN ranked b
-                      ON a.blk = b.blk AND a.blk_val = b.blk_val
-                      AND a.doc_id < b.doc_id
-                      AND ${duckCap("a.rk")} AND ${duckCap("b.rk")})
-          SELECT media_a, media_b, hamming FROM pairs
-          WHERE hamming <= $ImgMaxHamming"""
+                 GROUP BY l.doc_id)"""
 
   /** The `stream_img`/`stream_wav`/`stream_gif` oracle shape: a
     * modality's near-dup pairs restricted to CROSS (new × base) pairs
@@ -2738,22 +2724,16 @@ object DedupOps {
     * shape over a fingerprint family). Exact under
     * [[assertMediaProbeCapPremise]] (no bucket overflows: the engine
     * caps base members alone at staging, this ranks interleaved).
-    * `rankedCtes` is the modality's arithmetic fingerprint chain ending
-    * in `ranked` — the SAME chain its batch dup oracle uses, so the two
-    * can never drift. */
-  private def mediaIncrementalOracle(rankedCtes: String): String =
-    s"""WITH $rankedCtes,
+    * `fpCtes` is the modality's arithmetic fingerprint chain — the SAME
+    * chain and banding its batch dup oracle uses, so the two can never
+    * drift. */
+  private def mediaIncrementalOracle(fpCtes: String): String =
+    s"""WITH ${mediaPairCtes(fpCtes)},
           mids AS ($duckMediaIds),
           flag AS (SELECT doc_id,
                           (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
                             % 1000) < $IncrementPermille AS is_new
-                   FROM documents),
-          pairs AS (SELECT DISTINCT a.doc_id AS media_a, b.doc_id AS media_b,
-                           CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
-                    FROM ranked a JOIN ranked b
-                      ON a.blk = b.blk AND a.blk_val = b.blk_val
-                      AND a.doc_id < b.doc_id
-                      AND ${duckCap("a.rk")} AND ${duckCap("b.rk")})
+                   FROM documents)
           SELECT CASE WHEN fa.is_new THEN p.media_a ELSE p.media_b END AS new_media,
                  CASE WHEN fa.is_new THEN p.media_b ELSE p.media_a END AS base_media,
                  p.hamming
@@ -2765,20 +2745,19 @@ object DedupOps {
           WHERE fa.is_new <> fb.is_new AND p.hamming <= $ImgMaxHamming"""
 
   private[graft] def imgIncrementalOracle: String =
-    mediaIncrementalOracle(imgRankedCtes)
+    mediaIncrementalOracle(imgFpCtes)
 
   private[graft] def wavIncrementalOracle: String =
-    mediaIncrementalOracle(wavRankedCtes)
+    mediaIncrementalOracle(wavFpCtes)
 
   private[graft] def gifIncrementalOracle: String =
-    mediaIncrementalOracle(gifRankedCtes)
+    mediaIncrementalOracle(gifFpCtes)
 
-  /** The `wav_dups` oracle, factored out so [[crossModalOracle]] can
-    * embed it as a subquery: every PCM sample re-derives arithmetically
-    * (integer ops; PCM16 is lossless — the synthTextureWav contract),
-    * so the windowed energies, the fingerprint, and the banded pairs
-    * mirror the operator exactly. */
-  private def wavRankedCtes: String =
+  /** The `wav_dups` fingerprint chain: every PCM sample re-derives
+    * arithmetically (integer ops; PCM16 is lossless — the
+    * synthTextureWav contract), so the windowed energies, the
+    * fingerprint, and the banded pairs mirror the operator exactly. */
+  private def wavFpCtes: String =
     s"""abase AS (
             SELECT mid AS doc_id, mid // 8 AS g, (mid % 8) * 50 AS t0
             FROM ($duckMediaIds)),
@@ -2797,31 +2776,14 @@ object DedupOps {
                                           ELSE 0 END), 0) AS dhash
                  FROM energy l JOIN energy r
                    ON r.doc_id = l.doc_id AND r.w = l.w + 1
-                 GROUP BY l.doc_id),
-          blocks AS (SELECT doc_id, dhash, b.blk,
-                            (dhash >> (b.blk * 7)) & 127 AS blk_val
-                     FROM fp, range(0, $ImgHashBlocks) b(blk)),
-          ranked AS (SELECT *, row_number() OVER (PARTITION BY blk, blk_val
-                                                  ORDER BY doc_id) AS rk
-                     FROM blocks)"""
+                 GROUP BY l.doc_id)"""
 
-  private def wavDupsOracle: String =
-    s"""WITH $wavRankedCtes,
-          pairs AS (SELECT DISTINCT a.doc_id AS media_a, b.doc_id AS media_b,
-                           CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
-                    FROM ranked a JOIN ranked b
-                      ON a.blk = b.blk AND a.blk_val = b.blk_val
-                      AND a.doc_id < b.doc_id
-                      AND ${duckCap("a.rk")} AND ${duckCap("b.rk")})
-          SELECT media_a, media_b, hamming FROM pairs
-          WHERE hamming <= $ImgMaxHamming"""
-
-  /** The `gif_dups` oracle, factored out so [[crossModalOracle]] can
-    * embed it as a subquery: every frame pixel re-derives arithmetically
-    * (integer ops mod 256; GIF is lossless over indexed rasters — the
-    * synthTextureGif contract), so the per-frame energies, the temporal
-    * fingerprint, and the banded pairs mirror the operator exactly. */
-  private def gifRankedCtes: String =
+  /** The `gif_dups` fingerprint chain: every frame pixel re-derives
+    * arithmetically (integer ops mod 256; GIF is lossless over indexed
+    * rasters — the synthTextureGif contract), so the per-frame
+    * energies, the temporal fingerprint, and the banded pairs mirror
+    * the operator exactly. */
+  private def gifFpCtes: String =
     s"""vbase AS (
             SELECT mid AS doc_id, mid // 8 AS g, mid % 8 AS p
             FROM ($duckMediaIds)),
@@ -2843,24 +2805,7 @@ object DedupOps {
                                           ELSE 0 END), 0) AS dhash
                  FROM venergy l JOIN venergy r
                    ON r.doc_id = l.doc_id AND r.f = l.f + 1
-                 GROUP BY l.doc_id),
-          blocks AS (SELECT doc_id, dhash, b.blk,
-                            (dhash >> (b.blk * 7)) & 127 AS blk_val
-                     FROM fp, range(0, $ImgHashBlocks) b(blk)),
-          ranked AS (SELECT *, row_number() OVER (PARTITION BY blk, blk_val
-                                                  ORDER BY doc_id) AS rk
-                     FROM blocks)"""
-
-  private def gifDupsOracle: String =
-    s"""WITH $gifRankedCtes,
-          pairs AS (SELECT DISTINCT a.doc_id AS media_a, b.doc_id AS media_b,
-                           CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
-                    FROM ranked a JOIN ranked b
-                      ON a.blk = b.blk AND a.blk_val = b.blk_val
-                      AND a.doc_id < b.doc_id
-                      AND ${duckCap("a.rk")} AND ${duckCap("b.rk")})
-          SELECT media_a, media_b, hamming FROM pairs
-          WHERE hamming <= $ImgMaxHamming"""
+                 GROUP BY l.doc_id)"""
 
   /** Cross-modal reconciliation oracle: the text, image, and audio pair
     * oracles ride as parenthesized subqueries (each scopes its own WITH
@@ -2904,11 +2849,11 @@ object DedupOps {
         tp AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM (
           WITH $duckVerifiedCtes SELECT doc_a, doc_b FROM dup)),
         mp AS MATERIALIZED (
-          SELECT media_a, media_b FROM ($imgDupsOracle)
+          SELECT media_a, media_b FROM (${mediaDupsOracle(imgFpCtes)})
           UNION ALL
-          SELECT media_a, media_b FROM ($wavDupsOracle)
+          SELECT media_a, media_b FROM (${mediaDupsOracle(wavFpCtes)})
           UNION ALL
-          SELECT media_a, media_b FROM ($gifDupsOracle)),
+          SELECT media_a, media_b FROM (${mediaDupsOracle(gifFpCtes)})),
         mp2 AS (SELECT la.ld AS a, lb.ld AS b
                 FROM mp JOIN xlink la ON mp.media_a = la.media_id
                         JOIN xlink lb ON mp.media_b = lb.media_id),
@@ -3005,9 +2950,9 @@ object DedupOps {
                       ON a.blk = b.blk AND a.blk_val = b.blk_val AND a.doc_id < b.doc_id
                       AND ${duckCap("a.rk")} AND ${duckCap("b.rk")})
           SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= $MaxHamming""",
-    "img_dups" -> imgDupsOracle,
-    "wav_dups" -> wavDupsOracle,
-    "gif_dups" -> gifDupsOracle,
+    "img_dups" -> mediaDupsOracle(imgFpCtes),
+    "wav_dups" -> mediaDupsOracle(wavFpCtes),
+    "gif_dups" -> mediaDupsOracle(gifFpCtes),
     "lsh_dups" ->
       s"""WITH $duckVerifiedCtes
           SELECT doc_a, doc_b, n_bands, jaccard FROM dup""",

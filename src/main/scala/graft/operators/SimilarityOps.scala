@@ -308,13 +308,11 @@ object SimilarityOps {
     * catalog table there is nothing session-scoped to re-check.
     * Staleness: memo is keyed by the corpus files' (size, mtime) stamp
     * ([[graft.util.StampedMemo]]), so a corpus rewritten in place
-    * rebuilds the centroids on next access; [[dropStagedCentroids]]
-    * stays as the explicit flush.
+    * rebuilds the centroids on next access; `clear()` stays as the
+    * explicit flush.
     */
-  private val centroidCache =
+  private[graft] val centroidCache =
     new graft.util.StampedMemo[Seq[(Long, Array[Double])]]("embeddings")
-
-  def dropStagedCentroids(): Unit = centroidCache.clear()
 
   def stagedCentroids(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -427,19 +425,10 @@ object SimilarityOps {
           .as("embedding"),
         col("cell"))
 
-  private val ivfIndexDirs =
-    new graft.util.StampedMemo[java.nio.file.Path]("embeddings")
-
-  /** How many times the IVF index actually MATERIALIZED — staging
-    * observability for tests (the `lloydRuns` sibling). */
-  val ivfIndexBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** TEST-ONLY isolation drop (the `ProbeIndex.drop` semantics:
-    * the durable dirs delete, so the next access rebuilds). */
-  def dropStagedIvfIndex(): Unit = {
-    ivfIndexDirs.clear()
-    graft.util.StagedArtifacts.dropDurable("ivf_idx")
-  }
+  /** The durable IVF index; `IvfIndex.builds` counts how many times it
+    * actually MATERIALIZED (the `lloydRuns` sibling). */
+  private[graft] val IvfIndex =
+    new graft.util.Staged("ivf_idx", Seq("embeddings"), partitionCols = Seq("cell"))
 
   /** The IVF index as a CELL-PARTITIONED materialization of the corpus:
     * `(vec_id, embedding, pq_code)` written once per corpus dir,
@@ -467,8 +456,7 @@ object SimilarityOps {
 
   private def ivfIndexDir(spark: SparkSession, sfDir: String,
       fresh: Boolean = false): java.nio.file.Path =
-    graft.util.StagedArtifacts.parquetDir(sfDir, ivfIndexDirs,
-      "ivf_idx", ivfIndexBuilds, Seq("cell"), freshGen = fresh) {
+    IvfIndex.durable(sfDir, freshGen = fresh) {
       graft.GraftSession.registerFunctions(spark)
       val codebook = stagedPqCodebook(spark, sfDir)
       val cents = stagedCentroidIndex(spark, sfDir)
@@ -626,12 +614,12 @@ object SimilarityOps {
     // write just to report. Un-staged base with live segments = 100%
     // stale (everything served would come from segments).
     val segRows = Segments.snapshot(sfDir).flatMap(_.get("segRows")).fold(0L)(_.toLong)
-    graft.util.StagedArtifacts.resolveExisting(sfDir, ivfIndexDirs, "ivf_idx") match {
+    IvfIndex.resolved(sfDir) match {
       case None => if (segRows > 0) 1.0 else 0.0
       case Some(dir) =>
         graft.util.ProbeIndex.staleShare(segRows + graft.util.ServingManifest
             .getCounter(sfDir, AnnAppendsFamily, AnnTables, dir.toString),
-          graft.util.StagedArtifacts.stagedBaseRows(sfDir, ivfIndexDirs, dir))
+          IvfIndex.baseRows(sfDir, dir))
     }
   }
 
@@ -1542,7 +1530,7 @@ object SimilarityOps {
     * oracle re-derives the identical codebook from the table through a
     * generated CTE chain. The artifact is PqCodes×dim doubles — an
     * INDEX, bounded by design. */
-  private val pqCodebookCache =
+  private[graft] val pqCodebookCache =
     new graft.util.StampedMemo[Seq[Array[Double]]]("embeddings")
 
   def stagedPqCodebook(spark: SparkSession, sfDir: String): Seq[Array[Double]] =
@@ -1553,8 +1541,6 @@ object SimilarityOps {
         residualFrame(Fixtures.embeddings(spark, sfDir),
           stagedCentroidIndex(spark, sfDir)),
         PqIters))
-
-  def dropStagedPqCodebook(): Unit = pqCodebookCache.clear()
 
   /** Squared L2 between subspace `s` of the (double-widened) vector
     * column and a codebook row's same subspace, as a SEQUENTIAL left

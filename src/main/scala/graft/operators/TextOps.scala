@@ -229,9 +229,7 @@ object TextOps {
     BpeModel(merges.toSeq)
   }
 
-  private val bpeCache = new graft.util.StampedMemo[BpeModel]("documents")
-
-  def dropStagedBpeModel(): Unit = bpeCache.clear()
+  private[graft] val bpeCache = new graft.util.StampedMemo[BpeModel]("documents")
 
   /** The corpus BPE tokenizer as a staged per-snapshot artifact (the
     * [[stagedLmModel]] memo discipline — (size, mtime)-stamped, refit
@@ -657,16 +655,14 @@ object TextOps {
     * staging cache, asserted by tests (the `lloydRuns` sibling). */
   val lmFitRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private val lmCache = new graft.util.StampedMemo[LmModel]("documents")
-
-  def dropStagedLmModel(): Unit = lmCache.clear()
+  private[graft] val lmCache = new graft.util.StampedMemo[LmModel]("documents")
 
   /** The corpus LM as a staged per-sfDir artifact (the
     * `stagedPqCodebook`/[[bm25Index]] memo discipline): fit once per
     * corpus SNAPSHOT — the memo is (size, mtime)-stamped on the
     * documents table ([[graft.util.StampedMemo]]), so a corpus
     * rewritten in place refits on next access instead of serving the
-    * stale model; [[dropStagedLmModel]] stays as the explicit flush. */
+    * stale model; `lmCache.clear()` stays as the explicit flush. */
   def stagedLmModel(spark: SparkSession, sfDir: String): LmModel =
     lmCache.get(sfDir)(
       fitLmModel(graft.model.Fixtures.documents(spark, sfDir)))

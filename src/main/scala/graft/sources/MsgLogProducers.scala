@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path}
-import java.nio.charset.StandardCharsets
+import java.nio.file.Path
 
 /** Producer creation/handshake over a msglog topic (reference
   * `CommandProducer` → `CommandProducerSuccess`,
@@ -53,36 +52,11 @@ object MsgLogProducers {
   private def registryDir(topicDir: String): Path =
     java.nio.file.Paths.get(topicDir, ".producers")
 
-  private def journal(topicDir: String): Seq[(Int, String)] = {
-    val dir = registryDir(topicDir)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try {
-        val files = {
-          val it = s.iterator()
-          val b = Seq.newBuilder[Path]
-          while (it.hasNext) {
-            val p = it.next()
-            if (p.getFileName.toString.startsWith("reg-")) b += p
-          }
-          b.result()
-        }
-        // file order = event order: count-based sequence names (see
-        // append) sort correctly across JVM restarts — a wall/boot-clock
-        // component would not
-        files.sortBy(_.getFileName.toString).flatMap { p =>
-          new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-            .linesIterator.filter(_.nonEmpty).map { line =>
-              val i = line.indexOf('\t')
-              if (i < 0) throw new java.io.IOException(
-                s"graft-msglog: corrupt producer journal $p: '$line'")
-              (line.substring(0, i).toInt, line.substring(i + 1))
-            }
-        }
-      } finally s.close()
-    }
-  }
+  /** The registration journal in event order: its count-based file
+    * names (see [[append]]) sort correctly across JVM restarts. */
+  private def journal(topicDir: String): Seq[(Int, String)] =
+    MsgLogShared.readJournal2(registryDir(topicDir), "reg")
+      .map { case (action, name) => (action.toInt, name) }
 
   private def append(topicDir: String, action: Int, name: String): Unit = {
     require(!name.exists(c => c == '\n' || c == '\r' || c == '\t'),

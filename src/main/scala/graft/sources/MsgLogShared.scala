@@ -101,31 +101,23 @@ object MsgLogShared {
     target
   }
 
-  private def parse2(p: Path): Seq[(Long, String)] =
+  /** The tab-separated rows of one journal file, each split into `n`
+    * columns and decoded by `row`; a short or undecodable line fails
+    * naming the file. */
+  private def parse[T](p: Path, n: Int)(row: Array[String] => T): Seq[T] =
     new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
       .linesIterator.filter(_.nonEmpty).map { line =>
-        line.split("\t", 2) match {
-          case Array(e, name) =>
-            try (e.toLong, name) catch { case _: NumberFormatException =>
-              throw new java.io.IOException(
-                s"graft-msglog: corrupt subscription journal $p: '$line'") }
-          case _ => throw new java.io.IOException(
-            s"graft-msglog: corrupt subscription journal $p: '$line'")
-        }
+        def corrupt = new java.io.IOException(s"graft-msglog: corrupt journal $p: '$line'")
+        val c = line.split("\t", n)
+        if (c.length < n) throw corrupt
+        try row(c) catch { case _: NumberFormatException => throw corrupt }
       }.toSeq
 
-  private def parse3(p: Path): Seq[(Int, Long, String)] =
-    new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).map { line =>
-        line.split("\t", 3) match {
-          case Array(g, e, name) =>
-            try (g.toInt, e.toLong, name) catch { case _: NumberFormatException =>
-              throw new java.io.IOException(
-                s"graft-msglog: corrupt subscription journal $p: '$line'") }
-          case _ => throw new java.io.IOException(
-            s"graft-msglog: corrupt subscription journal $p: '$line'")
-        }
-      }.toSeq
+  private def parse2(p: Path): Seq[(Long, String)] =
+    parse(p, 2)(c => (c(0).toLong, c(1)))
+
+  private[sources] def parse3(p: Path): Seq[(Int, Long, String)] =
+    parse(p, 3)(c => (c(0).toInt, c(1).toLong, c(2)))
 
   /** Parsed journal contents memoized by absolute path: journal files
     * are IMMUTABLE once atomically renamed in (the [[MsgLogNacks]]
@@ -144,7 +136,7 @@ object MsgLogShared {
     journalFiles(dir, prefix).flatMap(p =>
       parse3Memo.computeIfAbsent(p.toAbsolutePath.toString, _ => parse3(p)))
 
-  private def readJournal2(dir: Path, prefix: String): Seq[(Long, String)] =
+  private[sources] def readJournal2(dir: Path, prefix: String): Seq[(Long, String)] =
     journalFiles(dir, prefix).flatMap(p =>
       parse2Memo.computeIfAbsent(p.toAbsolutePath.toString, _ => parse2(p)))
 

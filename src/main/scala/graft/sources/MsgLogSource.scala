@@ -794,20 +794,9 @@ object MsgLogNacks {
     * its `bump`-th redelivery. */
   case class NackCmd(bump: Int, entry: Long, ledgerName: String)
 
+  /** Not memoized: executors read it too (the nack partition reader). */
   def readCommands(journal: Path): Seq[NackCmd] =
-    new String(Files.readAllBytes(journal), java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).map { line =>
-        line.split("\t", 3) match {
-          case Array(b, e, name) =>
-            try NackCmd(b.toInt, e.toLong, name)
-            catch {
-              case _: NumberFormatException => throw new java.io.IOException(
-                s"graft-msglog: corrupt nack journal $journal: '$line'")
-            }
-          case _ => throw new java.io.IOException(
-            s"graft-msglog: corrupt nack journal $journal: '$line'")
-        }
-      }.toSeq
+    MsgLogShared.parse3(journal).map { case (b, e, name) => NackCmd(b, e, name) }
 
   /** Journal command counts memoized by absolute path: journal files are
     * IMMUTABLE once atomically renamed in, so a count never changes —

@@ -223,31 +223,36 @@ object MsgLogSchemaRegistry {
     *    `IncompatibleSchema`.
     *
     * Returns the DDL the WRITE validates under (the declared one), which
-    * is by construction ⊆ the registered reader schema.
+    * is by construction ⊆ the registered reader schema. The read and the
+    * write run under the topic dir's lock, so two producers widening one
+    * topic at once both land: the second reads the first's schema.
     */
-  def getOrCreate(dir: String, ddl: String): String = readDdl(dir) match {
-    case None =>
-      writeRegistry(dir, ddl)
-      ddl
-    case Some(registered) =>
-      val reg = StructType.fromDDL(registered)
-      val dec = StructType.fromDDL(ddl)
-      if (additive(dec, reg)) ddl // equal or an old producer's narrower view
-      else if (additive(reg, dec)) { // strictly wider: evolve the registry
-        writeRegistry(dir, ddl)
-        ddl
-      } else throw new IncompatibleSchemaException(
-        s"graft-msglog: IncompatibleSchema — topic $dir has registered payload " +
-          s"schema '$registered' and the producer declared '$ddl', which neither " +
-          "matches it nor only adds fields (reference error code " +
-          "src/PulsarApi.proto:194)")
+  def getOrCreate(dir: String, ddl: String): String = {
+    Files.createDirectories(Paths.get(dir))
+    Durable.withDirLock(Paths.get(dir)) {
+      readDdl(dir) match {
+        case None =>
+          writeRegistry(dir, ddl)
+          ddl
+        case Some(registered) =>
+          val reg = StructType.fromDDL(registered)
+          val dec = StructType.fromDDL(ddl)
+          if (additive(dec, reg)) ddl // equal or an old producer's narrower view
+          else if (additive(reg, dec)) { // strictly wider: evolve the registry
+            writeRegistry(dir, ddl)
+            ddl
+          } else throw new IncompatibleSchemaException(
+            s"graft-msglog: IncompatibleSchema — topic $dir has registered payload " +
+              s"schema '$registered' and the producer declared '$ddl', which neither " +
+              "matches it nor only adds fields (reference error code " +
+              "src/PulsarApi.proto:194)")
+      }
+    }
   }
 
-  private def writeRegistry(dir: String, ddl: String): Unit = {
-    Files.createDirectories(Paths.get(dir))
+  private def writeRegistry(dir: String, ddl: String): Unit =
     Durable.write(file(dir),
       (ddl + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
 
   /** True iff every field of `narrow` exists in `wide` at the same
     * (normalized) type, recursively — i.e. `wide` is `narrow` plus zero

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.StructType
   * argument applied to a served index):
   *
   *  - STAGE: the base lands in a durable corpus-keyed dir
-  *    ([[StagedArtifacts.parquetDir]]), so a restarted JVM resolves the
+  *    ([[Staged.durable]]), so a restarted JVM resolves the
   *    same dir — with its appends — instead of rebuilding, and the
   *    staged base size is recorded in the manifest once.
   *  - APPEND: an admitted batch is prepared ONCE (persisted), its rows
@@ -47,7 +47,7 @@ import org.apache.spark.sql.types.StructType
   *    ([[tombstoneIds]]) — a root read would pay partition discovery of
   *    the whole index tree per serve call.
   */
-abstract class ProbeIndex[B](private val name: String, private val partCol: String,
+abstract class ProbeIndex[B](name: String, private val partCol: String,
     private val idCol: String, appendsFamily: String, builds: AtomicLong) {
 
   /** The fixture tables every probe index derives from (media assets
@@ -83,14 +83,13 @@ abstract class ProbeIndex[B](private val name: String, private val partCol: Stri
   /** Runs before a threshold re-stage (e.g. re-derive an upstream memo). */
   protected def beforeRestage(sfDir: String): Unit = ()
 
-  private val memo = new StampedMemo[Path](tables: _*)
+  private val staged = new Staged(name, tables, Seq(partCol), builds)
 
   private def family: Seq[ProbeIndex[_]] = this +: companions
 
   /** Build-or-resolve the durable dir; `fresh` forces a new generation. */
   def dir(spark: SparkSession, sfDir: String, fresh: Boolean = false): Path =
-    StagedArtifacts.parquetDir(sfDir, memo, name, builds, Seq(partCol),
-      freshGen = fresh, baseCount = baseCount)(build(spark, sfDir))
+    staged.durable(sfDir, fresh, baseCount)(build(spark, sfDir))
 
   /** The served index, its schema from the per-dir cache. */
   def read(spark: SparkSession, sfDir: String): DataFrame =
@@ -98,8 +97,7 @@ abstract class ProbeIndex[B](private val name: String, private val partCol: Stri
 
   /** The current dir WITHOUT building: the in-JVM memo, else the
     * durable root (a restarted JVM's surviving index). */
-  private def resolved(sfDir: String): Option[Path] =
-    StagedArtifacts.resolveExisting(sfDir, memo, name)
+  private def resolved(sfDir: String): Option[Path] = staged.resolved(sfDir)
 
   private def write(d: Path, rows: DataFrame): Unit = {
     StagedArtifacts.noteAppend(d, rows)
@@ -125,7 +123,7 @@ abstract class ProbeIndex[B](private val name: String, private val partCol: Stri
     (resolved(sfDir), baseIndex.resolved(sfDir)) match {
       case (Some(d), Some(b)) => ProbeIndex.staleShare(
         ServingManifest.getCounter(sfDir, appendsFamily, tables, d.toString),
-        StagedArtifacts.stagedBaseRows(sfDir, baseIndex.memo, b))
+        baseIndex.staged.baseRows(sfDir, b))
       case _ => 0.0
     }
 
@@ -196,15 +194,14 @@ abstract class ProbeIndex[B](private val name: String, private val partCol: Stri
     * host-wide (the next access rebuilds) and exactly their append
     * counters, scoped per staged dir — never another corpus's. */
   private[graft] def drop(): Unit = family.foreach { i =>
-    for (sf <- i.memo.keys; d <- i.memo.peek(sf))
+    for (sf <- i.staged.keys; d <- i.staged.peek(sf))
       ServingManifest.removeCounter(sf, appendsFamily, tables, d.toString)
-    i.memo.clear()
-    StagedArtifacts.dropDurable(i.name)
+    i.staged.drop()
   }
 
   /** TEST-ONLY simulated restart: forget the in-JVM memos, keep the
     * durable dirs and the manifest. */
-  private[graft] def forget(): Unit = family.foreach(_.memo.clear())
+  private[graft] def forget(): Unit = family.foreach(_.staged.forget())
 }
 
 object ProbeIndex {

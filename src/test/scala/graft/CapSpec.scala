@@ -263,7 +263,7 @@ class CapSpec extends SparkTestBase {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(Soak.n(2, 6)), prop)
     assert(res.passed, res.status.toString)
-    DedupOps.dropStagedTextArtifacts()
+    DedupOps.TextArtifacts.foreach(_.forget())
     DedupOps.TextIndex.drop()
   }
 

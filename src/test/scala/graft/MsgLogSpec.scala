@@ -1877,6 +1877,32 @@ class MsgLogSpec extends SparkTestBase {
     assert(spark.read.format("graft-msglog").load(dir).count() === 3)
   }
 
+  test("schema registry: concurrent additive widenings of one topic all land") {
+    import graft.sources.MsgLogSchemaRegistry
+    // widening i adds f1..fi to the base: any two are additive one way
+    // or the other, so every registration must succeed and the registry
+    // must end at the widest
+    val widenings = (1 to 8).map(i => ("k INT" +: (1 to i).map(j => s"f$j INT")).mkString(", "))
+    for (_ <- 0 until 20) {
+      val dir = tmpPath("glog_schema_race_").toString
+      MsgLogSchemaRegistry.getOrCreate(dir, "k INT")
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = widenings.map(ddl => new Thread(() => {
+        start.await()
+        try { MsgLogSchemaRegistry.getOrCreate(dir, ddl); () }
+        catch { case t: Throwable => errors.add(t); () }
+      }))
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join())
+      assert(errors.isEmpty, errors.asScala.map(_.toString).mkString("\n"))
+      val fields = org.apache.spark.sql.types.StructType.fromDDL(
+        MsgLogSchemaRegistry.readDdl(dir).get).fieldNames.toSet
+      assert(fields === ("k" +: (1 to 8).map(j => s"f$j")).toSet)
+    }
+  }
+
   test("schema enforcement: enforceSchema=true honors the registered schema, errors without one") {
     import spark.implicits._
     val dir = tmpPath("glog_schema_enf_").toString

@@ -356,7 +356,7 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("IVF staged index: Lloyd runs once, later queries reuse the centroids") {
-    SimilarityOps.dropStagedCentroids()
+    SimilarityOps.centroidCache.clear()
     val before = SimilarityOps.lloydRuns.get()
     val first = SimilarityOps.embeddingIvfTopK(emb, 0L, 10,
       index = Some(SimilarityOps.stagedCentroids(spark, sfDir))).collect()
@@ -565,8 +565,8 @@ class PipelineOpsSpec extends SparkTestBase {
     }
     // order-independent: an inventory sweep in the same JVM may have
     // staged the table already — start from a cold memo
-    MultimodalOps.dropStagedTextureTable()
-    val builds = MultimodalOps.textureTableBuilds.get()
+    MultimodalOps.TextureTable.forget()
+    val builds = MultimodalOps.TextureTable.builds.get()
     val hashes = MultimodalOps.imageDHash(
       MultimodalOps.stagedTextureTable(spark, sfDir)).collect()
       .map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("dhash")).toMap
@@ -576,7 +576,7 @@ class PipelineOpsSpec extends SparkTestBase {
     ids.foreach(id => assert(hashes(id) === replicaHash(id), s"media $id"))
     // staged: a second read synthesizes nothing new
     MultimodalOps.imageDHash(MultimodalOps.stagedTextureTable(spark, sfDir)).count()
-    assert(MultimodalOps.textureTableBuilds.get() === builds + 1)
+    assert(MultimodalOps.TextureTable.builds.get() === builds + 1)
     // the dedup op surfaces every same-group pair (spike edits keep
     // hamming within the pigeonhole-complete threshold on this corpus)
     val pairs = DedupOps.imageDHashDups(spark, sfDir).collect()
@@ -603,8 +603,8 @@ class PipelineOpsSpec extends SparkTestBase {
       }
       (0 until 56).map(w => if (e(w) > e(w + 1)) 1L << w else 0L).sum
     }
-    MultimodalOps.dropStagedAudioTable() // order-independent (see above)
-    val builds = MultimodalOps.audioTableBuilds.get()
+    MultimodalOps.AudioTable.forget() // order-independent (see above)
+    val builds = MultimodalOps.AudioTable.builds.get()
     val hashes = MultimodalOps.audioEnergyHash(
       MultimodalOps.stagedAudioTable(spark, sfDir)).collect()
       .map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("dhash")).toMap
@@ -613,7 +613,7 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(hashes.keySet === ids.toSet)
     ids.foreach(id => assert(hashes(id) === replicaHash(id), s"clip $id"))
     MultimodalOps.audioEnergyHash(MultimodalOps.stagedAudioTable(spark, sfDir)).count()
-    assert(MultimodalOps.audioTableBuilds.get() === builds + 1)
+    assert(MultimodalOps.AudioTable.builds.get() === builds + 1)
     val pairs = DedupOps.audioHashDups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
     val wanted = for {
@@ -637,8 +637,8 @@ class PipelineOpsSpec extends SparkTestBase {
           g * 3 + (if (f == p * 8) 40L else 0L)) % 256
       (0 until 56).map(w => if (e(w) > e(w + 1)) 1L << w else 0L).sum
     }
-    MultimodalOps.dropStagedVideoTable() // order-independent (see above)
-    val builds = MultimodalOps.videoTableBuilds.get()
+    MultimodalOps.VideoTable.forget() // order-independent (see above)
+    val builds = MultimodalOps.VideoTable.builds.get()
     val hashes = MultimodalOps.videoTemporalHash(
       MultimodalOps.stagedVideoTable(spark, sfDir)).collect()
       .map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("dhash")).toMap
@@ -648,7 +648,7 @@ class PipelineOpsSpec extends SparkTestBase {
     ids.foreach(id => assert(hashes(id) === replicaHash(id), s"clip $id"))
     // staged: a second read synthesizes nothing new
     MultimodalOps.videoTemporalHash(MultimodalOps.stagedVideoTable(spark, sfDir)).count()
-    assert(MultimodalOps.videoTableBuilds.get() === builds + 1)
+    assert(MultimodalOps.VideoTable.builds.get() === builds + 1)
     // the dedup op surfaces every same-group pair (the full-frame spike
     // moves ≤4 bits by construction — two members differ on ≤2 frames)
     val pairs = DedupOps.videoHashDups(spark, sfDir).collect()
@@ -776,7 +776,7 @@ class PipelineOpsSpec extends SparkTestBase {
 
   test("text probe indexes: append -> serve -> staleness -> re-stage lifecycle") {
     import spark.implicits._
-    DedupOps.dropStagedTextArtifacts()
+    DedupOps.TextArtifacts.foreach(_.forget())
     DedupOps.TextIndex.drop()
     // an increment batch with a vocabulary the fixture never uses: the
     // frozen base has nothing similar, so its dedup result is empty
@@ -1071,7 +1071,7 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("text signature index: built once per corpus snapshot; staged and inline paths agree") {
-    DedupOps.dropStagedTextArtifacts()
+    DedupOps.TextArtifacts.foreach(_.forget())
     val b = DedupOps.textStageBuilds.get()
     assertSameRows(
       DedupOps.stagedLshVerifiedDups(spark, sfDir),
@@ -1126,7 +1126,8 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("fingerprint index: extracted once per corpus snapshot, dup queries read it") {
-    MultimodalOps.dropStagedMediaHashes()
+    Seq(MultimodalOps.ImageHashes, MultimodalOps.AudioHashes, MultimodalOps.VideoHashes,
+      MultimodalOps.MediaLink).foreach(_.forget())
     val b = MultimodalOps.mediaHashBuilds.get()
     DedupOps.videoHashDups(spark, sfDir).count()
     assert(MultimodalOps.mediaHashBuilds.get() === b + 1)
@@ -1141,7 +1142,7 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("BPE: trained merges are deterministic, bounded, and staged once per corpus") {
-    TextOps.dropStagedBpeModel()
+    TextOps.bpeCache.clear()
     val before = TextOps.bpeFitRuns.get()
     val m1 = TextOps.stagedBpeModel(spark, sfDir)
     val m2 = TextOps.stagedBpeModel(spark, sfDir)
@@ -1382,7 +1383,7 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("lm staged model: fit once per sf dir, indexed scoring matches self-fitting form") {
-    TextOps.dropStagedLmModel()
+    TextOps.lmCache.clear()
     val before = TextOps.lmFitRuns.get()
     val first = TextOps.stagedLmModel(spark, sfDir)
     val second = TextOps.stagedLmModel(spark, sfDir)
@@ -1394,16 +1395,16 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("IVF staged index: pruned probe equals the assignment-scan path, built once") {
-    SimilarityOps.dropStagedIvfIndex()
-    val before = SimilarityOps.ivfIndexBuilds.get()
+    SimilarityOps.IvfIndex.drop()
+    val before = SimilarityOps.IvfIndex.builds.get()
     assertSameRows(
       SimilarityOps.embeddingIvfTopKIndexed(spark, sfDir, 0L, 10),
       SimilarityOps.embeddingIvfTopK(emb, 0L, 10,
         index = Some(SimilarityOps.stagedCentroids(spark, sfDir))))
-    assert(SimilarityOps.ivfIndexBuilds.get() === before + 1)
+    assert(SimilarityOps.IvfIndex.builds.get() === before + 1)
     // second probe reuses the materialization — no rebuild
     SimilarityOps.embeddingIvfTopKIndexed(spark, sfDir, 3L, 5).collect()
-    assert(SimilarityOps.ivfIndexBuilds.get() === before + 1)
+    assert(SimilarityOps.IvfIndex.builds.get() === before + 1)
   }
 
   test("ann_batch: per-query slices equal the single-query serving path") {
@@ -1623,18 +1624,31 @@ class PipelineOpsSpec extends SparkTestBase {
     TextOps.stagedLmModel(spark, sf)
     assert(TextOps.lmFitRuns.get() === lmBefore + 2)
 
+    // derived text signatures (per-JVM temp dir): same contract, the
+    // rows follow the rewritten corpus, and forget() re-derives once
+    val sigBefore = DedupOps.textStageBuilds.get()
+    assert(DedupOps.stagedTextSignatures(spark, sf).count() === 25)
+    DedupOps.stagedTextSignatures(spark, sf)
+    assert(DedupOps.textStageBuilds.get() === sigBefore + 1)
+    writeDocs(30)
+    assert(DedupOps.stagedTextSignatures(spark, sf).count() === 30)
+    assert(DedupOps.textStageBuilds.get() === sigBefore + 2)
+    DedupOps.TextSignatures.forget()
+    DedupOps.stagedTextSignatures(spark, sf)
+    assert(DedupOps.textStageBuilds.get() === sigBefore + 3)
+
     // IVF index memo: same contract, and the explicit drop still works
-    val ivfBefore = SimilarityOps.ivfIndexBuilds.get()
+    val ivfBefore = SimilarityOps.IvfIndex.builds.get()
     val d1 = SimilarityOps.stagedIvfIndexDir(spark, sf)
     assert(SimilarityOps.stagedIvfIndexDir(spark, sf) === d1)
-    assert(SimilarityOps.ivfIndexBuilds.get() === ivfBefore + 1)
+    assert(SimilarityOps.IvfIndex.builds.get() === ivfBefore + 1)
     writeEmb(1)
     val d2 = SimilarityOps.stagedIvfIndexDir(spark, sf)
     assert(d2 !== d1, "a rewritten corpus must materialize a fresh index dir")
-    assert(SimilarityOps.ivfIndexBuilds.get() === ivfBefore + 2)
-    SimilarityOps.dropStagedIvfIndex()
+    assert(SimilarityOps.IvfIndex.builds.get() === ivfBefore + 2)
+    SimilarityOps.IvfIndex.drop()
     SimilarityOps.stagedIvfIndexDir(spark, sf)
-    assert(SimilarityOps.ivfIndexBuilds.get() === ivfBefore + 3)
+    assert(SimilarityOps.IvfIndex.builds.get() === ivfBefore + 3)
   }
 
   test("incremental index append: old+new rows identical to a rebuild at the frozen artifacts") {
@@ -1648,11 +1662,11 @@ class PipelineOpsSpec extends SparkTestBase {
     val sf = dir.toString
     val idxDir = SimilarityOps.stagedIvfIndexDir(spark, sf)
     assert(SimilarityOps.ivfIndexStaleFraction(spark, sf) === 0.0)
-    val builds = SimilarityOps.ivfIndexBuilds.get()
+    val builds = SimilarityOps.IvfIndex.builds.get()
     val batch = (100 until 110).map(i => (i.toLong, vec(i, 5))).toDF("vec_id", "embedding")
     SimilarityOps.appendToStagedIvfIndex(spark, sf, batch)
     // append must neither rebuild nor re-point the staged dir
-    assert(SimilarityOps.ivfIndexBuilds.get() === builds)
+    assert(SimilarityOps.IvfIndex.builds.get() === builds)
     assert(SimilarityOps.stagedIvfIndexDir(spark, sf) === idxDir)
     // the served files now equal the from-scratch projection of the
     // WIDENED corpus under the SAME frozen centroids + codebook
@@ -1726,12 +1740,12 @@ class PipelineOpsSpec extends SparkTestBase {
     val sf = dir.toString
     val fixtureIdx = SimilarityOps.stagedIvfIndexDir(spark, sfDir)
     val d1 = SimilarityOps.stagedIvfIndexDir(spark, sf)
-    val builds = SimilarityOps.ivfIndexBuilds.get()
+    val builds = SimilarityOps.IvfIndex.builds.get()
     // below threshold: append 10/50 = 0.2 stale — no retrain fires
     SimilarityOps.appendToStagedIvfIndex(spark, sf,
       (100 until 110).map(i => (i.toLong, vec(i, 5))).toDF("vec_id", "embedding"))
     assert(!SimilarityOps.maybeRetrainStagedIndex(spark, sf, 0.25))
-    assert(SimilarityOps.ivfIndexBuilds.get() === builds)
+    assert(SimilarityOps.IvfIndex.builds.get() === builds)
     assert(SimilarityOps.stagedIvfIndexDir(spark, sf) === d1)
     // past threshold: 20/60 = 0.333 stale — compaction retrains from the
     // corpus files (the appended vectors were never written to the
@@ -1739,7 +1753,7 @@ class PipelineOpsSpec extends SparkTestBase {
     SimilarityOps.appendToStagedIvfIndex(spark, sf,
       (110 until 120).map(i => (i.toLong, vec(i, 7))).toDF("vec_id", "embedding"))
     assert(SimilarityOps.maybeRetrainStagedIndex(spark, sf, 0.25))
-    assert(SimilarityOps.ivfIndexBuilds.get() === builds + 1)
+    assert(SimilarityOps.IvfIndex.builds.get() === builds + 1)
     val d2 = SimilarityOps.stagedIvfIndexDir(spark, sf)
     assert(d2 !== d1, "compaction must materialize a fresh index dir")
     assert(SimilarityOps.ivfIndexStaleFraction(spark, sf) === 0.0)
@@ -1759,7 +1773,7 @@ class PipelineOpsSpec extends SparkTestBase {
     corpus.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val sf = dir.toString
     SimilarityOps.stagedIvfIndexDir(spark, sf)
-    val builds = SimilarityOps.ivfIndexBuilds.get()
+    val builds = SimilarityOps.IvfIndex.builds.get()
     // the segment ingests a NEW vector cloning vec 3's embedding
     // (cosine exactly 1.0 to query 3), written in the exact shape
     // streamIndexAppend's foreachBatch writes per epoch
@@ -1784,7 +1798,7 @@ class PipelineOpsSpec extends SparkTestBase {
       val got = topIds(served)
       assert(got.exists { case (id, cos) => id == 999L && cos == 1.0 },
         got.mkString(";"))
-      assert(SimilarityOps.ivfIndexBuilds.get() === builds,
+      assert(SimilarityOps.IvfIndex.builds.get() === builds,
         "segment serving must not trigger an index rebuild")
       // the overlay read keeps partition pruning on the probed cells
       val p = served.queryExecution.executedPlan.toString
@@ -1826,9 +1840,9 @@ class PipelineOpsSpec extends SparkTestBase {
       // corpus) into fresh dirs; the segment must STILL serve, resolved
       // purely through the persisted manifest.
       SimilarityOps.Segments.forget()
-      SimilarityOps.dropStagedCentroids()
-      SimilarityOps.dropStagedPqCodebook()
-      SimilarityOps.dropStagedIvfIndex()
+      SimilarityOps.centroidCache.clear()
+      SimilarityOps.pqCodebookCache.clear()
+      SimilarityOps.IvfIndex.drop()
       val s2 = spark.newSession()
       val got = SimilarityOps.embeddingBatchTopK(s2, sf, Seq(3L), 5)
         .collect().map(r => (r.getLong(1), r.getDouble(2)))
@@ -1897,7 +1911,7 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("pq staged codebook: collected once, cached per sf dir") {
-    SimilarityOps.dropStagedPqCodebook()
+    SimilarityOps.pqCodebookCache.clear()
     val first = SimilarityOps.stagedPqCodebook(spark, sfDir)
     val second = SimilarityOps.stagedPqCodebook(spark, sfDir)
     assert(first eq second, "second call must return the cached artifact")
@@ -2518,25 +2532,25 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("mm_decode_stats: staged media table built once; staged and direct paths agree") {
-    MultimodalOps.dropStagedMediaTable()
-    val before = MultimodalOps.mediaTableBuilds.get()
+    MultimodalOps.MediaTable.forget()
+    val before = MultimodalOps.MediaTable.builds.get()
     assertSameRows(
       MultimodalOps.multimodalDecodeStatsStaged(spark, sfDir),
       MultimodalOps.multimodalDecodeStats(docs))
-    assert(MultimodalOps.mediaTableBuilds.get() === before + 1)
+    assert(MultimodalOps.MediaTable.builds.get() === before + 1)
     MultimodalOps.multimodalDecodeStatsStaged(spark, sfDir).collect()
-    assert(MultimodalOps.mediaTableBuilds.get() === before + 1)
+    assert(MultimodalOps.MediaTable.builds.get() === before + 1)
   }
 
   test("mm_img: staged table built once; staged and direct paths agree") {
-    MultimodalOps.dropStagedImageTable()
-    val before = MultimodalOps.imageTableBuilds.get()
+    MultimodalOps.ImageTable.forget()
+    val before = MultimodalOps.ImageTable.builds.get()
     assertSameRows(
       MultimodalOps.multimodalImageDecodeStaged(spark, sfDir),
       MultimodalOps.multimodalImageDecode(docs))
-    assert(MultimodalOps.imageTableBuilds.get() === before + 1)
+    assert(MultimodalOps.ImageTable.builds.get() === before + 1)
     MultimodalOps.multimodalImageDecodeStaged(spark, sfDir).collect()
-    assert(MultimodalOps.imageTableBuilds.get() === before + 1)
+    assert(MultimodalOps.ImageTable.builds.get() === before + 1)
   }
 
   test("mm_img: decoded geometry matches the id-derived expectation for every row") {

@@ -503,7 +503,7 @@ class StreamOpsSpec extends SparkTestBase {
   test("stream_lsh verifies against the FROZEN staged index, not a re-tokenized corpus") {
     // the per-batch body must not rebuild the signature index: one
     // staged build serves every micro-batch (and every later text key)
-    graft.operators.DedupOps.dropStagedTextArtifacts()
+    graft.operators.DedupOps.TextArtifacts.foreach(_.forget())
     graft.operators.DedupOps.TextIndex.drop()
     val b0 = graft.operators.DedupOps.textStageBuilds.get()
     val p0 = graft.operators.DedupOps.probeStageBuilds.get()
