@@ -35,17 +35,26 @@ object SparkEntry {
     * search, text analysis, multimodal plumbing).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    MessageOps.queries ++ RelationalOps.queries ++ LlmOps.queries ++
-      StreamOps.queries ++ DedupOps.queries ++ SimilarityOps.queries ++
-      TextOps.queries ++ MultimodalOps.queries ++ MsgLog.queries ++
-      BucketedOps.queries ++ TemporalOps.queries
+    queryGroups.reduce(_ ++ _)
+
+  /** Each operator group's query map, merged by [[queries]] — a key
+    * declared in two groups would silently shadow one of them, so a
+    * spec checks that the group sizes sum to the merged size. */
+  private[graft] def queryGroups: Seq[Map[String, (SparkSession, String) => DataFrame]] =
+    Seq(MessageOps.queries, RelationalOps.queries, LlmOps.queries,
+      StreamOps.queries, DedupOps.queries, SimilarityOps.queries,
+      TextOps.queries, MultimodalOps.queries, MsgLog.queries,
+      BucketedOps.queries, TemporalOps.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → weaker rows-only check.
     */
-  def oracleSql: Map[String, String] =
-    MessageOps.oracle ++ RelationalOps.oracle ++ LlmOps.oracle ++
-      DedupOps.oracle ++ SimilarityOps.oracle ++ TextOps.oracle ++
-      MultimodalOps.oracle ++ MsgLog.oracle ++ StreamOps.oracle ++
-      BucketedOps.oracle ++ TemporalOps.oracle
+  def oracleSql: Map[String, String] = oracleGroups.reduce(_ ++ _)
+
+  /** Each operator group's oracle map, merged by [[oracleSql]]. */
+  private[graft] def oracleGroups: Seq[Map[String, String]] =
+    Seq(MessageOps.oracle, RelationalOps.oracle, LlmOps.oracle,
+      DedupOps.oracle, SimilarityOps.oracle, TextOps.oracle,
+      MultimodalOps.oracle, MsgLog.oracle, StreamOps.oracle,
+      BucketedOps.oracle, TemporalOps.oracle)
 }

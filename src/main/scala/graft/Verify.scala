@@ -42,15 +42,9 @@ object Verify {
     // overflows (ADVICE r13).
     val capPremise: Map[String, () => Unit] = Map(
       "stream_lsh" ->
-        (() => graft.operators.DedupOps.assertTextProbeCapPremise(spark, sfDir)),
-      "stream_img" ->
-        (() => graft.operators.DedupOps.assertMediaProbeCapPremise(spark, sfDir)),
-      "stream_wav" ->
-        (() => graft.operators.DedupOps.assertMediaProbeCapPremise(spark, sfDir,
-          graft.operators.DedupOps.AudioModality)),
-      "stream_gif" ->
-        (() => graft.operators.DedupOps.assertMediaProbeCapPremise(spark, sfDir,
-          graft.operators.DedupOps.VideoModality)))
+        (() => graft.operators.DedupOps.assertTextProbeCapPremise(spark, sfDir))) ++
+      graft.operators.DedupOps.MediaModalities.map(m => s"stream_${m.name}" ->
+        (() => graft.operators.DedupOps.assertMediaProbeCapPremise(spark, sfDir, m)))
     // (stream_xm needs NO cap premise: its edge topic ranks interleaved
     // exactly as its oracle does — see stagedIncrementCrossEdges)
     SparkEntry.queries.foreach { case (name, fn) =>
@@ -109,8 +103,7 @@ object Verify {
     // modality — an append leaking into ANY modality's serving path
     // must be visible, not just the image one's.
     try graft.operators.DedupOps.MediaModalities.foreach { m =>
-      graft.ObservedMetrics.recordGauge(
-        graft.operators.DedupOps.mediaStaleGauge(m),
+      graft.ObservedMetrics.recordGauge(m.staleGauge,
         m.index.staleFraction(spark, sfDir))
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[verify] media stale gauge failed: ${e.getMessage}")

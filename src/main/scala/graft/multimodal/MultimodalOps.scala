@@ -388,18 +388,17 @@ object MultimodalOps {
       })
   }
 
-  /** The five staged media tables: `table(documents)` once per corpus
-    * SNAPSHOT, each counting its own synthesis builds. */
+  /** The two staged decode corpora: `table(documents)` once per corpus
+    * SNAPSHOT, each counting its own synthesis builds (the dedup
+    * modalities' textured corpora are staged on their
+    * [[graft.operators.DedupOps.MediaModality]] values). */
   private[graft] val MediaTable = new Staged("graft_media_mixed_")
   private[graft] val ImageTable = new Staged("graft_media_images_")
-  private[graft] val TextureTable = new Staged("graft_media_textures_")
-  private[graft] val AudioTable = new Staged("graft_media_audio_")
-  private[graft] val VideoTable = new Staged("graft_media_video_")
 
   /** A staged media table read back with its schema inferred from the
     * files (not through [[graft.util.StagedArtifacts.readStaged]]), as
     * the decode plans always have. */
-  private def mediaAt(spark: SparkSession, dir: java.nio.file.Path): Dataset[MediaRecord] = {
+  private[graft] def mediaAt(spark: SparkSession, dir: java.nio.file.Path): Dataset[MediaRecord] = {
     import spark.implicits._
     spark.read.parquet(dir.toString).as[MediaRecord]
   }
@@ -647,7 +646,7 @@ object MultimodalOps {
     * chaining arbitrarily many clusters into one corpus-wide component
     * (an 8-consecutive secondary scheme measurably collapsed the
     * sf0.001 reconciliation to a single cluster). */
-  private def assetIdsOf(docId: Long): Seq[Long] = {
+  private[graft] def assetIdsOf(docId: Long): Seq[Long] = {
     requireLinkIdDomain(docId)
     Seq(docId + PrimaryOffset) ++
       (if (docId % 8 == 0) Seq(SecondaryBase + docId / 2) else Nil) ++
@@ -708,30 +707,14 @@ object MultimodalOps {
     * decode scan's split count, equals the writer's partition count).
     * The id exchange ships three scalars per row; the heavy bytes are
     * synthesized after it. */
-  private def spreadForSynthesis(docs: DataFrame): DataFrame =
+  private[graft] def spreadForSynthesis(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"), col("lang"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
 
-  /** The textured-image corpus: one [[synthTexturePng]] payload per
-    * document row, synthesized executor-side (the [[imageTable]]
-    * shape). */
-  def textureTable(docs: DataFrame): Dataset[MediaRecord] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spreadForSynthesis(docs)
-      .as[(Long, String, String)]
-      .mapPartitions(_.flatMap { case (id, source, lang) =>
-        assetIdsOf(id).map(mid =>
-          MediaRecord(mid, "image", synthTexturePng(mid),
-            Map("source" -> source, "lang" -> lang)))
-      })
-  }
-
-  /** [[textureTable]] staged to parquet once per corpus SNAPSHOT — the
-    * [[stagedImageTable]] discipline: served passes measure decode +
-    * hash over stored payloads, not synthesis. */
+  /** The image modality's staged textured corpus (perfbench's entry
+    * point). */
   def stagedTextureTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
-    mediaAt(spark, TextureTable.dir(sfDir)(textureTable(Fixtures.documents(spark, sfDir)).toDF()))
+    graft.operators.DedupOps.ImageModality.stagedAssets(spark, sfDir)
 
   /** Deterministic TEXTURED WAV synthesis (the audio twin of
     * [[synthTexturePng]]): 456 PCM16 mono samples at 8 kHz whose
@@ -775,25 +758,6 @@ object MultimodalOps {
     }
     buf.array()
   }
-
-  /** The textured-audio corpus: one [[synthTextureWav]] payload per
-    * document row (the [[textureTable]] shape). */
-  def audioTable(docs: DataFrame): Dataset[MediaRecord] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spreadForSynthesis(docs)
-      .as[(Long, String, String)]
-      .mapPartitions(_.flatMap { case (id, source, lang) =>
-        assetIdsOf(id).map(mid =>
-          MediaRecord(mid, "audio", synthTextureWav(mid),
-            Map("source" -> source, "lang" -> lang)))
-      })
-  }
-
-  /** [[audioTable]] staged to parquet once per corpus SNAPSHOT (the
-    * [[stagedTextureTable]] discipline). */
-  def stagedAudioTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
-    mediaAt(spark, AudioTable.dir(sfDir)(audioTable(Fixtures.documents(spark, sfDir)).toDF()))
 
   /** Deterministic TEXTURED animated-GIF synthesis (the video member of
     * the [[synthTexturePng]]/[[synthTextureWav]] family): 57 frames of
@@ -857,36 +821,9 @@ object MultimodalOps {
     bos.toByteArray
   }
 
-  /** The textured-video corpus: one [[synthTextureGif]] clip per
-    * document row (the [[textureTable]] shape). */
-  def videoTable(docs: DataFrame): Dataset[MediaRecord] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    spreadForSynthesis(docs)
-      .as[(Long, String, String)]
-      .mapPartitions(_.flatMap { case (id, source, lang) =>
-        assetIdsOf(id).map(mid =>
-          MediaRecord(mid, "video", synthTextureGif(mid),
-            Map("source" -> source, "lang" -> lang)))
-      })
-  }
-
-  /** [[videoTable]] staged to parquet once per corpus SNAPSHOT (the
-    * [[stagedTextureTable]] discipline). */
-  def stagedVideoTable(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
-    mediaAt(spark, VideoTable.dir(sfDir)(videoTable(Fixtures.documents(spark, sfDir)).toDF()))
-
   // ---------------------------------------------------------------------
-  // Fingerprint INDEX staging — decode once per corpus snapshot
+  // Media link and the per-payload fingerprint kernels
   // ---------------------------------------------------------------------
-
-  /** How many times a fingerprint table actually EXTRACTED — staging
-    * observability for tests (the `TextureTable.builds` sibling). */
-  val mediaHashBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private[graft] val ImageHashes = new Staged("graft_media_fp_", builds = mediaHashBuilds)
-  private[graft] val AudioHashes = new Staged("graft_media_fp_", builds = mediaHashBuilds)
-  private[graft] val VideoHashes = new Staged("graft_media_fp_", builds = mediaHashBuilds)
 
   /** The staged link keeps its own counter so the fingerprint-staging
     * pin tests stay exact. */
@@ -901,25 +838,17 @@ object MultimodalOps {
   def stagedMediaLink(spark: SparkSession, sfDir: String): DataFrame =
     MediaLink.read(spark, sfDir)(mediaLink(graft.model.Fixtures.documents(spark, sfDir)))
 
-  /** The per-modality 56-bit fingerprints staged to parquet once per
-    * corpus SNAPSHOT — the media analog of the staged IVF index: codec
-    * decode is an INDEX BUILD, and every dup query (per-modality pairs,
-    * cross-modal reconciliation) reads `(media_id, dhash)` — 16 bytes
-    * per asset instead of the raster. This is the only shape that
-    * serves at 100 TB of media: the decode pass runs once per corpus
-    * snapshot (stamped like every staged artifact — an in-place rewrite
-    * re-extracts), not once per query. */
+  /** The image modality's staged fingerprints (perfbench's entry
+    * point). */
   def stagedImageHashes(spark: SparkSession, sfDir: String): DataFrame =
-    ImageHashes.read(spark, sfDir)(imageDHash(stagedTextureTable(spark, sfDir)))
+    graft.operators.DedupOps.ImageModality.stagedHashes(spark, sfDir)
 
-  def stagedAudioHashes(spark: SparkSession, sfDir: String): DataFrame =
-    AudioHashes.read(spark, sfDir)(audioEnergyHash(stagedAudioTable(spark, sfDir)))
+  /** The image modality's fingerprinter (perfbench's entry point). */
+  def imageDHash(media: Dataset[MediaRecord]): DataFrame =
+    graft.operators.DedupOps.ImageModality.fingerprint(media)
 
-  def stagedVideoHashes(spark: SparkSession, sfDir: String): DataFrame =
-    VideoHashes.read(spark, sfDir)(videoTemporalHash(stagedVideoTable(spark, sfDir)))
-
-  /** Temporal energy fingerprint of each video payload through the REAL
-    * codec — [[audioEnergyHash]]'s sign-of-energy-delta shape lifted
+  /** Temporal energy fingerprint of a video payload through the REAL
+    * codec — [[audioEnergyHashOf]]'s sign-of-energy-delta shape lifted
     * from sample windows to FRAMES: walk every frame of the animated
     * GIF with `javax.imageio` (indexed rasters decode losslessly), sum
     * the red channel per frame, and emit one bit per adjacent-frame
@@ -927,66 +856,58 @@ object MultimodalOps {
     * bits into a BIGINT. Re-encodes and global brightness rescales
     * preserve the deltas' signs; trims/splices/frame edits move a few
     * bits. Feeds the SAME banded pair skeleton as the image and audio
-    * hashes. Clips with fewer than 57 frames drop (per-row corrupt
-    * fallback); codec work stays in the scan task — one Long per clip
-    * crosses the exchange. */
-  def videoTemporalHash(media: Dataset[MediaRecord]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { r =>
+    * hashes. Clips with fewer than 57 frames are rejected (per-row
+    * corrupt fallback). */
+  private[graft] def videoTemporalHashOf(bytes: Array[Byte]): Option[Long] =
+    try {
+      val iis = javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(bytes))
       try {
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(r.bytes))
-        try {
-          val readers = javax.imageio.ImageIO.getImageReaders(iis)
-          if (!readers.hasNext) (r.media_id, None: Option[Long])
-          else {
-            val reader = readers.next()
-            try {
-              reader.setInput(iis, false, true)
-              // Single pass: no getNumImages(true) pre-walk (that forces a
-              // full stream parse BEFORE the 57 decodes — every clip parsed
-              // twice). Read frames sequentially; a clip shorter than 57
-              // frames makes reader.read(f) throw, landing in the corrupt
-              // fallback below — the same None the length check produced.
-              val e = new Array[Long](57)
-              var f = 0
-              while (f < 57) {
-                val img = reader.read(f)
-                val w = img.getWidth
-                val h = img.getHeight
-                val row = new Array[Int](w)
-                var y = 0
-                while (y < h) {
-                  img.getRGB(0, y, w, 1, row, 0, w)
-                  var x = 0
-                  while (x < w) {
-                    e(f) += (row(x) >> 16) & 0xff
-                    x += 1
-                  }
-                  y += 1
+        val readers = javax.imageio.ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) None
+        else {
+          val reader = readers.next()
+          try {
+            reader.setInput(iis, false, true)
+            // Single pass: no getNumImages(true) pre-walk (that forces a
+            // full stream parse BEFORE the 57 decodes — every clip parsed
+            // twice). Read frames sequentially; a clip shorter than 57
+            // frames makes reader.read(f) throw, landing in the corrupt
+            // fallback below — the same None the length check produced.
+            val e = new Array[Long](57)
+            var f = 0
+            while (f < 57) {
+              val img = reader.read(f)
+              val w = img.getWidth
+              val h = img.getHeight
+              val row = new Array[Int](w)
+              var y = 0
+              while (y < h) {
+                img.getRGB(0, y, w, 1, row, 0, w)
+                var x = 0
+                while (x < w) {
+                  e(f) += (row(x) >> 16) & 0xff
+                  x += 1
                 }
-                f += 1
+                y += 1
               }
-              var hash = 0L
-              var w = 0
-              while (w < 56) {
-                if (e(w) > e(w + 1)) hash |= 1L << w
-                w += 1
-              }
-              (r.media_id, Some(hash))
-            } finally reader.dispose()
-          }
-        } finally if (iis != null) iis.close()
-      } catch {
-        case _: Exception => (r.media_id, None: Option[Long])
-      }
-    }).toDF("media_id", "h")
-      .filter(col("h").isNotNull)
-      .select(col("media_id"), col("h").as("dhash"))
-  }
+              f += 1
+            }
+            var hash = 0L
+            var w = 0
+            while (w < 56) {
+              if (e(w) > e(w + 1)) hash |= 1L << w
+              w += 1
+            }
+            Some(hash)
+          } finally reader.dispose()
+        }
+      } finally if (iis != null) iis.close()
+    } catch {
+      case _: Exception => None
+    }
 
-  /** Acoustic energy fingerprint of each audio payload through the REAL
+  /** Acoustic energy fingerprint of an audio payload through the REAL
     * codec: parse the container with `javax.sound.sampled` (PCM16 is
     * lossless, samples come back exact), sum |sample| over 57
     * consecutive 8-frame windows, and emit one bit per adjacent-window
@@ -996,101 +917,84 @@ object MultimodalOps {
     * rescaling preserves the deltas' signs, small edits move a couple
     * of bits. The 56-bit hash feeds the SAME banded pair skeleton as
     * the image dHash. Mono-ized by summing channels per frame;
-    * undecodable or short payloads drop (per-row corrupt fallback). */
-  def audioEnergyHash(media: Dataset[MediaRecord]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { r =>
-      try {
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(r.bytes))
-        val fmt = in.getFormat
-        val bytes = in.readAllBytes()
-        val frameSize = fmt.getFrameSize
-        val channels = fmt.getChannels
-        val n = bytes.length / frameSize
-        if (n < 57 * 8) (r.media_id, None: Option[Long])
-        else {
-          val e = new Array[Long](57)
-          var t = 0
-          while (t < 57 * 8) {
-            var ch = 0
-            var frameSum = 0L
-            while (ch < channels) {
-              val off = t * frameSize + ch * 2
-              val s = ((bytes(off) & 0xff) | (bytes(off + 1) << 8)).toShort
-              frameSum += s
-              ch += 1
-            }
-            e(t / 8) += math.abs(frameSum)
-            t += 1
-          }
-          var hash = 0L
-          var w = 0
-          while (w < 56) {
-            if (e(w) > e(w + 1)) hash |= 1L << w
-            w += 1
-          }
-          (r.media_id, Some(hash))
-        }
-      } catch {
-        case _: Exception => (r.media_id, None: Option[Long])
-      }
-    }).toDF("media_id", "h")
-      .filter(col("h").isNotNull)
-      .select(col("media_id"), col("h").as("dhash"))
-  }
-
-  /** Perceptual difference-hash (dHash) of each image payload through
-    * the REAL codec: decode (`javax.imageio`), average-pool the red
-    * channel onto an 8×8 integer grid (exact integer sums — no
-    * floating point anywhere), then one bit per horizontal neighbor
-    * comparison — bit `cy*7+cx` set iff cell(cy,cx) > cell(cy,cx+1) —
-    * packing 56 bits into a BIGINT. Near-duplicate rasters (crops,
-    * recompressions, small edits) land within a few bits; the banded
-    * join in [[graft.operators.DedupOps.imageDHashDups]] turns that
-    * into capped candidate buckets. Runs in the same batched
-    * `mapPartitions` envelope as every decode here (codec work stays in
-    * the scan task; one Long per image crosses the exchange).
-    * Undecodable payloads hash to NULL and drop (the per-row corrupt
-    * fallback discipline). */
-  def imageDHash(media: Dataset[MediaRecord]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { r =>
-      val img =
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.bytes))
-        catch { case _: java.io.IOException => null }
-      if (img == null || img.getWidth < 8 || img.getHeight < 8)
-        (r.media_id, None: Option[Long])
+    * undecodable or short payloads are rejected (per-row corrupt
+    * fallback). */
+  private[graft] def audioEnergyHashOf(bytes: Array[Byte]): Option[Long] =
+    try {
+      val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      val fmt = in.getFormat
+      val pcm = in.readAllBytes()
+      val frameSize = fmt.getFrameSize
+      val channels = fmt.getChannels
+      val n = pcm.length / frameSize
+      if (n < 57 * 8) None
       else {
-        val w = img.getWidth
-        val h = img.getHeight
-        val sums = Array.ofDim[Long](8, 8)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            sums(y * 8 / h)(x * 8 / w) += (img.getRGB(x, y) >> 16) & 0xFF
-            x += 1
+        val e = new Array[Long](57)
+        var t = 0
+        while (t < 57 * 8) {
+          var ch = 0
+          var frameSum = 0L
+          while (ch < channels) {
+            val off = t * frameSize + ch * 2
+            val s = ((pcm(off) & 0xff) | (pcm(off + 1) << 8)).toShort
+            frameSum += s
+            ch += 1
           }
-          y += 1
+          e(t / 8) += math.abs(frameSum)
+          t += 1
         }
         var hash = 0L
-        var cy = 0
-        while (cy < 8) {
-          var cx = 0
-          while (cx < 7) {
-            if (sums(cy)(cx) > sums(cy)(cx + 1)) hash |= 1L << (cy * 7 + cx)
-            cx += 1
-          }
-          cy += 1
+        var w = 0
+        while (w < 56) {
+          if (e(w) > e(w + 1)) hash |= 1L << w
+          w += 1
         }
-        (r.media_id, Some(hash))
+        Some(hash)
       }
-    }).toDF("media_id", "dh")
-      .filter(col("dh").isNotNull)
-      .select(col("media_id"), col("dh").as("dhash"))
+    } catch {
+      case _: Exception => None
+    }
+
+  /** Perceptual difference-hash (dHash) of an image payload through the
+    * REAL codec: decode (`javax.imageio`), average-pool the red channel
+    * onto an 8×8 integer grid (exact integer sums — no floating point
+    * anywhere), then one bit per horizontal neighbor comparison — bit
+    * `cy*7+cx` set iff cell(cy,cx) > cell(cy,cx+1) — packing 56 bits
+    * into a BIGINT. Near-duplicate rasters (crops, recompressions, small
+    * edits) land within a few bits; the image modality's banded
+    * `dups` turns that into capped candidate buckets. Undecodable
+    * payloads are rejected (the per-row corrupt fallback discipline). */
+  private[graft] def imageDHashOf(bytes: Array[Byte]): Option[Long] = {
+    val img =
+      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      catch { case _: java.io.IOException => null }
+    if (img == null || img.getWidth < 8 || img.getHeight < 8) None
+    else {
+      val w = img.getWidth
+      val h = img.getHeight
+      val sums = Array.ofDim[Long](8, 8)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          sums(y * 8 / h)(x * 8 / w) += (img.getRGB(x, y) >> 16) & 0xFF
+          x += 1
+        }
+        y += 1
+      }
+      var hash = 0L
+      var cy = 0
+      while (cy < 8) {
+        var cx = 0
+        while (cx < 7) {
+          if (sums(cy)(cx) > sums(cy)(cx + 1)) hash |= 1L << (cy * 7 + cx)
+          cx += 1
+        }
+        cy += 1
+      }
+      Some(hash)
+    }
   }
 
   /** Contract query: per-image decoded geometry + channel means through

@@ -94,7 +94,7 @@ object DedupOps {
 
   /** The per-document text signature index staged to parquet once per
     * corpus SNAPSHOT — the text analog of the staged media fingerprints
-    * ([[graft.multimodal.MultimodalOps.stagedImageHashes]]) and the
+    * ([[MediaModality.stagedHashes]]) and the
     * staged IVF index: tokenization, MinHash banding, and shingling are
     * an INDEX BUILD, not query work. One corpus scan produces
     * `(doc_id, bands, sh, tsig)` — the 4 band signatures
@@ -429,61 +429,13 @@ object DedupOps {
   }
 
   /** Perceptual image-hash geometry: the 56-bit dHash
-    * ([[graft.multimodal.MultimodalOps.imageDHash]]) splits into 8
+    * ([[graft.multimodal.MultimodalOps.imageDHashOf]]) splits into 8
     * blocks of 7 bits. With [[ImgMaxHamming]] = 7 < 8 blocks the banding
     * is pigeonhole-COMPLETE: any pair within the hamming threshold
     * agrees exactly on at least one block, so the bucketed join provably
     * finds every reported pair — no probabilistic recall caveat. */
   val ImgHashBlocks = 8
   val ImgMaxHamming = 7
-
-  /** Image near-duplicate pairs by perceptual hash — the multimodal
-    * member of the dedup family (round 11): dHash every stored image
-    * through the real codec, then EXACTLY the [[docSimhashPairs]]
-    * skeleton — per-block bucketing, [[MaxBucketMembers]]-capped member
-    * groups with the overflow observed, in-group pair enumeration, full
-    * 56-bit hamming verify. Scale shape inherited wholesale: candidate
-    * cost ∝ bucket sizes (never all-pairs), one exchange on the block
-    * keys, one Long per image shuffled — the raster bytes never leave
-    * their scan task, and since round 13 they are decoded once per
-    * corpus SNAPSHOT, not once per query: the query reads the staged
-    * fingerprint index
-    * ([[graft.multimodal.MultimodalOps.stagedImageHashes]]). */
-  def imageDHashDups(spark: SparkSession, sfDir: String): DataFrame =
-    ImageModality.index.excludeTombstoned(spark, sfDir, imageHashPairs(
-        graft.multimodal.MultimodalOps.stagedImageHashes(spark, sfDir)),
-      Seq("media_a", "media_b"))
-
-  /** Audio near-duplicate pairs by acoustic energy fingerprint — the
-    * audio member of the dedup family (text: simhash/minhash; image:
-    * dHash): every stored WAV decodes through the real
-    * `javax.sound.sampled` codec into a 56-bit sign-of-energy-delta
-    * fingerprint ([[graft.multimodal.MultimodalOps.audioEnergyHash]]),
-    * then EXACTLY the shared banded skeleton. Same scale shape: one
-    * Long per clip crosses the exchange, buckets capped with overflow
-    * observed, pigeonhole-complete at hamming ≤ 7 over 8 blocks;
-    * fingerprints staged once per corpus snapshot
-    * ([[graft.multimodal.MultimodalOps.stagedAudioHashes]]). */
-  def audioHashDups(spark: SparkSession, sfDir: String): DataFrame =
-    AudioModality.index.excludeTombstoned(spark, sfDir, imageHashPairs(
-        graft.multimodal.MultimodalOps.stagedAudioHashes(spark, sfDir),
-        "wav_hash_block_overflow"), Seq("media_a", "media_b"))
-
-  /** Video near-duplicate pairs by temporal energy fingerprint — the
-    * video member of the dedup family, completing the modality square
-    * (text: simhash/minhash; image: dHash; audio: energy fingerprint):
-    * every stored animated GIF decodes frame-by-frame through the real
-    * `javax.imageio` codec into a 56-bit sign-of-frame-delta-energy
-    * fingerprint ([[graft.multimodal.MultimodalOps.videoTemporalHash]]),
-    * then EXACTLY the shared banded skeleton. Same scale shape: one
-    * Long per clip crosses the exchange, buckets capped with overflow
-    * observed, pigeonhole-complete at hamming ≤ 7 over 8 blocks;
-    * fingerprints staged once per corpus snapshot
-    * ([[graft.multimodal.MultimodalOps.stagedVideoHashes]]). */
-  def videoHashDups(spark: SparkSession, sfDir: String): DataFrame =
-    VideoModality.index.excludeTombstoned(spark, sfDir, imageHashPairs(
-        graft.multimodal.MultimodalOps.stagedVideoHashes(spark, sfDir),
-        "gif_hash_block_overflow"), Seq("media_a", "media_b"))
 
   /** Cross-modal duplicate reconciliation — the pipeline step AFTER
     * per-modality dedup: a page duplicated with a re-encoded hero image
@@ -520,20 +472,19 @@ object DedupOps {
     * composite keys read their upstream stages staged — exactly how an
     * ingestion pipeline runs these stages on their own cadence. */
   def stagedCrossModalGroups(spark: SparkSession, sfDir: String): DataFrame =
-    CrossModalGroups.read(spark, sfDir) {
-      val docs = Fixtures.documents(spark, sfDir)
-      crossModalGroupsOf(
-        stagedLshVerifiedDups(spark, sfDir).select(col("doc_a"), col("doc_b")),
-        Seq(
-          imageDHashDups(spark, sfDir).select(col("media_a"), col("media_b")),
-          audioHashDups(spark, sfDir).select(col("media_a"), col("media_b")),
-          videoHashDups(spark, sfDir).select(col("media_a"), col("media_b"))),
-        // the fixture's NON-IDENTITY link: disjoint media ids, docs
-        // owning one or two assets, orphan assets absent (their pairs
-        // drop at this join) — production passes any (media_id, doc_id)
-        // table through the same join shape
-        graft.multimodal.MultimodalOps.mediaLink(docs))
-    }
+    CrossModalGroups.read(spark, sfDir)(crossModalInputs(spark, sfDir)(crossModalGroupsOf))
+
+  /** `f` over the corpus's cross-modal graph inputs — text verified dups,
+    * every [[MediaModalities]] member's dups, and the fixture's
+    * NON-IDENTITY link: disjoint media ids, docs owning one or two
+    * assets, orphan assets absent (their pairs drop at the link join) —
+    * production passes any (media_id, doc_id) table through the same
+    * join shape. Both cross-modal stagings build from it. */
+  private def crossModalInputs[T](spark: SparkSession, sfDir: String)(
+      f: (DataFrame, Seq[DataFrame], DataFrame) => T): T =
+    f(stagedLshVerifiedDups(spark, sfDir).select(col("doc_a"), col("doc_b")),
+      MediaModalities.map(_.dups(spark, sfDir).select(col("media_a"), col("media_b"))),
+      graft.multimodal.MultimodalOps.mediaLink(Fixtures.documents(spark, sfDir)))
 
   /** The merged cross-modal clustering over an ARBITRARY doc↔media link
     * — the build body of [[stagedCrossModalGroups]], factored so
@@ -594,19 +545,11 @@ object DedupOps {
     * the LINKED doc ids, after the link join — base-ness is a document
     * property, whatever the media link shape. */
   def stagedBaseCrossModalGroups(spark: SparkSession, sfDir: String): DataFrame =
-    BaseCrossModalGroups.read(spark, sfDir) {
-      val docs = Fixtures.documents(spark, sfDir)
-      val edges = crossModalEdgesOf(
-        stagedLshVerifiedDups(spark, sfDir).select(col("doc_a"), col("doc_b")),
-        Seq(
-          imageDHashDups(spark, sfDir).select(col("media_a"), col("media_b")),
-          audioHashDups(spark, sfDir).select(col("media_a"), col("media_b")),
-          videoHashDups(spark, sfDir).select(col("media_a"), col("media_b"))),
-        graft.multimodal.MultimodalOps.mediaLink(docs))
-      clusterPairs(
-          edges.filter(!isNewId(col("doc_a")) && !isNewId(col("doc_b"))))
+    BaseCrossModalGroups.read(spark, sfDir)(crossModalInputs(spark, sfDir) { (text, media, link) =>
+      clusterPairs(crossModalEdgesOf(text, media, link)
+          .filter(!isNewId(col("doc_a")) && !isNewId(col("doc_b"))))
         .withColumnRenamed("id", "doc_id")
-    }
+    })
 
   /** Partition count of the cluster-keyed probe projection
     * ([[xmClusterIdxDir]]) — an index constant like [[DocBucketParts]],
@@ -694,10 +637,7 @@ object DedupOps {
       crossModalEdgesOf(
         stagedIncrementalDedup(spark, sfDir)
           .select(col("new_doc").as("doc_a"), col("base_doc").as("doc_b")),
-        Seq(
-          crossOf(imageDHashDups(spark, sfDir)),
-          crossOf(audioHashDups(spark, sfDir)),
-          crossOf(videoHashDups(spark, sfDir))),
+        MediaModalities.map(m => crossOf(m.dups(spark, sfDir))),
         graft.multimodal.MultimodalOps.mediaLink(
           Fixtures.documents(spark, sfDir)))
     }
@@ -743,7 +683,7 @@ object DedupOps {
 
   /** The per-block projection of a `(media_id, dhash)` 56-bit
     * perceptual-hash frame: 8 blocks of 7 bits each, `(media_id, dhash,
-    * blk, blk_val)` — the shared front half of [[imageHashPairs]]'s
+    * blk, blk_val)` — the shared front half of [[mediaHashPairs]]'s
     * banding and the media probe index's rows. */
   private def mediaBlocksOf(fp: DataFrame): DataFrame = fp.select(
     col("media_id"), col("dhash"),
@@ -752,12 +692,10 @@ object DedupOps {
       col("media_id"), col("dhash"), col("blk"),
       expr("shiftright(dhash, blk * 7) & 127").as("blk_val"))
 
-  /** The banding/verify stage of [[imageDHashDups]] over any
-    * `(media_id, dhash)` 56-bit perceptual-hash frame — shared by the
-    * image (dHash) and audio (energy-fingerprint) dedup ops and the
-    * seam the cap tests drive directly. */
-  def imageHashPairs(fp: DataFrame,
-      metric: String = "img_dhash_block_overflow"): DataFrame = {
+  /** The banding/verify stage of every [[MediaModality.dups]] over any
+    * `(media_id, dhash)` 56-bit fingerprint frame, its bucket overflow
+    * observed as `metric` — the seam the cap tests drive directly. */
+  def mediaHashPairs(fp: DataFrame, metric: String): DataFrame = {
     val blocks = mediaBlocksOf(fp)
     def pairStruct(a: Column, b: Column): Column = struct(
       a.getField("media_id").as("media_a"),
@@ -1355,33 +1293,215 @@ object DedupOps {
     * build increments once). */
   val mediaProbeStageBuilds = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** A media modality's dedup surfaces: its staged corpus fingerprint
-    * artifact, its in-batch fingerprinter (the SAME real codec both
-    * ways, so increment and base rows are comparable by construction),
-    * the fixture's doc→asset synthesizer (production swaps this for
-    * its landing-dir reader), and its fingerprint probe [[index]].
-    * Every modality shares the banding geometry (8 × 7-bit blocks over
-    * a 56-bit fingerprint), so one index definition serves all three. */
-  final case class MediaModality(
-      name: String,
-      stagedHashes: (SparkSession, String) => DataFrame,
-      fingerprint: Dataset[MediaRecord] => DataFrame,
-      table: DataFrame => Dataset[MediaRecord]) {
+  /** How many times a modality's fingerprint table actually EXTRACTED —
+    * one counter shared by every [[MediaModality.hashes]] (the
+    * [[textStageBuilds]] sibling). */
+  val mediaHashBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** One media modality, holding every per-modality fact: its `name`
+    * (key, index and temp-dir suffix), the [[MediaRecord]] `kind` and
+    * fixture synthesizer of its textured corpus (production swaps
+    * [[assets]] for its landing-dir reader), its per-payload fingerprint
+    * `kernel` (the SAME real codec for the staged corpus and an
+    * admitted batch, so increment and base rows are comparable by
+    * construction), its staged corpus `table` and fingerprint `hashes`,
+    * its pair-overflow, index-overflow and stale-gauge names (literal:
+    * they show as `CollectMetrics` names in the plans), and its DuckDB
+    * fingerprint chain ending in `fp(doc_id, dhash)`. Every modality
+    * shares the banding geometry (8 × 7-bit blocks over a 56-bit
+    * fingerprint), so its pairs, probe [[index]] and oracles all derive
+    * from these facts: a new modality is one value in
+    * [[MediaModalities]]. Executor closures capture only `synth` or
+    * `kernel`, never the value — its [[Staged]] and [[ProbeIndex]]
+    * fields are driver state (transient: the value itself stays
+    * serializable). */
+  final class MediaModality(
+      val name: String,
+      kind: String,
+      synth: Long => Array[Byte],
+      kernel: Array[Byte] => Option[Long],
+      @transient val table: Staged,
+      @transient val hashes: Staged,
+      val pairOverflow: String,
+      val indexOverflow: String,
+      val staleGauge: String,
+      fpCtes: String) extends Serializable {
+
+    /** The textured corpus of `docs`: one `synth(asset id)` payload per
+      * owned or orphan asset id of each document row, synthesized
+      * executor-side (the
+      * [[graft.multimodal.MultimodalOps.imageTable]] shape). */
+    def assets(docs: DataFrame): Dataset[MediaRecord] = {
+      val spark = docs.sparkSession
+      import spark.implicits._
+      val (k, gen) = (kind, synth)
+      graft.multimodal.MultimodalOps.spreadForSynthesis(docs)
+        .as[(Long, String, String)]
+        .mapPartitions(_.flatMap { case (id, source, lang) =>
+          graft.multimodal.MultimodalOps.assetIdsOf(id).map(mid =>
+            MediaRecord(mid, k, gen(mid), Map("source" -> source, "lang" -> lang)))
+        })
+    }
+
+    /** [[assets]] staged to parquet once per corpus SNAPSHOT: served
+      * passes measure decode + hash over stored payloads, not
+      * synthesis. */
+    def stagedAssets(spark: SparkSession, sfDir: String): Dataset[MediaRecord] =
+      graft.multimodal.MultimodalOps.mediaAt(spark,
+        table.dir(sfDir)(assets(Fixtures.documents(spark, sfDir)).toDF()))
+
+    /** `(media_id, dhash)` of each payload through the `kernel` — its
+      * REAL codec decode into a 56-bit fingerprint — in one batched
+      * `mapPartitions` envelope: codec work stays in the scan task and
+      * one Long per asset crosses any later exchange. Payloads the
+      * kernel rejects (`None`: undecodable, short) drop per row — the
+      * corrupt fallback discipline. */
+    def fingerprint(media: Dataset[MediaRecord]): DataFrame = {
+      val spark = media.sparkSession
+      import spark.implicits._
+      val fp = kernel
+      media.mapPartitions(_.map(r => (r.media_id, fp(r.bytes))))
+        .toDF("media_id", "h")
+        .filter(col("h").isNotNull)
+        .select(col("media_id"), col("h").as("dhash"))
+    }
+
+    /** The fingerprints staged to parquet once per corpus SNAPSHOT — the
+      * media analog of the staged IVF index: codec decode is an INDEX
+      * BUILD, and every dup query (per-modality pairs, cross-modal
+      * reconciliation) reads `(media_id, dhash)` — 16 bytes per asset
+      * instead of the payload. Stamped like every staged artifact: an
+      * in-place corpus rewrite re-extracts. */
+    def stagedHashes(spark: SparkSession, sfDir: String): DataFrame =
+      hashes.read(spark, sfDir)(fingerprint(stagedAssets(spark, sfDir)))
+
+    /** The `<name>_dups` pairs `(media_a, media_b, hamming)`: the staged
+      * fingerprints through EXACTLY the [[docSimhashPairs]] skeleton
+      * ([[mediaHashPairs]]) — per-block bucketing,
+      * [[MaxBucketMembers]]-capped member groups with the overflow
+      * observed as `pairOverflow`, in-group pair enumeration, full
+      * 56-bit hamming verify, pigeonhole-complete at hamming ≤
+      * [[ImgMaxHamming]]. Candidate cost ∝ bucket sizes (never
+      * all-pairs); one Long per asset is shuffled; tombstoned assets
+      * drop out. */
+    def dups(spark: SparkSession, sfDir: String): DataFrame =
+      index.excludeTombstoned(spark, sfDir,
+        mediaHashPairs(stagedHashes(spark, sfDir), pairOverflow),
+        Seq("media_a", "media_b"))
+
+    /** The fingerprint probe index ([[mediaIndexOf]]). */
     @transient lazy val index: ProbeIndex[Dataset[MediaRecord]] = mediaIndexOf(this)
+
+    /** The `<name>_dups` oracle. */
+    def dupsOracle: String = mediaDupsOracle(fpCtes)
+
+    /** The `stream_<name>` oracle. */
+    def incrementalOracle: String = mediaCrossPairsOracle(fpCtes)
   }
 
-  val ImageModality: MediaModality = MediaModality("img",
-    graft.multimodal.MultimodalOps.stagedImageHashes,
-    graft.multimodal.MultimodalOps.imageDHash,
-    graft.multimodal.MultimodalOps.textureTable)
-  val AudioModality: MediaModality = MediaModality("wav",
-    graft.multimodal.MultimodalOps.stagedAudioHashes,
-    graft.multimodal.MultimodalOps.audioEnergyHash,
-    graft.multimodal.MultimodalOps.audioTable)
-  val VideoModality: MediaModality = MediaModality("gif",
-    graft.multimodal.MultimodalOps.stagedVideoHashes,
-    graft.multimodal.MultimodalOps.videoTemporalHash,
-    graft.multimodal.MultimodalOps.videoTable)
+  // Each modality's oracle chain re-derives every payload sample
+  // arithmetically (lossless codecs, integer ops), so the fingerprint,
+  // the banding, the cap and the hamming verify mirror the operator
+  // exactly. A chain's internal `doc_id` column is bound to the MEDIA id
+  // (the [[duckMediaIds]] universe).
+
+  /** Images: textured PNGs and their perceptual dHash. The chain's
+    * pixels follow synthTexturePng mod 256; `g = doc_id // 8` matches
+    * the engine's `floorMod(id / 8, 2^20)` exactly on the id domain
+    * [0, 2^23) that the texture synthesizers ENFORCE
+    * (requireTextureIdDomain) — a wider domain fails the build loudly
+    * instead of flipping this hash. Image keeps the unsuffixed index
+    * metric and gauge names (round-artifact continuity with r14's
+    * first recording). */
+  val ImageModality: MediaModality = new MediaModality("img", "image",
+    graft.multimodal.MultimodalOps.synthTexturePng,
+    graft.multimodal.MultimodalOps.imageDHashOf,
+    new Staged("graft_media_textures_"),
+    new Staged("graft_media_fp_", builds = mediaHashBuilds),
+    "img_dhash_block_overflow", "media_band_idx_overflow",
+    "media.index_stale_fraction",
+    s"""base AS (
+        SELECT mid AS doc_id, mid // 8 AS g, (mid % 8) * 4 AS spike
+        FROM ($duckMediaIds)),
+      px AS (
+        SELECT b.doc_id, x.x, y.y,
+               ((b.g % 5) * x.x * x.x + ((b.g // 5) % 5) * y.y * y.y
+                + ((b.g // 25) % 3) * x.x * y.y + (b.g % 7) * (x.x + y.y)
+                + b.g * 3
+                + CASE WHEN x.x = b.spike AND y.y = b.spike THEN 40 ELSE 0 END)
+               % 256 AS gray
+        FROM base b, range(0, 32) x(x), range(0, 32) y(y)),
+      cells AS (SELECT doc_id, y // 4 AS cy, x // 4 AS cx, sum(gray) AS s
+                FROM px GROUP BY 1, 2, 3),
+      fp AS (SELECT l.doc_id,
+                    coalesce(sum(CASE WHEN l.s > r.s
+                                      THEN 1::BIGINT << (l.cy * 7 + l.cx)
+                                      ELSE 0 END), 0) AS dhash
+             FROM cells l JOIN cells r
+               ON r.doc_id = l.doc_id AND r.cy = l.cy AND r.cx = l.cx + 1
+             GROUP BY l.doc_id)""")
+
+  /** Audio: textured PCM16 WAVs and their acoustic energy fingerprint;
+    * the chain's samples follow synthTextureWav. */
+  val AudioModality: MediaModality = new MediaModality("wav", "audio",
+    graft.multimodal.MultimodalOps.synthTextureWav,
+    graft.multimodal.MultimodalOps.audioEnergyHashOf,
+    new Staged("graft_media_audio_"),
+    new Staged("graft_media_fp_", builds = mediaHashBuilds),
+    "wav_hash_block_overflow", "media_band_idx_wav_overflow",
+    "media.index_stale_fraction_wav",
+    s"""abase AS (
+        SELECT mid AS doc_id, mid // 8 AS g, (mid % 8) * 50 AS t0
+        FROM ($duckMediaIds)),
+      samp AS (
+        SELECT b.doc_id, t.t // 8 AS w,
+               abs((((b.g * 2654435761) % 1024) * t.t * t.t
+                    + (((b.g * 2654435761) // 1024) % 1024) * t.t
+                    + (((b.g * 2654435761) // 1048576) % 2048)) % 2048 - 1024
+                   + CASE WHEN t.t = b.t0 THEN 500 ELSE 0 END) AS av
+        FROM abase b, range(0, 456) t(t)),
+      energy AS (SELECT doc_id, w, sum(av) AS e
+                 FROM samp GROUP BY 1, 2),
+      fp AS (SELECT l.doc_id,
+                    coalesce(sum(CASE WHEN l.e > r.e
+                                      THEN 1::BIGINT << l.w
+                                      ELSE 0 END), 0) AS dhash
+             FROM energy l JOIN energy r
+               ON r.doc_id = l.doc_id AND r.w = l.w + 1
+             GROUP BY l.doc_id)""")
+
+  /** Video: textured animated GIFs and their temporal energy
+    * fingerprint; the chain's frame pixels follow synthTextureGif mod
+    * 256 (GIF is lossless over indexed rasters). */
+  val VideoModality: MediaModality = new MediaModality("gif", "video",
+    graft.multimodal.MultimodalOps.synthTextureGif,
+    graft.multimodal.MultimodalOps.videoTemporalHashOf,
+    new Staged("graft_media_video_"),
+    new Staged("graft_media_fp_", builds = mediaHashBuilds),
+    "gif_hash_block_overflow", "media_band_idx_gif_overflow",
+    "media.index_stale_fraction_gif",
+    s"""vbase AS (
+        SELECT mid AS doc_id, mid // 8 AS g, mid % 8 AS p
+        FROM ($duckMediaIds)),
+      vpx AS (
+        SELECT b.doc_id, f.f,
+               ((((b.g * 2654435761) % 8) + 1) * f.f * f.f
+                + ((((b.g * 2654435761) // 8) % 8) + 1) * f.f * (x.x + 1)
+                + (((b.g * 2654435761) // 64) % 8) * x.x * y.y
+                + (((b.g * 2654435761) // 512) % 8) * (y.y + 1) * f.f
+                + b.g * 3
+                + CASE WHEN f.f = b.p * 8 THEN 40 ELSE 0 END)
+               % 256 AS gray
+        FROM vbase b, range(0, 57) f(f), range(0, 8) x(x), range(0, 8) y(y)),
+      venergy AS (SELECT doc_id, f, sum(gray) AS e
+                  FROM vpx GROUP BY 1, 2),
+      fp AS (SELECT l.doc_id,
+                    coalesce(sum(CASE WHEN l.e > r.e
+                                      THEN 1::BIGINT << l.f
+                                      ELSE 0 END), 0) AS dhash
+             FROM venergy l JOIN venergy r
+               ON r.doc_id = l.doc_id AND r.f = l.f + 1
+             GROUP BY l.doc_id)""")
 
   val MediaModalities: Seq[MediaModality] =
     Seq(ImageModality, AudioModality, VideoModality)
@@ -1429,31 +1549,20 @@ object DedupOps {
       protected def build(spark: SparkSession, sfDir: String): DataFrame =
         mediaRows(capBuckets(
           mediaBlocksOf(m.stagedHashes(spark, sfDir).filter(!isNewMedia)),
-          Seq(col("blk"), col("blk_val")), col("media_id"), mediaOverflowMetric(m)))
+          Seq(col("blk"), col("blk_val")), col("media_id"), m.indexOverflow))
       protected def prepare(spark: SparkSession, batch: Dataset[MediaRecord]) =
         m.fingerprint(batch)
       protected def rowsOf(fp: DataFrame): DataFrame = mediaRows(mediaBlocksOf(fp))
       override protected def baseCount(staged: DataFrame): Long =
         staged.select("media_id").distinct().count()
-      protected def staleGauge: String = mediaStaleGauge(m)
+      protected def staleGauge: String = m.staleGauge
     }
-
-  /** Image keeps the unsuffixed metric/gauge names (round-artifact
-    * continuity with r14's first recording); the other modalities
-    * suffix theirs. */
-  private def mediaOverflowMetric(m: MediaModality): String =
-    if (m.name == "img") "media_band_idx_overflow"
-    else s"media_band_idx_${m.name}_overflow"
-
-  private[graft] def mediaStaleGauge(m: MediaModality): String =
-    if (m.name == "img") "media.index_stale_fraction"
-    else s"media.index_stale_fraction_${m.name}"
 
   /** The cap premise for the media stream key's oracle —
     * [[assertTextProbeCapPremise]] for the modality's [[MediaModality.index]]:
     * `Verify` calls this before dumping `stream_img`. */
   def assertMediaProbeCapPremise(spark: SparkSession, sfDir: String,
-      m: MediaModality = ImageModality): Unit =
+      m: MediaModality): Unit =
     requireCapPremise(s"media (${m.name})", "media",
       mediaBlocksOf(m.stagedHashes(spark, sfDir)), "blk", "blk_val")
 
@@ -1463,7 +1572,7 @@ object DedupOps {
     * the build / batch-serve / stream-serve triad for the media side
     * (text: `stream_lsh`; vectors: `stream_idx`/`ann_seg`). The batch's
     * payloads decode through the REAL codec exactly as the index build
-    * decodes the corpus ([[graft.multimodal.MultimodalOps.imageDHash]]),
+    * decodes the corpus ([[MediaModality.fingerprint]]),
     * CHECKPOINTED to scalars so the decode runs once per batch (its two
     * consumers: the distinct-`mp` collect and the served join); then
     * the candidate probe scans the modality's [[MediaModality.index]] at only the
@@ -1476,11 +1585,10 @@ object DedupOps {
     * Only cross (new × base) pairs emerge, so each arriving asset's
     * verified dups depend on (that asset, the frozen base) alone —
     * micro-batch-split independent; unioned over any split this equals
-    * the cross-pair slice of [[imageDHashDups]] when bucket caps don't
+    * the cross-pair slice of [[MediaModality.dups]] when bucket caps don't
     * bind (spec-locked; see [[assertMediaProbeCapPremise]]). */
   def incrementalMediaDedupBatch(spark: SparkSession, sfDir: String,
-      batch: Dataset[MediaRecord],
-      m: MediaModality = ImageModality): DataFrame = {
+      batch: Dataset[MediaRecord], m: MediaModality): DataFrame = {
     // one checkpoint dir per (corpus, modality, JVM), overwritten per
     // batch — the incrementalDedupBatch leak-bound discipline
     val fpDir = nextCandDir(s"$sfDir|${m.name}",
@@ -1514,7 +1622,7 @@ object DedupOps {
       .join(broadcast(incBlocks), Seq("blk", "blk_val"))
       .select(col("new_media"), col("media_id").as("base_media"),
         expr("bit_count(nh ^ dhash)").as("hamming"))
-      // threshold BEFORE the dedup exchange (the imageHashPairs
+      // threshold BEFORE the dedup exchange (the mediaHashPairs
       // discipline: hamming is a pair function)
       .filter(col("hamming") <= ImgMaxHamming)
       .distinct() // a pair can share multiple blocks
@@ -2137,18 +2245,6 @@ object DedupOps {
   private def liveClusterDelta(collapsed: DataFrame): DataFrame =
     collapsed.filter(!coalesce(col("deleted"), lit(false))).drop("deleted")
 
-  /** [[mergeClusterIncrement]] wired to the staged cross-modal
-    * assignment — the ingestion-cadence entry point: an admitted
-    * increment's new (already-linked) doc-pair edges fold into
-    * [[stagedCrossModalGroups]] without re-running the full modality
-    * square or the corpus-wide fixpoint. The result is the SERVING view
-    * for the interval between snapshot re-stages; the staged artifact
-    * itself re-derives on its own cadence (the compaction contract all
-    * the staged indexes share). */
-  def mergeCrossModalIncrement(spark: SparkSession, sfDir: String,
-      newEdges: DataFrame): DataFrame =
-    mergeClusterIncrement(stagedCrossModalGroups(spark, sfDir), newEdges)
-
   // ---------------------------------------------------------------------
   // Cross-modal cluster overlay lifecycle — the append / staleness /
   // re-stage contract the other three index families have
@@ -2512,7 +2608,8 @@ object DedupOps {
   // Driver-contract wiring
   // ---------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // round 13: the text dup keys serve from the staged signature index
     // (tokenize/minhash/shingle once per corpus snapshot — the staged
     // media-fingerprint discipline applied to text)
@@ -2528,15 +2625,6 @@ object DedupOps {
     "doc_simhash" -> ((s, d) => docSimhash(Fixtures.documents(s, d))),
     "sim_pairs" -> ((s, d) => TextIndex.excludeTombstoned(s, d,
       docSimhashPairs(Fixtures.documents(s, d)), Seq("doc_a", "doc_b"))),
-    // round 11: perceptual image-hash near-dups over the textured media
-    // corpus ("img_dups" short for the bench line budget)
-    "img_dups" -> ((s, d) => imageDHashDups(s, d)),
-    // round 11: acoustic-fingerprint near-dups over the textured audio
-    // corpus ("wav_dups" short for the bench line budget)
-    "wav_dups" -> ((s, d) => audioHashDups(s, d)),
-    // round 12: temporal-fingerprint near-dups over the textured video
-    // corpus — the modality square's last side
-    "gif_dups" -> ((s, d) => videoHashDups(s, d)),
     // round 12: cross-modal dup reconciliation — text + image + audio
     // dup graphs merged over the doc↔media link, one canonical elected
     "xmodal" -> ((s, d) => crossModalKeepBest(s, d)),
@@ -2551,7 +2639,12 @@ object DedupOps {
     "incr_dedup" -> ((s, d) => stagedIncrementalDedup(s, d)),
     // round 19: takedown through the text probe-index tombstones — the
     // ann_del sibling for the dedup gate
-    "lsh_del" -> ((s, d) => lshDeleteServe(s, d)))
+    "lsh_del" -> ((s, d) => lshDeleteServe(s, d))) ++
+    // rounds 11–12: per-modality near-dups over the textured media
+    // corpora ("img_dups"/"wav_dups"/"gif_dups", short for the bench
+    // line budget)
+    MediaModalities.map(m =>
+      s"${m.name}_dups" -> ((s: SparkSession, d: String) => m.dups(s, d)))
 
   private val DUCK_SHINGLES =
     """list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)])"""
@@ -2684,39 +2777,6 @@ object DedupOps {
           SELECT media_a, media_b, hamming FROM pairs
           WHERE hamming <= $ImgMaxHamming"""
 
-  /** The `img_dups` fingerprint chain: every pixel of the textured corpus
-    * re-derives arithmetically (integer ops mod 256; PNG is lossless —
-    * the synthTexturePng contract), so the pooled dHash, the banding,
-    * the cap, and the hamming verify all mirror the operator exactly.
-    * `g = doc_id // 8` matches the engine's `floorMod(id / 8, 2^20)`
-    * exactly on the id domain [0, 2^23) that the texture synthesizers
-    * ENFORCE (requireTextureIdDomain) — a wider domain fails the build
-    * loudly instead of flipping this hash. The chains' internal
-    * `doc_id` column is bound to the MEDIA id (the [[duckMediaIds]]
-    * universe); the generating doc rides along only where increment
-    * flags need it. */
-  private def imgFpCtes: String =
-    s"""base AS (
-            SELECT mid AS doc_id, mid // 8 AS g, (mid % 8) * 4 AS spike
-            FROM ($duckMediaIds)),
-          px AS (
-            SELECT b.doc_id, x.x, y.y,
-                   ((b.g % 5) * x.x * x.x + ((b.g // 5) % 5) * y.y * y.y
-                    + ((b.g // 25) % 3) * x.x * y.y + (b.g % 7) * (x.x + y.y)
-                    + b.g * 3
-                    + CASE WHEN x.x = b.spike AND y.y = b.spike THEN 40 ELSE 0 END)
-                   % 256 AS gray
-            FROM base b, range(0, 32) x(x), range(0, 32) y(y)),
-          cells AS (SELECT doc_id, y // 4 AS cy, x // 4 AS cx, sum(gray) AS s
-                    FROM px GROUP BY 1, 2, 3),
-          fp AS (SELECT l.doc_id,
-                        coalesce(sum(CASE WHEN l.s > r.s
-                                          THEN 1::BIGINT << (l.cy * 7 + l.cx)
-                                          ELSE 0 END), 0) AS dhash
-                 FROM cells l JOIN cells r
-                   ON r.doc_id = l.doc_id AND r.cy = l.cy AND r.cx = l.cx + 1
-                 GROUP BY l.doc_id)"""
-
   /** The `stream_img`/`stream_wav`/`stream_gif` oracle shape: a
     * modality's near-dup pairs restricted to CROSS (new × base) pairs
     * under the md5-bucket increment — the streamed union over any
@@ -2727,7 +2787,7 @@ object DedupOps {
     * `fpCtes` is the modality's arithmetic fingerprint chain — the SAME
     * chain and banding its batch dup oracle uses, so the two can never
     * drift. */
-  private def mediaIncrementalOracle(fpCtes: String): String =
+  private def mediaCrossPairsOracle(fpCtes: String): String =
     s"""WITH ${mediaPairCtes(fpCtes)},
           mids AS ($duckMediaIds),
           flag AS (SELECT doc_id,
@@ -2743,69 +2803,6 @@ object DedupOps {
           JOIN mids mb ON mb.mid = p.media_b
           JOIN flag fb ON fb.doc_id = mb.src
           WHERE fa.is_new <> fb.is_new AND p.hamming <= $ImgMaxHamming"""
-
-  private[graft] def imgIncrementalOracle: String =
-    mediaIncrementalOracle(imgFpCtes)
-
-  private[graft] def wavIncrementalOracle: String =
-    mediaIncrementalOracle(wavFpCtes)
-
-  private[graft] def gifIncrementalOracle: String =
-    mediaIncrementalOracle(gifFpCtes)
-
-  /** The `wav_dups` fingerprint chain: every PCM sample re-derives
-    * arithmetically (integer ops; PCM16 is lossless — the
-    * synthTextureWav contract), so the windowed energies, the
-    * fingerprint, and the banded pairs mirror the operator exactly. */
-  private def wavFpCtes: String =
-    s"""abase AS (
-            SELECT mid AS doc_id, mid // 8 AS g, (mid % 8) * 50 AS t0
-            FROM ($duckMediaIds)),
-          samp AS (
-            SELECT b.doc_id, t.t // 8 AS w,
-                   abs((((b.g * 2654435761) % 1024) * t.t * t.t
-                        + (((b.g * 2654435761) // 1024) % 1024) * t.t
-                        + (((b.g * 2654435761) // 1048576) % 2048)) % 2048 - 1024
-                       + CASE WHEN t.t = b.t0 THEN 500 ELSE 0 END) AS av
-            FROM abase b, range(0, 456) t(t)),
-          energy AS (SELECT doc_id, w, sum(av) AS e
-                     FROM samp GROUP BY 1, 2),
-          fp AS (SELECT l.doc_id,
-                        coalesce(sum(CASE WHEN l.e > r.e
-                                          THEN 1::BIGINT << l.w
-                                          ELSE 0 END), 0) AS dhash
-                 FROM energy l JOIN energy r
-                   ON r.doc_id = l.doc_id AND r.w = l.w + 1
-                 GROUP BY l.doc_id)"""
-
-  /** The `gif_dups` fingerprint chain: every frame pixel re-derives
-    * arithmetically (integer ops mod 256; GIF is lossless over indexed
-    * rasters — the synthTextureGif contract), so the per-frame
-    * energies, the temporal fingerprint, and the banded pairs mirror
-    * the operator exactly. */
-  private def gifFpCtes: String =
-    s"""vbase AS (
-            SELECT mid AS doc_id, mid // 8 AS g, mid % 8 AS p
-            FROM ($duckMediaIds)),
-          vpx AS (
-            SELECT b.doc_id, f.f,
-                   ((((b.g * 2654435761) % 8) + 1) * f.f * f.f
-                    + ((((b.g * 2654435761) // 8) % 8) + 1) * f.f * (x.x + 1)
-                    + (((b.g * 2654435761) // 64) % 8) * x.x * y.y
-                    + (((b.g * 2654435761) // 512) % 8) * (y.y + 1) * f.f
-                    + b.g * 3
-                    + CASE WHEN f.f = b.p * 8 THEN 40 ELSE 0 END)
-                   % 256 AS gray
-            FROM vbase b, range(0, 57) f(f), range(0, 8) x(x), range(0, 8) y(y)),
-          venergy AS (SELECT doc_id, f, sum(gray) AS e
-                      FROM vpx GROUP BY 1, 2),
-          fp AS (SELECT l.doc_id,
-                        coalesce(sum(CASE WHEN l.e > r.e
-                                          THEN 1::BIGINT << l.f
-                                          ELSE 0 END), 0) AS dhash
-                 FROM venergy l JOIN venergy r
-                   ON r.doc_id = l.doc_id AND r.f = l.f + 1
-                 GROUP BY l.doc_id)"""
 
   /** Cross-modal reconciliation oracle: the text, image, and audio pair
     * oracles ride as parenthesized subqueries (each scopes its own WITH
@@ -2849,11 +2846,8 @@ object DedupOps {
         tp AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM (
           WITH $duckVerifiedCtes SELECT doc_a, doc_b FROM dup)),
         mp AS MATERIALIZED (
-          SELECT media_a, media_b FROM (${mediaDupsOracle(imgFpCtes)})
-          UNION ALL
-          SELECT media_a, media_b FROM (${mediaDupsOracle(wavFpCtes)})
-          UNION ALL
-          SELECT media_a, media_b FROM (${mediaDupsOracle(gifFpCtes)})),
+          ${MediaModalities.map(m => s"SELECT media_a, media_b FROM (${m.dupsOracle})")
+              .mkString("\n          UNION ALL\n          ")}),
         mp2 AS (SELECT la.ld AS a, lb.ld AS b
                 FROM mp JOIN xlink la ON mp.media_a = la.media_id
                         JOIN xlink lb ON mp.media_b = lb.media_id),
@@ -2950,9 +2944,6 @@ object DedupOps {
                       ON a.blk = b.blk AND a.blk_val = b.blk_val AND a.doc_id < b.doc_id
                       AND ${duckCap("a.rk")} AND ${duckCap("b.rk")})
           SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= $MaxHamming""",
-    "img_dups" -> mediaDupsOracle(imgFpCtes),
-    "wav_dups" -> mediaDupsOracle(wavFpCtes),
-    "gif_dups" -> mediaDupsOracle(gifFpCtes),
     "lsh_dups" ->
       s"""WITH $duckVerifiedCtes
           SELECT doc_a, doc_b, n_bands, jaccard FROM dup""",
@@ -3010,5 +3001,6 @@ object DedupOps {
                  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
                  CAST(len(list_distinct(a.sh || b.sh)) AS DOUBLE) AS jaccard
           FROM ranked a JOIN ranked b ON a.sig = b.sig AND a.doc_id < b.doc_id
-                                      AND ${duckCap("a.rk")} AND ${duckCap("b.rk")}""")
+                                      AND ${duckCap("a.rk")} AND ${duckCap("b.rk")}""") ++
+    MediaModalities.map(m => s"${m.name}_dups" -> m.dupsOracle)
 }

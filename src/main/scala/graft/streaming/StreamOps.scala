@@ -681,11 +681,10 @@ object StreamOps {
     * Deterministic WITHOUT the one-batch premise: only cross
     * (new × base) pairs emerge, so any micro-batch split yields the
     * same union — equal to the cross-pair slice of the batch
-    * [[graft.operators.DedupOps.imageDHashDups]] (asserted in tests;
+    * [[graft.operators.DedupOps.MediaModality.dups]] (asserted in tests;
     * the oracle is that slice in SQL). */
   def streamMediaDedup(spark: SparkSession, sfDir: String,
-      modality: graft.operators.DedupOps.MediaModality =
-        graft.operators.DedupOps.ImageModality,
+      modality: graft.operators.DedupOps.MediaModality,
       // the gate's production output leg — verified pairs additionally
       // publish as LINKED canonical (doc_a, doc_b) edges into the shared
       // edge topic (see streamTextDedup's publishEdgesTo)
@@ -706,7 +705,7 @@ object StreamOps {
       // materialization job purely to answer "n > 0" (opt r20)
       if (!batch.isEmpty) {
         writeGatePairs(graft.operators.DedupOps.incrementalMediaDedupBatch(
-          spark, sfDir, modality.table(batch), modality),
+          spark, sfDir, modality.assets(batch), modality),
           sink.epoch(epochId), publishEdgesTo)(res =>
           graft.operators.DedupOps.crossModalEdgesOf(
             spark.range(0).select(col("id").as("doc_a"), col("id").as("doc_b")),
@@ -1093,7 +1092,8 @@ object StreamOps {
   // stream-vs-batch equivalence suite is the second, independent lock)
   // ---------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     "stream_tumbling" -> ((s, d) => streamTumblingWindow(s, d)),
     "stream_session" -> ((s, d) => streamSessionWindow(s, d)),
     "stream_dedup" -> ((s, d) => streamDedupWatermark(s, d)),
@@ -1125,21 +1125,19 @@ object StreamOps {
     // streaming ingestion dedup against the staged text-signature
     // index (round 13) — "stream_lsh" short for the bench-line budget
     "stream_lsh" -> ((s, d) => streamTextDedup(s, d)),
-    // streaming media ingestion dedup against the staged fingerprint
-    // indexes (round 14) — the media legs of the triad, one per
-    // modality through the ONE modality-generic implementation
-    "stream_img" -> ((s, d) => streamMediaDedup(s, d)),
-    "stream_wav" -> ((s, d) =>
-      streamMediaDedup(s, d, graft.operators.DedupOps.AudioModality)),
-    "stream_gif" -> ((s, d) =>
-      streamMediaDedup(s, d, graft.operators.DedupOps.VideoModality)),
     // streaming cross-modal reconciliation — the cluster layer's
     // stream-serve leg (round 15): all four gates' verified cross edges
     // fold into the staged base clusters per micro-batch
     "stream_xm" -> ((s, d) => streamCrossModalMerge(s, d)),
     // streaming decontamination gate (round 16): arriving docs checked
     // against the staged benchmark-gram index before admission
-    "stream_dc" -> ((s, d) => streamDecontaminate(s, d)))
+    "stream_dc" -> ((s, d) => streamDecontaminate(s, d))) ++
+    // streaming media ingestion dedup against the staged fingerprint
+    // indexes (round 14) — the media legs of the triad, one per
+    // modality through the ONE modality-generic implementation
+    graft.operators.DedupOps.MediaModalities.map(m =>
+      s"stream_${m.name}" ->
+        ((s: SparkSession, d: String) => streamMediaDedup(s, d, m)))
 
   /** All six streaming keys are oracle-backed: `stream_dlq_split` via
     * its sink files (covering the full foreachBatch fan-out),
@@ -1215,16 +1213,6 @@ object StreamOps {
     // whole corpus — incr_dedup's oracle verbatim, zero drift
     "stream_lsh" ->
       graft.operators.DedupOps.oracle("incr_dedup"),
-    // stream_img/wav/gif: split-independent (cross pairs only), so each
-    // streamed union equals the cross-pair slice of its modality's
-    // batch dedup — shared builders over the SAME arithmetic chains the
-    // batch oracles use, zero drift
-    "stream_img" ->
-      graft.operators.DedupOps.imgIncrementalOracle,
-    "stream_wav" ->
-      graft.operators.DedupOps.wavIncrementalOracle,
-    "stream_gif" ->
-      graft.operators.DedupOps.gifIncrementalOracle,
     // stream_xm: split-independent (the CapSpec-locked merge-fold
     // property over any split of the edge stream), so the served
     // election equals the from-scratch closure over every edge except
@@ -1237,5 +1225,11 @@ object StreamOps {
     // set), so the streamed union equals the batch detector over the
     // whole corpus — decontam's oracle verbatim, zero drift
     "stream_dc" ->
-      graft.operators.DedupOps.oracle("decontam"))
+      graft.operators.DedupOps.oracle("decontam")) ++
+    // stream_img/wav/gif: split-independent (cross pairs only), so each
+    // streamed union equals the cross-pair slice of its modality's
+    // batch dedup — shared builders over the SAME arithmetic chains the
+    // batch oracles use, zero drift
+    graft.operators.DedupOps.MediaModalities.map(m =>
+      s"stream_${m.name}" -> m.incrementalOracle)
 }

@@ -119,7 +119,7 @@ class CapSpec extends SparkTestBase {
     val mega = (0L until ClusterSize.toLong)
       .map(i => (i, 0x00aa55aa55aa55L)).toDF("media_id", "dhash")
     val (n, overflow) = observedMetric("img_dhash_block_overflow") {
-      DedupOps.imageHashPairs(mega).count()
+      DedupOps.mediaHashPairs(mega, DedupOps.ImageModality.pairOverflow).count()
     }
     assert(n === Cap.toLong * (Cap - 1) / 2) // all at hamming 0
     assert(overflow === (ClusterSize - Cap).toLong * DedupOps.ImgHashBlocks)
@@ -131,7 +131,7 @@ class CapSpec extends SparkTestBase {
     val mega = (0L until ClusterSize.toLong)
       .map(i => (i, 0x0055aa55aa55aaL)).toDF("media_id", "dhash")
     val (n, overflow) = observedMetric("gif_hash_block_overflow") {
-      DedupOps.imageHashPairs(mega, "gif_hash_block_overflow").count()
+      DedupOps.mediaHashPairs(mega, "gif_hash_block_overflow").count()
     }
     assert(n === Cap.toLong * (Cap - 1) / 2) // all at hamming 0
     assert(overflow === (ClusterSize - Cap).toLong * DedupOps.ImgHashBlocks)

@@ -565,8 +565,8 @@ class PipelineOpsSpec extends SparkTestBase {
     }
     // order-independent: an inventory sweep in the same JVM may have
     // staged the table already — start from a cold memo
-    MultimodalOps.TextureTable.forget()
-    val builds = MultimodalOps.TextureTable.builds.get()
+    DedupOps.ImageModality.table.forget()
+    val builds = DedupOps.ImageModality.table.builds.get()
     val hashes = MultimodalOps.imageDHash(
       MultimodalOps.stagedTextureTable(spark, sfDir)).collect()
       .map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("dhash")).toMap
@@ -576,10 +576,10 @@ class PipelineOpsSpec extends SparkTestBase {
     ids.foreach(id => assert(hashes(id) === replicaHash(id), s"media $id"))
     // staged: a second read synthesizes nothing new
     MultimodalOps.imageDHash(MultimodalOps.stagedTextureTable(spark, sfDir)).count()
-    assert(MultimodalOps.TextureTable.builds.get() === builds + 1)
+    assert(DedupOps.ImageModality.table.builds.get() === builds + 1)
     // the dedup op surfaces every same-group pair (spike edits keep
     // hamming within the pigeonhole-complete threshold on this corpus)
-    val pairs = DedupOps.imageDHashDups(spark, sfDir).collect()
+    val pairs = DedupOps.ImageModality.dups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
     val wanted = for {
       a <- ids; b <- ids
@@ -603,18 +603,18 @@ class PipelineOpsSpec extends SparkTestBase {
       }
       (0 until 56).map(w => if (e(w) > e(w + 1)) 1L << w else 0L).sum
     }
-    MultimodalOps.AudioTable.forget() // order-independent (see above)
-    val builds = MultimodalOps.AudioTable.builds.get()
-    val hashes = MultimodalOps.audioEnergyHash(
-      MultimodalOps.stagedAudioTable(spark, sfDir)).collect()
+    DedupOps.AudioModality.table.forget() // order-independent (see above)
+    val builds = DedupOps.AudioModality.table.builds.get()
+    val hashes = DedupOps.AudioModality.fingerprint(
+      DedupOps.AudioModality.stagedAssets(spark, sfDir)).collect()
       .map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("dhash")).toMap
     val ids = docs.select("doc_id").collect().map(_.getLong(0))
       .flatMap(assetIdsReplica)
     assert(hashes.keySet === ids.toSet)
     ids.foreach(id => assert(hashes(id) === replicaHash(id), s"clip $id"))
-    MultimodalOps.audioEnergyHash(MultimodalOps.stagedAudioTable(spark, sfDir)).count()
-    assert(MultimodalOps.AudioTable.builds.get() === builds + 1)
-    val pairs = DedupOps.audioHashDups(spark, sfDir).collect()
+    DedupOps.AudioModality.fingerprint(DedupOps.AudioModality.stagedAssets(spark, sfDir)).count()
+    assert(DedupOps.AudioModality.table.builds.get() === builds + 1)
+    val pairs = DedupOps.AudioModality.dups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
     val wanted = for {
       a <- ids; b <- ids
@@ -637,21 +637,21 @@ class PipelineOpsSpec extends SparkTestBase {
           g * 3 + (if (f == p * 8) 40L else 0L)) % 256
       (0 until 56).map(w => if (e(w) > e(w + 1)) 1L << w else 0L).sum
     }
-    MultimodalOps.VideoTable.forget() // order-independent (see above)
-    val builds = MultimodalOps.VideoTable.builds.get()
-    val hashes = MultimodalOps.videoTemporalHash(
-      MultimodalOps.stagedVideoTable(spark, sfDir)).collect()
+    DedupOps.VideoModality.table.forget() // order-independent (see above)
+    val builds = DedupOps.VideoModality.table.builds.get()
+    val hashes = DedupOps.VideoModality.fingerprint(
+      DedupOps.VideoModality.stagedAssets(spark, sfDir)).collect()
       .map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("dhash")).toMap
     val ids = docs.select("doc_id").collect().map(_.getLong(0))
       .flatMap(assetIdsReplica)
     assert(hashes.keySet === ids.toSet)
     ids.foreach(id => assert(hashes(id) === replicaHash(id), s"clip $id"))
     // staged: a second read synthesizes nothing new
-    MultimodalOps.videoTemporalHash(MultimodalOps.stagedVideoTable(spark, sfDir)).count()
-    assert(MultimodalOps.VideoTable.builds.get() === builds + 1)
+    DedupOps.VideoModality.fingerprint(DedupOps.VideoModality.stagedAssets(spark, sfDir)).count()
+    assert(DedupOps.VideoModality.table.builds.get() === builds + 1)
     // the dedup op surfaces every same-group pair (the full-frame spike
     // moves ≤4 bits by construction — two members differ on ≤2 frames)
-    val pairs = DedupOps.videoHashDups(spark, sfDir).collect()
+    val pairs = DedupOps.VideoModality.dups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
     val wanted = for {
       a <- ids; b <- ids
@@ -722,8 +722,8 @@ class PipelineOpsSpec extends SparkTestBase {
     // one new edge between the two clusters: the merged assignment
     // fuses exactly them (label = min id = min cluster), every other
     // cluster's rows pass through bit-identical
-    val after = DedupOps
-      .mergeCrossModalIncrement(spark, sfDir, Seq((a, b)).toDF("a", "b"))
+    val after = DedupOps.mergeClusterIncrement(
+        DedupOps.stagedCrossModalGroups(spark, sfDir), Seq((a, b)).toDF("a", "b"))
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster"),
         r.getAs[Int]("is_canonical"), r.getAs[Long]("cluster_size")))
@@ -745,7 +745,7 @@ class PipelineOpsSpec extends SparkTestBase {
       if (mid >= (1L << 22) + 16000) None
       else if (mid >= (1L << 21) + 8000) Some((mid - ((1L << 21) + 8000)) * 2)
       else Some(mid - (1L << 20))
-    val vids = DedupOps.videoHashDups(spark, sfDir).collect()
+    val vids = DedupOps.VideoModality.dups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b")))
     assert(vids.nonEmpty, "fixture must contain video near-dups")
     val byDoc = DedupOps.crossModalKeepBest(spark, sfDir).collect()
@@ -859,7 +859,7 @@ class PipelineOpsSpec extends SparkTestBase {
     def mediaOf(id: Long) = Seq(id).toDS().map(i => MediaRecord(
       i, "img", MultimodalOps.synthTexturePng(i), Map.empty[String, String]))
     def hits(s: org.apache.spark.sql.SparkSession): Long = DedupOps
-      .incrementalMediaDedupBatch(s, sfDir, mediaOf(920001L))
+      .incrementalMediaDedupBatch(s, sfDir, mediaOf(920001L), DedupOps.ImageModality)
       .filter(col("base_media") === 920000L).count()
     assert(hits(spark) === 0L)
     assert(DedupOps.ImageModality.index.append(spark, sfDir, mediaOf(920000L)) === 1L)
@@ -924,7 +924,8 @@ class PipelineOpsSpec extends SparkTestBase {
     // novel vocabulary + a texture group no corpus asset occupies:
     // the gate passes the arrival
     assert(DedupOps.incrementalDedupBatch(spark, sfDir, doc(910000L)).count() === 0)
-    assert(DedupOps.incrementalMediaDedupBatch(spark, sfDir, media(910000L))
+    assert(DedupOps.incrementalMediaDedupBatch(spark, sfDir, media(910000L),
+      DedupOps.ImageModality)
       .filter(col("base_media") === 910000L).count() === 0)
     // ADMIT the survivors
     assert(DedupOps.TextIndex.append(spark, sfDir, doc(910000L)) === 1L)
@@ -936,7 +937,8 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(textHits.length === 1 &&
       textHits(0).getAs[Long]("base_doc") === 910000L &&
       textHits(0).getAs[Double]("jaccard") === 1.0)
-    assert(DedupOps.incrementalMediaDedupBatch(spark, sfDir, media(910001L))
+    assert(DedupOps.incrementalMediaDedupBatch(spark, sfDir, media(910001L),
+      DedupOps.ImageModality)
       .filter(col("base_media") === 910000L).count() === 1L)
     // leave the suite's staged indexes clean for later tests
     DedupOps.TextIndex.drop()
@@ -1038,7 +1040,7 @@ class PipelineOpsSpec extends SparkTestBase {
     def media(id: Long) = Seq(id).toDS().map(i => MediaRecord(
       i, "img", MultimodalOps.synthTexturePng(i), Map.empty[String, String]))
     def hits(): Long = DedupOps
-      .incrementalMediaDedupBatch(spark, sfDir, media(970001L))
+      .incrementalMediaDedupBatch(spark, sfDir, media(970001L), DedupOps.ImageModality)
       .filter(col("base_media") === 970000L).count()
     assert(DedupOps.ImageModality.index.append(spark, sfDir, media(970000L)) === 1L)
     assert(hits() === 1L)
@@ -1048,18 +1050,18 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(DedupOps.ImageModality.index.append(spark, sfDir, media(970000L)) === 1L)
     assert(hits() === 0L, "tombstone must win regardless of append order")
     // the batch key stops LISTING a tombstoned corpus asset
-    val before = DedupOps.imageDHashDups(spark, sfDir).collect()
+    val before = DedupOps.ImageModality.dups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
     val victim = before.head._1
     DedupOps.ImageModality.index.tombstone(spark, sfDir, Seq(victim).toDF("media_id"))
-    assert(DedupOps.imageDHashDups(spark, sfDir).collect()
+    assert(DedupOps.ImageModality.dups(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("media_a"), r.getAs[Long]("media_b"))).toSet
       === before.filterNot(p => p._1 == victim || p._2 == victim))
     // re-stage absorbs the tombstones; the never-landed appends drop
     assert(DedupOps.ImageModality.index.maybeRestage(spark, sfDir, 0.0))
     assert(DedupOps.ImageModality.index.tombstoneIds(spark, sfDir).isEmpty,
       "the re-stage must absorb the tombstone partition")
-    assert(DedupOps.imageDHashDups(spark, sfDir).collect().length === before.size)
+    assert(DedupOps.ImageModality.dups(spark, sfDir).collect().length === before.size)
     assert(hits() === 0L)
     DedupOps.MediaModalities.foreach(_.index.drop())
   }
@@ -1117,28 +1119,27 @@ class PipelineOpsSpec extends SparkTestBase {
       DedupOps.crossModalKeepBest(spark, sfDir),
       DedupOps.crossModalKeepBestFrom(docs, Seq(
         DedupOps.docLshVerifiedDups(docs).select(col("doc_a"), col("doc_b")),
-        viaLink(DedupOps.imageDHashDups(spark, sfDir)
+        viaLink(DedupOps.ImageModality.dups(spark, sfDir)
           .select(col("media_a"), col("media_b"))),
-        viaLink(DedupOps.audioHashDups(spark, sfDir)
+        viaLink(DedupOps.AudioModality.dups(spark, sfDir)
           .select(col("media_a"), col("media_b"))),
-        viaLink(DedupOps.videoHashDups(spark, sfDir)
+        viaLink(DedupOps.VideoModality.dups(spark, sfDir)
           .select(col("media_a"), col("media_b"))))))
   }
 
   test("fingerprint index: extracted once per corpus snapshot, dup queries read it") {
-    Seq(MultimodalOps.ImageHashes, MultimodalOps.AudioHashes, MultimodalOps.VideoHashes,
-      MultimodalOps.MediaLink).foreach(_.forget())
-    val b = MultimodalOps.mediaHashBuilds.get()
-    DedupOps.videoHashDups(spark, sfDir).count()
-    assert(MultimodalOps.mediaHashBuilds.get() === b + 1)
+    (DedupOps.MediaModalities.map(_.hashes) :+ MultimodalOps.MediaLink).foreach(_.forget())
+    val b = DedupOps.mediaHashBuilds.get()
+    DedupOps.VideoModality.dups(spark, sfDir).count()
+    assert(DedupOps.mediaHashBuilds.get() === b + 1)
     // a second query reads the staged parquet — zero re-decode
-    DedupOps.videoHashDups(spark, sfDir).count()
-    assert(MultimodalOps.mediaHashBuilds.get() === b + 1,
+    DedupOps.VideoModality.dups(spark, sfDir).count()
+    assert(DedupOps.mediaHashBuilds.get() === b + 1,
       "second dup query must serve from the staged fingerprint index")
     // the staged frame is exactly the direct extraction
     assertSameRows(
-      MultimodalOps.stagedVideoHashes(spark, sfDir),
-      MultimodalOps.videoTemporalHash(MultimodalOps.stagedVideoTable(spark, sfDir)))
+      DedupOps.VideoModality.stagedHashes(spark, sfDir),
+      DedupOps.VideoModality.fingerprint(DedupOps.VideoModality.stagedAssets(spark, sfDir)))
   }
 
   test("BPE: trained merges are deterministic, bounded, and staged once per corpus") {
@@ -2529,6 +2530,25 @@ class PipelineOpsSpec extends SparkTestBase {
     same(MultimodalOps.decodeAny(wav), MultimodalOps.decodeAudio(wav).get)
     val gif = MediaRecord(11L, "video", MultimodalOps.synthGif(11L), Map())
     same(MultimodalOps.decodeAny(gif), MultimodalOps.decodeVideo(gif).get)
+  }
+
+  test("media fingerprints: corrupt payloads drop per row for every modality") {
+    import spark.implicits._
+    for (m <- DedupOps.MediaModalities) {
+      // doc 1 owns exactly one (primary) asset
+      val valid = m.assets(Seq((1L, "web", "en")).toDF("doc_id", "source", "lang"))
+        .collect().head
+      val noise = new Array[Byte](64)
+      new scala.util.Random(64L).nextBytes(noise)
+      val payloads = Seq(valid.bytes, Array.emptyByteArray,
+        valid.bytes.take(valid.bytes.length / 2), noise)
+      val media = payloads.zipWithIndex.map { case (b, i) =>
+        valid.copy(media_id = valid.media_id + i, bytes = b)
+      }.toDS()
+      val survivors = m.fingerprint(media).collect().map(_.getAs[Long]("media_id"))
+      assert(survivors.toSeq === Seq(valid.media_id),
+        s"${m.name}: only the intact payload may survive")
+    }
   }
 
   test("mm_decode_stats: staged media table built once; staged and direct paths agree") {

@@ -99,8 +99,8 @@ class PlanSpec extends SparkTestBase {
     import graft.operators.DedupOps
     val inc = graft.model.Fixtures.documents(spark, sfDir)
       .filter(DedupOps.isNewDoc).limit(20)
-    val media = graft.multimodal.MultimodalOps.textureTable(inc)
-    val p = DedupOps.incrementalMediaDedupBatch(spark, sfDir, media)
+    val media = DedupOps.ImageModality.assets(inc)
+    val p = DedupOps.incrementalMediaDedupBatch(spark, sfDir, media, DedupOps.ImageModality)
       .queryExecution.executedPlan.toString
     val idxScans = p.linesIterator
       .filter(_.contains("_media_idx_")).toSeq

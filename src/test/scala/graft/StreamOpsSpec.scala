@@ -206,9 +206,9 @@ class StreamOpsSpec extends SparkTestBase {
         graft.multimodal.MultimodalOps.mediaSrcDoc(col(c)), 1000) <
         DedupOps.IncrementPermille
     val batchDups: Map[String, org.apache.spark.sql.DataFrame] = Map(
-      "img" -> DedupOps.imageDHashDups(spark, sfDir),
-      "wav" -> DedupOps.audioHashDups(spark, sfDir),
-      "gif" -> DedupOps.videoHashDups(spark, sfDir))
+      "img" -> DedupOps.ImageModality.dups(spark, sfDir),
+      "wav" -> DedupOps.AudioModality.dups(spark, sfDir),
+      "gif" -> DedupOps.VideoModality.dups(spark, sfDir))
     for (m <- DedupOps.MediaModalities) {
       val stream = StreamOps.streamMediaDedup(spark, sfDir, m)
       val batch = batchDups(m.name)
@@ -235,7 +235,7 @@ class StreamOpsSpec extends SparkTestBase {
     val textEdges = DedupOps.incrementalDedupBatch(spark, sfDir, increment)
       .select(col("new_doc").as("doc_a"), col("base_doc").as("doc_b"))
     val mediaPairs = DedupOps.MediaModalities.map(m =>
-      DedupOps.incrementalMediaDedupBatch(spark, sfDir, m.table(increment), m)
+      DedupOps.incrementalMediaDedupBatch(spark, sfDir, m.assets(increment), m)
         .select(col("new_media"), col("base_media")))
     val viaGates = DedupOps.crossModalEdgesOf(textEdges, mediaPairs,
       graft.multimodal.MultimodalOps.mediaLink(docs))
@@ -258,9 +258,9 @@ class StreamOpsSpec extends SparkTestBase {
       DedupOps.stagedLshVerifiedDups(spark, sfDir)
         .select(col("doc_a"), col("doc_b")),
       Seq(
-        DedupOps.imageDHashDups(spark, sfDir).select(col("media_a"), col("media_b")),
-        DedupOps.audioHashDups(spark, sfDir).select(col("media_a"), col("media_b")),
-        DedupOps.videoHashDups(spark, sfDir).select(col("media_a"), col("media_b"))),
+        DedupOps.ImageModality.dups(spark, sfDir).select(col("media_a"), col("media_b")),
+        DedupOps.AudioModality.dups(spark, sfDir).select(col("media_a"), col("media_b")),
+        DedupOps.VideoModality.dups(spark, sfDir).select(col("media_a"), col("media_b"))),
       link)
       .filter(!(DedupOps.isNewId(col("doc_a")) && DedupOps.isNewId(col("doc_b"))))
     val emptyGroups = Seq.empty[(Long, Long, Int, Long)]
@@ -493,9 +493,9 @@ class StreamOpsSpec extends SparkTestBase {
   test("stream_img serves every micro-batch from the FROZEN staged media index") {
     graft.operators.DedupOps.MediaModalities.foreach(_.index.drop())
     val m0 = graft.operators.DedupOps.mediaProbeStageBuilds.get()
-    StreamOps.streamMediaDedup(spark, sfDir)
+    StreamOps.streamMediaDedup(spark, sfDir, graft.operators.DedupOps.ImageModality)
     assert(graft.operators.DedupOps.mediaProbeStageBuilds.get() === m0 + 1)
-    StreamOps.streamMediaDedup(spark, sfDir)
+    StreamOps.streamMediaDedup(spark, sfDir, graft.operators.DedupOps.ImageModality)
     assert(graft.operators.DedupOps.mediaProbeStageBuilds.get() === m0 + 1,
       "a second streaming run must serve from the already-staged index")
   }
