@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** `SparkSessionExtensions` entry point — the idiomatic way to hand the
-  * engine's native SQL kernels to sessions the library does NOT build
-  * (notebooks, spark-submit jobs, thrift servers):
+/** `SparkSessionExtensions` entry point: injects every entry of
+  * [[graft.functions.GraftFunctions.all]] into a session's function
+  * registry at construction. [[GraftSession.builder]] applies it to
+  * every session the library builds; a session built elsewhere
+  * (notebooks, spark-submit jobs, thrift servers) gets it the same way:
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
@@ -14,12 +16,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * Injects every entry of [[graft.functions.GraftFunctions.all]] — the
-  * same single table the per-session
-  * [[GraftSession.registerFunctions]] path uses, so the two routes
-  * cannot drift. Library code never requires this: operators
-  * self-register off their DataFrame's session; the extension exists for
-  * the pure-SQL user.
+  * Extensions apply only when `getOrCreate` constructs the session: one
+  * it returns pre-existing keeps its registry, and takes one
+  * [[GraftSession.registerFunctions]] call instead.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Single place for the session shape every entry point needs: UTC
   * timestamps, ns-as-long parquet reads (the r1-r7 events fixture was
@@ -9,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   * not land in the working directory), right-sized shuffle parallelism,
   * and the fork-free local filesystem ([[graft.util.LocalFs]]: without
   * `libhadoop`, Hadoop's stock `file:` FS starts a `chmod` or `readlink`
-  * process per checkpoint-log, state-store and parquet file). One
-  * builder so a new main cannot forget an invariant.
+  * process per checkpoint-log, state-store and parquet file), and the
+  * engine's native SQL kernels ([[GraftExtensions]]). One builder so a
+  * new main cannot forget an invariant.
   */
 object GraftSession {
 
@@ -28,6 +31,10 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
+      // every kernel of GraftFunctions.all, in this session's registry
+      // from construction; newSession() children and the clone each
+      // streaming query runs on inherit it, so no operator registers
+      .withExtensions(new GraftExtensions)
       // `file:` through graft.util.LocalFs: no chmod/readlink child
       // process per checkpoint-log, state-store or parquet file write
       .config(graft.util.LocalFs.conf)
@@ -64,15 +71,21 @@ object GraftSession {
       // conf back to true with `spark.conf.set` (a runtime SQL conf).
       .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
 
-  /** Register every custom SQL function of the engine in a session's
-    * registry (idempotent). Operators that need one call this with THEIR
-    * DataFrame's session — registering on the thread's active session
-    * would target the wrong registry in a multi-session JVM. Drives off
-    * the single [[graft.functions.GraftFunctions.all]] table — the same
-    * one [[GraftExtensions]] injects, so the two paths cannot drift.
+  /** Add every kernel of [[graft.functions.GraftFunctions.all]] to the
+    * registry of a session someone else already built (one call per
+    * session). Sessions from [[builder]] carry them from construction
+    * and need no call; so does any session built with
+    * `spark.sql.extensions=graft.GraftExtensions`. Registers the same
+    * name, expression info and builder the extension injects.
     */
-  def registerFunctions(spark: SparkSession): Unit =
-    graft.functions.GraftFunctions.registerAll(spark)
+  def registerFunctions(spark: SparkSession): Unit = {
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    graft.functions.GraftFunctions.all.foreach { case (name, clazz, builder) =>
+      registry.registerFunction(FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getCanonicalName, name), builder)
+    }
+  }
 
   /** Measurement hermeticity for the measuring mains (Bench, Verify): a
     * measurement JVM must reflect only its own run's work. A prior JVM

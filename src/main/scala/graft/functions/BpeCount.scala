@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -156,7 +155,4 @@ object BpeCount {
     if (memo.size() < MaxMemoWords) memo.put(t.clone(), Integer.valueOf(len))
     len
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "bpe_count")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -106,7 +105,4 @@ object BpeDecode {
     }
     UTF8String.fromString(sb.toString)
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "bpe_decode")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -164,7 +163,4 @@ object BpeEncode {
     }
     upTo
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "bpe_encode")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -29,8 +28,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Exposed through the function registry as `cosine_sim` (Spark 4 keeps
   * Expression→Column bridging private; the registry + `Column.fn` path
   * is public and also serves `spark.sql` users), with the higher-order
-  * form as the sessionless fallback — see
-  * [[graft.operators.VectorMath.cosine]].
+  * form as its numerics reference — see
+  * [[graft.operators.VectorMath.cosineHof]].
   */
 case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -120,14 +119,4 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-
-  /** Register `cosine_sim` in the session's function registry
-    * (idempotent) — the public path to a custom expression, also usable
-    * from `spark.sql("... cosine_sim(a, b) ...")`.
-    */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "cosine_sim")
 }

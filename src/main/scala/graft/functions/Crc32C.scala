@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** CRC32C (Castagnoli) of a binary column, as a native Catalyst expression.
@@ -74,21 +72,5 @@ object Crc32C {
       i += 1
     }
     (crc ^ 0xFFFFFFFF).toLong & 0xFFFFFFFFL
-  }
-
-  /** Register `crc32c` in the session's function registry (idempotent).
-    * Spark 4 keeps Expression→Column bridging private, so the public path
-    * to a custom expression is registry + `expr`/SQL — which also makes
-    * the function available to `spark.sql("... crc32c(x) ...")` users.
-    */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "crc32c")
-
-  /** Column-level entry point: `crc32c(spark, "cast(props as binary)")` →
-    * unsigned 32-bit LONG column.
-    */
-  def crc32c(spark: SparkSession, sqlExpr: String): Column = {
-    register(spark)
-    expr(s"crc32c($sqlExpr)")
   }
 }

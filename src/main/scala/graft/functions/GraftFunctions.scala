@@ -1,15 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** The engine's SQL function surface as ONE table — the single source of
-  * truth both registration paths drive: [[registerAll]] (per-session,
-  * what [[graft.GraftSession.registerFunctions]] delegates to) and
-  * [[graft.GraftExtensions]] (the `spark.sql.extensions` injection path
-  * for sessions the library does not build). One table means the two
-  * paths cannot drift — `FunctionRegistrySpec` probes every entry with a
-  * known answer through the shared registration.
+/** The engine's SQL function surface as ONE table. [[graft.GraftExtensions]]
+  * injects it into every session [[graft.GraftSession.builder]] builds
+  * (and so into every `newSession()` child and every streaming query's
+  * clone of one); [[graft.GraftSession.registerFunctions]] adds it to a
+  * session built elsewhere. Operators only call the functions by name
+  * (`call_function`) and never register anything themselves.
+  * `FunctionRegistrySpec` probes every entry with a known answer.
   *
   * Each builder funnels through [[Arity]]: Spark hands the builder
   * whatever argument list the SQL call supplied, and positional indexing
@@ -48,22 +47,4 @@ object GraftFunctions {
     entry("bpe_count", 2, classOf[BpeCount])(a => BpeCount(a.head, a(1))),
     entry("bpe_encode", 2, classOf[BpeEncode])(a => BpeEncode(a.head, a(1))),
     entry("bpe_decode", 2, classOf[BpeDecode])(a => BpeDecode(a.head, a(1))))
-
-  /** Register every kernel in a session's registry (idempotent). */
-  def registerAll(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) => registerOne(spark, name, builder) }
-
-  /** Register a single kernel by table name — what each kernel object's
-    * `register(spark)` delegates to, so selective registration uses the
-    * same builder as the bulk and extensions paths. */
-  def registerOne(spark: SparkSession, name: String): Unit = {
-    val (_, _, builder) = all.find(_._1 == name).getOrElse(
-      throw new IllegalArgumentException(s"unknown graft function '$name'"))
-    registerOne(spark, name, builder)
-  }
-
-  private def registerOne(spark: SparkSession, name: String, builder: Builder): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,10 +104,4 @@ object GramMd5s {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `gram_md5s` in the session's function registry
-    * (idempotent) — the public Expression→Column path, also usable from
-    * `spark.sql`. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "gram_md5s")
 }

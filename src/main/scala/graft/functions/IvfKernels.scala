@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
@@ -176,11 +175,6 @@ case class IvfAssign(first: Expression, second: Expression, third: Expression)
       f: Expression, s: Expression, t: Expression): IvfAssign = copy(f, s, t)
 }
 
-object IvfAssign {
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "ivf_assign")
-}
-
 /** `ivf_centroid(cid, centIds, centsFlat)` → `ARRAY<DOUBLE>` — the
   * centroid vector for a cell-id column (null when not in the index,
   * like the CASE chain it replaces). */
@@ -219,9 +213,4 @@ case class IvfCentroid(first: Expression, second: Expression, third: Expression)
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): IvfCentroid = copy(f, s, t)
-}
-
-object IvfCentroid {
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "ivf_centroid")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,7 +88,4 @@ object JaccardDistinct {
       (if (aHasNull || bHasNull) 1 else 0)
     inter.toDouble / union.toDouble // 0/0 → NaN, like the double division
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "jaccard_distinct")
 }

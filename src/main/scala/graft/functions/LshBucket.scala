@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -101,13 +100,4 @@ case class LshBucket(left: Expression, right: Expression) extends BinaryExpressi
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): LshBucket =
     copy(left = newLeft, right = newRight)
-}
-
-object LshBucket {
-
-  /** Register `lsh_bucket` in the session's function registry
-    * (idempotent) — the public Expression→Column path, also usable from
-    * `spark.sql`. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "lsh_bucket")
 }

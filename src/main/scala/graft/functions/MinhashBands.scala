@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -172,10 +171,4 @@ object MinhashBands {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `minhash_bands` in the session's function registry
-    * (idempotent) — the public Expression→Column path, also usable from
-    * `spark.sql`. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "minhash_bands")
 }

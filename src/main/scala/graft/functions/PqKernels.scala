@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -200,11 +199,6 @@ case class PqEnc(left: Expression, right: Expression) extends BinaryExpression {
     copy(left = newLeft, right = newRight)
 }
 
-object PqEnc {
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "pq_enc")
-}
-
 /** `pq_adc(query, pqCode, codebookFlat)` → `DOUBLE` asymmetric distance. */
 case class PqAdc(first: Expression, second: Expression, third: Expression)
   extends TernaryExpression {
@@ -246,9 +240,4 @@ case class PqAdc(first: Expression, second: Expression, third: Expression)
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): PqAdc =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object PqAdc {
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "pq_adc")
 }

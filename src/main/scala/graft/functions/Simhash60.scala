@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -104,10 +103,4 @@ object Simhash60 {
     }
     java.lang.Long.valueOf(fp)
   }
-
-  /** Register `simhash60` in the session's function registry
-    * (idempotent) — the public Expression→Column path, also usable from
-    * `spark.sql`. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "simhash60")
 }

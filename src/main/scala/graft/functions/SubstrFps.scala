@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -132,9 +131,4 @@ object SubstrFps {
     while (it.hasNext) { out(o) = it.next(); o += 1 }
     new GenericArrayData(out)
   }
-
-  /** Register `substr_fps` in the session's function registry
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "substr_fps")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
@@ -82,9 +81,6 @@ object CountIn {
     }
     count
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "count_in")
 }
 
 /** `sum_strlen(w)` — the summed character length of a token array:
@@ -131,9 +127,6 @@ object SumStrlen {
     }
     sum
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "sum_strlen")
 }
 
 /** `logp_sum(w, logp_map, floor)` — the summed log-probability of a token
@@ -221,9 +214,6 @@ object LogpSum {
     }
     sum
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "logp_sum")
 }
 
 /** `backoff_sum(w, bigrams, unigrams, floor)` — the Stupid Backoff
@@ -330,9 +320,6 @@ object BackoffSum {
     }
     sum
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "backoff_sum")
 }
 
 /** `dup_fracs(w)` — all three Gopher-family repetition signals of a token
@@ -422,9 +409,6 @@ object DupFracs {
       gramDupFrac(w, 2),
       gramDupFrac(w, 5)))
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "dup_fracs")
 }
 
 /** `hash_weight_sum(w, weights)` — feature-hashing linear-model inference:
@@ -516,7 +500,4 @@ object HashWeightSum {
     }
     sum
   }
-
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "hash_weight_sum")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -85,10 +84,4 @@ object WordShingles {
     while (it.hasNext) { out(k) = it.next(); k += 1 }
     new GenericArrayData(out)
   }
-
-  /** Register `word_shingles` in the session's function registry
-    * (idempotent) — the public Expression→Column path, also usable from
-    * `spark.sql`. */
-  def register(spark: SparkSession): Unit =
-    GraftFunctions.registerOne(spark, "word_shingles")
 }

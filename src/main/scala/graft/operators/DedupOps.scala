@@ -44,13 +44,9 @@ object DedupOps {
     * [[graft.functions.WordShingles]] expression (one codegen'd loop —
     * the composable [[SHINGLES]] form is an interpreted `transform`
     * chain per row, kept as the numerics reference; bit-identical,
-    * equivalence asserted in tests). Registers on the DataFrame's
-    * session like every other native kernel.
+    * equivalence asserted in tests).
     */
-  private def shinglesOf(docs: DataFrame): Column = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
-    call_function("word_shingles", col("w"), lit(3))
-  }
+  private def shingles: Column = call_function("word_shingles", col("w"), lit(3))
 
   /** Tokenized docs with the split materialized as a named alias, which
     * downstream shingle lambdas reference instead of re-splitting.
@@ -116,12 +112,11 @@ object DedupOps {
     * signed exactly as the index build signs the corpus, so increment
     * and base rows are comparable by construction). */
   private[graft] def textSignaturesOf(docs: DataFrame): DataFrame = {
-    graft.functions.MinhashBands.register(docs.sparkSession)
     tokenized(docs).select(
       col("doc_id"),
       call_function("minhash_bands",
         col("w"), lit(NumSeeds), lit(RowsPerBand)).as("bands"),
-      shinglesOf(docs).as("sh"),
+      shingles.as("sh"),
       md5(array_join(sort_array(array_distinct(col("w"))), " ")
         .cast("binary")).as("tsig"))
   }
@@ -271,7 +266,6 @@ object DedupOps {
     * downstream shuffles candidates, not corpus).
     */
   def docMinhashLsh(docs: DataFrame): DataFrame = {
-    graft.functions.MinhashBands.register(docs.sparkSession)
     minhashLshFromBands(tokenized(docs)
       .select(col("doc_id"),
         posexplode(call_function("minhash_bands",
@@ -319,7 +313,6 @@ object DedupOps {
     * millions of docs) exactly like the other candidate generators.
     */
   def docSubstrDups(docs: DataFrame): DataFrame = {
-    graft.functions.SubstrFps.register(docs.sparkSession)
     val fps = tokenized(docs)
       .filter(size(col("w")) >= SubstrWindow)
       .select(col("doc_id"),
@@ -360,7 +353,6 @@ object DedupOps {
     * identical integer results, oracle unchanged.
     */
   def docSimhash(docs: DataFrame): DataFrame = {
-    graft.functions.Simhash60.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         call_function("simhash60", split(trim(lower(col("text"))), "\\s+")).as("simhash"))
@@ -728,12 +720,11 @@ object DedupOps {
       col("doc_id"),
       md5(array_join(sort_array(array_distinct(col("w"))), " ")
         .cast("binary")).as("sig"),
-      shinglesOf(docs).as("sh")))
+      shingles.as("sh")))
 
   /** [[docNgramJaccard]] served from the staged signature index (the
     * `tsig` column is exactly its grouping signature). */
   def stagedNgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
     ngramJaccardFromSignatures(stagedTextSignatures(spark, sfDir)
       .select(col("doc_id"), col("tsig").as("sig"), col("sh")))
   }
@@ -784,7 +775,7 @@ object DedupOps {
     */
   def docLshVerifiedDups(docs: DataFrame): DataFrame =
     verifyPairsJaccard(docMinhashLsh(docs),
-      tokenized(docs).select(col("doc_id"), shinglesOf(docs).as("sh")),
+      tokenized(docs).select(col("doc_id"), shingles.as("sh")),
       "doc_a", "doc_b")
 
   /** [[docLshVerifiedDups]] served entirely from the staged signature
@@ -792,7 +783,6 @@ object DedupOps {
     * signatures, the verify stage's shingle sets from the staged `sh`
     * column — no tokenization, no corpus text read, in the query plan. */
   def stagedLshVerifiedDups(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
     // takedown exclusion (r19): a retracted doc neither matches nor is
     // listed — pairs touching a tombstoned endpoint drop; no tombstones
     // (the gate's steady state) = the untouched plan
@@ -866,19 +856,17 @@ object DedupOps {
     * no-index library path.
     */
   def docIncrementalDedup(docs: DataFrame): DataFrame = {
-    graft.functions.MinhashBands.register(docs.sparkSession)
     incrementalFromSignatures(tokenized(docs).select(
       col("doc_id"),
       call_function("minhash_bands",
         col("w"), lit(NumSeeds), lit(RowsPerBand)).as("bands"),
-      shinglesOf(docs).as("sh")))
+      shingles.as("sh")))
   }
 
   /** [[docIncrementalDedup]] served from the staged signature index:
     * both sides' band signatures and the verify stage's shingle sets
     * read as staged scalars. */
   def stagedIncrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
     // takedown exclusion (r19): the [[stagedLshVerifiedDups]] stance —
     // a tombstoned doc is out of the ingest gate's verified dups on
     // both sides (it cannot be matched against, and a retracted
@@ -938,10 +926,8 @@ object DedupOps {
 
   /** An admitted doc batch signed ONCE for both text probe indexes —
     * the stateless projection the stager applies to the corpus. */
-  private def signedDocs(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
+  private def signedDocs(docs: DataFrame): DataFrame =
     textSignaturesOf(docs).select(col("doc_id"), col("bands"), col("sh"))
-  }
 
   private def bandsOf(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "sig")))
@@ -982,7 +968,7 @@ object DedupOps {
     protected def build(spark: SparkSession, sfDir: String): DataFrame =
       bandRows(capBuckets(bandsOf(stagedTextSignatures(spark, sfDir).filter(!isNewDoc)),
         Seq(col("band"), col("sig")), col("doc_id"), "band_probe_index"))
-    protected def prepare(spark: SparkSession, docs: DataFrame) = signedDocs(spark, docs)
+    protected def prepare(spark: SparkSession, docs: DataFrame) = signedDocs(docs)
     protected def rowsOf(sigs: DataFrame): DataFrame = bandRows(bandsOf(sigs))
     override protected def companions = Seq(ShingleIndex)
     override protected def baseIndex = ShingleIndex
@@ -1001,7 +987,7 @@ object DedupOps {
       "shingle_idx", "db", "doc_id", TextAppendsFamily, probeStageBuilds) {
     protected def build(spark: SparkSession, sfDir: String): DataFrame =
       rowsOf(stagedTextSignatures(spark, sfDir).filter(!isNewDoc))
-    protected def prepare(spark: SparkSession, docs: DataFrame) = signedDocs(spark, docs)
+    protected def prepare(spark: SparkSession, docs: DataFrame) = signedDocs(docs)
     protected def rowsOf(sigs: DataFrame): DataFrame = sigs.select(col("doc_id"),
       col("sh"), Hashing.md5Bucket(col("doc_id"), DocBucketParts).cast("int").as("db"))
     protected def staleGauge = "text.shingle_index_stale_fraction"
@@ -1063,7 +1049,6 @@ object DedupOps {
     * binds anywhere); cost is one aggregation over the staged band
     * column — scalars, no tokenize. */
   def assertTextProbeCapPremise(spark: SparkSession, sfDir: String): Unit = {
-    graft.GraftSession.registerFunctions(spark)
     requireCapPremise("stream_lsh", "band", stagedTextSignatures(spark, sfDir)
       .select(posexplode(col("bands")).as(Seq("band", "sig"))), "band", "sig")
   }
@@ -1170,7 +1155,6 @@ object DedupOps {
 
   def incrementalDedupBatch(spark: SparkSession, sfDir: String,
       increment: DataFrame): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
     // SIGNATURE CHECKPOINT (opt r20 — the media gate's fingerprint-
     // checkpoint symmetry): the batch's signatures (tokenize + MinHash
     // + shingles, the batch body's CPU) were previously recomputed in
@@ -2548,7 +2532,6 @@ object DedupOps {
     * probe index, and the streaming gate's per-batch body so all three
     * gram identically by construction. */
   private def contamGrams(df: DataFrame): DataFrame = {
-    graft.functions.GramMd5s.register(df.sparkSession)
     df.select(
       col("doc_id"),
       explode(array_distinct(

@@ -112,7 +112,6 @@ object LlmOps {
     * is stable across summation orders/engines.
     */
   def embeddingTopKCosine(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     val q = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"))
     emb.filter(col("vec_id") =!= queryId)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Crc32C
 import graft.model.Fixtures
 
 /** Message-semantics operators: the reference's produce/consume/route/ack
@@ -356,7 +355,7 @@ object MessageOps {
   def payloadIntegrityCrc(ev: DataFrame): DataFrame =
     ev.select(
       col("event_type"),
-      Crc32C.crc32c(ev.sparkSession, "cast(props as binary)").as("crc"))
+      call_function("crc32c", col("props").cast("binary")).as("crc"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("crc")).as("crc_sum"))
 

@@ -124,12 +124,12 @@ object SimilarityOps {
   /** Sign-bucket of every vector against `numPlanes` deterministic
     * hyperplanes: bit j = [Σ_i w(i,j)·v_i > 0], bucket = Σ bit_j · 2^j.
     * A pure per-row projection — no explode, no re-aggregation, no join:
-    * the bucket column costs the scan it rides on. Dispatches to the
-    * fused native [[graft.functions.LshBucket]] expression (one codegen'd
-    * dim×planes loop) when a session is active; the higher-order form
-    * below is the sessionless fallback and numerics reference (the
-    * native expression is bit-identical — same per-plane left-to-right
-    * double sums; equivalence asserted in tests).
+    * the bucket column costs the scan it rides on. Operators bucket
+    * through the fused native [[graft.functions.LshBucket]] expression
+    * (one codegen'd dim×planes loop, [[withBucket]]); this higher-order
+    * form is its numerics reference (the native expression is
+    * bit-identical — same per-plane left-to-right double sums;
+    * equivalence asserted in tests).
     */
   private[graft] def bucketColumn(numPlanes: Int): Column = {
     def proj(j: Int): Column = aggregate(
@@ -142,10 +142,6 @@ object SimilarityOps {
   }
 
   private def withBucket(emb: DataFrame, numPlanes: Int): DataFrame = {
-    // registered on the DATAFRAME's session — the active session could be
-    // a different one in a multi-session JVM, whose registry the analyzer
-    // of this plan never consults
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     // the HOF reference yields 0 (not NULL) for null input — `when` over
     // a NULL projection falls through to otherwise(0) — so the native
     // NULL coalesces to 0 to stay bit-compatible
@@ -166,7 +162,6 @@ object SimilarityOps {
   def embeddingNearDup(emb: DataFrame, k: Int, numPlanes: Int = NumPlanes): DataFrame = {
     require(numPlanes >= 1 && numPlanes <= 62,
       s"embeddingNearDup: numPlanes $numPlanes outside 1..62 (bucket id is a Long bit-sum)")
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     def pairStruct(a: Column, b: Column): Column = struct(
       a.getField("vec_id").as("vec_a"),
       b.getField("vec_id").as("vec_b"),
@@ -237,7 +232,6 @@ object SimilarityOps {
   private[graft] def lloydIterateRows(emb: DataFrame,
       iters: Int): Seq[(Long, Array[Double])] = {
     require(iters >= 0, s"lloydIterateRows: iters $iters must be >= 0")
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     // declared C from the CORPUS COUNT (one cheap parquet-metadata job,
     // paid once per trainer run) — the corpus-scaled geometry; the
     // generated oracles derive the identical C from count(*)
@@ -340,13 +334,7 @@ object SimilarityOps {
     * C=44); the kernel is O(1) plan nodes at any C. */
   private def cellAssignStruct(centroids: Seq[(Long, Seq[Double])]): Column = {
     require(centroids.nonEmpty, "cellAssignStruct: empty centroid index")
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(spark) =>
-        graft.GraftSession.registerFunctions(spark)
-        call_function("ivf_assign", col("embedding"),
-          idsLit(centroids), centsLit(centroids))
-      case None => cellAssignStructFold(centroids)
-    }
+    call_function("ivf_assign", col("embedding"), idsLit(centroids), centsLit(centroids))
   }
 
   /** The composable `least`-over-structs assignment fold — the numerics
@@ -385,12 +373,7 @@ object SimilarityOps {
     * of [[cellAssignStruct]] (null on a foreign id, exactly like the
     * composable when-chain reference [[ceForCellChain]]). */
   private def ceForCell(centroids: Seq[(Long, Seq[Double])], cell: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(spark) =>
-        graft.GraftSession.registerFunctions(spark)
-        call_function("ivf_centroid", cell, idsLit(centroids), centsLit(centroids))
-      case None => ceForCellChain(centroids, cell)
-    }
+    call_function("ivf_centroid", cell, idsLit(centroids), centsLit(centroids))
 
   /** The composable when-chain centroid lookup — the reference form of
     * [[ceForCell]] (equivalence asserted in tests). */
@@ -457,7 +440,6 @@ object SimilarityOps {
   private def ivfIndexDir(spark: SparkSession, sfDir: String,
       fresh: Boolean = false): java.nio.file.Path =
     IvfIndex.durable(sfDir, freshGen = fresh) {
-      graft.GraftSession.registerFunctions(spark)
       val codebook = stagedPqCodebook(spark, sfDir)
       val cents = stagedCentroidIndex(spark, sfDir)
       indexRows(Fixtures.embeddings(spark, sfDir), cents, codebook)
@@ -514,7 +496,6 @@ object SimilarityOps {
     * rewrite's job, the overlay's job is the serving gap between. */
   def tombstoneSegmentRows(spark: SparkSession, sfDir: String,
       ids: DataFrame): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
     val template = indexRows(
       graft.model.Fixtures.embeddings(spark, sfDir).limit(0),
       stagedCentroidIndex(spark, sfDir), stagedPqCodebook(spark, sfDir))
@@ -587,7 +568,6 @@ object SimilarityOps {
     * (size,mtime) stamp and forces the periodic full retrain. */
   def appendToStagedIvfIndex(spark: SparkSession, sfDir: String,
       batch: DataFrame): Unit = {
-    graft.GraftSession.registerFunctions(spark)
     val dir = stagedIvfIndexDir(spark, sfDir)
     val cents = stagedCentroidIndex(spark, sfDir)
     val codebook = stagedPqCodebook(spark, sfDir)
@@ -967,7 +947,6 @@ object SimilarityOps {
     * scoring expressions, same ranking with vec_id as the tie-break. */
   private def probeQuery(spark: SparkSession, sfDir: String, queryId: Long,
       numProbe: Int): QueryProbe = {
-    graft.GraftSession.registerFunctions(spark)
     val np = resolveNumProbe(spark, sfDir, numProbe)
     val cents = stagedCentroidIndex(spark, sfDir)
     val qe = Fixtures.embeddings(spark, sfDir)
@@ -1116,7 +1095,6 @@ object SimilarityOps {
     * the corpus have no vector to probe with and drop out. */
   private def stagedBatchProbes(spark: SparkSession, sfDir: String,
       queryIds: Seq[Long], numProbe: Int): BatchProbes = {
-    graft.GraftSession.registerFunctions(spark)
     val np = resolveNumProbe(spark, sfDir, numProbe)
     import spark.implicits._
     val cents = stagedCentroidIndex(spark, sfDir)
@@ -1141,7 +1119,6 @@ object SimilarityOps {
     * serving tier wants. */
   private def frameBatchProbes(spark: SparkSession, sfDir: String,
       queryIds: DataFrame, numProbe: Int): BatchProbes = {
-    graft.GraftSession.registerFunctions(spark)
     val np = resolveNumProbe(spark, sfDir, numProbe)
     val cents = stagedCentroidIndex(spark, sfDir)
     val ids = queryIds
@@ -1277,7 +1254,6 @@ object SimilarityOps {
 
   def embeddingIvfTopK(emb: DataFrame, queryId: Long, k: Int,
       index: Option[DataFrame] = None, numProbe: Int = NumProbe): DataFrame = {
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     val centroids = index.getOrElse(lloydCentroids(emb))
     val scored = emb
       .crossJoin(broadcast(centroids))
@@ -1327,7 +1303,6 @@ object SimilarityOps {
     */
   def embeddingCellPrototypes(emb: DataFrame, p: Int = ProtoK,
       index: Option[DataFrame] = None): DataFrame = {
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     val centroids = index.getOrElse(lloydCentroids(emb))
     val best = struct(col("cent_id"), col("ccos"))
     val byScore = struct(negate(col("ccos")), col("cent_id"))
@@ -1478,7 +1453,6 @@ object SimilarityOps {
     * id — they cannot drop the way empty IVF cells do). */
   private[graft] def trainPqCodebook(emb: DataFrame, iters: Int): Seq[Array[Double]] = {
     require(iters >= 0, s"trainPqCodebook: iters $iters must be >= 0")
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     val x = emb.select(col("vec_id"),
       transform(col("embedding"), e => e.cast("double")).as("x"))
     var cb = pqSeedRows(x)
@@ -1605,7 +1579,6 @@ object SimilarityOps {
     * [[embeddingQuantizeInt8]]: same scale story, finer-grained codes.
     */
   def pqEncode(emb: DataFrame, codebook: Seq[Array[Double]]): DataFrame = {
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     emb
       .select(col("vec_id"), col("embedding"),
         call_function("pq_enc", col("embedding"), cbLit(codebook)).as("k"))
@@ -1633,7 +1606,6 @@ object SimilarityOps {
     * shuffles. */
   def pqTopKResidual(emb: DataFrame, codebook: Seq[Array[Double]],
       centroids: Seq[(Long, Seq[Double])], queryId: Long, k: Int): DataFrame = {
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     val query = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"))
     val members = residualFrame(emb, centroids)
@@ -1676,7 +1648,6 @@ object SimilarityOps {
     * one broadcast join + TakeOrdered: no shuffle of the corpus at any
     * scale. [[pqTopKRef]] is the higher-order reference form. */
   def pqTopK(emb: DataFrame, codebook: Seq[Array[Double]], queryId: Long, k: Int): DataFrame = {
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     val query = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"))
     pqEncode(emb, codebook)
@@ -1708,7 +1679,6 @@ object SimilarityOps {
   def ivfPqTopK(emb: DataFrame, codebook: Seq[Array[Double]],
       centroids: Seq[(Long, Seq[Double])], queryId: Long, k: Int,
       numProbe: Int = NumProbe): DataFrame = {
-    graft.GraftSession.registerFunctions(emb.sparkSession)
     require(centroids.nonEmpty, "ivfPqTopK needs a non-empty centroid index")
     val qe = emb.filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
     val members = emb.filter(col("vec_id") =!= queryId)

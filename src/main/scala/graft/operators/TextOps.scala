@@ -60,7 +60,6 @@ object TextOps {
     * shared front of language ID, quality, and the pipeline
     * annotations. */
   private def scoredTokens(docs: DataFrame): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     withTokens(docs).select(
       col("*") +: Profiles.map { case (lang, words) =>
         profileScore(words).as(s"s_$lang")
@@ -111,7 +110,6 @@ object TextOps {
     * downstream thresholds can re-weight without recomputing.
     */
   def textQualityScore(docs: DataFrame): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     val en = Profiles.head._2
     withTokens(docs).select(
       col("doc_id"),
@@ -246,7 +244,6 @@ object TextOps {
     * for continuity. Pure projection — zero exchanges; the only
     * corpus-sized work is the scan the count rides on. */
   def tokenCountsTrained(docs: DataFrame, bpe: BpeModel): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     val mergesLit = typedlit(bpe.merges.flatMap(p => Seq(p._1, p._2)))
     withTokens(docs).select(
       col("doc_id"),
@@ -275,7 +272,6 @@ object TextOps {
     * symbol = 26 + first rank with its surface, non-letter pre-token =
     * UNK = 26 + K). */
   def bpeEncodeIds(docs: DataFrame, bpe: BpeModel): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     val mergesLit = typedlit(bpe.merges.flatMap(p => Seq(p._1, p._2)))
     docs
       .select(col("doc_id"),
@@ -301,7 +297,6 @@ object TextOps {
     * zero exchanges, the only corpus-sized work is the scan both
     * kernels ride on. */
   def bpeDecodeText(docs: DataFrame, bpe: BpeModel): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     val mergesLit = typedlit(bpe.merges.flatMap(p => Seq(p._1, p._2)))
     docs
       .select(col("doc_id"),
@@ -378,7 +373,6 @@ object TextOps {
     * built on.
     */
   def docFingerprint(docs: DataFrame): DataFrame = {
-    graft.functions.GramMd5s.register(docs.sparkSession)
     docs.select(
       col("doc_id"),
       array_join(
@@ -515,7 +509,6 @@ object TextOps {
     * row and was the 4th-priciest key at sf0.1: 1.5 s of a 40 s suite).
     */
   def textRepetition(docs: DataFrame): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     // NULL text: the HOF/oracle forms give (NULL n_tokens, 0.0 fractions,
     // keep) because every `when(size(NULL) > 0, ...)` falls to its 0.0
     // branch — the kernel would instead null the whole struct, so feed it
@@ -674,7 +667,6 @@ object TextOps {
     * would dominate the corpus scan — logp_sum holds a real hash table
     * (see LogpSum). */
   def textLmPerplexityIndexed(docs: DataFrame, lm: LmModel): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     withTokens(docs).select(
       col("doc_id"),
       size(col("w")).as("n_tokens"),
@@ -763,7 +755,6 @@ object TextOps {
   /** Score against a fitted [[Lm2Model]]: a pure in-row codegen fold —
     * the serving half of [[textLm2Score]]. */
   def textLm2ScoreIndexed(docs: DataFrame, m: Lm2Model): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     withTokens(docs).select(
       col("doc_id"),
       size(col("w")).as("n_tokens"),
@@ -873,7 +864,6 @@ object TextOps {
     */
   def qualityClassifier(docs: DataFrame, weights: Seq[Double] = QlrWeights,
       bias: Double = QlrBias): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     withTokens(docs).select(
       col("doc_id"),
       size(col("w")).as("n_tokens"),
@@ -941,7 +931,6 @@ object TextOps {
   def qualityLrFit(docs: DataFrame, steps: Int = LrFitSteps,
       eta: Double = LrFitEta): DataFrame = {
     val spark = docs.sparkSession
-    graft.GraftSession.registerFunctions(spark)
     val en = Profiles.head._2
     val toks = docs.select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))
     // tokenization + labels are step-invariant: cache the projection for
@@ -1011,7 +1000,6 @@ object TextOps {
     * rounded away).
     */
   def sourceCurationStats(docs: DataFrame): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     val en = Profiles.head._2
     val toks = docs.select(
       col("doc_id"), col("source"), length(col("text")).as("n_chars"),
@@ -1153,7 +1141,6 @@ object TextOps {
   /** Per-row BM25 inputs — `tf` per query term and the real-token length
     * `dl` — folded inside the row by the native `count_in` kernel. */
   private[graft] def bm25Base(docs: DataFrame, terms: Seq[String]): DataFrame = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     val tfs = terms.indices.map { i =>
       call_function("count_in", col("w"), typedlit(Seq(terms(i))))
         .as(s"tf$i")
@@ -1179,7 +1166,6 @@ object TextOps {
     * (idf overestimated toward the rare-term ceiling — the standard
     * capped-index approximation; raise `vocabSize` to taste). */
   def bm25Index(docs: DataFrame, vocabSize: Int = LmVocabSize): Bm25Index = {
-    graft.GraftSession.registerFunctions(docs.sparkSession)
     val toks = withTokens(docs)
     val dl = size(col("w")) - call_function("count_in", col("w"), typedlit(Seq("")))
     val head = toks.agg(count(lit(1)).as("n"), sum(dl).cast("long").as("s")).collect()(0)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Shared in-row vector arithmetic over `ArrayType` embedding columns:
@@ -9,13 +9,12 @@ import org.apache.spark.sql.functions._
   * numerics — [[LlmOps]] (brute-force top-k) and [[SimilarityOps]] (LSH
   * buckets, IVF) must rank by the same values.
   *
-  * The cosine dispatches to the native fused
-  * [[graft.functions.CosineSim]] expression (whole-stage codegen, one
-  * pass, zero intermediate arrays) when a session is active to register
-  * it with; the higher-order form below is the sessionless fallback and
-  * the numerics REFERENCE — [[graft.functions.CosineSim]] is
-  * bit-identical to it by construction (same per-accumulator
-  * left-to-right double sums) and the equivalence is asserted in tests.
+  * The cosine is the native fused [[graft.functions.CosineSim]]
+  * expression (whole-stage codegen, one pass, zero intermediate arrays);
+  * the higher-order form below is the numerics REFERENCE —
+  * [[graft.functions.CosineSim]] is bit-identical to it by construction
+  * (same per-accumulator left-to-right double sums) and the equivalence
+  * is asserted in tests.
   */
 object VectorMath {
 
@@ -40,10 +39,5 @@ object VectorMath {
     * rankings stable across summation orders and engines (SURVEY §7.3).
     */
   def cosine(a: Column, b: Column): Column =
-    SparkSession.getActiveSession match {
-      case Some(spark) =>
-        graft.functions.CosineSim.register(spark)
-        round(call_function("cosine_sim", a, b), 6)
-      case None => cosineHof(a, b)
-    }
+    round(call_function("cosine_sim", a, b), 6)
 }

@@ -564,7 +564,6 @@ object StreamOps {
     * merge dedups edges before every closure. */
   def streamTextDedup(spark: SparkSession, sfDir: String,
       publishEdgesTo: Option[String] = None): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
     // freeze the base artifacts BEFORE the stream starts (build-if-
     // absent): the signature index and the two partition-prunable probe
     // indexes every micro-batch serves from
@@ -636,7 +635,6 @@ object StreamOps {
     * `decontam` key over the whole corpus (its oracle verbatim). */
   def streamDecontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.DedupOps
-    graft.GraftSession.registerFunctions(spark)
     // freeze the probe index BEFORE the stream — the FRAME over the
     // resolved staged path, not just build-if-absent: every micro-batch
     // joins exactly this probe set, so a mid-stream benchmark rewrite
@@ -814,7 +812,6 @@ object StreamOps {
       // the newest into one newest-wins delta
       compactEpochs: Int = graft.operators.DedupOps.XmCompactEpochs): DataFrame = {
     import graft.operators.DedupOps
-    graft.GraftSession.registerFunctions(spark)
     // freeze the prior assignment (BOTH probe keyings — the db- and
     // cb-partitioned projections the pruned per-batch selection reads)
     // + the edge topic BEFORE the stream
@@ -995,7 +992,6 @@ object StreamOps {
       maxFilesPerTrigger: Option[Int] = None,
       compactEpochs: Int =
         graft.operators.SimilarityOps.AnnCompactEpochs): DataFrame = {
-    graft.GraftSession.registerFunctions(spark)
     val sink = new EpochSink(spark, "graft_stream_idx_", "segs")
     val cents = graft.operators.SimilarityOps.stagedCentroidIndex(spark, sfDir)
     val cb = graft.operators.SimilarityOps.stagedPqCodebook(spark, sfDir)

@@ -98,11 +98,13 @@ final class Staged(name: String, tables: Seq[String] = Seq("documents"),
   private def baseRowsFamily: String = "staged_base_" + tables.mkString("_")
 
   /** The CURRENT durable dir for this corpus if one is staged — the
-    * in-JVM memo, else pure filesystem resolution, NEVER a build: gauges
-    * use this so a restarted JVM's monitoring reads see the surviving
-    * index (and its appends) without paying a staging build. */
+    * in-JVM memo while its dir exists, else pure filesystem resolution,
+    * NEVER a build: gauges use this so a restarted JVM's monitoring
+    * reads see the surviving index (and its appends) without paying a
+    * staging build. */
   def resolved(sfDir: String): Option[Path] =
-    memo.peek(sfDir).orElse(Durable.withDirLock(rootDir) { resolveUnlocked(keyOf(sfDir)) })
+    memo.peek(sfDir).filter(Files.isDirectory(_))
+      .orElse(Durable.withDirLock(rootDir) { resolveUnlocked(keyOf(sfDir)) })
 
   /** Build-or-resolve the durable staged dir for this corpus.
     * `freshGen = true` is the RE-STAGE path: skip resolution, rebuild
@@ -110,11 +112,12 @@ final class Staged(name: String, tables: Seq[String] = Seq("documents"),
     * by dir, correctly restarts at zero), and sweep prior generations.
     * `baseCount` measures the staged artifact's base size for the
     * arithmetic staleness gauges (row count by default; e.g. distinct
-    * assets for the media index). */
+    * assets for the media index). A memoized dir that is gone (another
+    * JVM's re-stage swept it) re-resolves to the current generation. */
   def durable(sfDir: String, freshGen: Boolean = false,
       baseCount: DataFrame => Long = _.count())(build: => DataFrame): Path = {
     initSweep
-    if (freshGen) memo.invalidate(sfDir)
+    if (freshGen || memo.peek(sfDir).exists(!Files.isDirectory(_))) memo.invalidate(sfDir)
     memo.get(sfDir)({
       val key = keyOf(sfDir)
       val existing =
@@ -195,8 +198,12 @@ final class Staged(name: String, tables: Seq[String] = Seq("documents"),
   def forget(): Unit = memo.clear()
 
   /** TEST-ONLY isolation drop: [[forget]], then delete EVERY corpus's
-    * durable dirs of this artifact, host-wide — so the next access
-    * rebuilds. Never called from a serving path. */
+    * durable dirs of this artifact under this JVM's `java.io.tmpdir`,
+    * host-wide — so the next access rebuilds. Never called from a
+    * serving path. A live JVM sharing that temp dir re-resolves on its
+    * next [[durable]] access (a rebuild, its appends lost), so a spec
+    * run and a Bench/Verify/serving JVM on one host each take their
+    * own `-Djava.io.tmpdir`. */
   def drop(): Unit = {
     forget()
     Durable.withDirLock(rootDir) {

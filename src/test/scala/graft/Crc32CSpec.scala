@@ -44,7 +44,6 @@ class Crc32CSpec extends AnyFunSuite {
 
   test("SQL surface: crc32c over a column matches direct computation") {
     val spark = SparkTestBase.session
-    Crc32C.register(spark)
     import spark.implicits._
     val rows = Seq("hello-pulsar-8", "", "abc").toDF("s")
       .selectExpr("s", "crc32c(cast(s as binary)) AS c")

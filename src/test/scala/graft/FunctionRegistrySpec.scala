@@ -1,18 +1,15 @@
 package graft
 
 /** Every native kernel must be reachable from the `spark.sql` surface
-  * after `GraftSession.registerFunctions` — a SQL user of the library
-  * gets the same fused expressions the Column API uses. One probe per
-  * registered function with a known-answer assertion, so a registration
-  * or arity regression fails loudly here instead of deep inside an
-  * operator.
+  * of a `GraftSession.builder` session with no registration call — a
+  * SQL user of the library gets the same fused expressions the Column
+  * API uses. One probe per function with a known-answer assertion, so
+  * an injection or arity regression fails loudly here instead of deep
+  * inside an operator.
   */
 class FunctionRegistrySpec extends SparkTestBase {
 
-  private lazy val sql = {
-    GraftSession.registerFunctions(spark)
-    (q: String) => spark.sql(q).collect().head
-  }
+  private def sql(q: String) = spark.sql(q).collect().head
 
   test("crc32c") {
     // RFC 3720-style vector: crc32c of 32 zero bytes
@@ -224,6 +221,48 @@ class FunctionRegistrySpec extends SparkTestBase {
         s2.sql("SELECT lsh_bucket(array(0.5F), 4, 12) AS b").collect()
       }
       assert(e.getMessage.contains("expects 2 argument"), e.getMessage)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("a newSession() child carries every kernel without a registration call") {
+    val child = spark.newSession()
+    graft.functions.GraftFunctions.all.foreach { case (name, _, _) =>
+      assert(child.catalog.functionExists(name), s"$name missing on the child")
+    }
+  }
+
+  test("no operator re-registers: the child's registry keeps the injected entries") {
+    val child = spark.newSession()
+    // one key per operator module: DedupOps, SimilarityOps, TextOps,
+    // MessageOps, LlmOps, StreamOps
+    Seq("minhash", "emb_ivf_topk", "quality_lr", "payload_crc", "keep_best", "stream_dc")
+      .foreach(k => assert(SparkEntry.queries(k)(child, sfDir).count() > 0L, k))
+    // a re-registration would replace the injected entry's expression
+    // info with the registering lambda's class
+    graft.functions.GraftFunctions.all.foreach { case (name, clazz, _) =>
+      assert(child.catalog.getFunction(name).className === clazz.getCanonicalName, name)
+    }
+  }
+
+  test("registerFunctions gives a plainly built session every kernel in one call") {
+    import org.apache.spark.sql.SparkSession
+    // perfbench-style: a session the library did not build (no
+    // extension); clear the defaults so getOrCreate constructs one
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder().master("local[4]").getOrCreate()
+      assert(!s2.catalog.functionExists("crc32c"), "a plain session has no kernels")
+      GraftSession.registerFunctions(s2)
+      graft.functions.GraftFunctions.all.foreach { case (name, clazz, _) =>
+        assert(s2.catalog.functionExists(name), s"$name not registered")
+        assert(s2.catalog.getFunction(name).className === clazz.getCanonicalName, name)
+      }
+      val r = s2.sql("SELECT crc32c(cast(repeat(chr(0), 32) as binary)) AS c").collect().head
+      assert(r.getLong(0) === 0x8A9136AAL)
     } finally {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)

@@ -1693,7 +1693,6 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("ivf assign/centroid kernels are bit-identical to the composable fold forms") {
-    graft.GraftSession.registerFunctions(spark)
     val cents = SimilarityOps.stagedCentroidIndex(spark, sfDir)
     val idsL = typedlit(cents.map(_._1))
     val flatL = typedlit(cents.flatMap(_._2))
@@ -2086,7 +2085,6 @@ class PipelineOpsSpec extends SparkTestBase {
       VectorMath.cosineHof(col("a"), col("b")).as("hof")).collect()
     e.foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }
     // SQL surface: the registered function is callable by name
-    graft.functions.CosineSim.register(spark)
     val viaSql = spark.sql(
       "SELECT round(cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)), 6)").head().getDouble(0)
     assert(viaSql === 1.0)
@@ -2094,7 +2092,6 @@ class PipelineOpsSpec extends SparkTestBase {
 
   test("native gram_md5s matches the composable gram hashes, incl. short and empty text") {
     import graft.operators.TextOps
-    graft.functions.GramMd5s.register(spark)
     Seq(8, 24).foreach { len =>
       val both = docs.select(
         call_function("gram_md5s", col("text"), lit(len)).as("native"),
@@ -2118,8 +2115,6 @@ class PipelineOpsSpec extends SparkTestBase {
 
   test("native count_in / sum_strlen match the composable filter / aggregate folds") {
     import graft.operators.TextOps
-    graft.functions.CountIn.register(spark)
-    graft.functions.SumStrlen.register(spark)
     import spark.implicits._
     val corpus = docs.select("doc_id", "text").unionByName(Seq(
       (400001L, "the of and the is to the"), // repeats: count occurrences, not distinct
@@ -2146,7 +2141,6 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("native jaccard_distinct matches the composable intersect/concat/distinct chain") {
-    graft.functions.JaccardDistinct.register(spark)
     import spark.implicits._
     def hof = size(array_intersect(col("a"), col("b"))).cast("double") /
       size(array_distinct(concat(col("a"), col("b")))).cast("double")
@@ -2190,7 +2184,6 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("native word_shingles matches the composable array_distinct/transform shingles") {
-    graft.functions.WordShingles.register(spark)
     import spark.implicits._
     // fixture corpus + multibyte, duplicate-shingle, and exactly-n edges
     val corpus = docs.select("doc_id", "text").unionByName(Seq(
@@ -2218,7 +2211,6 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("native minhash_bands matches the composable explode/min-agg/band-agg formulation") {
-    graft.functions.MinhashBands.register(spark)
     import DedupOps.{NumSeeds, RowsPerBand}
     import spark.implicits._
     // multibyte + short-doc edges ride along with the fixture corpus
@@ -2258,7 +2250,6 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("native substr_fps matches the composable transform/filter/distinct formulation") {
-    graft.functions.SubstrFps.register(spark)
     import DedupOps.{SubstrModP, SubstrWindow}
     import spark.implicits._
     // multibyte, exactly-W-token, and repeated-window edges ride along
@@ -2320,7 +2311,6 @@ class PipelineOpsSpec extends SparkTestBase {
 
   test("native lsh_bucket matches the higher-order bucket on the fixture, both geometries") {
     import graft.operators.SimilarityOps
-    graft.functions.LshBucket.register(spark)
     Seq(8, 16).foreach { planes =>
       val both = emb.select(
         coalesce(call_function("lsh_bucket", col("embedding"), lit(planes)), lit(0L))
@@ -2608,5 +2598,31 @@ class PipelineOpsSpec extends SparkTestBase {
     Seq((5, "e")).toDF("doc_id", "v").write.mode("overwrite").parquet(dir.toString)
     assert(graft.util.StagedArtifacts.readStaged(spark, dir).schema("doc_id")
       .dataType === org.apache.spark.sql.types.LongType, "cache kept")
+  }
+
+  test("a memoized durable dir swept by another holder's re-stage re-resolves") {
+    import spark.implicits._
+    // two values with one name stand in for two JVMs sharing the host's
+    // durable root; an empty corpus dir keeps the stamp stable
+    val sf = java.nio.file.Files.createTempDirectory("graft_staged_corpus_")
+    graft.util.TempDirs.track(sf)
+    val name = "graft_spec_reresolve"
+    val a = new graft.util.Staged(name, partitionCols = Seq("p"))
+    val b = new graft.util.Staged(name, partitionCols = Seq("p"))
+    val rows = Seq((1L, 0), (2L, 1), (3L, 1))
+    def build = rows.toDF("id", "p")
+    def readBack(d: java.nio.file.Path): Seq[(Long, Int)] =
+      spark.read.parquet(d.toString).as[(Long, Int)].collect().toSeq.sorted
+    try {
+      val first = a.durable(sf.toString)(build)
+      val second = b.durable(sf.toString, freshGen = true)(build)
+      assert(second !== first)
+      assert(!java.nio.file.Files.exists(first), "the re-stage sweeps the prior generation")
+      assert(a.resolved(sf.toString) === Some(second))
+      val again = a.durable(sf.toString)(build)
+      assert(again === second)
+      assert(readBack(again) === rows)
+      assert(a.builds.get === 1L, "re-resolved, not rebuilt")
+    } finally a.drop()
   }
 }

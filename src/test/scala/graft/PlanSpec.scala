@@ -68,7 +68,6 @@ class PlanSpec extends SparkTestBase {
     import graft.operators.DedupOps
     val inc = graft.model.Fixtures.documents(spark, sfDir)
       .filter(DedupOps.isNewDoc).limit(20)
-    graft.GraftSession.registerFunctions(spark)
     val incBands = DedupOps.stagedTextSignatures(spark, sfDir)
       .join(inc.select("doc_id"), "doc_id")
       .select(col("doc_id").as("new_doc"),
@@ -361,7 +360,6 @@ class PlanSpec extends SparkTestBase {
     // registered exactly as annDeleteServe registers it.
     import graft.operators.SimilarityOps
     SimilarityOps.Segments.drop(sfDir)
-    graft.GraftSession.registerFunctions(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_plan_ann_del_")
     graft.util.TempDirs.track(root)
     val ids = graft.model.Fixtures.embeddings(spark, sfDir)
@@ -392,7 +390,6 @@ class PlanSpec extends SparkTestBase {
     // the serve frame with the tombstones live, exactly as
     // lshDeleteServe stages them; retired in finally.
     import graft.operators.DedupOps
-    graft.GraftSession.registerFunctions(spark)
     val ids = graft.model.Fixtures.documents(spark, sfDir)
       .filter(org.apache.spark.sql.functions.pmod(col("doc_id"),
         org.apache.spark.sql.functions.lit(DedupOps.DocDeleteMod))

@@ -593,7 +593,6 @@ class StreamOpsSpec extends SparkTestBase {
     // served index row-equal across the fold
     import graft.operators.SimilarityOps
     SimilarityOps.Segments.drop(sfDir)
-    graft.GraftSession.registerFunctions(spark)
     val emb = Fixtures.embeddings(spark, sfDir)
     val cents = SimilarityOps.stagedCentroidIndex(spark, sfDir)
     val cb = SimilarityOps.stagedPqCodebook(spark, sfDir)
@@ -645,7 +644,6 @@ class StreamOpsSpec extends SparkTestBase {
     // this, a deleted vector kept serving until the corpus re-stage.
     import graft.operators.SimilarityOps
     SimilarityOps.Segments.drop(sfDir)
-    graft.GraftSession.registerFunctions(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_ann_tomb_")
     graft.util.TempDirs.track(root)
     try {
@@ -755,7 +753,6 @@ class StreamOpsSpec extends SparkTestBase {
     // maintenance-turn / registration entry serves the full row set.
     import graft.operators.SimilarityOps
     SimilarityOps.Segments.drop(sfDir)
-    graft.GraftSession.registerFunctions(spark)
     val emb = Fixtures.embeddings(spark, sfDir)
     val cents = SimilarityOps.stagedCentroidIndex(spark, sfDir)
     val cb = SimilarityOps.stagedPqCodebook(spark, sfDir)

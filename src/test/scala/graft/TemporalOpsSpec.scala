@@ -376,7 +376,6 @@ class TemporalOpsSpec extends SparkTestBase {
     // a small scoring map over the fixture vocabulary + a floor
     val mp = Map("key" -> -1.25, "table" -> -2.5, "row" -> -0.75)
     val floor = -9.123456
-    graft.GraftSession.registerFunctions(spark)
     val fused = toks.select(col("doc_id"),
       call_function("logp_sum", col("w"), typedlit(mp), lit(floor)).as("s"))
     val hof = toks.select(col("doc_id"),
@@ -388,7 +387,6 @@ class TemporalOpsSpec extends SparkTestBase {
 
   test("quality classifier: native hash_weight_sum matches the composable HOF fold") {
     val docs = Fixtures.documents(spark, sfDir).limit(50)
-    graft.GraftSession.registerFunctions(spark)
     val toks = docs.select(col("doc_id"),
       split(trim(lower(col("text"))), "\\s+").as("w"))
     val w = TextOps.QlrWeights
@@ -400,7 +398,6 @@ class TemporalOpsSpec extends SparkTestBase {
 
   test("lm2: native backoff_sum matches the composable two-level HOF fold") {
     val docs = Fixtures.documents(spark, sfDir).limit(50)
-    graft.GraftSession.registerFunctions(spark)
     val toks = docs.select(col("doc_id"),
       split(trim(lower(col("text"))), "\\s+").as("w"))
     // small synthetic model exercising all three branches on real text
@@ -452,7 +449,6 @@ class TemporalOpsSpec extends SparkTestBase {
 
   test("lr_fit: full model table, deterministic, and gradient descent actually descends") {
     val docs = Fixtures.documents(spark, sfDir)
-    graft.GraftSession.registerFunctions(spark)
     val fit = TextOps.qualityLrFit(docs).collect()
       .map(r => r.getAs[Int]("bucket") -> r.getAs[Double]("weight")).toMap
     assert(fit.keySet === (0 until TextOps.QlrBuckets).toSet)
