@@ -43,10 +43,6 @@ object ObservedMetrics {
         override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
       })
 
-  /** Latest observed `<metric>.overflow_rows` for a metric name, if a
-    * query carrying it has completed in this JVM. */
-  def lastObserved(metric: String): Option[Long] = last.get(metric)
-
   def snapshot: Map[String, Long] = last.toMap
 
   // Driver-recorded GAUGES (e.g. ANN serving recall@k): quality metrics

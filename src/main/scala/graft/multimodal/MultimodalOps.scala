@@ -42,9 +42,9 @@ case class MediaFeatures(
   *    mean-|amplitude| feature.
   *  - VIDEO — the JDK GIF codec as a real MULTI-FRAME container:
   *    [[MultimodalOps.decodeVideo]] walks every frame of an animated
-  *    GIF through `ImageReader.read(i)` and aggregates cross-frame
-  *    channel means ([[MultimodalOps.synthGif]] synthesizes genuine
-  *    animated GIFs the way [[MultimodalOps.synthPng]] does stills).
+  *    GIF and aggregates cross-frame channel means
+  *    ([[MultimodalOps.synthGif]] synthesizes genuine animated GIFs the
+  *    way [[MultimodalOps.synthPng]] does stills).
   *
   * [[MultimodalOps.decodeAny]] sniffs the container magic and
   * dispatches; anything unrecognized — and any corrupt container —
@@ -56,6 +56,14 @@ case class MediaFeatures(
   * partition, amortizing per-batch decoder setup), partition-count
   * preservation, and frame-sampling as a post-decode projection.
   * Swapping a codec for a JNI/FFmpeg call changes no plumbing.
+  *
+  * Container I/O has one owner per container, in `Codecs.scala`:
+  * [[Still]] (stills in, PNG out), [[Gif]] (frame walk, sequence
+  * writer), [[Wav]] (PCM16-LE reader, RIFF writer) and [[Pixels]] (the
+  * row-bulk raster fold). Every decoder, synthesizer and fingerprint
+  * kernel here goes through them and keeps only its per-format
+  * arithmetic; a reader's failure, or its body's, is None for that
+  * row.
   *
   * Oracle-checkability: synthesized containers derive dims/fill/samples
   * from `media_id`, and the codecs round-trip losslessly (PNG rasters;
@@ -143,40 +151,38 @@ object MultimodalOps {
     * (means normalized /255; gray = channel-sum mean /3 — divisions
     * ordered so a constant-fill image reproduces the encoder's color
     * bit-for-bit, which the oracle states arithmetically). Returns None
-    * when the payload does not decode — `ImageIO.read` signals corrupt
-    * containers inconsistently (null for unknown formats, IIOException
-    * for truncated ones), both normalized here so callers fall back to
-    * [[stubDecode]] rather than poisoning the partition. */
+    * when the payload does not decode ([[Still.read]]), so callers fall
+    * back to [[stubDecode]] rather than poisoning the partition. */
   def decodeImage(r: MediaRecord): Option[MediaFeatures] =
-    (try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.bytes)))
-     catch { case scala.util.control.NonFatal(_) => None })
-      .map { img =>
-        val w = img.getWidth
-        val h = img.getHeight
-        var rs = 0L; var gs = 0L; var bs = 0L
-        // bulk raster copy: per-pixel getRGB(x, y) pays a ColorModel
-        // conversion per CALL — 12M virtual dispatches on a 4000×3000
-        // crawl image; one row-batch copy per row bounds the buffer at
-        // O(width) while keeping the conversion vectorized
-        val row = new Array[Int](w)
-        var y = 0
-        while (y < h) {
-          img.getRGB(0, y, w, 1, row, 0, w)
-          var x = 0
-          while (x < w) {
-            val p = row(x)
-            rs += (p >> 16) & 0xff; gs += (p >> 8) & 0xff; bs += p & 0xff
-            x += 1
-          }
-          y += 1
-        }
-        val n = (w.toLong * h).toDouble
-        def mean(s: Long): Float = (s / n / 255.0).toFloat
-        val gray = ((rs + gs + bs) / n / 3.0 / 255.0).toFloat
-        val feature = Array(mean(rs), mean(gs), mean(bs), gray,
-          img.getColorModel.getNumComponents.toFloat, 0f, 0f, 0f)
-        MediaFeatures(r.media_id, r.kind, w, h, 1, r.bytes.length, feature)
+    Still.read(r.bytes) { img =>
+      val s = new Array[Long](3)
+      addRgb(img, s)
+      Some(MediaFeatures(r.media_id, r.kind, img.getWidth, img.getHeight, 1, r.bytes.length,
+        channelMeans(s, img.getWidth.toLong * img.getHeight,
+          img.getColorModel.getNumComponents)))
+    }
+
+  /** Adds `img`'s red, green and blue sums into `s(0)`, `s(1)`, `s(2)`. */
+  private def addRgb(img: java.awt.image.BufferedImage, s: Array[Long]): Unit =
+    Pixels.rows(img) { (_, px) =>
+      var x = 0
+      while (x < px.length) {
+        val p = px(x)
+        s(0) += (p >> 16) & 0xff; s(1) += (p >> 8) & 0xff; s(2) += p & 0xff
+        x += 1
       }
+    }
+
+  /** The [r̄, ḡ, b̄, gray, channels, 0, 0, 0] feature of channel sums
+    * `s` over `n` pixels. The division order is the one the `mm_img`
+    * and `mm_stats` oracles state, so the float casts agree
+    * bit-for-bit. */
+  private def channelMeans(s: Array[Long], n: Long, channels: Int): Array[Float] = {
+    val d = n.toDouble
+    def mean(x: Long): Float = (x / d / 255.0).toFloat
+    Array(mean(s(0)), mean(s(1)), mean(s(2)),
+      ((s(0) + s(1) + s(2)) / d / 3.0 / 255.0).toFloat, channels.toFloat, 0f, 0f, 0f)
+  }
 
   /** REAL audio decode — `javax.sound.sampled` (JDK built-in RIFF/WAVE
     * parser, zero new deps): parse the container's format chunk to
@@ -187,89 +193,37 @@ object MultimodalOps {
     * `n_frames` the PCM frame count — the envelope's geometry slots
     * repurposed for 1-D media, as a real pipeline's typed metadata
     * would. Returns None on anything that is not 16-bit signed
-    * little-endian PCM (or fails to parse), so callers fall back to
-    * [[stubDecode]] rather than poisoning the partition. */
+    * little-endian PCM or fails to parse ([[Wav.read]]), so callers fall
+    * back to [[stubDecode]] rather than poisoning the partition. */
   def decodeAudio(r: MediaRecord): Option[MediaFeatures] =
-    try {
-      val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(r.bytes))
-      try {
-        val fmt = in.getFormat
-        val pcm16le = fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
-          fmt.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-        if (!pcm16le) None
-        else {
-          val pcm = in.readAllBytes()
-          var sumAbs = 0L
-          var i = 0
-          while (i + 1 < pcm.length) {
-            val s = ((pcm(i) & 0xff) | (pcm(i + 1) << 8)).toShort
-            sumAbs += math.abs(s.toInt)
-            i += 2
-          }
-          val nSamples = pcm.length / 2
-          val meanAbs = if (nSamples == 0) 0.0 else sumAbs.toDouble / nSamples
-          Some(MediaFeatures(r.media_id, r.kind, fmt.getSampleRate.toInt,
-            fmt.getChannels, in.getFrameLength.toInt, r.bytes.length,
-            Array((meanAbs / 32768.0).toFloat, fmt.getChannels.toFloat,
-              fmt.getSampleRate, 0f, 0f, 0f, 0f, 0f)))
-        }
-      } finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    Wav.read(r.bytes) { pcm =>
+      val fmt = pcm.format
+      var sumAbs = 0L
+      var i = 0
+      while (i < pcm.samples.length) { sumAbs += math.abs(pcm.samples(i).toInt); i += 1 }
+      val meanAbs = if (i == 0) 0.0 else sumAbs.toDouble / i
+      Some(MediaFeatures(r.media_id, r.kind, fmt.getSampleRate.toInt,
+        fmt.getChannels, pcm.frames.toInt, r.bytes.length,
+        Array((meanAbs / 32768.0).toFloat, fmt.getChannels.toFloat,
+          fmt.getSampleRate, 0f, 0f, 0f, 0f, 0f)))
+    }
 
   /** REAL video decode — the JDK GIF codec driven as a MULTI-FRAME
-    * container reader: `ImageReader.getNumImages(true)` walks the frame
-    * directory, `read(i)` decodes every frame's raster, and the feature
-    * aggregates exact channel means ACROSS frames (same /255
+    * container reader: [[Gif.read]] walks the frame directory and
+    * decodes every frame's raster, and the feature aggregates exact
+    * channel means ACROSS frames (same /255
     * normalization and division order as [[decodeImage]], over
     * width×height×frames pixels). [r̄, ḡ, b̄, gray, 3, 0, 0, 0];
-    * `n_frames` is the true decoded frame count. Returns None when no
-    * reader claims the payload, it holds zero frames, or any frame
-    * fails to decode — the per-row fallback contract. */
+    * `n_frames` is the true decoded frame count. None when the clip does
+    * not decode — the per-row fallback contract. */
   def decodeVideo(r: MediaRecord): Option[MediaFeatures] =
-    try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(r.bytes))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val reader = readers.next()
-          try {
-            reader.setInput(iis, false, true)
-            val n = reader.getNumImages(true)
-            if (n <= 0) None
-            else {
-              var rs = 0L; var gs = 0L; var bs = 0L
-              var w = 0; var h = 0
-              var f = 0
-              while (f < n) {
-                val img = reader.read(f)
-                w = img.getWidth; h = img.getHeight
-                val row = new Array[Int](w)
-                var y = 0
-                while (y < h) {
-                  img.getRGB(0, y, w, 1, row, 0, w)
-                  var x = 0
-                  while (x < w) {
-                    val p = row(x)
-                    rs += (p >> 16) & 0xff; gs += (p >> 8) & 0xff; bs += p & 0xff
-                    x += 1
-                  }
-                  y += 1
-                }
-                f += 1
-              }
-              val tot = (w.toLong * h * n).toDouble
-              def mean(s: Long): Float = (s / tot / 255.0).toFloat
-              val gray = ((rs + gs + bs) / tot / 3.0 / 255.0).toFloat
-              Some(MediaFeatures(r.media_id, r.kind, w, h, n, r.bytes.length,
-                Array(mean(rs), mean(gs), mean(bs), gray, 3f, 0f, 0f, 0f)))
-            }
-          } finally reader.dispose()
-        }
-      } finally if (iis != null) iis.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    Gif.read(r.bytes) { frames =>
+      val s = new Array[Long](3)
+      var w = 0; var h = 0; var n = 0
+      frames.foreach { img => w = img.getWidth; h = img.getHeight; addRgb(img, s); n += 1 }
+      Some(MediaFeatures(r.media_id, r.kind, w, h, n, r.bytes.length,
+        channelMeans(s, w.toLong * h * n, 3)))
+    }
 
   /** Production decode dispatch: payloads carrying a real container
     * magic (PNG/JPEG, RIFF/WAVE, GIF) decode through the genuine JDK
@@ -301,24 +255,20 @@ object MultimodalOps {
     * partition (the [[decodeImage]] contract). Bilinear interpolation:
     * the standard pre-model normalization kernel. */
   def resizeImage(bytes: Array[Byte], targetW: Int, targetH: Int): Option[Array[Byte]] =
-    (try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-     catch { case scala.util.control.NonFatal(_) => None })
-      .map { img =>
-        val scale = math.min(targetW.toDouble / img.getWidth,
-          targetH.toDouble / img.getHeight)
-        val outW = math.max(1, math.floor(img.getWidth * scale).toInt)
-        val outH = math.max(1, math.floor(img.getHeight * scale).toInt)
-        val out = new java.awt.image.BufferedImage(
-          outW, outH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = out.createGraphics()
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, outW, outH, null)
-        g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(out, "png", bos)
-        bos.toByteArray
-      }
+    Still.read(bytes) { img =>
+      val scale = math.min(targetW.toDouble / img.getWidth,
+        targetH.toDouble / img.getHeight)
+      val outW = math.max(1, math.floor(img.getWidth * scale).toInt)
+      val outH = math.max(1, math.floor(img.getHeight * scale).toInt)
+      val out = new java.awt.image.BufferedImage(
+        outW, outH, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val g = out.createGraphics()
+      g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+      g.drawImage(img, 0, 0, outW, outH, null)
+      g.dispose()
+      Some(Still.png(out))
+    }
 
   /** Batched REAL resize over a media table: image payloads come back
     * re-encoded at letterboxed size, everything else passes through
@@ -368,17 +318,24 @@ object MultimodalOps {
     * ([[synthGif]]) — synthesized executor-side in the batched
     * `mapPartitions` shape, so the decode path exercises all three
     * production codecs. */
-  def realMediaTable(docs: DataFrame): Dataset[MediaRecord] = {
+  def realMediaTable(docs: DataFrame): Dataset[MediaRecord] =
+    synthesizedTable(docs, id => Math.floorMod(id, 3) match {
+      case 0 => "image"
+      case 1 => "audio"
+      case _ => "video"
+    })
+
+  /** One synthesized container per document row, executor-side in the
+    * batched `mapPartitions` shape the decode uses (encode cost stays in
+    * the scan task; nothing corpus-sized crosses an exchange):
+    * `kindOf(doc_id)` picks the kind, and the kind its synthesizer. */
+  private def synthesizedTable(docs: DataFrame, kindOf: Long => String): Dataset[MediaRecord] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id"), col("source"), col("lang"))
       .as[(Long, String, String)]
       .mapPartitions(_.map { case (id, source, lang) =>
-        val kind = Math.floorMod(id, 3) match {
-          case 0 => "image"
-          case 1 => "audio"
-          case _ => "video"
-        }
+        val kind = kindOf(id)
         val bytes = kind match {
           case "image" => synthPng(id)
           case "audio" => synthWav(id)
@@ -459,52 +416,23 @@ object MultimodalOps {
       Math.floorMod(mediaId * 83, 256).toInt
     val img = new java.awt.image.BufferedImage(
       w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb)
+    Still.png(img)
   }
 
-  /** Deterministic WAV synthesis through a hand-rolled RIFF/WAVE writer
-    * (the container format is 44 bytes of header + PCM — writing it
-    * directly IS the codec): rate cycles the standard ladder, channel
-    * count alternates mono/stereo, and the PCM16 samples alternate
-    * ±amp(id) so the decoded mean |amplitude| is exactly `amp` (frame
-    * count pinned even). The REAL `javax.sound.sampled` parser decodes
-    * it back in [[decodeAudio]] — and the oracle states the result
-    * arithmetically from `media_id`. */
+  /** Deterministic WAV synthesis through [[Wav.write]]: rate cycles
+    * the standard ladder, channel count alternates mono/stereo, and the
+    * PCM16 samples alternate ±amp(id) so the decoded mean |amplitude|
+    * is exactly `amp` (frame count pinned even). The REAL
+    * `javax.sound.sampled` parser decodes it back in [[decodeAudio]] —
+    * and the oracle states the result arithmetically from `media_id`. */
   def synthWav(mediaId: Long): Array[Byte] = {
     val rate = Array(8000, 16000, 22050, 44100)(Math.floorMod(mediaId, 4).toInt)
     val channels = 1 + Math.floorMod(mediaId, 2).toInt
     val nFrames = 100 + 2 * Math.floorMod(mediaId, 200).toInt
     val amp = Math.floorMod(mediaId * 13, 30000).toInt
-    val dataLen = nFrames * channels * 2
-    val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val ascii = java.nio.charset.StandardCharsets.US_ASCII
-    buf.put("RIFF".getBytes(ascii)).putInt(36 + dataLen)
-      .put("WAVE".getBytes(ascii))
-    buf.put("fmt ".getBytes(ascii)).putInt(16)
-      .putShort(1) // PCM
-      .putShort(channels.toShort)
-      .putInt(rate)
-      .putInt(rate * channels * 2) // byte rate
-      .putShort((channels * 2).toShort) // block align
-      .putShort(16) // bits per sample
-    buf.put("data".getBytes(ascii)).putInt(dataLen)
-    var f = 0
-    while (f < nFrames) {
-      val s = (if (f % 2 == 0) amp else -amp).toShort
-      var c = 0
-      while (c < channels) { buf.putShort(s); c += 1 }
-      f += 1
-    }
-    buf.array()
+    Wav.write(rate, channels, Array.tabulate(nFrames * channels)(i =>
+      (if (i / channels % 2 == 0) amp else -amp).toShort))
   }
 
   /** Deterministic animated-GIF synthesis through the REAL JDK GIF
@@ -518,48 +446,22 @@ object MultimodalOps {
     val w = 8 + Math.floorMod(mediaId, 24).toInt
     val h = 8 + Math.floorMod(mediaId, 16).toInt
     val nFrames = 1 + Math.floorMod(mediaId, 8).toInt
-    val bos = new java.io.ByteArrayOutputStream()
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    try {
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      var f = 0
-      while (f < nFrames) {
-        val r = Math.floorMod(mediaId * 37 + f * 11, 256).toInt
-        val g = Math.floorMod(mediaId * 59 + f * 17, 256).toInt
-        val b = Math.floorMod(mediaId * 83 + f * 23, 256).toInt
-        val icm = new java.awt.image.IndexColorModel(1, 2,
-          Array(r.toByte, 0.toByte), Array(g.toByte, 0.toByte),
-          Array(b.toByte, 0.toByte))
-        // raster defaults to palette index 0 = the frame color
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-        f += 1
-      }
-      writer.endWriteSequence()
-    } finally {
-      writer.dispose()
-      ios.close()
-    }
-    bos.toByteArray
+    Gif.write(Iterator.tabulate(nFrames) { f =>
+      val r = Math.floorMod(mediaId * 37 + f * 11, 256).toInt
+      val g = Math.floorMod(mediaId * 59 + f * 17, 256).toInt
+      val b = Math.floorMod(mediaId * 83 + f * 23, 256).toInt
+      val icm = new java.awt.image.IndexColorModel(1, 2,
+        Array(r.toByte, 0.toByte), Array(g.toByte, 0.toByte),
+        Array(b.toByte, 0.toByte))
+      // raster defaults to palette index 0 = the frame color
+      new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
+    })
   }
 
-  /** An image-payload media table: real PNG bytes per document row,
-    * synthesized executor-side in the same batched `mapPartitions` shape
-    * the decode uses (encode cost stays in the scan task; nothing
-    * corpus-sized crosses an exchange). */
-  def imageTable(docs: DataFrame): Dataset[MediaRecord] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("source"), col("lang"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, source, lang) =>
-        MediaRecord(id, "image", synthPng(id),
-          Map("source" -> source, "lang" -> lang))
-      })
-  }
+  /** An image-payload media table: one real PNG ([[synthPng]]) per
+    * document row. */
+  def imageTable(docs: DataFrame): Dataset[MediaRecord] = synthesizedTable(docs, _ => "image")
 
   /** The synthesized PNG corpus staged to parquet once per corpus
     * SNAPSHOT ((size, mtime)-stamped on the documents table) — a real
@@ -682,20 +584,12 @@ object MultimodalOps {
     val d = g % 7
     val img = new java.awt.image.BufferedImage(
       32, 32, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < 32) {
-      var x = 0
-      while (x < 32) {
-        val gray = (a * x * x + b * y * y + c * x * y + d * (x + y) + g * 3 +
-          (if (x == spike && y == spike) 40 else 0)) % 256
-        img.setRGB(x, y, (gray << 16) | (gray << 8) | gray)
-        x += 1
-      }
-      y += 1
+    for (y <- 0 until 32; x <- 0 until 32) {
+      val gray = (a * x * x + b * y * y + c * x * y + d * (x + y) + g * 3 +
+        (if (x == spike && y == spike) 40 else 0)) % 256
+      img.setRGB(x, y, (gray << 16) | (gray << 8) | gray)
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    Still.png(img)
   }
 
   /** Spread the per-document synthesis input across the session's full
@@ -738,25 +632,8 @@ object MultimodalOps {
     val a = p % 1024
     val b = (p / 1024) % 1024
     val c = (p / 1048576) % 2048
-    val nFrames = 456
-    val dataLen = nFrames * 2
-    val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val ascii = java.nio.charset.StandardCharsets.US_ASCII
-    buf.put("RIFF".getBytes(ascii)).putInt(36 + dataLen)
-      .put("WAVE".getBytes(ascii))
-    buf.put("fmt ".getBytes(ascii)).putInt(16)
-      .putShort(1).putShort(1).putInt(8000).putInt(16000)
-      .putShort(2).putShort(16)
-    buf.put("data".getBytes(ascii)).putInt(dataLen)
-    var t = 0
-    while (t < nFrames) {
-      val s = ((a * t * t + b * t + c) % 2048 - 1024 +
-        (if (t == t0) 500 else 0)).toInt
-      buf.putShort(s.toShort)
-      t += 1
-    }
-    buf.array()
+    Wav.write(8000, 1, Array.tabulate(456)(t =>
+      ((a * t * t + b * t + c) % 2048 - 1024 + (if (t == t0) 500 else 0)).toInt.toShort))
   }
 
   /** Deterministic TEXTURED animated-GIF synthesis (the video member of
@@ -788,37 +665,17 @@ object MultimodalOps {
     val dd = (pm / 512) % 8
     val pal = Array.tabulate(256)(_.toByte)
     val icm = new java.awt.image.IndexColorModel(8, 256, pal, pal, pal)
-    val bos = new java.io.ByteArrayOutputStream()
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    try {
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      var f = 0
-      while (f < 57) {
-        val img = new java.awt.image.BufferedImage(
-          8, 8, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-        val spike = if (f == p * 8) 40L else 0L
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 8) {
-            val gray = ((a * f * f + b * f * (x + 1) + cc * x * y +
-              dd * (y + 1) * f + g * 3 + spike) % 256).toInt
-            img.getRaster.setSample(x, y, 0, gray)
-            x += 1
-          }
-          y += 1
-        }
-        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-        f += 1
+    Gif.write(Iterator.tabulate(57) { f =>
+      val img = new java.awt.image.BufferedImage(
+        8, 8, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
+      val spike = if (f == p * 8) 40L else 0L
+      for (y <- 0 until 8; x <- 0 until 8) {
+        val gray = ((a * f * f + b * f * (x + 1) + cc * x * y +
+          dd * (y + 1) * f + g * 3 + spike) % 256).toInt
+        img.getRaster.setSample(x, y, 0, gray)
       }
-      writer.endWriteSequence()
-    } finally {
-      writer.dispose()
-      ios.close()
-    }
-    bos.toByteArray
+      img
+    })
   }
 
   // ---------------------------------------------------------------------
@@ -859,53 +716,20 @@ object MultimodalOps {
     * hashes. Clips with fewer than 57 frames are rejected (per-row
     * corrupt fallback). */
   private[graft] def videoTemporalHashOf(bytes: Array[Byte]): Option[Long] =
-    try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val reader = readers.next()
-          try {
-            reader.setInput(iis, false, true)
-            // Single pass: no getNumImages(true) pre-walk (that forces a
-            // full stream parse BEFORE the 57 decodes — every clip parsed
-            // twice). Read frames sequentially; a clip shorter than 57
-            // frames makes reader.read(f) throw, landing in the corrupt
-            // fallback below — the same None the length check produced.
-            val e = new Array[Long](57)
-            var f = 0
-            while (f < 57) {
-              val img = reader.read(f)
-              val w = img.getWidth
-              val h = img.getHeight
-              val row = new Array[Int](w)
-              var y = 0
-              while (y < h) {
-                img.getRGB(0, y, w, 1, row, 0, w)
-                var x = 0
-                while (x < w) {
-                  e(f) += (row(x) >> 16) & 0xff
-                  x += 1
-                }
-                y += 1
-              }
-              f += 1
-            }
-            var hash = 0L
-            var w = 0
-            while (w < 56) {
-              if (e(w) > e(w + 1)) hash |= 1L << w
-              w += 1
-            }
-            Some(hash)
-          } finally reader.dispose()
-        }
-      } finally if (iis != null) iis.close()
-    } catch {
-      case _: Exception => None
+    // exactly 57 frames, no directory pre-walk (that would parse every
+    // clip twice); a shorter clip fails its 57th read, so None
+    Gif.read(bytes, 57) { frames =>
+      Some(deltaHash(frames.map { img =>
+        val s = new Array[Long](3)
+        addRgb(img, s)
+        s(0)
+      }.toArray))
     }
+
+  /** Bit `i` of a 56-bit fingerprint set iff e(i) > e(i + 1): the
+    * sign-of-energy-delta packing of the audio and video kernels. */
+  private def deltaHash(e: Array[Long]): Long =
+    (0 until 56).foldLeft(0L)((hash, i) => if (e(i) > e(i + 1)) hash | 1L << i else hash)
 
   /** Acoustic energy fingerprint of an audio payload through the REAL
     * codec: parse the container with `javax.sound.sampled` (PCM16 is
@@ -917,43 +741,21 @@ object MultimodalOps {
     * rescaling preserves the deltas' signs, small edits move a couple
     * of bits. The 56-bit hash feeds the SAME banded pair skeleton as
     * the image dHash. Mono-ized by summing channels per frame;
-    * undecodable or short payloads are rejected (per-row corrupt
-    * fallback). */
+    * undecodable, non-PCM16-LE ([[Wav.read]]) or short payloads are
+    * rejected (per-row corrupt fallback). */
   private[graft] def audioEnergyHashOf(bytes: Array[Byte]): Option[Long] =
-    try {
-      val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val fmt = in.getFormat
-      val pcm = in.readAllBytes()
-      val frameSize = fmt.getFrameSize
-      val channels = fmt.getChannels
-      val n = pcm.length / frameSize
-      if (n < 57 * 8) None
+    Wav.read(bytes) { pcm =>
+      val channels = pcm.format.getChannels
+      if (pcm.samples.length / channels < 57 * 8) None
       else {
         val e = new Array[Long](57)
-        var t = 0
-        while (t < 57 * 8) {
-          var ch = 0
+        for (t <- 0 until 57 * 8) {
           var frameSum = 0L
-          while (ch < channels) {
-            val off = t * frameSize + ch * 2
-            val s = ((pcm(off) & 0xff) | (pcm(off + 1) << 8)).toShort
-            frameSum += s
-            ch += 1
-          }
+          for (ch <- 0 until channels) frameSum += pcm.samples(t * channels + ch)
           e(t / 8) += math.abs(frameSum)
-          t += 1
         }
-        var hash = 0L
-        var w = 0
-        while (w < 56) {
-          if (e(w) > e(w + 1)) hash |= 1L << w
-          w += 1
-        }
-        Some(hash)
+        Some(deltaHash(e))
       }
-    } catch {
-      case _: Exception => None
     }
 
   /** Perceptual difference-hash (dHash) of an image payload through the
@@ -965,37 +767,24 @@ object MultimodalOps {
     * edits) land within a few bits; the image modality's banded
     * `dups` turns that into capped candidate buckets. Undecodable
     * payloads are rejected (the per-row corrupt fallback discipline). */
-  private[graft] def imageDHashOf(bytes: Array[Byte]): Option[Long] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: java.io.IOException => null }
-    if (img == null || img.getWidth < 8 || img.getHeight < 8) None
-    else {
+  private[graft] def imageDHashOf(bytes: Array[Byte]): Option[Long] =
+    Still.read(bytes) { img =>
       val w = img.getWidth
       val h = img.getHeight
-      val sums = Array.ofDim[Long](8, 8)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          sums(y * 8 / h)(x * 8 / w) += (img.getRGB(x, y) >> 16) & 0xFF
-          x += 1
+      if (w < 8 || h < 8) None
+      else {
+        val sums = Array.ofDim[Long](8, 8)
+        Pixels.rows(img) { (y, px) =>
+          val cells = sums(y * 8 / h)
+          var x = 0
+          while (x < w) { cells(x * 8 / w) += (px(x) >> 16) & 0xff; x += 1 }
         }
-        y += 1
+        var hash = 0L
+        for (cy <- 0 until 8; cx <- 0 until 7 if sums(cy)(cx) > sums(cy)(cx + 1))
+          hash |= 1L << (cy * 7 + cx)
+        Some(hash)
       }
-      var hash = 0L
-      var cy = 0
-      while (cy < 8) {
-        var cx = 0
-        while (cx < 7) {
-          if (sums(cy)(cx) > sums(cy)(cx + 1)) hash |= 1L << (cy * 7 + cx)
-          cx += 1
-        }
-        cy += 1
-      }
-      Some(hash)
     }
-  }
 
   /** Contract query: per-image decoded geometry + channel means through
     * the REAL codec round-trip (synthesize PNG → `javax.imageio` decode

@@ -2551,28 +2551,21 @@ object DedupOps {
           .filter(pmod(col("doc_id"), lit(DecontaminateProbeMod)) === 0))
         .select("g").distinct())
 
-  /** Decontaminate ONE arriving batch against the staged probe grams —
+  /** Decontaminate ONE arriving batch against a FROZEN probe-gram set —
     * the per-micro-batch body of the streaming decontamination gate
     * (`stream_dc`): gram the batch in-row, hash-join the bounded staged
     * probe set by broadcast, aggregate per doc. Per-batch cost
     * O(batch grams) — no corpus work, no shuffle beyond the batch-local
-    * per-doc aggregate. Split-independent by construction: a document
-    * is one stream row, so its grams land in exactly one batch and its
-    * verdict depends on (that doc, the frozen probe set) alone. */
-  def decontaminateBatch(spark: SparkSession, sfDir: String,
-      batch: DataFrame): DataFrame =
-    decontaminateBatchAt(stagedProbeGrams(spark, sfDir), batch)
-
-  /** The FROZEN-PROBE form for long-lived streaming gates
-    * ([[mergeClusterIncrementDeltaStagedAt]]'s discipline for the
-    * decontamination family): the caller resolves the staged probe-gram
-    * frame ONCE at stream start and every micro-batch joins exactly that
-    * frame — a mid-stream benchmark rewrite must NOT silently swing
-    * later batches onto a rebuilt probe set (the memo-keyed
-    * [[decontaminateBatch]] would: the stamp change re-derives on next
-    * access — ADVICE r16), which would break the gate's documented
-    * split-independence premise (every verdict depends on the doc + ONE
-    * frozen probe set). */
+    * per-doc aggregate. The caller resolves the staged probe-gram frame
+    * ([[stagedProbeGrams]]) ONCE at stream start and every micro-batch
+    * joins exactly that frame
+    * ([[mergeClusterIncrementDeltaStagedAt]]'s discipline): a
+    * mid-stream benchmark rewrite must NOT swing later batches onto a
+    * rebuilt probe set (re-resolving the memo-keyed staged set per
+    * batch would: the stamp change re-derives on next access — ADVICE
+    * r16). So the gate stays split-independent: a document is one
+    * stream row, its grams land in exactly one batch, and its verdict
+    * depends on (that doc, the ONE frozen probe set) alone. */
   def decontaminateBatchAt(probe: DataFrame, batch: DataFrame): DataFrame =
     contamVerdicts(contamGrams(spreadBatch(batch)), probe,
       DecontaminateMinShared)

@@ -624,7 +624,7 @@ object StreamOps {
     * release time. Documents arrive as a stream; each micro-batch is
     * grammed in-row and hash-joined against the FROZEN staged
     * probe-gram set by broadcast
-    * ([[graft.operators.DedupOps.decontaminateBatch]] — per-batch cost
+    * ([[graft.operators.DedupOps.decontaminateBatchAt]] — per-batch cost
     * O(batch grams), no corpus work, no stream state); flagged docs
     * land in an epoch-keyed sink with overwrite.
     *

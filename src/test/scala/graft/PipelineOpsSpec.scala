@@ -625,6 +625,32 @@ class PipelineOpsSpec extends SparkTestBase {
     wanted.foreach(p => assert(pairs(p), s"missing near-dup pair $p"))
   }
 
+  test("audio energy hash: only PCM16-LE containers fingerprint (24-bit WAV and big-endian AIFF drop)") {
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+    import spark.implicits._
+    val pcm = MultimodalOps.synthTextureWav(8L).drop(44) // 456 PCM16-LE samples
+    def container(bits: Int, bigEndian: Boolean, kind: AudioFileFormat.Type,
+        data: Array[Byte]): Array[Byte] = {
+      val fmt = new AudioFormat(8000f, bits, 1, true, bigEndian)
+      val in = new AudioInputStream(new java.io.ByteArrayInputStream(data), fmt,
+        data.length / fmt.getFrameSize)
+      val out = new java.io.ByteArrayOutputStream()
+      AudioSystem.write(in, kind, out)
+      out.toByteArray
+    }
+    val media = Seq(
+      MediaRecord(1L, "audio", container(16, false, AudioFileFormat.Type.WAVE, pcm), Map()),
+      MediaRecord(2L, "audio", container(24, false, AudioFileFormat.Type.WAVE,
+        Array.tabulate(456 * 3)(i => pcm(i % pcm.length))), Map()),
+      // the same bytes read big-endian: a little-endian reader would hash
+      // them exactly as record 1
+      MediaRecord(3L, "audio", container(16, true, AudioFileFormat.Type.AIFF, pcm), Map()))
+      .toDS()
+    val kept = DedupOps.AudioModality.fingerprint(media).collect()
+      .map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("dhash")).toMap
+    assert(kept === Map(1L -> MultimodalOps.audioEnergyHashOf(MultimodalOps.synthTextureWav(8L)).get))
+  }
+
   test("video temporal hash: codec-path fingerprints match the arithmetic replica; near-dups surface") {
     def replicaHash(id: Long): Long = {
       val g = id / 8
