@@ -2391,20 +2391,16 @@ object DedupOps {
     * past the exclusion.
     *
     * CRASH-SAFE AT EVERY STEP, without a journal, because this overlay
-    * is only ever consumed through the newest-wins collapse: (1) the
-    * collapsed rows write to a hidden `.compact_*` scratch (Spark
-    * listings skip dot-dirs — readers never see the half-written fold);
-    * (2) the scratch's data files MOVE one by one into `epoch=<foldMax>`
-    * — each collapsed row either DOMINATES every folded row it
-    * summarizes (it carries the max folded epoch) or ties value-equal
-    * with foldMax's own row, so any prefix of the moves leaves the
-    * served view unchanged; (3) only then do the shadowed originals and
-    * the older epoch dirs delete — every deletion removes rows the
-    * collapsed files already dominate. An interrupted compaction leaves
-    * extra shadowed rows and a swept-on-next-entry scratch dir, never a
-    * changed view. (The ANN segment compactor CANNOT make this
-    * guarantee — its read path is a plain union — see
-    * [[graft.operators.SimilarityOps.maybeCompactIndexSegments]].)
+    * is only ever consumed through the newest-wins collapse: the fold
+    * publishes through [[graft.util.EpochDirs.fold]]'s MOVE swap — the
+    * collapsed files move one by one into the highest folded epoch's
+    * dir, each dominating (or tying value-equal with) every row it
+    * summarizes, and only then do the shadowed originals and older
+    * epochs delete. An interrupted compaction leaves extra shadowed rows
+    * and a scratch the next entry sweeps, never a changed view — and,
+    * unlike the hide swap the plain-union readers need
+    * ([[graft.operators.SimilarityOps.maybeCompactIndexSegments]]), no
+    * missing-rows window for a concurrent `xm_served` read.
     *
     * Manifest bookkeeping rides a conditional write keyed by the
     * registration root ([[graft.util.ServingManifest.setIf]]): the
@@ -2415,38 +2411,29 @@ object DedupOps {
     * file fold still applies. Returns whether a fold ran. */
   def maybeCompactClusterDeltas(spark: SparkSession, sfDir: String,
       deltaRoot: String, maxEpochs: Int = XmCompactEpochs): Boolean = {
-    val epochs = ClusterDeltas.epochs(sfDir, deltaRoot, "xm.delta_epochs")
-    if (epochs.size <= maxEpochs || epochs.size < 3) false
-    else {
-      graft.util.EpochDirs.sweepScratch(deltaRoot)
-      val newest = epochs.last
-      val foldMax = epochs(epochs.size - 2)
-      val folded = rawClusterDeltas(spark, deltaRoot, Some(newest)).get
-      val scratch = graft.util.EpochDirs.scratch(deltaRoot)
-      // the COLLAPSED delta, tombstones included: the fold must CARRY a
-      // retraction (dropping it would un-shadow the doc's base row and
-      // resurrect it) — tombstones leave the overlay only at the corpus
-      // re-stage. Dominance safety is unchanged: a collapsed tombstone
-      // row dominates every row it summarizes under the tombstone-
-      // dominant read collapse exactly as a live row does under
-      // newest-wins.
-      collapsedClusterDelta(folded).write.parquet(scratch.toString)
-      val target = java.nio.file.Paths.get(deltaRoot, s"epoch=$foldMax")
-      val shadowed = graft.util.EpochDirs.dataFilesIn(target)
-      graft.util.EpochDirs.dataFilesIn(scratch).foreach(f =>
-        graft.util.Durable.rename(f, target.resolve(f.getFileName)))
-      shadowed.foreach(f => java.nio.file.Files.deleteIfExists(f))
-      epochs.dropRight(2).foreach(e =>
-        graft.util.EpochDirs.drop(deltaRoot, e))
-      graft.util.TempDirs.deleteNow(scratch)
+    val ran = graft.util.EpochDirs.fold(deltaRoot, maxEpochs,
+        graft.util.EpochDirs.Move,
+        ClusterDeltas.noteEpochs(sfDir, deltaRoot, "xm.delta_epochs")) {
+      (newest, scratch) =>
+        // the COLLAPSED delta, tombstones included: the fold must CARRY
+        // a retraction (dropping it would un-shadow the doc's base row
+        // and resurrect it) — tombstones leave the overlay only at the
+        // corpus re-stage. Dominance safety is unchanged: a collapsed
+        // tombstone row dominates every row it summarizes under the
+        // tombstone-dominant read collapse exactly as a live row does
+        // under newest-wins.
+        collapsedClusterDelta(rawClusterDeltas(spark, deltaRoot, Some(newest)).get)
+          .write.parquet(scratch)
+    }
+    if (ran) {
       // physical recount (one cheap job over collapsed + newest): the
       // counter's append semantics resume on top via addCounterIfNewEpoch
       val total = rawClusterDeltas(spark, deltaRoot, None)
         .map(_.count()).getOrElse(0L)
       ClusterDeltas.remeasure(sfDir, deltaRoot, total, epochs = 2)
       graft.ObservedMetrics.bumpGauge("xm.delta_folds")
-      true
     }
+    ran
   }
 
   /** The BATCH overlay-serve leg of the cluster layer — `ann_seg`'s

@@ -630,10 +630,9 @@ object SimilarityOps {
   def registerIndexSegments(spark: SparkSession, sfDir: String,
       segRoot: String): Unit = {
     // a re-registration of the SAME root (checkpointed stream restart)
-    // first completes any fold the dead JVM journaled mid-swap, so the
+    // first repairs any fold a dead JVM left mid-swap, so the
     // registration count below sees the full row set (r17 verdict #3)
-    recoverInterruptedSegmentFold(spark, sfDir, segRoot)
-    foldRecoveryChecked.add(segRoot)
+    graft.util.EpochDirs.recover(segRoot)
     // segment rows counted ONCE at registration (footer metadata) and
     // persisted next to the root, so the staleness gauge is arithmetic
     // — a monitoring read never scans the segments
@@ -668,182 +667,69 @@ object SimilarityOps {
     * EPOCH GAUGE (`ann.segment_epochs` + the registration's `epochs`
     * manifest key), recorded whether or not a fold runs.
     *
-    * SWAP DISCIPLINE (vs
-    * [[graft.operators.DedupOps.maybeCompactClusterDeltas]]'s
-    * journal-free dominance argument): [[servedIndex]] consumes
-    * segments as a plain UNION — partition pruning must keep reaching
-    * both cell-partitioned scans, so there is no read-side newest-wins
-    * collapse to make duplicate or missing rows self-healing, and the
-    * fold MUST drop the source dirs before renaming the collapsed
-    * scratch in (publishing first would serve every folded row twice).
-    * The drop→publish window is therefore closed by a JOURNAL (r17
-    * verdict #3): before the first drop, the fold intent — scratch dir
-    * name, the epoch ids to drop, the publish target — is written into
-    * the registration's manifest entry under the existing lock; the
-    * post-fold measurement write retires the journal in the same
-    * atomic update ([[graft.util.ServingManifest.setAndClearIf]]). A
-    * crash anywhere between leaves the journal live, and the next
-    * maintenance turn or [[registerIndexSegments]] call completes the
-    * interrupted fold ([[recoverInterruptedSegmentFold]]) BEFORE
-    * anything reads or sweeps the overlay — the folded rows are never
-    * lost and the missing-rows window ends at the next writer entry,
-    * not at the next retrain. Single-writer precondition: the caller
-    * is the ingestion stream's own maintenance turn (foreachBatch),
-    * serialized with the epoch writes. */
+    * SWAP DISCIPLINE: [[servedIndex]] consumes segments as a plain
+    * UNION — partition pruning must keep reaching both cell-partitioned
+    * scans, so there is no read-side newest-wins collapse to make
+    * duplicate rows self-healing. The fold therefore publishes through
+    * [[graft.util.EpochDirs.fold]]'s hide-don't-delete swap, the one the
+    * result sinks use: the source epochs hide, the collapse publishes,
+    * the hidden dirs delete. A crash between hide and publish serves an
+    * index missing the folded rows only until the next writer entry —
+    * this maintenance turn or [[registerIndexSegments]] — whose
+    * recovery restores the hidden sources (the turn then folds again);
+    * a crash after publish already serves the whole view. Single-writer
+    * precondition: the caller is the ingestion stream's own maintenance
+    * turn (foreachBatch), serialized with the epoch writes.
+    *
+    * The registration's row count resets to a fresh metadata-footer
+    * recount over the collapsed overlay rather than an arithmetic carry
+    * (ADVICE r17): under the disjoint-ingestion contract it equals the
+    * pre-fold counter, and whenever that contract is ever violated (a
+    * re-ingested vec_id) the physical count is the one that keeps the
+    * staleness gauge honest — the fold runs at epoch cadence, so the
+    * extra footer job is amortized across `AnnCompactEpochs`
+    * micro-batches. */
   def maybeCompactIndexSegments(spark: SparkSession, sfDir: String,
       segRoot: String, maxEpochs: Int = AnnCompactEpochs): Boolean = {
-    // recovery check ONCE per root per JVM (steady state stays
-    // lock-free): a journal can only appear when a fold is interrupted,
-    // and an interrupted fold in THIS JVM threw — the catch below
-    // re-arms the check, and a restarted JVM re-checks through
-    // registerIndexSegments or its own first maintenance turn
-    if (foldRecoveryChecked.add(segRoot))
-      recoverInterruptedSegmentFold(spark, sfDir, segRoot)
-    val epochs = Segments.epochs(sfDir, segRoot, "ann.segment_epochs")
-    if (epochs.size <= maxEpochs || epochs.size < 3) false
-    else try {
-      // any .compact_* here is pre-journal garbage (a journaled scratch
-      // was consumed by the recovery pass above)
-      graft.util.EpochDirs.sweepScratch(segRoot)
-      val newest = epochs.last
-      val foldMax = epochs(epochs.size - 2)
-      // mergeSchema: the servedIndex discipline — a tombstone epoch may
-      // be the only one carrying the `deleted` column
-      val segs = spark.read.option("mergeSchema", "true").parquet(segRoot)
-      // cast the exclusion literal to the INFERRED partition type:
-      // small epoch values infer INT, and a Long literal against an Int
-      // partition attribute inserts a widening cast that defeats
-      // pruning (the servedClusterAssignment BIGINT-declaration lesson)
-      val folded = segs.filter(
-        col("epoch") =!= lit(newest).cast(segs.schema("epoch").dataType))
-      val dataCols = segs.schema.fieldNames.toSeq
-        .filterNot(n => n == "vec_id" || n == "epoch")
-      // TOMBSTONE DOMINANCE in the collapse (terminal-delete): a
-      // deleted row wins over any live row regardless of epoch order —
-      // folding (tombstone@e1, live@e2) down to the newest-by-epoch
-      // live row would resurrect the vector the pre-fold read excluded.
-      // Among rows with the same flag, newest epoch wins as before.
-      val ordKey =
-        if (segs.columns.contains("deleted"))
-          struct(coalesce(col("deleted"), lit(false)).cast("int").as("d"),
-            col("epoch").as("e"))
-        else struct(lit(0).as("d"), col("epoch").as("e"))
-      val collapsed = folded.groupBy("vec_id")
-        .agg(max_by(struct(dataCols.map(col): _*), ordKey).as("s"))
-        .select(col("vec_id") +: dataCols.map(n => col(s"s.$n").as(n)): _*)
-      val scratch = graft.util.EpochDirs.scratch(segRoot)
-      // repartition by cell → one task owns each cell → one file per
-      // cell: the file-consolidation the fold exists for (a long stream
-      // writes a whole small-file segment tree per micro-batch)
-      collapsed.repartition(col("cell"))
-        .write.partitionBy("cell").parquet(scratch.toString)
-      val toDrop = epochs.dropRight(1)
-      // JOURNAL the intent BEFORE the first drop — from here to the
-      // journal's retirement, a crash is recoverable from the manifest.
-      // An unregistered/swapped-out root can't journal (the conditional
-      // write no-ops) — but nothing serves such a root through the
-      // manifest either; the fold proceeds with the pre-journal window
-      // as its (unreachable-by-serving) caveat — OBSERVED, not silent
-      // (ADVICE r18): the unjournaled fold logs and bumps a gauge, so a
-      // crash-loses-rows window that somehow became reachable shows up
-      // in the operator log instead of only in a comment.
-      val journaled = Segments.setIf(sfDir, segRoot,
-        Map(FoldScratchKey -> scratch.getFileName.toString,
-          FoldDropKey -> toDrop.mkString(","),
-          FoldMaxKey -> foldMax.toString))
-      if (!journaled) {
-        System.err.println(s"[annfold] $segRoot is not the registered " +
-          "segment root — fold proceeds UNJOURNALED (a crash between " +
-          "drop and publish would lose this root's folded rows)")
-        graft.ObservedMetrics.bumpGauge("ann.unjournaled_folds")
-      }
-      toDrop.foreach(e => graft.util.EpochDirs.drop(segRoot, e))
-      foldCrashpoint("afterDrop")
-      graft.util.EpochDirs.publish(scratch, segRoot, foldMax)
-      foldCrashpoint("afterPublish")
-      finishSegmentFold(spark, sfDir, segRoot)
+    val ran = graft.util.EpochDirs.fold(segRoot, maxEpochs,
+        graft.util.EpochDirs.Hide,
+        Segments.noteEpochs(sfDir, segRoot, "ann.segment_epochs")) {
+      (newest, scratch) =>
+        // mergeSchema: the servedIndex discipline — a tombstone epoch
+        // may be the only one carrying the `deleted` column
+        val segs = spark.read.option("mergeSchema", "true").parquet(segRoot)
+        // cast the exclusion literal to the INFERRED partition type:
+        // small epoch values infer INT, and a Long literal against an
+        // Int partition attribute inserts a widening cast that defeats
+        // pruning (the servedClusterAssignment BIGINT-declaration lesson)
+        val folded = segs.filter(
+          col("epoch") =!= lit(newest).cast(segs.schema("epoch").dataType))
+        val dataCols = segs.schema.fieldNames.toSeq
+          .filterNot(n => n == "vec_id" || n == "epoch")
+        // TOMBSTONE DOMINANCE in the collapse (terminal-delete): a
+        // deleted row wins over any live row regardless of epoch order —
+        // folding (tombstone@e1, live@e2) down to the newest-by-epoch
+        // live row would resurrect the vector the pre-fold read
+        // excluded. Among rows with the same flag, newest epoch wins.
+        val ordKey =
+          if (segs.columns.contains("deleted"))
+            struct(coalesce(col("deleted"), lit(false)).cast("int").as("d"),
+              col("epoch").as("e"))
+          else struct(lit(0).as("d"), col("epoch").as("e"))
+        // repartition by cell → one task owns each cell → one file per
+        // cell: the file-consolidation the fold exists for (a long
+        // stream writes a whole small-file segment tree per micro-batch)
+        folded.groupBy("vec_id")
+          .agg(max_by(struct(dataCols.map(col): _*), ordKey).as("s"))
+          .select(col("vec_id") +: dataCols.map(n => col(s"s.$n").as(n)): _*)
+          .repartition(col("cell"))
+          .write.partitionBy("cell").parquet(scratch)
+    }
+    if (ran) {
+      Segments.remeasure(sfDir, segRoot, segmentRows(spark, segRoot), epochs = 2)
       graft.ObservedMetrics.bumpGauge("ann.segment_folds")
-      true
-    } catch { case t: Throwable =>
-      // the fold may have journaled and died mid-swap — re-arm the
-      // once-per-JVM recovery check so the NEXT entry repairs it
-      foldRecoveryChecked.remove(segRoot)
-      throw t
     }
-  }
-
-  /** Roots whose fold journal this JVM has already checked — the
-    * steady-state skip that keeps the per-micro-batch maintenance turn
-    * free of manifest lock traffic. */
-  private val foldRecoveryChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** TEST-ONLY failpoint inside the fold's journaled swap window,
-    * invoked with the stage just completed ("afterDrop" = sources
-    * dropped, collapsed scratch not yet published; "afterPublish" =
-    * published, journal not yet retired). The crash-point spec throws
-    * from here to exercise [[recoverInterruptedSegmentFold]] against
-    * the exact states a killed writer leaves; production never
-    * reassigns it. */
-  private[graft] var foldCrashpoint: String => Unit = _ => ()
-
-  /** Fold-intent journal keys, living inside the registration's own
-    * manifest entry (same lock, same conditional-on-`segRoot`
-    * lifetime): present exactly while a fold's drop→publish swap is in
-    * flight. */
-  private val FoldScratchKey = "foldScratch"
-  private val FoldDropKey = "foldDrop"
-  private val FoldMaxKey = "foldMax"
-
-  /** Complete an INTERRUPTED segment fold journaled by a dead writer —
-    * called at every maintenance-turn entry and at
-    * [[registerIndexSegments]], i.e. before the next epoch write, sweep
-    * or registration count can observe the half-swapped overlay. Three
-    * journal states: (1) scratch dir still present → the publish never
-    * happened: re-drop the journaled source epochs (idempotent — some
-    * may already be gone) and publish the scratch at the journaled
-    * target, exactly the steps the dead writer had left; (2) scratch
-    * gone → the publish completed and only the journal retirement was
-    * lost: nothing to move; (3) no journal → no-op (the overwhelmingly
-    * common path: one manifest read). States 1-2 end with the same
-    * atomic measurement-update-plus-journal-retirement the uncrashed
-    * fold uses. Returns whether a journaled fold was completed. */
-  private[graft] def recoverInterruptedSegmentFold(spark: SparkSession,
-      sfDir: String, segRoot: String): Boolean = {
-    val m = Segments.entries(sfDir)
-    if (!m.get("segRoot").contains(segRoot)) false
-    else (m.get(FoldScratchKey), m.get(FoldDropKey), m.get(FoldMaxKey)) match {
-      case (Some(scr), Some(dropList), Some(fm)) =>
-        val scratch = java.nio.file.Paths.get(segRoot, scr)
-        if (java.nio.file.Files.isDirectory(scratch)) {
-          dropList.split(",").filter(_.nonEmpty)
-            .foreach(e => graft.util.EpochDirs.drop(segRoot, e.toLong))
-          graft.util.EpochDirs.publish(scratch, segRoot, fm.toLong)
-        }
-        finishSegmentFold(spark, sfDir, segRoot)
-        true
-      case _ => false
-    }
-  }
-
-  /** The fold's closing write, shared by the uncrashed path and the
-    * recovery path: re-measure the overlay and retire the journal in
-    * ONE conditional manifest update. The row recount is the
-    * AUTHORITATIVE physical figure, deliberately a fresh
-    * metadata-footer count over the collapsed overlay rather than an
-    * arithmetic carry (ADVICE r17): under the disjoint-ingestion
-    * contract it equals the pre-fold counter, and whenever that
-    * contract is ever violated (a re-ingested vec_id, a lost epoch the
-    * journal replayed) the physical count is the one that keeps the
-    * staleness gauge honest — the fold is the natural re-sync point and
-    * runs at epoch cadence, so the extra footer-metadata job is
-    * amortized across `AnnCompactEpochs` micro-batches. */
-  private def finishSegmentFold(spark: SparkSession, sfDir: String,
-      segRoot: String): Unit = {
-    Segments.remeasure(sfDir, segRoot, segmentRows(spark, segRoot),
-      graft.util.EpochDirs.list(segRoot).size,
-      clear = Seq(FoldScratchKey, FoldDropKey, FoldMaxKey))
-    ()
+    ran
   }
 
   /** The index every serve path reads: the staged base ∪ the registered

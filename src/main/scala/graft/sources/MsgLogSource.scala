@@ -506,13 +506,13 @@ class MsgLogScan(path: String, options: CaseInsensitiveStringMap,
     new MsgLogMicroBatchStream(path, topics,
       MsgLogScan.longOption(options, "maxRowsPerTrigger", min = 1L), required,
       readerPredicates, startingCounts, deadLetter, topicEq,
-      delayedDelivery = Option(options.get("delayedDelivery")).exists(_.toBoolean),
-      nowUsOverride = Option(options.get("delayedDeliveryNowUs")).map(_.toLong),
+      delayedDelivery = MsgLogScan.boolOption(options, "delayedDelivery"),
+      nowUsOverride = MsgLogScan.longOption(options, "delayedDeliveryNowUs"),
       sessionTz = sessionTz, minPartitions = minPartitions,
       minRowsPerTrigger = minRows,
       maxTriggerDelayMs = delay.getOrElse(MsgLogMicroBatchStream.DefaultMaxTriggerDelayMs),
       maxBytesPerTrigger = MsgLogScan.longOption(options, "maxBytesPerTrigger", min = 1L),
-      redelivery = Option(options.get("redelivery")).exists(_.toBoolean))
+      redelivery = MsgLogScan.boolOption(options, "redelivery"))
   }
 
   private def readerPredicates: Array[MsgFrame => Boolean] =
@@ -525,7 +525,7 @@ class MsgLogScan(path: String, options: CaseInsensitiveStringMap,
     * skipped before materialization.
     */
   private def seekPredicate: Array[MsgFrame => Boolean] =
-    Option(options.get("startingTimeUs")).map(_.toLong) match {
+    MsgLogScan.longOption(options, "startingTimeUs") match {
       case Some(t0) => Array((m: MsgFrame) => m.tsUs >= t0)
       case None => Array.empty
     }
@@ -583,7 +583,7 @@ object MsgLogScan {
     * name the option instead of surfacing a bare NumberFormatException
     * (or silently degrading, as an unchecked negative budget would). */
   private[sources] def longOption(options: CaseInsensitiveStringMap,
-      name: String, min: Long): Option[Long] =
+      name: String, min: Long = Long.MinValue): Option[Long] =
     Option(options.get(name)).map { s =>
       val n = try s.toLong catch {
         case _: NumberFormatException =>
@@ -593,6 +593,14 @@ object MsgLogScan {
         s"graft-msglog: $name $n must be >= $min")
       n
     }
+
+  /** Parse a flag loudly: `true`/`false` in any case, absent = false;
+    * anything else names the option (the [[longOption]] discipline). */
+  private[sources] def boolOption(options: CaseInsensitiveStringMap,
+      name: String): Boolean =
+    Option(options.get(name)).exists(s => s.toBooleanOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"graft-msglog: invalid $name '$s' (expected true or false)")))
 
   /** Allocate ~`minPartitions` contiguous entry-range slices over
     * per-ledger backlogs, proportionally to backlog size. Input rows are

@@ -111,7 +111,7 @@ class MsgLogWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuil
     * per producer name, sequential by construction in the reference.
     */
   private val dedupOnAppend: Boolean =
-    Option(info.options.get("dedupOnAppend")).exists(_.toBoolean)
+    MsgLogScan.boolOption(info.options, "dedupOnAppend")
 
   /** Write-side schema declaration + enforcement (reference broker schema
     * registry: `GetOrCreateSchema`/`IncompatibleSchema`,
@@ -139,7 +139,7 @@ class MsgLogWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuil
       }
     }
   private val enforceSchema: Boolean =
-    Option(info.options.get("enforceSchema")).exists(_.toBoolean)
+    MsgLogScan.boolOption(info.options, "enforceSchema")
 
   /** Transactional batch produce (`transactional=true`): all the write's
     * ledgers become visible atomically at job commit, or never — see
@@ -147,7 +147,7 @@ class MsgLogWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuil
     * exactly-once visibility by idempotent epoch-keyed ledger names.
     */
   private val transactional: Boolean =
-    Option(info.options.get("transactional")).exists(_.toBoolean)
+    MsgLogScan.boolOption(info.options, "transactional")
 
   /** Producer-side retry policy for the commit-time ledger publish
     * (`retrySend=never|forever|limitTo`, with `retryMax` /

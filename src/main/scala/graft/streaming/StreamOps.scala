@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -37,8 +36,10 @@ case class Delivery(user_id: Long, seq: Long, n_deliveries: Long)
   * (`src/PulsarApi.proto:92,110-112`); dedup keys follow the broker's
   * `(producer, sequence_id)` rule (`proto:577-579`).
   *
-  * Execution model: `readStream` → transform → memory sink, driven to
-  * completion with `Trigger.AvailableNow`. At scale the same declarations
+  * Execution model: `readStream` → transform → an epoch-keyed parquet
+  * sink ([[EpochSink]]), driven to completion with
+  * `Trigger.AvailableNow`; nothing a stream emits is collected on the
+  * driver. At scale the same declarations
   * run continuously against a real source with checkpointed offsets —
   * stream/batch equivalence is the Structured Streaming contract the unit
   * tests assert. Since round 7 that equivalence also carries DuckDB
@@ -47,8 +48,6 @@ case class Delivery(user_id: Long, seq: Long, n_deliveries: Long)
   * deterministic over the single-batch staged input; see `oracle`).
   */
 object StreamOps {
-
-  private val nameCounter = new AtomicInteger(0)
 
   /** File-stream read of one fixture table (`events`, `embeddings`,
     * `documents`) — the arriving-row source every stream key reads.
@@ -136,40 +135,9 @@ object StreamOps {
       s"stream oracle premise: staged dir $dir must hold exactly one file, found $files")
   }
 
-  /** Run a streaming DataFrame to completion into an in-memory table and
-    * return its final content as a batch DataFrame.
-    *
-    * The memory sink is reserved for COMPLETE-mode finals — small
-    * bounded aggregates, the one shape a driver-side sink is safe for.
-    * Corpus-proportional streaming output (dedup survivors, joined
-    * pairs, tracker emissions) goes through [[runToFiles]] instead;
-    * `streamDeadLetterSplit` (foreachBatch → parquet) and the
-    * `graft-msglog` streaming sink are the other at-scale egress paths.
-    */
-  private def runToTable(df: DataFrame, mode: String): DataFrame = {
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val spark = df.sparkSession
-    val sink = spark.table(name)
-    // The memory sink already holds every batch on the DRIVER (that is
-    // its contract — safe only because these results are small final
-    // aggregates). Re-materializing as a local relation adds no new
-    // driver exposure and lets the sink's temp view DROP immediately:
-    // without this, every run (bench warm-up + timed passes) leaked a
-    // graft_stream_N table holding its rows for the session's lifetime.
-    val local = spark.createDataFrame(sink.collectAsList(), sink.schema)
-    spark.catalog.dropTempView(name)
-    local
-  }
-
   /** One epoch-keyed file sink and the AvailableNow drain that fills
-    * it — the exactly-once egress of every file-sink stream key, i.e.
+    * it — the exactly-once egress of every file-sink stream key
+    * (complete-mode finals included), i.e.
     * the Structured Streaming argument (a replayable, checkpointed
     * source plus an idempotent sink) written once. It owns a fresh
     * tracked temp root holding the sink tree `<leaf>/epoch=N` and the
@@ -206,7 +174,7 @@ object StreamOps {
       * stream emitted nothing (a zero-row AvailableNow run may commit an
       * empty epoch dir or none, whose parquet read would fail; and
       * hidden `_`/`.`-prefixed entries — a legacy `_spark_metadata`, an
-      * in-flight `.sinkfold_` scratch — must not count as data). The
+      * in-flight fold scratch — must not count as data). The
       * `epoch` partition column (foreachBatch bookkeeping, not stream
       * output) is declared BIGINT and dropped: a bare read re-ran footer
       * schema inference (one job) per sink read per invocation (opt r20;
@@ -225,34 +193,28 @@ object StreamOps {
   }
 
   /** Run a streaming DataFrame to completion through an [[EpochSink]]
-    * and return the written rows as a batch read — the egress for
-    * corpus-proportional streaming output. The memory sink
-    * ([[runToTable]]) holds every emitted row on the driver, which is
-    * safe ONLY for small final aggregates; dedup survivors, joined
-    * pairs, and per-key tracker emissions are corpus-sized, so they land
-    * in executor-written parquet and the driver touches file paths only
-    * (at 100 TB the same declaration writes a real landing dir/topic).
-    * The retention fold runs every batch: the append shape folds by
-    * concatenation (`newestWinsKeys` empty), the update shape keeps
-    * per-key newest-epoch rows. A zero-row stream yields an empty frame
-    * on the input schema. */
+    * and return the written rows as a batch read — the egress of every
+    * file-sink stream key without a batch body of its own. Executors
+    * write parquet and the driver touches file paths only (at 100 TB
+    * the same declaration writes a real landing dir/topic). The output
+    * mode fixes the sink's shape: `complete` re-emits the whole result
+    * table every trigger, so each trigger OVERWRITES one dir and nothing
+    * folds; `append` folds by concatenation; `update` folds newest-wins
+    * by `updateKeys` ([[graft.util.EpochDirs.foldEpochSink]], every
+    * batch). A zero-row stream yields an empty frame on the input
+    * schema. */
   private def runToFiles(df: DataFrame, mode: String,
       updateKeys: Seq[String] = Nil): DataFrame = {
-    val foldKeys = mode match {
-      case "append" => Nil
-      case "update" => updateKeys
-      case other =>
-        throw new IllegalArgumentException(
-          s"runToFiles supports append/update, not $other (complete finals are " +
-            "small aggregates — use runToTable)")
-    }
     val sink = new EpochSink(df.sparkSession, "graft_stream_files_", "data")
     sink.drain(df, mode) { (batch, epochId) =>
-      batch.write.mode("overwrite").parquet(sink.epoch(epochId))
-      // retention maintenance turn (r17 verdict #4, extended to the
-      // append shape in r19)
-      EpochDirs.foldEpochSink(batch.sparkSession, sink.data,
-        SinkFoldEpochs, foldKeys)
+      if (mode == "complete") batch.write.mode("overwrite").parquet(sink.epoch(0))
+      else {
+        batch.write.mode("overwrite").parquet(sink.epoch(epochId))
+        // retention maintenance turn (r17 verdict #4, extended to the
+        // append shape in r19)
+        EpochDirs.foldEpochSink(batch.sparkSession, sink.data,
+          SinkFoldEpochs, updateKeys)
+      }
     }
     sink.read(df.schema)
   }
@@ -305,7 +267,7 @@ object StreamOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    withStatePartitions(spark, statePartitions)(runToTable(agg, "complete"))
+    withStatePartitions(spark, statePartitions)(runToFiles(agg, "complete"))
       .select(
         unix_millis(col("window.start")).as("hour_ms"),
         col("n"), col("sum_value"))
@@ -321,7 +283,7 @@ object StreamOps {
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "5 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n"))
-    withStatePartitions(spark, statePartitions)(runToTable(agg, "complete"))
+    withStatePartitions(spark, statePartitions)(runToFiles(agg, "complete"))
       .select(
         col("user_id"),
         unix_millis(col("session_window.start")).as("session_start_ms"),
@@ -466,9 +428,8 @@ object StreamOps {
     * which is the 100 TB-safe shape (unbounded-state joins without a time
     * bound are rejected by the engine outright). The per-user aggregate
     * runs batch-side on the joined output: chaining a second stateful
-    * aggregate after a stream-stream join is restricted, and the memory
-    * sink's contract (small final rows) is met by aggregating the
-    * collected join output, not by widening the stream state.
+    * aggregate after a stream-stream join is restricted, so the rollup
+    * aggregates the sink's join output, not a widened stream state.
     *
     * `statePartitions` sizes the STATEFUL stage: a stream-stream join
     * materializes four state-store instances per shuffle partition (two
@@ -526,7 +487,7 @@ object StreamOps {
       .join(broadcast(dim), "user_id")
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    withStatePartitions(spark, statePartitions)(runToTable(enriched, "complete"))
+    withStatePartitions(spark, statePartitions)(runToFiles(enriched, "complete"))
       .select(col("c_mktsegment"), col("n"), col("sum_value"))
   }
 

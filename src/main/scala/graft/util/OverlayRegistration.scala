@@ -89,29 +89,24 @@ final class OverlayRegistration(family: String, tables: Seq[String], rootKey: St
   /** TEST-ONLY simulated restart: forget the in-JVM fast path. */
   private[graft] def forget(): Unit = live.clear()
 
-  /** The epoch ids under `root`, recorded as `gauge` and — only when the
-    * count changed — as the registration's `epochs` key, so the
-    * un-triggered per-micro-batch turn takes no OS file lock. */
-  def epochs(sfDir: String, root: String, gauge: String): Seq[Long] = {
-    val es = EpochDirs.list(root)
+  /** Record a listing of `root`'s epoch ids as `gauge` and — only when
+    * the count changed — as the registration's `epochs` key, so the
+    * un-triggered per-micro-batch turn takes no OS file lock. The
+    * `observe` hook of [[EpochDirs.fold]]. */
+  def noteEpochs(sfDir: String, root: String, gauge: String)(es: Seq[Long]): Unit = {
     graft.ObservedMetrics.recordGauge(gauge, es.size.toDouble)
     val prev = epochGauge.put(root, es.size)
     if (prev == null || prev.intValue != es.size)
-      setIf(sfDir, root, Map("epochs" -> es.size.toString))
-    es
+      ServingManifest.setIf(sfDir, family, tables, rootKey, root,
+        Map("epochs" -> es.size.toString))
   }
 
-  /** A compactor's conditional journal/measurement write. */
-  def setIf(sfDir: String, root: String, updates: Map[String, String]): Boolean =
-    ServingManifest.setIf(sfDir, family, tables, rootKey, root, updates)
-
   /** A fold's closing write: the post-fold physical row and epoch
-    * counts, with `clear` (a fold journal) retired in the same write. */
-  def remeasure(sfDir: String, root: String, rows: Long, epochs: Int,
-      clear: Seq[String] = Nil): Boolean = {
+    * counts, in one conditional write. */
+  def remeasure(sfDir: String, root: String, rows: Long, epochs: Int): Boolean = {
     epochGauge.put(root, epochs)
-    ServingManifest.setAndClearIf(sfDir, family, tables, rootKey, root,
-      Map(rowsKey -> rows.toString, "epochs" -> epochs.toString), clear)
+    ServingManifest.setIf(sfDir, family, tables, rootKey, root,
+      Map(rowsKey -> rows.toString, "epochs" -> epochs.toString))
   }
 
   private def isLive(root: String): Boolean = Files.isDirectory(Paths.get(root))

@@ -265,28 +265,6 @@ object ServingManifest {
     }
   }
 
-  /** Conditional multi-entry SET plus KEY REMOVAL under ONE lock —
-    * [[setIf]] extended with retirement: apply `updates` AND drop
-    * `removeKeys` only if `condKey` currently holds `expected`. The
-    * fold-JOURNAL primitive (r17 verdict #3): a compactor that
-    * journaled its fold intent (scratch path + source epochs) must
-    * publish the post-fold measurements and retire the journal in one
-    * atomic write — two locks would leave a cleared-journal/stale-rows
-    * (or updated-rows/live-journal) window a crash could expose, and
-    * the recovery pass keys entirely off the journal's presence. */
-  def setAndClearIf(sfDir: String, family: String, tables: Seq[String],
-      condKey: String, expected: String,
-      updates: Map[String, String], removeKeys: Seq[String]): Boolean =
-    Durable.withDirLock(rootDir) {
-      val cur = getUnlocked(sfDir, family, tables)
-      if (!cur.get(condKey).contains(expected)) false
-      else {
-        val next = cur -- removeKeys ++ updates
-        if (next != cur) putUnlocked(sfDir, family, tables, next)
-        true
-      }
-    }
-
   def getCounter(sfDir: String, family: String, tables: Seq[String],
       key: String): Long =
     get(sfDir, family, tables).get(key).map(_.toLong).getOrElse(0L)

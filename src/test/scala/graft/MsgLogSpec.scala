@@ -2379,6 +2379,37 @@ class MsgLogSpec extends SparkTestBase {
       causeMessages(exNeg).mkString("\n"))
   }
 
+  test("flag and timestamp options name themselves when rejected") {
+    val dir = tmpPath("glog_flag_check_").toString
+    seqBatch(0 until 3).write.format("graft-msglog").mode("append").save(dir)
+    def rejects(name: String)(run: => Any): Unit = {
+      val ex = intercept[Exception](run)
+      assert(causeMessages(ex).exists(_.contains(s"invalid $name")),
+        causeMessages(ex).mkString("\n"))
+    }
+    def stream(k: String, v: String): Unit =
+      spark.readStream.format("graft-msglog").option(k, v).load(dir)
+        .writeStream.format("noop").trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    def append(k: String, v: String): Unit =
+      seqBatch(3 until 6).write.format("graft-msglog").option(k, v)
+        .mode("append").save(dir)
+    Seq("delayedDelivery", "redelivery").foreach(k => rejects(k)(stream(k, "yes")))
+    rejects("delayedDeliveryNowUs")(stream("delayedDeliveryNowUs", "now"))
+    rejects("startingTimeUs") {
+      spark.read.format("graft-msglog").option("startingTimeUs", "soon")
+        .load(dir).count()
+    }
+    Seq("dedupOnAppend", "enforceSchema", "transactional")
+      .foreach(k => rejects(k)(append(k, "yes")))
+    // the accepted values are unchanged: either flag word in any case,
+    // any Long
+    assert(spark.read.format("graft-msglog").option("startingTimeUs", "-5")
+      .load(dir).count() === 3)
+    append("transactional", "TRUE")
+    assert(spark.read.format("graft-msglog").load(dir).count() === 6)
+  }
+
   test("min/max trigger options build the matching default read limit") {
     import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadMaxRows, ReadMinRows}
     val dir = tmpPath("glog_limit_opts_").toString

@@ -48,33 +48,6 @@ class ServingManifestSpec extends AnyFunSuite {
     assert(ServingManifest.get(sf, "fam_c", T) === Map("other" -> "x"))
   }
 
-  test("setAndClearIf updates and retires journal keys in one conditional write") {
-    val sf = freshCorpus()
-    // a fold journaled its intent inside the registration's entry
-    ServingManifest.put(sf, "fam_j", T,
-      Map("segRoot" -> "/a", "segRows" -> "10",
-        "foldScratch" -> ".compact_1", "foldDrop" -> "0,1,2",
-        "foldMax" -> "2"))
-    // guard mismatch (registration swapped by another JVM): NOTHING
-    // applies — the journal stays live for the root it describes
-    assert(!ServingManifest.setAndClearIf(sf, "fam_j", T, "segRoot", "/zzz",
-      Map("segRows" -> "99"), Seq("foldScratch", "foldDrop", "foldMax")))
-    assert(ServingManifest.get(sf, "fam_j", T).get("foldScratch")
-      === Some(".compact_1"))
-    // guard match: the post-fold measurements land AND the journal
-    // retires in the same write — no cleared-journal/stale-rows window
-    assert(ServingManifest.setAndClearIf(sf, "fam_j", T, "segRoot", "/a",
-      Map("segRows" -> "10", "epochs" -> "2"),
-      Seq("foldScratch", "foldDrop", "foldMax")))
-    assert(ServingManifest.get(sf, "fam_j", T)
-      === Map("segRoot" -> "/a", "segRows" -> "10", "epochs" -> "2"))
-    // idempotent re-apply (recovery rerun after a crash between the
-    // write and the caller's return): condition still holds, no-op
-    assert(ServingManifest.setAndClearIf(sf, "fam_j", T, "segRoot", "/a",
-      Map("segRows" -> "10", "epochs" -> "2"),
-      Seq("foldScratch", "foldDrop", "foldMax")))
-  }
-
   test("removeKeyAllFamilies strips one key from every family, stamps intact") {
     val sf = freshCorpus()
     val dir = "/some/staged/dir_g0"

@@ -159,6 +159,19 @@ class StreamOpsSpec extends SparkTestBase {
     assertSameRows(stream, batch)
   }
 
+  test("complete-mode finals read back from their file sink, not a driver-local relation") {
+    // a LocalRelation result ships every row inside the task that reads
+    // it — the stream_session aggregate is ~5.5 MB at sf0.1, one
+    // oversized task under a coalesce(1) dump
+    Seq("stream_tumbling", "stream_session", "stream_enrich").foreach { key =>
+      val plan = StreamOps.queries(key)(spark, sfDir).queryExecution.optimizedPlan
+      val local = plan.collect {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+      }
+      assert(local.isEmpty, s"$key reads a LocalRelation:\n$plan")
+    }
+  }
+
   test("ss_join equals the batch self-join attribution aggregate") {
     val stream = StreamOps.streamStreamJoin(spark, sfDir)
     val clicks = ev.filter(col("event_type") === "click")
@@ -743,83 +756,77 @@ class StreamOpsSpec extends SparkTestBase {
     } finally DedupOps.ClusterDeltas.drop(sfDir)
   }
 
-  test("ANN segment fold journal: a crash in the swap window is completed by the next writer entry") {
-    // r17 verdict #3: the fold must drop its source dirs before
-    // publishing the collapsed scratch (a union read with no dedup
-    // would otherwise serve every folded row twice), so a crash in
-    // between used to serve an index missing the folded rows until the
-    // next retrain. The journal closes it: this spec injects the crash
-    // at BOTH stages a killed writer can leave and asserts the next
-    // maintenance-turn / registration entry serves the full row set.
+  test("ANN segment fold: a crash at either swap stage heals at the next entry") {
+    // the segment overlay folds through EpochDirs' hide-don't-delete
+    // swap (r17 verdict #3: a union read with no dedup must never serve
+    // a folded row twice). This spec injects the crash at BOTH stages a
+    // killed writer can leave and asserts the next maintenance turn /
+    // registration serves the full row set and leaves nothing hidden.
     import graft.operators.SimilarityOps
+    import graft.util.EpochDirs
     SimilarityOps.Segments.drop(sfDir)
     val emb = Fixtures.embeddings(spark, sfDir)
     val cents = SimilarityOps.stagedCentroidIndex(spark, sfDir)
     val cb = SimilarityOps.stagedPqCodebook(spark, sfDir)
     val segRoot = java.nio.file.Files.createTempDirectory("graft_seg_crash_")
     graft.util.TempDirs.track(segRoot)
-    val fam = "ann_segments"
+    val root = segRoot.toString
+    def segRows = graft.util.ServingManifest
+      .get(sfDir, "ann_segments", Seq("embeddings"))("segRows")
+    def visibleRows = spark.read.option("mergeSchema", "true").parquet(root).count()
+    def dotted = new java.io.File(root).listFiles().map(_.getName)
+      .filter(_.startsWith(".")).toSeq
+    def crashAt(stage: String): Unit = {
+      EpochDirs.crashpoint = s =>
+        if (s == stage) throw new RuntimeException(s"injected crash $stage")
+      try intercept[RuntimeException] {
+        SimilarityOps.maybeCompactIndexSegments(spark, sfDir, root, maxEpochs = 2)
+      } finally EpochDirs.crashpoint = _ => ()
+    }
+    def slice(e: Long) = emb.filter(pmod(col("vec_id"), lit(6)) === e)
+    def writeEpoch(e: Long): Unit =
+      SimilarityOps.indexRows(slice(e), cents, cb)
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$root/epoch=$e")
     try {
-      def slice(e: Long) = emb.filter(pmod(col("vec_id"), lit(6)) === e)
-      (0L to 3L).foreach { e =>
-        SimilarityOps.indexRows(slice(e), cents, cb)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$segRoot/epoch=$e")
-      }
-      SimilarityOps.registerIndexSegments(spark, sfDir, segRoot.toString)
+      (0L to 3L).foreach(writeEpoch)
+      SimilarityOps.registerIndexSegments(spark, sfDir, root)
       val before = canon(SimilarityOps.servedIndex(spark, sfDir))
-      val rowsBefore = graft.util.ServingManifest
-        .get(sfDir, fam, Seq("embeddings"))("segRows")
-      // crash at the worst point: sources dropped, collapsed scratch
-      // not yet published
-      SimilarityOps.foldCrashpoint = stage =>
-        if (stage == "afterDrop") throw new RuntimeException("injected crash")
-      intercept[RuntimeException] {
-        SimilarityOps.maybeCompactIndexSegments(spark, sfDir,
-          segRoot.toString, maxEpochs = 2)
-      }
-      SimilarityOps.foldCrashpoint = _ => ()
-      // the degraded state is real — folded dirs gone, journal live
-      assert(graft.util.EpochDirs.list(segRoot.toString) === Seq(3L))
-      val j = graft.util.ServingManifest.get(sfDir, fam, Seq("embeddings"))
-      assert(j.contains("foldScratch") && j.get("foldMax") === Some("2"))
-      // the next maintenance turn recovers FIRST (no fold re-triggers:
-      // the recovered overlay sits at the cadence), and the served view
-      // is whole again with the journal retired and the physical
-      // recount equal to the pre-fold registration count
-      assert(!SimilarityOps.maybeCompactIndexSegments(spark, sfDir,
-        segRoot.toString, maxEpochs = 2))
-      assert(graft.util.EpochDirs.list(segRoot.toString) === Seq(2L, 3L))
+      val rowsBefore = segRows
+      // stage 1 — sources hidden, collapse unpublished: the degraded
+      // state is real (only the newest epoch's rows are visible)
+      crashAt("afterHide")
+      assert(EpochDirs.list(root) === Seq(3L))
+      assert(visibleRows === slice(3L).count())
+      assert(dotted.count(_.startsWith(".folded_")) === 3)
+      // the next maintenance turn rolls back first, then folds again
+      assert(SimilarityOps.maybeCompactIndexSegments(spark, sfDir, root,
+        maxEpochs = 2))
+      assert(EpochDirs.list(root) === Seq(2L, 3L))
       assert(canon(SimilarityOps.servedIndex(spark, sfDir)) === before,
         "recovery must restore every folded row to the served view")
-      val m2 = graft.util.ServingManifest.get(sfDir, fam, Seq("embeddings"))
-      assert(!m2.contains("foldScratch") && !m2.contains("foldDrop") &&
-        !m2.contains("foldMax"))
-      assert(m2("segRows") === rowsBefore)
-      // second crash stage: published but journal not yet retired —
-      // the restart path (re-registration of the same root) clears it
+      assert(segRows === rowsBefore)
+      assert(dotted.isEmpty, s"hidden leftovers: $dotted")
+      // stage 2 — published, hidden sources not yet deleted: the view
+      // is already whole; the restart path (re-registration of the same
+      // root) sweeps the leftovers before it recounts
       (4L to 5L).foreach { e =>
-        SimilarityOps.indexRows(slice(e), cents, cb)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$segRoot/epoch=$e")
+        writeEpoch(e)
+        assert(SimilarityOps.Segments.noteAppend(sfDir, root,
+          slice(e).count(), epochId = e))
       }
       val before2 = canon(SimilarityOps.servedIndex(spark, sfDir))
-      SimilarityOps.foldCrashpoint = stage =>
-        if (stage == "afterPublish") throw new RuntimeException("injected crash")
-      intercept[RuntimeException] {
-        SimilarityOps.maybeCompactIndexSegments(spark, sfDir,
-          segRoot.toString, maxEpochs = 2)
-      }
-      SimilarityOps.foldCrashpoint = _ => ()
-      assert(graft.util.ServingManifest.get(sfDir, fam, Seq("embeddings"))
-        .contains("foldScratch"))
-      SimilarityOps.registerIndexSegments(spark, sfDir, segRoot.toString)
-      assert(graft.util.EpochDirs.list(segRoot.toString) === Seq(4L, 5L))
+      val rowsBefore2 = segRows
+      crashAt("afterPublish")
+      assert(EpochDirs.list(root) === Seq(4L, 5L))
+      assert(dotted.nonEmpty && dotted.forall(_.startsWith(".folded_")))
       assert(canon(SimilarityOps.servedIndex(spark, sfDir)) === before2)
-      assert(!graft.util.ServingManifest.get(sfDir, fam, Seq("embeddings"))
-        .contains("foldScratch"))
+      SimilarityOps.registerIndexSegments(spark, sfDir, root)
+      assert(dotted.isEmpty, s"hidden leftovers: $dotted")
+      assert(EpochDirs.list(root) === Seq(4L, 5L))
+      assert(canon(SimilarityOps.servedIndex(spark, sfDir)) === before2)
+      assert(segRows === rowsBefore2)
     } finally {
-      SimilarityOps.foldCrashpoint = _ => ()
+      EpochDirs.crashpoint = _ => ()
       SimilarityOps.Segments.drop(sfDir)
     }
   }
@@ -867,28 +874,52 @@ class StreamOpsSpec extends SparkTestBase {
     // is exactly preserved
     val expected = (1L to 4L).flatMap(u => Seq((u, 2 + u), (u, 3 + u))).toSet
     assert(after === expected)
-    // CRASH RECOVERY — mid-swap (scratch present): rollback restores
-    // the hidden source dir and drops the scratch
-    val rowsBefore = canon(spark.read.parquet(rootU.toString).drop("epoch"))
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(rootU.toString, "epoch=2"),
-      java.nio.file.Paths.get(rootU.toString, ".folded_2"))
-    (1L to 2L).map(u => (u, 99L)).toDF("user_id", "n")
-      .write.parquet(s"$rootU/.sinkfold_${System.nanoTime()}")
-    EpochDirs.recoverSinkFold(rootU.toString)
-    assert(EpochDirs.list(rootU.toString) === Seq(2L, 3L))
-    assert(canon(spark.read.parquet(rootU.toString).drop("epoch")) === rowsBefore,
-      "rollback must restore the pre-fold read exactly")
-    assert(!new java.io.File(rootU.toString).listFiles()
-      .exists(_.getName.startsWith(".sinkfold_")))
-    // CRASH RECOVERY — post-publish (no scratch): the hidden leftovers
-    // are dominated by the published dir and just delete
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(rootU.toString, ".folded_0"))
-    EpochDirs.recoverSinkFold(rootU.toString)
-    assert(!new java.io.File(rootU.toString).listFiles()
-      .exists(_.getName.startsWith(".folded_")))
-    assert(canon(spark.read.parquet(rootU.toString).drop("epoch")) === rowsBefore)
+    // CRASH at both stages of the hide swap, through the shared
+    // failpoint. Stage 1 — sources hidden, collapse unpublished: only
+    // the newest epoch reads; the next fold entry rolls back, then
+    // folds again exactly as the uncrashed fold would
+    def dotted = new java.io.File(rootU.toString).listFiles().map(_.getName)
+      .filter(_.startsWith(".")).toSeq
+    def crashAt(stage: String): Unit = {
+      EpochDirs.crashpoint = s =>
+        if (s == stage) throw new RuntimeException(s"injected crash $stage")
+      try intercept[RuntimeException] {
+        EpochDirs.foldEpochSink(spark, rootU.toString, maxEpochs = 2,
+          newestWinsKeys = Seq("user_id"))
+      } finally EpochDirs.crashpoint = _ => ()
+    }
+    def readU = spark.read.parquet(rootU.toString).drop("epoch")
+      .as[(Long, Long)].collect().toSet
+    (4L to 5L).foreach { e =>
+      (1L to 4L).map(u => (u, e + u)).toDF("user_id", "n")
+        .write.mode("overwrite").parquet(s"$rootU/epoch=$e")
+    }
+    try {
+      crashAt("afterHide")
+      assert(EpochDirs.list(rootU.toString) === Seq(5L))
+      assert(readU === (1L to 4L).map(u => (u, 5 + u)).toSet)
+      assert(EpochDirs.foldEpochSink(spark, rootU.toString, maxEpochs = 2,
+        newestWinsKeys = Seq("user_id")))
+      assert(EpochDirs.list(rootU.toString) === Seq(4L, 5L))
+      assert(readU ===
+        (1L to 4L).flatMap(u => Seq((u, 4 + u), (u, 5 + u))).toSet)
+      assert(dotted.isEmpty, s"hidden leftovers: $dotted")
+      // Stage 2 — published, hidden sources not yet deleted: the read
+      // is already whole, and the next (untriggered) entry sweeps them
+      (6L to 7L).foreach { e =>
+        (1L to 4L).map(u => (u, e + u)).toDF("user_id", "n")
+          .write.mode("overwrite").parquet(s"$rootU/epoch=$e")
+      }
+      crashAt("afterPublish")
+      val whole = (1L to 4L).flatMap(u => Seq((u, 6 + u), (u, 7 + u))).toSet
+      assert(EpochDirs.list(rootU.toString) === Seq(6L, 7L))
+      assert(readU === whole)
+      assert(dotted.nonEmpty && dotted.forall(_.startsWith(".folded_")))
+      assert(!EpochDirs.foldEpochSink(spark, rootU.toString, maxEpochs = 2,
+        newestWinsKeys = Seq("user_id")))
+      assert(dotted.isEmpty, s"hidden leftovers: $dotted")
+      assert(readU === whole)
+    } finally EpochDirs.crashpoint = _ => ()
   }
 
   test("soak: the live gate→topic→merge chain across multiple trigger cycles + compaction") {
