@@ -352,12 +352,10 @@ object MultimodalOps {
   private[graft] val MediaTable = new Staged("graft_media_mixed_")
   private[graft] val ImageTable = new Staged("graft_media_images_")
 
-  /** A staged media table read back with its schema inferred from the
-    * files (not through [[graft.util.StagedArtifacts.readStaged]]), as
-    * the decode plans always have. */
+  /** A staged media table read back with the schema its build wrote. */
   private[graft] def mediaAt(spark: SparkSession, dir: java.nio.file.Path): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(dir.toString).as[MediaRecord]
+    graft.util.StagedArtifacts.readStaged(spark, dir).as[MediaRecord]
   }
 
   /** [[realMediaTable]] staged to parquet once per corpus SNAPSHOT

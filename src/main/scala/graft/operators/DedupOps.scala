@@ -83,10 +83,19 @@ object DedupOps {
   private[graft] val IncrementCrossEdges = new Staged("graft_xm_edges_", builds = textStageBuilds)
   private[graft] val ProbeGrams = new Staged("graft_text_idx_", builds = textStageBuilds)
 
-  /** Every staged text artifact: the values [[textStageBuilds]] counts. */
+  /** How many times a staged LSH pair artifact ([[LshCandidates]],
+    * [[LshVerified]]) actually BUILT — its own counter, so the signature
+    * staging pins keep counting signature builds alone. */
+  val lshStageBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private[graft] val LshCandidates = new Staged("graft_lsh_cand_", builds = lshStageBuilds)
+  private[graft] val LshVerified = new Staged("graft_lsh_verified_", builds = lshStageBuilds)
+
+  /** Every staged text artifact: the values [[textStageBuilds]] and
+    * [[lshStageBuilds]] count. */
   private[graft] val TextArtifacts: Seq[Staged] = Seq(TextSignatures, DupGroups,
     Contamination, CrossModalGroups, BaseCrossModalGroups, XmDocIdx, XmClusterIdx,
-    IncrementCrossEdges, ProbeGrams)
+    IncrementCrossEdges, ProbeGrams, LshCandidates, LshVerified)
 
   /** The per-document text signature index staged to parquet once per
     * corpus SNAPSHOT — the text analog of the staged media fingerprints
@@ -126,7 +135,9 @@ object DedupOps {
     * [[LlmOps.docFilterPipeline]]'s scale note prescribes: the CC
     * fixpoint runs at staging, and every consumer (the cluster query
     * itself, quality-aware canonical election, the filter pipeline)
-    * reads `(doc_id, cluster, is_canonical, cluster_size)` scalars. */
+    * reads `(doc_id, cluster, is_canonical, cluster_size)` scalars. The
+    * fixpoint closes the staged verified pairs
+    * ([[stagedLshVerifiedDups]]). */
   def stagedDupGroups(spark: SparkSession, sfDir: String): DataFrame =
     DupGroups.read(spark, sfDir)(
       clusterPairs(stagedLshVerifiedDups(spark, sfDir)
@@ -272,12 +283,17 @@ object DedupOps {
           col("w"), lit(NumSeeds), lit(RowsPerBand))).as(Seq("band", "sig"))))
   }
 
-  /** [[docMinhashLsh]] served from the staged signature index — band
-    * signatures read as scalars, no tokenization in the query plan. */
+  /** [[docMinhashLsh]] staged to parquet once per corpus snapshot, built
+    * from the staged signature index (band signatures read as scalars,
+    * no tokenization): the `minhash` key, the Jaccard verify stage and
+    * through it every dup-cluster staging read these pairs instead of
+    * re-bucketing. The cap's `minhash_bucket_overflow` is observed once,
+    * at staging. Taken before takedowns: the `minhash` key applies
+    * [[TextIndex]]'s tombstone exclusion at read time. */
   def stagedMinhashLsh(spark: SparkSession, sfDir: String): DataFrame =
-    minhashLshFromBands(stagedTextSignatures(spark, sfDir)
+    LshCandidates.read(spark, sfDir)(minhashLshFromBands(stagedTextSignatures(spark, sfDir)
       .select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band", "sig"))))
+        posexplode(col("bands")).as(Seq("band", "sig")))))
 
   /** The bucket→pair half of [[docMinhashLsh]], over an already-derived
     * `(doc_id, band, sig)` frame — shared by the inline and staged
@@ -458,11 +474,12 @@ object DedupOps {
     * the merged modality graph: the four pair generators and the CC
     * fixpoint run at staging, and the serving query
     * ([[crossModalKeepBest]]) is a quality-aware election over
-    * `(doc_id, cluster, cluster_size)` scalars. Layering: each pipeline
-    * stage stays exercised live by its own key family (pair generation
-    * by the per-modality dup keys, election by the xmodal key) while
-    * composite keys read their upstream stages staged — exactly how an
-    * ingestion pipeline runs these stages on their own cadence. */
+    * `(doc_id, cluster, cluster_size)` scalars. Layering: text pairs are
+    * the staged LSH chain ([[stagedLshVerifiedDups]]) that the `minhash`,
+    * `lsh_dups`, `dup_groups` and `keep_best` keys also read; media
+    * pairs stay exercised live by the per-modality dup keys and the
+    * election by the xmodal key — exactly how an ingestion pipeline runs
+    * these stages on their own cadence. */
   def stagedCrossModalGroups(spark: SparkSession, sfDir: String): DataFrame =
     CrossModalGroups.read(spark, sfDir)(crossModalInputs(spark, sfDir)(crossModalGroupsOf))
 
@@ -761,9 +778,9 @@ object DedupOps {
     * CANDIDATE count, not the corpus. (The first formulation joined
     * `shingles` twice — two full tokenize+shingle computations of every
     * document per run.) Jaccard is symmetric, so the collected side
-    * order does not matter. At 100 TB you additionally persist/checkpoint
-    * `candidates` between the stages — kept stateless here because the
-    * driver contract re-runs each query cold.
+    * order does not matter. This inline form stays stateless; the
+    * staged form ([[stagedLshVerifiedDups]]) persists the candidates
+    * between the stages.
     *
     * The candidate side is deliberately NOT broadcast-hinted: candidate
     * count is proportional to the corpus's duplicate DENSITY (web corpora
@@ -778,18 +795,20 @@ object DedupOps {
       tokenized(docs).select(col("doc_id"), shingles.as("sh")),
       "doc_a", "doc_b")
 
-  /** [[docLshVerifiedDups]] served entirely from the staged signature
-    * index ([[stagedTextSignatures]]): candidates from the staged band
-    * signatures, the verify stage's shingle sets from the staged `sh`
-    * column — no tokenization, no corpus text read, in the query plan. */
+  /** [[docLshVerifiedDups]] staged to parquet once per corpus snapshot:
+    * the staged candidates ([[stagedMinhashLsh]]) verified against the
+    * staged `sh` column ([[stagedTextSignatures]]) — no tokenization, no
+    * corpus text read. The `lsh_dups` key and the dup-cluster stagings
+    * ([[stagedDupGroups]], the cross-modal graph) all read these pairs. */
   def stagedLshVerifiedDups(spark: SparkSession, sfDir: String): DataFrame = {
-    // takedown exclusion (r19): a retracted doc neither matches nor is
-    // listed — pairs touching a tombstoned endpoint drop; no tombstones
-    // (the gate's steady state) = the untouched plan
+    // takedown exclusion (r19), at read time over pairs staged before
+    // any takedown: a retracted doc neither matches nor is listed —
+    // pairs touching a tombstoned endpoint drop; no tombstones (the
+    // gate's steady state) = the untouched plan
     TextIndex.excludeTombstoned(spark, sfDir,
-      verifyPairsJaccard(stagedMinhashLsh(spark, sfDir),
+      LshVerified.read(spark, sfDir)(verifyPairsJaccard(stagedMinhashLsh(spark, sfDir),
         stagedTextSignatures(spark, sfDir).select(col("doc_id"), col("sh")),
-        "doc_a", "doc_b"),
+        "doc_a", "doc_b")),
       Seq("doc_a", "doc_b"))
   }
 

@@ -59,14 +59,27 @@ final class Staged(name: String, tables: Seq[String] = Seq("documents"),
   // ---------------------------------------------------------------------
 
   /** The staged DIRECTORY — for consumers that need the path itself (a
-    * streaming file source reading a staged artifact as its topic). */
+    * streaming file source reading a staged artifact as its topic). The
+    * build seeds the dir's schema-cache entry, so no read of it infers
+    * a footer. When the corpus stamp changes, the superseded dir is
+    * deleted and its entry dropped: a frame still planned over it fails
+    * loud on its next evaluation rather than serving a retired artifact
+    * (the [[durable]] sweep's stance), and an in-place corpus rewrite no
+    * longer leaves one dir per artifact behind until JVM exit. */
   def dir(sfDir: String)(build: => DataFrame): Path =
-    memo.get(sfDir)({
+    memo.get(sfDir, retire)({
       builds.incrementAndGet()
       val d = TempDirs.track(Files.createTempDirectory(name))
-      write(build, d)
+      val df = build
+      write(df, d)
+      StagedArtifacts.seed(d, df.schema, partitionCols)
       d
     })
+
+  private def retire(d: Path): Unit = {
+    TempDirs.retire(d)
+    StagedArtifacts.forget(d)
+  }
 
   /** The staged artifact, its schema from the per-dir cache. */
   def read(spark: SparkSession, sfDir: String)(build: => DataFrame): DataFrame =

@@ -3,6 +3,7 @@ package graft.util
 import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
 
 /** The read side every staged index shares: a per-dir schema cache so a
   * read of a [[Staged]] artifact (or any append-target index dir) skips
@@ -16,7 +17,7 @@ object StagedArtifacts {
     * so the dir path is a sound cache key). Metadata only; partition
     * values still come from the directory listing on every read. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, StructType]()
 
   /** Read a staged artifact dir with its schema served from the
     * per-dir cache — the standard read for every staged index whose
@@ -25,6 +26,35 @@ object StagedArtifacts {
     val s = schemaCache.computeIfAbsent(dir.toString,
       d => spark.read.parquet(d).schema)
     spark.read.schema(s).parquet(dir.toString)
+  }
+
+  /** Seed `dir`'s entry from the frame a build just wrote there, so its
+    * first read skips footer inference too (the [[TempDirs.materialize]]
+    * precedent). The entry is the schema a read-back would infer: every
+    * field nullable, as a parquet read marks them, and the partition
+    * columns last, as partition discovery appends them. A partition
+    * column's type comes from its directory names, which read back as
+    * the written type only for an int, so a dir partitioned on any other
+    * type is left to inference. */
+  def seed(dir: Path, written: StructType, partitionCols: Seq[String]): Unit = {
+    val parts = partitionCols.map(c => written(c))
+    if (parts.forall(_.dataType == IntegerType))
+      schemaCache.put(dir.toString, nullable(StructType(
+        written.fields.filterNot(f => partitionCols.contains(f.name)) ++ parts)))
+  }
+
+  /** Drop a retired dir's entry (a superseded staged artifact). */
+  def forget(dir: Path): Unit = { schemaCache.remove(dir.toString); () }
+
+  private def nullable(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullableType(m.keyType), nullableType(m.valueType), valueContainsNull = true)
+    case o => o
   }
 
   /** Cache-soundness hook for the IN-PLACE append sites (r19 ADVICE):
@@ -42,7 +72,7 @@ object StagedArtifacts {
     * nullable). No-op when the dir has no cached entry yet. */
   def noteAppend(dir: Path, df: DataFrame): Unit =
     Option(schemaCache.get(dir.toString)).foreach { s =>
-      def cols(t: org.apache.spark.sql.types.StructType) =
+      def cols(t: StructType) =
         t.fields.map(f => f.name -> f.dataType.catalogString)
       if (!cols(df.schema).forall(cols(s).toSet.contains))
         { schemaCache.remove(dir.toString); () }

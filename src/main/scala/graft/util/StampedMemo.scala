@@ -64,7 +64,10 @@ final class StampedMemo[V](tables: String*) {
   /** The current corpus stamp for `sfDir` under this memo's tables. */
   def stamp(sfDir: String): Long = CorpusStamp.of(sfDir, tables)
 
-  def get(sfDir: String)(build: => V): V = {
+  /** The value for `sfDir` at its current stamp, built on a miss. A
+    * value built under an older stamp goes to `retire` once its
+    * successor is in place. */
+  def get(sfDir: String, retire: V => Unit = (_: V) => ())(build: => V): V = {
     val stamp = CorpusStamp.of(sfDir, tables)
     val hit = m.get(sfDir)
     if (hit != null && hit._1 == stamp) hit._2
@@ -74,6 +77,7 @@ final class StampedMemo[V](tables: String*) {
       else {
         val v = build
         m.put(sfDir, (stamp, v))
+        if (again != null) retire(again._2)
         v
       }
     }

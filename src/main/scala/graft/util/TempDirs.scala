@@ -41,6 +41,10 @@ object TempDirs {
     df.sparkSession.read.schema(df.schema).parquet(dir.toString)
   }
 
+  /** Delete a tracked tree now and stop tracking it — a superseded
+    * staged artifact, retired before JVM exit. */
+  private[graft] def retire(root: Path): Unit = { dirs.remove(root); deleteNow(root) }
+
   /** The hook's deletion pass, run now on one tree: deepest-first,
     * best-effort per file, silent on a missing root. */
   private[graft] def deleteNow(root: Path): Unit =

@@ -1625,6 +1625,53 @@ class PipelineOpsSpec extends SparkTestBase {
     assertSameRows(indexed, self)
   }
 
+  test("LSH chain: staged once per corpus, shared by its keys, tombstoned at read") {
+    // a corpus path this JVM has never staged: the fixture documents
+    // copied to a fresh dir
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_chain_corpus_")
+    graft.util.TempDirs.track(dir)
+    docs.write.parquet(s"$dir/documents.parquet")
+    val sf = dir.toString
+    val l0 = DedupOps.lshStageBuilds.get()
+    DedupOps.stagedDupGroups(spark, sf)
+    assert(DedupOps.lshStageBuilds.get() === l0 + 2,
+      "the dup-group staging builds the candidates and the verified pairs once each")
+    def key(k: String) = SparkEntry.queries(k)(spark, sf)
+    assertSameRows(key("minhash"), DedupOps.docMinhashLsh(docs))
+    assertSameRows(key("lsh_dups"), DedupOps.docLshVerifiedDups(docs))
+    assertSameRows(key("dup_groups"), DedupOps.docDupGroups(docs))
+    assert(DedupOps.lshStageBuilds.get() === l0 + 2,
+      "the keys must read the staged pairs, not re-derive them")
+    // a takedown after staging: the keys drop the retracted doc's pairs
+    // at read time, over the same staged artifacts
+    val gone = key("lsh_dups").head().getAs[Long]("doc_a")
+    def without(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("doc_a") =!= gone && col("doc_b") =!= gone)
+    DedupOps.TextIndex.tombstone(spark, sf,
+      spark.range(1).select(lit(gone).as("doc_id")))
+    try {
+      assert(key("lsh_dups").filter(col("doc_a") === gone || col("doc_b") === gone)
+        .isEmpty)
+      assertSameRows(key("minhash"), without(DedupOps.docMinhashLsh(docs)))
+      assertSameRows(key("lsh_dups"), without(DedupOps.docLshVerifiedDups(docs)))
+      assert(DedupOps.lshStageBuilds.get() === l0 + 2,
+        "a takedown must not re-stage the LSH chain")
+    } finally DedupOps.TextIndex.dropTombstones(spark, sf)
+  }
+
+  test("a staged read takes the build's schema, equal to a footer read-back") {
+    // arrays (signatures), a map (the media table) and an int partition
+    // column (the doc-keyed cross-modal probe) — nullability and the
+    // partition-column position as inference would give them
+    DedupOps.stagedTextSignatures(spark, sfDir)
+    MultimodalOps.stagedMediaTable(spark, sfDir)
+    Seq(DedupOps.TextSignatures.peek(sfDir).get, DedupOps.xmDocIdxDir(spark, sfDir),
+        MultimodalOps.MediaTable.peek(sfDir).get).foreach { d =>
+      assert(graft.util.StagedArtifacts.readStaged(spark, d).schema ===
+        spark.read.parquet(d.toString).schema, d.toString)
+    }
+  }
+
   test("staged artifacts rebuild when the corpus is rewritten in place") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_stamp_corpus_")
@@ -1657,9 +1704,12 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(DedupOps.stagedTextSignatures(spark, sf).count() === 25)
     DedupOps.stagedTextSignatures(spark, sf)
     assert(DedupOps.textStageBuilds.get() === sigBefore + 1)
+    val superseded = DedupOps.TextSignatures.peek(sf).get
     writeDocs(30)
     assert(DedupOps.stagedTextSignatures(spark, sf).count() === 30)
     assert(DedupOps.textStageBuilds.get() === sigBefore + 2)
+    // the rewrite retires the superseded dir instead of leaking it
+    assert(!java.nio.file.Files.exists(superseded), s"superseded dir left on disk: $superseded")
     DedupOps.TextSignatures.forget()
     DedupOps.stagedTextSignatures(spark, sf)
     assert(DedupOps.textStageBuilds.get() === sigBefore + 3)

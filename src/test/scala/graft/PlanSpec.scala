@@ -226,6 +226,37 @@ class PlanSpec extends SparkTestBase {
     assert(!o.contains("strategy=broadcast"), o)
   }
 
+  test("minhash and lsh_dups serve the staged LSH chain: no bucketing, explode or regroup in-plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Window}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    Seq("minhash", "lsh_dups").foreach { k =>
+      val o = SparkEntry.queries(k)(spark, sfDir).queryExecution.optimizedPlan
+      val derived = o.collect { case n @ (_: Window | _: Generate | _: Aggregate) => n.nodeName }
+      assert(derived.isEmpty, s"$k re-derives the LSH chain:\n$o")
+    }
+    // the bucket cap's overflow metric (the one Verify dumps into
+    // observed_metrics.json) is now observed once per corpus, by the
+    // candidate staging: stage a fresh corpus and catch it there
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_observe_corpus_")
+    graft.util.TempDirs.track(dir)
+    graft.model.Fixtures.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
+    @volatile var seen = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.observedMetrics.contains("minhash_bucket_overflow")) seen = true
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("minhash")(spark, dir.toString)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(seen, "the candidate staging did not observe minhash_bucket_overflow")
+    } finally spark.listenerManager.unregister(listener)
+    assert(ObservedMetrics.awaitQuiescent().contains("minhash_bucket_overflow"))
+  }
+
   test("decontam broadcasts the probe grams: no corpus-side shuffle join") {
     // the serving key reads the staged contamination artifact (a pure
     // scan, no join at all); the BUILD (docDecontaminate, run once per
