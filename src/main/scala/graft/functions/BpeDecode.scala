@@ -41,27 +41,14 @@ case class BpeDecode(left: Expression, right: Expression) extends BinaryExpressi
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(IntegerType, _), ArrayType(StringType, _)) =>
-      if (!right.foldable)
-        TypeCheckResult.TypeCheckFailure("bpe_decode requires a literal merges array")
-      else right.eval() match {
-        case null =>
-          TypeCheckResult.TypeCheckFailure("bpe_decode requires a non-null literal merges array")
-        case a: ArrayData if a.numElements() % 2 != 0 =>
-          TypeCheckResult.TypeCheckFailure(
-            s"bpe_decode: flattened merges length ${a.numElements()} must be even (a,b pairs)")
-        case _ => TypeCheckResult.TypeCheckSuccess
-      }
+      BpeEncode.checkMerges(prettyName, right)
     case (l, r) => TypeCheckResult.TypeCheckFailure(
       s"bpe_decode requires (ARRAY<INT>, ARRAY<STRING>), got (${l.catalogString}, ${r.catalogString})")
   }
 
   /** id → surface lookup table: 26 letters, K merge surfaces, UNK. */
-  @transient private lazy val surfaces: Array[String] = {
-    val arr = right.eval().asInstanceOf[ArrayData]
-    BpeDecode.surfaceTable(Array.tabulate(arr.numElements() / 2) { i =>
-      (arr.getUTF8String(2 * i).toString, arr.getUTF8String(2 * i + 1).toString)
-    })
-  }
+  @transient private lazy val surfaces: Array[String] =
+    BpeDecode.surfaceTable(BpeEncode.parseMerges(right))
 
   override def nullSafeEval(ids: Any, mergesIgnored: Any): Any =
     BpeDecode.compute(ids.asInstanceOf[ArrayData], surfaces)

@@ -8,12 +8,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `bpe_encode(w, merges)` — the token-ID SEQUENCE of the pre-token
-  * array `w` under a trained byte-pair-encoding merges table: the
-  * emission step a training-data pipeline actually ships to the trainer
-  * ([[BpeCount]] proves the merges and prices budgets; this materializes
-  * the ids). Same greedy per-rank merge pass, same pre-token classes,
-  * same staged merges literal — one shared tokenization contract, two
-  * outputs.
+  * array `w` under a TRAINED byte-pair-encoding merges table: every
+  * all-letter pre-token (a `[a-z]+` run from the shared pre-tokenizer)
+  * starts as its character sequence and the merges apply in rank order,
+  * each as one greedy left-to-right non-overlapping pass; digit runs
+  * and symbols are one token apiece. The merges argument is the
+  * FLATTENED literal `[a₁, b₁, a₂, b₂, …]` in rank order — a staged
+  * driver artifact (bounded top-K merges, the LM-vocab discipline; see
+  * [[graft.operators.TextOps.stagedBpeModel]]).
+  *
+  * `bpe_count(w, m)` is `size(bpe_encode(w, m))` — one id per token, so
+  * the count and the emission are one merge pass with two outputs (see
+  * [[GraftFunctions.all]]).
+  *
+  * The greedy pass is the exact operational form of the oracle's
+  * per-rank rewrite (merge starts = pair positions, with odd-prefix
+  * selection inside equal-symbol runs). Ascending-rank application is
+  * complete under ONE assumption: each merge's output symbol has a
+  * distinct surface form (a pair's rank always exceeds its constituent
+  * symbols' ranks, so an earlier-rank pair cannot re-form — UNLESS two
+  * merges share a surface form, e.g. (a,bc) and (ab,c) both yielding
+  * "abc", where a mid-rank pair involving that symbol could re-form
+  * after the later merge and would not be revisited). The tables
+  * [[graft.operators.TextOps.fitBpeModel]] learns satisfy the
+  * assumption in practice, and engine, oracle, and test replica all
+  * implement the same single ascending pass — the repo contract is a
+  * single shared definition, not canonical iterative lowest-rank BPE.
   *
   * ID SPACE (the engine↔oracle contract, chosen so both sides derive it
   * from the merges table alone — no side-channel vocab artifact):
@@ -21,16 +41,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - a merged symbol → `26 + r` where `r` is the FIRST rank whose
   *    surface form `a ++ b` equals the symbol (first-rank lookup makes
   *    the id well-defined even if two merges share a surface form — the
-  *    [[BpeCount]] distinct-surface caveat, resolved instead of assumed);
-  *  - any non-letter-run pre-token (digit runs, symbols — the classes
-  *    [[BpeCount]] counts as 1 apiece) → the single UNK id
-  *    `26 + K` (K = merges learned), the byte-fallback simplification.
-  * `size(bpe_encode(w, m)) == bpe_count(w, m)` by construction (one id
-  * per token) — locked by spec and a ScalaCheck property against an
-  * independent replica.
+  *    distinct-surface caveat above, resolved instead of assumed);
+  *  - any non-letter-run pre-token (digit runs, symbols) → the single
+  *    UNK id `26 + K` (K = merges learned), the byte-fallback
+  *    simplification.
   *
-  * Why native: identical to [[BpeCount]] — the merge loop is inherently
-  * sequential per word, and the bounded word→ids memo (Zipf hit rate)
+  * Why native: merge application is an inherently sequential per-word
+  * loop (K passes over a char buffer) that SQL higher-order functions
+  * can only express as K chained interpreted rewrites. Here the loop is
+  * one code-resident pass per token, and a bounded word→ids memo (words
+  * repeat — Zipf — so the hit rate is the corpus' token/type ratio)
   * makes the common case one hash probe returning a cached int[].
   */
 case class BpeEncode(left: Expression, right: Expression) extends BinaryExpression {
@@ -41,27 +61,17 @@ case class BpeEncode(left: Expression, right: Expression) extends BinaryExpressi
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-      if (!right.foldable)
-        TypeCheckResult.TypeCheckFailure("bpe_encode requires a literal merges array")
-      else right.eval() match {
-        case null =>
-          TypeCheckResult.TypeCheckFailure("bpe_encode requires a non-null literal merges array")
-        case a: ArrayData if a.numElements() % 2 != 0 =>
-          TypeCheckResult.TypeCheckFailure(
-            s"bpe_encode: flattened merges length ${a.numElements()} must be even (a,b pairs)")
-        case _ => TypeCheckResult.TypeCheckSuccess
-      }
+      BpeEncode.checkMerges(prettyName, right)
     case (l, r) => TypeCheckResult.TypeCheckFailure(
       s"bpe_encode requires (ARRAY<STRING>, ARRAY<STRING>), got (${l.catalogString}, ${r.catalogString})")
   }
 
-  @transient private lazy val merges: Array[(String, String)] = {
-    val arr = right.eval().asInstanceOf[ArrayData]
-    Array.tabulate(arr.numElements() / 2) { i =>
-      (arr.getUTF8String(2 * i).toString, arr.getUTF8String(2 * i + 1).toString)
-    }
-  }
+  /** The merges as JVM strings, extracted once per expression instance —
+    * codegen references the array as a constant object. */
+  @transient private lazy val merges: Array[(String, String)] = BpeEncode.parseMerges(right)
 
+  /** Bounded per-instance word→ids memo (thread-safe; tasks share the
+    * expression object through codegen references). */
   @transient private lazy val memo =
     new java.util.concurrent.ConcurrentHashMap[UTF8String, Array[Int]]()
 
@@ -82,8 +92,32 @@ case class BpeEncode(left: Expression, right: Expression) extends BinaryExpressi
 
 object BpeEncode {
 
-  /** [[BpeCount.MaxMemoWords]]'s stance for the id arrays. */
+  /** Memo growth cap — past this many distinct words the memo stops
+    * admitting (serving keeps working, just uncached); a real corpus'
+    * frequent words land first, which is where the hits are. */
   val MaxMemoWords = 65536
+
+  /** The merges-argument check of every BPE kernel: a non-null literal
+    * of even length (flattened (a, b) pairs). */
+  private[functions] def checkMerges(fn: String, merges: Expression): TypeCheckResult =
+    if (!merges.foldable)
+      TypeCheckResult.TypeCheckFailure(s"$fn requires a literal merges array")
+    else merges.eval() match {
+      case null =>
+        TypeCheckResult.TypeCheckFailure(s"$fn requires a non-null literal merges array")
+      case a: ArrayData if a.numElements() % 2 != 0 =>
+        TypeCheckResult.TypeCheckFailure(
+          s"$fn: flattened merges length ${a.numElements()} must be even (a,b pairs)")
+      case _ => TypeCheckResult.TypeCheckSuccess
+    }
+
+  /** A checked merges literal as its ranked (a, b) pairs. */
+  private[functions] def parseMerges(merges: Expression): Array[(String, String)] = {
+    val arr = merges.eval().asInstanceOf[ArrayData]
+    Array.tabulate(arr.numElements() / 2) { i =>
+      (arr.getUTF8String(2 * i).toString, arr.getUTF8String(2 * i + 1).toString)
+    }
+  }
 
   def compute(w: ArrayData, merges: Array[(String, String)],
       memo: java.util.concurrent.ConcurrentHashMap[UTF8String, Array[Int]]): ArrayData = {
@@ -132,6 +166,7 @@ object BpeEncode {
       val b = merges(m)._2
       // FIRST rank owning this surface form (almost always m itself)
       val surfId = 26 + firstRankOf(a + b, merges, m)
+      // one greedy left-to-right non-overlapping pass for this rank
       var out = 0
       var j = 0
       while (j < len) {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Size}
 
 /** The engine's SQL function surface as ONE table. [[graft.GraftExtensions]]
   * injects it into every session [[graft.GraftSession.builder]] builds
@@ -44,7 +44,9 @@ object GraftFunctions {
     entry("ivf_centroid", 3, classOf[IvfCentroid])(a => IvfCentroid(a.head, a(1), a(2))),
     entry("pq_adc", 3, classOf[PqAdc])(a => PqAdc(a.head, a(1), a(2))),
     entry("substr_fps", 3, classOf[SubstrFps])(a => SubstrFps(a.head, a(1), a(2))),
-    entry("bpe_count", 2, classOf[BpeCount])(a => BpeCount(a.head, a(1))),
+    // the token count is the emission's length: one merge pass serves both
+    entry("bpe_count", 2, classOf[BpeEncode])(a =>
+      Size(BpeEncode(a.head, a(1)), legacySizeOfNull = false)),
     entry("bpe_encode", 2, classOf[BpeEncode])(a => BpeEncode(a.head, a(1))),
     entry("bpe_decode", 2, classOf[BpeDecode])(a => BpeDecode(a.head, a(1))))
 }

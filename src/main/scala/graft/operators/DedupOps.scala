@@ -56,7 +56,7 @@ object DedupOps {
     */
   private def tokenized(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))
+      .select(col("doc_id"), TextOps.words(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
 
   val NumSeeds = 8
@@ -371,7 +371,7 @@ object DedupOps {
   def docSimhash(docs: DataFrame): DataFrame = {
     docs
       .select(col("doc_id"),
-        call_function("simhash60", split(trim(lower(col("text"))), "\\s+")).as("simhash"))
+        call_function("simhash60", TextOps.words(col("text"))).as("simhash"))
       .filter(col("simhash").isNotNull)
   }
 
@@ -1661,13 +1661,7 @@ object DedupOps {
     clusterPairs(docLshVerifiedDups(docs).select(col("doc_a"), col("doc_b")))
       .withColumnRenamed("id", "doc_id")
 
-  /** Connected components over an undirected pair list `(doc_a, doc_b)`
-    * — the shared clustering engine behind [[docDupGroups]] and
-    * [[SimilarityOps.embeddingDupGroups]]. Returns `(id, cluster,
-    * is_canonical, cluster_size)` with cluster = the component's min id.
-    * See [[docDupGroups]] for the scale analysis.
-    */
-  /** The last [[clusterPairs]] run's final labels RDD. The returned
+  /** The last [[fixpointClusterPairs]] run's final labels RDD. The returned
     * frame reads from it, so it cannot unpersist inside the call; the
     * NEXT call retires it instead, bounding a long-lived session at one
     * cached labels RDD no matter how many CC invocations it makes (a
@@ -1700,10 +1694,10 @@ object DedupOps {
   /** Driver-local connected components over a collected edge list —
     * union-find with path halving, labels = component min id, then the
     * same size/canonical dressing as the distributed path. Output is
-    * row-identical to the RDD fixpoint (min-id labels are
-    * representation-independent; locked by the ScalaCheck merge
-    * properties, which drive both paths). */
-  private def localClusterPairs(spark: SparkSession,
+    * row-identical to [[fixpointClusterPairs]] (min-id labels are
+    * representation-independent; CapSpec's ScalaCheck property runs
+    * both closures on the same random graphs). */
+  private[graft] def localClusterPairs(spark: SparkSession,
       edges: Array[(Long, Long)]): DataFrame = {
     // vertices = the sorted distinct endpoints; a vertex is its index
     val buf = new Array[Long](edges.length * 2)
@@ -1744,6 +1738,12 @@ object DedupOps {
       .toDF("id", "cluster", "is_canonical", "cluster_size")
   }
 
+  /** Connected components over an undirected pair list `(doc_a, doc_b)`
+    * — the shared clustering engine behind [[docDupGroups]] and
+    * [[SimilarityOps.embeddingDupGroups]]. Returns `(id, cluster,
+    * is_canonical, cluster_size)` with cluster = the component's min id.
+    * See [[docDupGroups]] for the scale analysis.
+    */
   private[operators] def clusterPairs(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
@@ -1756,19 +1756,6 @@ object DedupOps {
     // that generation is the expensive part — idle-box wall time hides
     // the recompute behind spare cores, but the doubled CPU is real at
     // cluster scale.
-    //
-    // The fixpoint loop itself runs on CO-PARTITIONED RDDs with one
-    // fixed HashPartitioner, not on DataFrames: an iterative
-    // min-propagation re-plans, re-optimizes (AQE), and re-shuffles the
-    // SAME tiny tables every round under Catalyst — measured ~0.35 s of
-    // pure per-round scheduling at sf0.1 regardless of data size, with
-    // checkpoint churn to keep the growing plan tree at bay. With a
-    // pinned partitioner the per-round joins against the edge list are
-    // narrow (zero exchange — the GraphX execution shape, which is
-    // RDD-based for exactly this reason), the only per-round shuffle is
-    // the neighbor-min reduce (∝ dup pairs), and there is no plan tree
-    // to truncate. All per-round operators are min-folds —
-    // commutative, associative, deterministic at any partitioning.
     val fwd = pairs.toDF("doc_a", "doc_b")
       .select(col("doc_a").cast("long"), col("doc_b").cast("long")).persist()
     val nEdges = fwd.count()
@@ -1784,15 +1771,39 @@ object DedupOps {
     // larger — a corpus-scale closure at staging cadence — routes
     // through the RDD fixpoint unchanged. Identical output by
     // construction: component min-id labels are partitioning- and
-    // algorithm-agnostic (the ScalaCheck merge properties run both
-    // paths across the cap).
+    // algorithm-agnostic (CapSpec's ScalaCheck property runs both
+    // closures on the same random graphs).
     if (nEdges <= MaxDriverCcEdges) {
       val es = fwd.as[(Long, Long)].collect() // served from the cache
       fwd.unpersist(blocking = false)
       graft.ObservedMetrics.recordGauge("cc.iterations", 0.0)
       graft.ObservedMetrics.bumpGauge("cc.driver_folds")
-      return localClusterPairs(spark, es)
-    }
+      localClusterPairs(spark, es)
+    } else fixpointClusterPairs(fwd, nEdges)
+  }
+
+  /** Distributed connected components over the `nEdges` (long, long)
+    * pairs of `fwd`: an RDD min-label fixpoint with pointer jumping,
+    * the closure [[clusterPairs]] takes above [[MaxDriverCcEdges]].
+    * Output is row-identical to [[localClusterPairs]]. Unpersists
+    * `fwd`; the final labels RDD stays cached for the returned plan
+    * until the next fixpoint or [[clusterPairs]] call retires it (see
+    * [[lastCcLabels]]). */
+  private[graft] def fixpointClusterPairs(fwd: DataFrame, nEdges: Long): DataFrame = {
+    val spark = fwd.sparkSession
+    import spark.implicits._
+    // The loop runs on CO-PARTITIONED RDDs with one fixed
+    // HashPartitioner, not on DataFrames: an iterative min-propagation
+    // re-plans, re-optimizes (AQE), and re-shuffles the SAME tiny tables
+    // every round under Catalyst — measured ~0.35 s of pure per-round
+    // scheduling at sf0.1 regardless of data size, with checkpoint churn
+    // to keep the growing plan tree at bay. With a pinned partitioner
+    // the per-round joins against the edge list are narrow (zero
+    // exchange — the GraphX execution shape, which is RDD-based for
+    // exactly this reason), the only per-round shuffle is the
+    // neighbor-min reduce (∝ dup pairs), and there is no plan tree to
+    // truncate. All per-round operators are min-folds — commutative,
+    // associative, deterministic at any partitioning.
     // SIZE the fixpoint's partitioner to the edge count: every round
     // schedules one task per partition, so a small merge increment
     // (the streaming reconciliation's per-batch subgraph) at full

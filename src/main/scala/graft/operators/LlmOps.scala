@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
@@ -24,12 +24,6 @@ import graft.model.Fixtures
   */
 object LlmOps {
 
-  /** Normalized token array: lowercase, trim, split on whitespace runs.
-    * Portable: identical semantics in DuckDB via
-    * `regexp_split_to_array(trim(lower(text)), '\s+')`.
-    */
-  private def tokens(text: Column): Column = split(trim(lower(text)), "\\s+")
-
   // ---------------------------------------------------------------------
   // Text analysis
   // ---------------------------------------------------------------------
@@ -39,7 +33,7 @@ object LlmOps {
     * not one per token. Top-k is TakeOrderedAndProject.
     */
   def textTokenizeCounts(docs: DataFrame, k: Int): DataFrame =
-    docs.select(explode(tokens(col("text"))).as("word"))
+    docs.select(explode(TextOps.words(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word")
       .agg(count(lit(1)).as("n"))
@@ -59,7 +53,7 @@ object LlmOps {
     * crosses the one exchange).
     */
   def corpusBigramTopK(docs: DataFrame, k: Int): DataFrame = {
-    val w = tokens(col("text"))
+    val w = TextOps.words(col("text"))
     // one-token (or empty) docs produce zero bigrams: slice length is
     // clamped at 0 — greatest() keeps slice()'s non-negative-length
     // contract rather than relying on it to tolerate -1
@@ -90,7 +84,7 @@ object LlmOps {
     */
   def docNearDedup(docs: DataFrame): DataFrame = {
     val sig = md5(
-      array_join(sort_array(array_distinct(tokens(col("text")))), " ")
+      array_join(sort_array(array_distinct(TextOps.words(col("text")))), " ")
         .cast("binary"))
     docs.select(sig.as("sig"), col("doc_id"))
       .groupBy("sig")

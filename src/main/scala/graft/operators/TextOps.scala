@@ -30,6 +30,19 @@ object TextOps {
     "fr" -> Seq("le", "la", "et", "les", "des", "une"),
     "zh" -> Seq("的", "是", "了", "在", "我", "有"))
 
+  /** The whitespace word split every text operator tokenizes with:
+    * lowercase, trim, split on whitespace runs. Portable: identical
+    * semantics in DuckDB via `regexp_split_to_array(trim(lower(text)), '\s+')`.
+    */
+  private[operators] def words(text: Column): Column = split(trim(lower(text)), "\\s+")
+
+  /** The BPE pre-tokenizer over the `text` column: letter runs, digit
+    * runs and single non-space symbols of the lowercased text — the
+    * token stream the regex count, the packer and the trained BPE
+    * kernels all read. */
+  private def preTokens: Column =
+    expr("""regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0)""")
+
   /** Tokenized docs with the split materialized once as a named alias —
     * the per-expression inlining this replaces re-tokenized every
     * document up to 10× per row. The multi-referenced non-cheap alias is
@@ -38,7 +51,7 @@ object TextOps {
   private def withTokens(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"), col("text"),
-      split(trim(lower(col("text"))), "\\s+").as("w"))
+      words(col("text")).as("w"))
 
   /** Stopword-hit ratio against one profile, via the fused native
     * [[graft.functions.CountIn]] membership count (one codegen'd loop +
@@ -146,7 +159,7 @@ object TextOps {
       col("doc_id"),
       length(col("text")).as("n_chars"),
       size(filter(col("w"), x => x =!= "")).as("ws_tokens"),
-      expr("""size(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0))""").as("bpe_tokens"))
+      size(preTokens).as("bpe_tokens"))
 
   // ---------------------------------------------------------------------
   // Trained BPE (round 11): learned merges replace the regex
@@ -166,14 +179,18 @@ object TextOps {
   val BpeTrainWords = 256
 
   /** A trained BPE tokenizer: the ranked merges table. */
-  case class BpeModel(merges: Seq[(String, String)])
+  case class BpeModel(merges: Seq[(String, String)]) {
+    /** The merges as the flattened `[a₁, b₁, a₂, b₂, …]` literal the
+      * BPE kernels take. */
+    def literal: Column = typedlit(merges.flatMap(p => Seq(p._1, p._2)))
+  }
 
   /** How many times the BPE fit actually EXECUTED — staging
     * observability (the `lmFitRuns` sibling). */
   val bpeFitRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** One greedy left-to-right non-overlapping merge pass — the exact
-    * procedure [[graft.functions.BpeCount]] runs per rank (and the
+    * procedure [[graft.functions.BpeEncode]] runs per rank (and the
     * oracle's per-rank rewrite). */
   private def bpeMergePass(ts: Array[String], a: String, b: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer[String]()
@@ -238,22 +255,18 @@ object TextOps {
 
   /** [[tokenCounts]] under a TRAINED merges table: `bpe_tokens` counts
     * the pre-token stream with the staged merges applied in-row by the
-    * native [[graft.functions.BpeCount]] kernel (the merges ride into
+    * native [[graft.functions.BpeEncode]] kernel (the merges ride into
     * generated code as a literal — broadcast-for-free, the classifier
     * weights/codebook shape); `re_tokens` keeps the regex approximation
     * for continuity. Pure projection — zero exchanges; the only
     * corpus-sized work is the scan the count rides on. */
   def tokenCountsTrained(docs: DataFrame, bpe: BpeModel): DataFrame = {
-    val mergesLit = typedlit(bpe.merges.flatMap(p => Seq(p._1, p._2)))
     withTokens(docs).select(
       col("doc_id"),
       length(col("text")).as("n_chars"),
       size(filter(col("w"), x => x =!= "")).as("ws_tokens"),
-      expr("""size(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0))""")
-        .as("re_tokens"),
-      call_function("bpe_count",
-        expr("""regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0)"""),
-        mergesLit).as("bpe_tokens"))
+      size(preTokens).as("re_tokens"),
+      call_function("bpe_count", preTokens, bpe.literal).as("bpe_tokens"))
   }
 
   /** Token-ID EMISSION under the trained merges — the training-prep
@@ -272,12 +285,9 @@ object TextOps {
     * symbol = 26 + first rank with its surface, non-letter pre-token =
     * UNK = 26 + K). */
   def bpeEncodeIds(docs: DataFrame, bpe: BpeModel): DataFrame = {
-    val mergesLit = typedlit(bpe.merges.flatMap(p => Seq(p._1, p._2)))
     docs
       .select(col("doc_id"),
-        call_function("bpe_encode",
-          expr("""regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0)"""),
-          mergesLit).as("ids"))
+        call_function("bpe_encode", preTokens, bpe.literal).as("ids"))
       .select(col("doc_id"),
         size(col("ids")).as("n_tokens"),
         array_join(transform(col("ids"), i => i.cast("string")), ",")
@@ -297,15 +307,12 @@ object TextOps {
     * zero exchanges, the only corpus-sized work is the scan both
     * kernels ride on. */
   def bpeDecodeText(docs: DataFrame, bpe: BpeModel): DataFrame = {
-    val mergesLit = typedlit(bpe.merges.flatMap(p => Seq(p._1, p._2)))
     docs
       .select(col("doc_id"),
-        call_function("bpe_encode",
-          expr("""regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0)"""),
-          mergesLit).as("ids"))
+        call_function("bpe_encode", preTokens, bpe.literal).as("ids"))
       .select(col("doc_id"),
         size(col("ids")).as("n_tokens"),
-        call_function("bpe_decode", col("ids"), mergesLit).as("detok"))
+        call_function("bpe_decode", col("ids"), bpe.literal).as("detok"))
   }
 
   /** The composable gram-hash form — the numerics/portability reference
@@ -428,8 +435,7 @@ object TextOps {
   def docPackBins(docs: DataFrame): DataFrame = {
     val toks = docs.select(
       col("doc_id"),
-      expr("""size(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0))""")
-        .cast("long").as("n_tokens"),
+      size(preTokens).cast("long").as("n_tokens"),
       Hashing.md5Bucket(col("doc_id"), PackShards).as("shard"))
     val byShard = org.apache.spark.sql.expressions.Window
       .partitionBy("shard").orderBy("doc_id")
@@ -932,7 +938,7 @@ object TextOps {
       eta: Double = LrFitEta): DataFrame = {
     val spark = docs.sparkSession
     val en = Profiles.head._2
-    val toks = docs.select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))
+    val toks = docs.select(col("doc_id"), words(col("text")).as("w"))
     // tokenization + labels are step-invariant: cache the projection for
     // the epoch loop (the MLlib iterative-training pattern — spills to
     // disk past memory, the right trade when every step re-reads it).
@@ -1003,7 +1009,7 @@ object TextOps {
     val en = Profiles.head._2
     val toks = docs.select(
       col("doc_id"), col("source"), length(col("text")).as("n_chars"),
-      split(trim(lower(col("text"))), "\\s+").as("w"))
+      words(col("text")).as("w"))
     val signals = toks.select(
       col("source"), col("n_chars"),
       size(col("w")).as("n_tokens"),
@@ -1333,7 +1339,7 @@ object TextOps {
     * single ranked pair in `g` merged by one left-to-right
     * non-overlapping pass. Merge starts are the pair's positions; inside
     * an equal-symbol run only odd-prefix positions start (the closed
-    * form of greedy consumption — [[graft.functions.BpeCount]] runs the
+    * form of greedy consumption — [[graft.functions.BpeEncode]] runs the
     * identical pass operationally). An empty `g` (training saturated)
     * passes rows through unchanged. */
   private def bpeApplyStepSql(prev: String, g: String, out: String): String =

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -30,12 +30,15 @@ object MsgLog {
 
   // Every staged topic below is (size, mtime)-stamped on events.parquet,
   // like every other staged artifact: an events fixture rewritten in
-  // place re-stages instead of serving the stale topic.
+  // place re-stages instead of serving the stale topic, and the
+  // superseded topic dir is deleted.
   private val staged = new StampedMemo[String]("events")
+
+  private def retire(dir: String): Unit = graft.util.TempDirs.retire(Paths.get(dir))
 
   /** Stage the events fixture as a message-log topic once per sf dir. */
   def stagedEventsLog(spark: SparkSession, sfDir: String): String =
-    staged.get(sfDir)({
+    staged.get(sfDir, retire)({
       val dir = Files.createTempDirectory("graft_msglog_")
       graft.util.TempDirs.track(dir)
       writeEvents(Fixtures.events(spark, sfDir), dir.toString, NumLedgers)
@@ -192,7 +195,7 @@ object MsgLog {
     * table).
     */
   def stagedNamespace(spark: SparkSession, sfDir: String): String =
-    stagedNs.get(sfDir)({
+    stagedNs.get(sfDir, retire)({
       val dir = Files.createTempDirectory("graft_msglog_ns_")
       graft.util.TempDirs.track(dir)
       val ev = Fixtures.events(spark, sfDir)
@@ -299,7 +302,7 @@ object MsgLog {
     * routing, `src/PulsarApi.proto:98-99`).
     */
   def stagedEnvelopeLog(spark: SparkSession, sfDir: String): String =
-    stagedEnv.get(sfDir)({
+    stagedEnv.get(sfDir, retire)({
       val dir = Files.createTempDirectory("graft_msglog_env_")
       graft.util.TempDirs.track(dir)
       withEnvelope(Fixtures.events(spark, sfDir))

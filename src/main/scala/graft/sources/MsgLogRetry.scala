@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
 /** Producer-side retry with backoff — SURVEY §2.1 row 21.
   *
   * Reference semantics, re-expressed:
@@ -42,18 +44,19 @@ object MsgLogRetry {
     final case class LimitTo(maxRetryCount: Int, backOffMs: Long) extends RetrySend
 
     /** Parse the writer-option form: `never` / `forever` / `limitTo`
-      * (the latter reads `retryMax` / `retryBackoffMs`). */
-    def parse(name: String, max: => Option[String],
-        backoffMs: => Option[String]): RetrySend = name match {
+      * (the latter reads `retryMax` / `retryBackoffMs`, each named when
+      * malformed or negative — the [[MsgLogScan.longOption]] discipline). */
+    def parse(name: String, options: CaseInsensitiveStringMap): RetrySend = name match {
       case "never" => Never
       case "forever" => Forever
       case "limitTo" =>
-        val m = max.map(_.toInt).getOrElse(throw new IllegalArgumentException(
-          "graft-msglog: retrySend=limitTo requires retryMax"))
-        val b = backoffMs.map(_.toLong).getOrElse(DefaultBackOffMs)
-        if (m < 0 || b < 0) throw new IllegalArgumentException(
-          s"graft-msglog: negative retryMax/retryBackoffMs ($m/$b)")
-        LimitTo(m, b)
+        val m = MsgLogScan.longOption(options, "retryMax", min = 0L)
+          .getOrElse(throw new IllegalArgumentException(
+            "graft-msglog: retrySend=limitTo requires retryMax"))
+        if (m > Int.MaxValue) throw new IllegalArgumentException(
+          s"graft-msglog: retryMax $m must be <= ${Int.MaxValue}")
+        LimitTo(m.toInt,
+          MsgLogScan.longOption(options, "retryBackoffMs", min = 0L).getOrElse(DefaultBackOffMs))
       case other => throw new IllegalArgumentException(
         s"graft-msglog: unknown retrySend '$other' (never|forever|limitTo)")
     }

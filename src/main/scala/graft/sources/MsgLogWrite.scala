@@ -157,9 +157,7 @@ class MsgLogWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuil
     * layer, and a retried task re-publishes idempotently). */
   private val retrySend: MsgLogRetry.RetrySend =
     Option(info.options.get("retrySend"))
-      .map(MsgLogRetry.RetrySend.parse(_,
-        Option(info.options.get("retryMax")),
-        Option(info.options.get("retryBackoffMs"))))
+      .map(MsgLogRetry.RetrySend.parse(_, info.options))
       .getOrElse(MsgLogRetry.RetrySend.Never)
 
   override def build(): Write = new Write {

@@ -62,7 +62,7 @@ object StreamOps {
   def fixtureStream(spark: SparkSession, sfDir: String, table: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val dir = stagingDirs.computeIfAbsent(table, new StampedMemo[Path](_))
-      .get(sfDir)({
+      .get(sfDir, TempDirs.retire)({
         val d = Files.createTempDirectory(s"graft_stream_${table}_")
         Files.copy(Paths.get(sfDir, s"$table.parquet"), d.resolve(s"$table.parquet"))
         TempDirs.track(d)
@@ -83,7 +83,7 @@ object StreamOps {
 
   // one staging memo per table, (size, mtime)-stamped on that table: a
   // fixture regenerated in place re-stages instead of streaming the stale
-  // copy
+  // copy, and the superseded landing dir is deleted
   private val stagingDirs =
     new java.util.concurrent.ConcurrentHashMap[String, StampedMemo[Path]]()
 

@@ -188,34 +188,20 @@ object ServingManifest {
   }
 
   /** Add `delta` to the (sfDir, family, key) counter ONLY IF `condKey`
-    * currently holds `expected` — one lock for the whole
-    * check-and-bump, the [[removeIf]] discipline for counter writes:
-    * an appender bumping a REGISTRATION's measurement (segment rows,
-    * delta rows) must not bump a registration some other JVM swapped in
-    * between a get and an addCounter, and must no-op cleanly when the
-    * registration was retired. Returns whether the bump applied. */
-  def addCounterIf(sfDir: String, family: String, tables: Seq[String],
-      condKey: String, expected: String,
-      key: String, delta: Long): Boolean = Durable.withDirLock(rootDir) {
-    val cur = getUnlocked(sfDir, family, tables)
-    if (!cur.get(condKey).contains(expected)) false
-    else {
-      val next = cur.getOrElse(key, "0").toLong + delta
-      putUnlocked(sfDir, family, tables, cur + (key -> next.toString))
-      true
-    }
-  }
-
-  /** [[addCounterIf]] made REPLAY-IDEMPOTENT for epoch-keyed appenders:
-    * the bump applies only when `condKey` holds `expected` AND `epochId`
-    * is strictly newer than the registration's high-water mark
-    * (`epochKey`, advanced in the same write). A foreachBatch replay —
-    * epoch written, checkpoint commit lost, epoch re-run — overwrites
-    * its own sink dir (no net new rows) but would re-bump a plain
-    * counter and overstate staleness until a spurious compaction
-    * (review r16). Streaming epoch ids are monotone per query and
-    * across checkpointed restarts, which is what makes the high-water
-    * mark a correct replay filter. */
+    * currently holds `expected` AND `epochId` is strictly newer than the
+    * registration's high-water mark (`epochKey`, advanced in the same
+    * write) — one lock for the whole check-and-bump, the [[removeIf]]
+    * discipline for counter writes: an appender bumping a
+    * REGISTRATION's measurement (segment rows, delta rows) must not bump
+    * a registration some other JVM swapped in between a get and an
+    * addCounter, and must no-op cleanly when the registration was
+    * retired. The epoch filter makes it REPLAY-IDEMPOTENT: a
+    * foreachBatch replay — epoch written, checkpoint commit lost, epoch
+    * re-run — overwrites its own sink dir (no net new rows) but would
+    * re-bump a plain counter and overstate staleness until a spurious
+    * compaction (review r16). Streaming epoch ids are monotone per
+    * query and across checkpointed restarts, which is what makes the
+    * high-water mark a correct replay filter. */
   def addCounterIfNewEpoch(sfDir: String, family: String, tables: Seq[String],
       condKey: String, expected: String,
       key: String, delta: Long,

@@ -202,9 +202,11 @@ final class Staged(name: String, tables: Seq[String] = Seq("documents"),
   /** The corpus dirs currently memoized in this JVM. */
   def keys: Set[String] = memo.keys
 
-  /** Forget ONE corpus dir's memo entry (the next access re-derives or
-    * re-resolves), leaving other corpora staged. */
-  def invalidate(sfDir: String): Unit = memo.invalidate(sfDir)
+  /** Forget ONE corpus dir's derived artifact and delete its temp dir
+    * (the next access re-derives), leaving other corpora staged. A
+    * durable generation is only forgotten: its own re-stage sweeps it. */
+  def invalidate(sfDir: String): Unit =
+    memo.invalidate(sfDir, d => if (!d.startsWith(rootDir)) retire(d))
 
   /** TEST-ONLY simulated restart: forget every memo entry, keep the
     * files (a durable dir re-resolves, a temp dir re-derives). */

@@ -100,6 +100,8 @@ final class StampedMemo[V](tables: String*) {
 
   /** Invalidate ONE corpus dir's entry, leaving other corpora staged —
     * the staleness-triggered retrain drops a single index without
-    * un-staging every other fixture's artifacts. */
-  def invalidate(key: String): Unit = m.remove(key)
+    * un-staging every other fixture's artifacts. The dropped value, if
+    * any, goes to `retire`. */
+  def invalidate(key: String, retire: V => Unit = (_: V) => ()): Unit =
+    Option(m.remove(key)).foreach(e => retire(e._2))
 }

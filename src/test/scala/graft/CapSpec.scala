@@ -147,14 +147,28 @@ class CapSpec extends SparkTestBase {
 
   test("dup-group clustering digests a capped mega-clique in few iterations") {
     // the verified-dup graph of a mega-cluster is a Cap-member CLIQUE
-    // (~131k edges): clusterPairs must converge in 2-3 min-label rounds
-    // (diameter 1), produce ONE cluster labeled by the min id, and elect
-    // exactly one canonical — the adversarial shape for the CC engine
+    // (~131k edges): clustering must produce ONE cluster labeled by the
+    // min id and elect exactly one canonical — the adversarial shape for
+    // the CC engine. The clique sits under MaxDriverCcEdges, so
+    // docDupGroups closes it on the driver; the distributed fixpoint,
+    // run on the same edges, must agree and converge in one min-label
+    // round (diameter 1: the initial neighbor-min already labels every
+    // member 0, and the round confirms it)
     val groups = DedupOps.docDupGroups(megaDocs).collect()
     assert(groups.length === Cap)
     assert(groups.forall(_.getAs[Long]("cluster") === 0L))
     assert(groups.forall(_.getAs[Long]("cluster_size") === Cap.toLong))
     assert(groups.count(_.getAs[Int]("is_canonical") === 1) === 1)
+    val edges = DedupOps.docLshVerifiedDups(megaDocs)
+      .select(col("doc_a").cast("long"), col("doc_b").cast("long")).persist()
+    try {
+      val n = edges.count()
+      assert(n <= DedupOps.MaxDriverCcEdges)
+      val fixpoint = DedupOps.fixpointClusterPairs(edges, n)
+      // read before the driver closure below records its own 0 rounds
+      assert(graft.ObservedMetrics.gaugeSnapshot.get("cc.iterations") === Some(1.0))
+      assertSameRows(fixpoint.withColumnRenamed("id", "doc_id"), DedupOps.docDupGroups(megaDocs))
+    } finally edges.unpersist()
   }
 
   test("embedding near-dup caps a mega-cluster of identical vectors") {
@@ -265,6 +279,33 @@ class CapSpec extends SparkTestBase {
     assert(res.passed, res.status.toString)
     DedupOps.TextArtifacts.foreach(_.forget())
     DedupOps.TextIndex.drop()
+  }
+
+  test("driver union-find and distributed fixpoint close any graph to the same rows") {
+    // clusterPairs picks its closure by edge count (MaxDriverCcEdges),
+    // so no fixture reaches both: run each directly on the same random
+    // graphs — random edges with repeats and self-loops, a long path
+    // (min id at one end, many pointer-jumping rounds) and isolated pairs
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import spark.implicits._
+    val genRandom = Gen.choose(0, 25).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.choose(0L, 40L), Gen.choose(0L, 40L))))
+    val genPath = for {
+      len <- Gen.choose(1, 80)
+      start <- Gen.choose(100L, 1000L)
+      rev <- Gen.oneOf(true, false)
+    } yield (start until start + len).map(i => if (rev) (i + 1, i) else (i, i + 1))
+    val genPairs = Gen.choose(0, 10).map(n =>
+      (0 until n).map(k => (5000L + 2 * k, 5000L + 2 * k + 1)))
+    val genGraph = for { r <- genRandom; p <- genPath; i <- genPairs } yield r ++ p ++ i
+    val prop = Prop.forAll(genGraph) { es =>
+      val local = DedupOps.localClusterPairs(spark, es.toArray)
+      val fixpoint = DedupOps.fixpointClusterPairs(es.toDF("a", "b"), es.size.toLong)
+      canon(local) == canon(fixpoint)
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(Soak.n(4, 12)), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("incremental cluster merge equals the from-scratch closure over arbitrary increments") {

@@ -149,6 +149,46 @@ class FunctionRegistrySpec extends SparkTestBase {
     assert(r.getString(1) === "a z <unk>")
   }
 
+  test("bpe_count keeps its signature: INT result, NULL words in, NULL out") {
+    val df = spark.sql(
+      "SELECT bpe_count(CAST(NULL AS ARRAY<STRING>), array('a','b')) AS n")
+    assert(df.schema.head.dataType === org.apache.spark.sql.types.IntegerType)
+    assert(df.collect().head.isNullAt(0))
+  }
+
+  test("every literal-only argument rejects a column at analysis") {
+    // one column of each argument type, from a relation, so none of
+    // them is foldable; each call puts one where the kernel needs a
+    // literal and keeps every other argument valid
+    val from = """FROM VALUES (array('a','b'), 2, map('a', -1.5D), array(1.0D, 0.0D),
+                 |  array(7L), array(1.0F, 0.0F)) AS t(ws, n, m, ds, ls, v)""".stripMargin
+    val calls = Seq(
+      "bpe_count" -> "bpe_count(ws, ws)",
+      "bpe_encode" -> "bpe_encode(ws, ws)",
+      "bpe_decode" -> "bpe_decode(array(0), ws)",
+      "count_in" -> "count_in(ws, ws)",
+      "logp_sum" -> "logp_sum(ws, m, -4.0D)",
+      "backoff_sum" -> "backoff_sum(ws, map('x y', -1.0D), m, -4.0D)",
+      "hash_weight_sum" -> "hash_weight_sum(ws, ds)",
+      "pq_enc" -> s"pq_enc($pqX, ds)",
+      "pq_adc" -> s"pq_adc($pqX, 0L, ds)",
+      "ivf_assign" -> "ivf_assign(v, ls, array(1.0D, 0.0D))",
+      "ivf_centroid" -> "ivf_centroid(7L, array(7L), ds)",
+      "gram_md5s" -> "gram_md5s('abcd', n)",
+      "lsh_bucket" -> "lsh_bucket(v, n)",
+      "minhash_bands" -> "minhash_bands(ws, n, 2)",
+      "substr_fps" -> "substr_fps(ws, 2, n)",
+      "word_shingles" -> "word_shingles(ws, n)")
+    assert(calls.map(_._1).toSet.subsetOf(
+      graft.functions.GraftFunctions.all.map(_._1).toSet))
+    calls.foreach { case (name, call) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $call AS r $from")
+      }
+      assert(e.getMessage.contains("literal"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("pq_enc") {
     val r = sql(s"SELECT pq_enc($pqX, $pqCb) AS k")
     val k = r.getStruct(0)

@@ -2738,6 +2738,29 @@ class MsgLogSpec extends SparkTestBase {
     assert(MsgLog.stagedEventsLog(spark, sf) !== before)
   }
 
+  test("an in-place events rewrite deletes the superseded topic and landing dirs") {
+    val corpus = tmpPath("glog_retire_corpus_")
+    val events = corpus.resolve("events.parquet")
+    Files.copy(Paths.get(sfDir, "events.parquet"), events)
+    val sf = corpus.toString
+    def staged(): Seq[String] = {
+      graft.streaming.StreamOps.fixtureStream(spark, sf, "events")
+      Seq(MsgLog.stagedEventsLog(spark, sf), MsgLog.stagedNamespace(spark, sf),
+        MsgLog.stagedEnvelopeLog(spark, sf),
+        graft.streaming.StreamOps.stagedEventsDir(sf).get.toString)
+    }
+    val before = staged()
+    assert(before.forall(d => Files.isDirectory(Paths.get(d))))
+    Fixtures.table(spark, sfDir, "events").limit(50).coalesce(1)
+      .write.mode("overwrite").parquet(events.toString)
+    val after = staged()
+    assert(after.forall(d => Files.isDirectory(Paths.get(d))))
+    before.zip(after).foreach { case (old, fresh) =>
+      assert(old !== fresh)
+      assert(!Files.exists(Paths.get(old)), s"superseded dir left on disk: $old")
+    }
+  }
+
   test("retry options: parse, wire through the writer, reject nonsense") {
     import spark.implicits._
     import graft.sources.MsgLogRetry
@@ -2762,6 +2785,31 @@ class MsgLogSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       df.write.format("graft-msglog").mode("append")
         .option("retrySend", "sometimes").save(dir)
+    }
+  }
+
+  private def retryOptionError(opts: (String, String)*): String = {
+    import spark.implicits._
+    val df = Seq((1L, 1L, "a", 1.0, "{}"))
+      .toDF("event_id", "user_id", "event_type", "value", "props")
+      .withColumn("ts", timestamp_micros(lit(1704067200000000L)))
+    intercept[IllegalArgumentException] {
+      df.write.format("graft-msglog").mode("append").option("retrySend", "limitTo")
+        .options(opts.toMap).save(tmpPath("glog_retry_opt_").toString)
+    }.getMessage
+  }
+
+  test("retryMax: a non-numeric or negative value names the option") {
+    Seq("two", "-1", "3000000000").foreach { v =>
+      val msg = retryOptionError("retryMax" -> v)
+      assert(msg.contains("retryMax") && msg.contains(v), msg)
+    }
+  }
+
+  test("retryBackoffMs: a non-numeric or negative value names the option") {
+    Seq("1s", "-5").foreach { v =>
+      val msg = retryOptionError("retryMax" -> "2", "retryBackoffMs" -> v)
+      assert(msg.contains("retryBackoffMs") && msg.contains(v), msg)
     }
   }
 }

